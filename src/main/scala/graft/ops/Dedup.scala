@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
+import graft.GateProps
 import graft.functions.{graft_minhash, graft_simhash}
 
 /** Deduplication operators for a large-scale training-data pipeline, over a
@@ -555,7 +556,7 @@ object Dedup {
     * path entirely.
     */
   private[ops] def ClustersDriverEdgeMax: Long =
-    sys.props.get("graft.clusters.driverEdgeMax").map(_.toLong).getOrElse(1L << 20)
+    GateProps.long("graft.clusters.driverEdgeMax", 1L << 20)
 
   /** Companion byte-ish budget for the same gate: total id CHARACTERS
     * across the directed edge list (default 2^25 ≈ 33M chars — ~64 MB as
@@ -563,7 +564,7 @@ object Dedup {
     * long-id corpora (URLs, content digests) that pass the row gate.
     */
   private[ops] def ClustersDriverCharMax: Long =
-    sys.props.get("graft.clusters.driverCharMax").map(_.toLong).getOrElse(1L << 25)
+    GateProps.long("graft.clusters.driverCharMax", 1L << 25)
 
   /** Driver-side exact connected components for edge lists small enough
     * to collect (≤ [[ClustersDriverEdgeMax]] directed rows). Union-find

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import graft.GateProps
 import graft.codec.Hashing
 import graft.functions._
 
@@ -509,7 +510,7 @@ object GraftTable {
     * tests via the graft.bounds.smallSampleMax system property.
     */
   private[table] def SmallBoundsSampleMax: Long =
-    sys.props.get("graft.bounds.smallSampleMax").map(_.toLong).getOrElse(1L << 20)
+    GateProps.long("graft.bounds.smallSampleMax", 1L << 20)
 
   /** Spill-aware partition count for the encode exchange. Three regimes:
     *   - small tables: one partition per block is enough (never exceed

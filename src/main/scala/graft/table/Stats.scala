@@ -12,8 +12,9 @@ import graft.codec.{Hashing, IntBlocks}
   *   1. full pass — O(1)-state aggregates only (counts, min/max, HLL++
   *      cardinality, xxhash64 bit_xor fingerprint). One scan, no shuffle of
   *      data rows, tiny result.
-  *   2. seeded-sample pass — the expensive token-level stats (exploded
-  *      distinct, adjacent-run fraction) over ≤ `sampleRows` rows.
+  *   2. hash-strided sample pass — the token-level stats (exploded
+  *      distinct, adjacent-repeat fraction) over ≈ `sampleRows` tokens,
+  *      O(1) work per sampled token (see [[Stats.sampledStats]]).
   *
   * Everything is deterministic: fixed sample seed, commutative bit_xor
   * fingerprint (partition-order independent).
@@ -72,6 +73,37 @@ object Stats {
     }
   }
 
+  /** The sampled pass as one single-row frame `(td, adj, pairs)`: approximate
+    * distinct tokens, adjacent equal-token pairs, and adjacent pairs, over
+    * the rows whose `pmod(xxhash64(doc_id), stride) = 0` (all rows at
+    * stride 1).
+    *
+    * Every expression runs once per exploded token. Spark keeps the
+    * generator alone in its `Generate` node and evaluates every other
+    * select-list expression in the `Project` above it, so a per-document
+    * expression placed next to `posexplode` runs once per token of that
+    * document. The adjacency test is therefore written per token: the
+    * token at `pos` against `get(tokens, pos - 1)`, an O(1) array read
+    * that yields NULL (never an error, whatever the ANSI mode) at
+    * `pos = 0`, and NULL elements compare as "not equal". `pairs` counts
+    * the tokens with a predecessor, i.e. Σ max(size(tokens) - 1, 0) —
+    * it follows the array, not the `n_tok` column. Empty and NULL arrays
+    * produce no rows and add nothing. No higher-order function is
+    * involved; HLL merge and sums are order-independent, so the row is
+    * the same at any layout. rsd 0.05 (the HLL default): the only consumer
+    * is the dict-cap gate (65536), where ±5% is ample.
+    */
+  private[table] def sampledStats(keyed: DataFrame, stride: Long): DataFrame = {
+    val sample =
+      if (stride <= 1L) keyed
+      else keyed.where(pmod(xxhash64(col("doc_id")), lit(stride)) === 0)
+    sample.select(col("tokens"), posexplode(col("tokens"))).agg(
+      approx_count_distinct(col("col"), 0.05).as("td"),
+      sum(when(col("col") === get(col("tokens"), col("pos") - 1), 1L)
+        .otherwise(0L)).as("adj"),
+      sum(when(col("pos") > 0, 1L).otherwise(0L)).as("pairs"))
+  }
+
   def collect(keyed: DataFrame, sampleRows: Long = 1L << 20): ColumnStats = {
     // fingerprint hashes the cheap scalar fields only: hashing every token
     // would tax the hot path (~15 ns/token measured at local[8]) for a
@@ -105,40 +137,7 @@ object Stats {
     val avgTok = if (rows == 0) 1.0 else math.max(1.0, tokensTotal0.toDouble / rows)
     val rowBudget = math.max(1L, (sampleRows.toDouble / avgTok).toLong)
     val stride = math.max(1L, rows / rowBudget)
-    val sample =
-      if (stride <= 1L) keyed
-      else keyed.where(pmod(xxhash64(col("doc_id")), lit(stride)) === 0)
-
-    // adjacent-repeat pairs per row: zip tokens with its own 1-shift
-    val adjPairs = aggregate(
-      zip_with(
-        slice(col("tokens"), lit(1), greatest(col("n_tok") - 1, lit(0))),
-        slice(col("tokens"), lit(2), greatest(col("n_tok") - 1, lit(0))),
-        (a, b) => when(a === b, 1L).otherwise(0L)),
-      lit(0L), (acc, x) => acc + x)
-
-    // Both sampled stats in ONE job and one scan: posexplode feeds the
-    // token-distinct sketch, and the adjacency sums ride the pos==0 row
-    // of each document (rows with empty token arrays are dropped by the
-    // explode but contribute 0 pairs by definition). The adjacency
-    // expressions are evaluated in the projection BELOW the generator —
-    // once per document — so only two longs (not the tokens array)
-    // cross the explode into the aggregate's row buffer. Aggregation
-    // values are order-independent (HLL merge, sums), so the result is
-    // identical to the former two-job formulation at any layout — and
-    // with a single consumer the sample no longer needs a persist.
-    // rsd 0.05 (HLL default): the only consumer is the dict-cap gate
-    // (65536), where ±5% is ample — rsd 0.01 costs ~3× per update.
-    val srow = timed("stats-sample")(sample
-      .select(adjPairs.as("ap"),
-        greatest(col("n_tok").cast("long") - 1L, lit(0L)).as("pr"),
-        posexplode(col("tokens")))
-      .select(col("pos"), col("col"), col("ap"), col("pr"))
-      .agg(
-        approx_count_distinct(col("col"), 0.05).as("td"),
-        sum(when(col("pos") === 0, col("ap")).otherwise(lit(0L))).as("adj"),
-        sum(when(col("pos") === 0, col("pr")).otherwise(lit(0L))).as("pairs"))
-      .head())
+    val srow = timed("stats-sample")(sampledStats(keyed, stride).head())
     val tokDistinct = srow.getLong(0)
     val adjFrac =
       if (srow.isNullAt(2) || srow.getLong(2) == 0L) 0.0

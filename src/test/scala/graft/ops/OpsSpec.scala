@@ -152,9 +152,9 @@ class OpsSpec extends AnyFunSuite {
     val pdocs = Seq("p1", "p2", "p3", "p4", "p5").toDF("doc_id")
     // force the ITERATIVE path (a 4-edge graph would otherwise take the
     // driver union-find fast path, which has no rounds to account)
-    System.setProperty("graft.clusters.driverEdgeMax", "0")
-    spark.listenerManager.register(lsn)
     try {
+      System.setProperty("graft.clusters.driverEdgeMax", "0")
+      spark.listenerManager.register(lsn)
       val out = Dedup.clusters(path, pdocs).collect()
       assert(out.length == 5 && out.forall(_.getString(1) == "p1"))
       // listener delivery is async — poll until counts stabilize
@@ -212,6 +212,20 @@ class OpsSpec extends AnyFunSuite {
     finally System.clearProperty("graft.clusters.driverEdgeMax")
     assert(driver.size == ds.count())
     assert(driver == distributed)
+  }
+
+  test("clusters gates: a malformed property falls back to the default") {
+    Seq("graft.clusters.driverEdgeMax" -> (() => Dedup.ClustersDriverEdgeMax),
+      "graft.clusters.driverCharMax" -> (() => Dedup.ClustersDriverCharMax))
+      .foreach { case (prop, gate) =>
+        val default = gate()
+        try {
+          System.setProperty(prop, "1e6")
+          assert(gate() == default, prop)
+          System.setProperty(prop, "7")
+          assert(gate() == 7L, prop)
+        } finally System.clearProperty(prop)
+      }
   }
 
   test("cap skips are logged + recorded; releaseCaches clears shingle caches") {

@@ -100,6 +100,14 @@ class BoundsSpec extends AnyFunSuite {
     } finally System.clearProperty("graft.bounds.smallSampleMax")
   }
 
+  test("bounds gate: a malformed property falls back to the default") {
+    val default = GraftTable.SmallBoundsSampleMax
+    try {
+      System.setProperty("graft.bounds.smallSampleMax", "lots")
+      assert(GraftTable.SmallBoundsSampleMax == default)
+    } finally System.clearProperty("graft.bounds.smallSampleMax")
+  }
+
   test("Ranks.withRank handles empty input") {
     val (_, total, release) = Ranks.withRank(
       Seq.empty[Long].toDF("k"), col("k"), "rn", 4)

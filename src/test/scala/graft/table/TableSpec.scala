@@ -162,9 +162,25 @@ class TableSpec extends AnyFunSuite {
     assert(a.numBlocks == b.numBlocks)
   }
 
-  test("stats pass: sampled column statistics gate codec candidates") {
-    val keyed = source.toDF().withColumn("_graft_key",
+  private def keyedOf(df: org.apache.spark.sql.DataFrame) =
+    df.withColumn("_graft_key",
       expr("coalesce(try_cast(doc_id as bigint), xxhash64(doc_id))"))
+
+  /** A token table from plain rows; `null` elements and arrays allowed. */
+  private def tokenFrame(rows: Seq[(String, Seq[Any], Int)]) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("doc_id", StringType),
+      StructField("tokens", ArrayType(IntegerType, containsNull = true)),
+      StructField("n_tok", IntegerType),
+      StructField("source", StringType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map { case (d, t, n) => Row(d, t, n, "s") }, 3), schema)
+  }
+
+  test("stats pass: sampled column statistics gate codec candidates") {
+    val keyed = keyedOf(source.toDF())
     val st = Stats.collect(keyed)
     assert(st.rows == 500)
     assert(st.tokensTotal == 27939)
@@ -174,6 +190,56 @@ class TableSpec extends AnyFunSuite {
     assert(st.adjRepeatFrac > 0.0 && st.adjRepeatFrac < 0.2)
     assert(st.nTokMin >= 10 && st.nTokMax <= 100)
     assert(st.fingerprint.matches("[0-9a-f]{64}"))
+  }
+
+  test("stats pass: sampled stats equal a plain-Scala reference (ANSI on)") {
+    assert(spark.sessionState.conf.ansiEnabled, "expected the default ANSI mode")
+    val rnd = new scala.util.Random(7)
+    val edges: Seq[(String, Seq[Any], Int)] = Seq(
+      ("edge-empty", Seq.empty, 0),
+      ("edge-null-array", null, 0),
+      ("edge-one", Seq(5), 1),
+      ("edge-null-elem", Seq(3, null, null, 3, 3, null), 6),
+      ("edge-run", Seq.fill(7)(9), 7),
+      ("edge-long-run", Seq.fill(4096)(11), 4096),
+      ("edge-long-mixed", Seq.tabulate(6000)(i =>
+        if (i % 997 == 0) null else 40 + rnd.nextInt(6)), 6000))
+    val fixture = source.collect().toSeq
+      .map(r => (r.doc_id, r.tokens.toSeq: Seq[Any], r.n_tok))
+    val df = tokenFrame(fixture ++ edges)
+    val st = Stats.collect(keyedOf(df))
+
+    // reference over the arrays as collected back from the frame
+    val arrays = df.select("tokens").collect().toSeq
+      .map(r => Option(r.getSeq[Any](0)).getOrElse(Seq.empty))
+    val adj = arrays.map(a =>
+      (1 until a.size).count(i => a(i) != null && a(i) == a(i - 1)).toLong).sum
+    val pairs = arrays.map(a => math.max(a.size - 1, 0).toLong).sum
+    val distinct = arrays.flatten.filter(_ != null).distinct.size
+    assert(st.rows == fixture.size + edges.size)
+    assert(st.adjRepeatFrac == adj.toDouble / pairs, s"adj=$adj pairs=$pairs")
+    assert(math.abs(st.tokDistinct - distinct) <= math.max(2, distinct * 15 / 100),
+      s"HLL ${st.tokDistinct} vs exact $distinct")
+  }
+
+  test("stats pass: the sampled-stats plan has no higher-order function") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    val keyed = keyedOf(source.toDF())
+    Seq(1L, 3L).foreach { stride =>
+      val plan = Stats.sampledStats(keyed, stride).queryExecution.optimizedPlan
+      val hofs = plan.flatMap(_.expressions.flatMap(
+        _.collect { case h: HigherOrderFunction => h }))
+      assert(hofs.isEmpty, s"stride $stride:\n${plan.treeString}")
+    }
+  }
+
+  test("stats pass: adjacent-repeat pairs follow the tokens array, not n_tok") {
+    // "a": 3 equal pairs of 4; "b": 1 of 1. Counted by n_tok instead, the
+    // fraction would be 2 / 9.
+    val df = tokenFrame(Seq(
+      ("a", Seq(1, 1, 1, 2, 2), 2),
+      ("b", Seq(3, 3), 9)))
+    assert(Stats.collect(keyedOf(df)).adjRepeatFrac == 4.0 / 5)
   }
 
   test("skew: detection flags a hot key and salted agg matches plain agg") {
