@@ -75,38 +75,51 @@ object IntBlocks {
   // encoding: only the winner (and FSST, whose symbol table is inherently
   // constructive) allocates output bytes. Exactness is enforced by a
   // property test: exactSize(id, values) == encodeWith(id, values).length.
+  //
+  // The stats pass is the plain method `analyze`, which loops over locals
+  // and builds its `Analysis` once at the end. It must not sit in a
+  // constructor, a `locally` block or an argument expression: scalac then
+  // leaves a value on the operand stack at the loop header, HotSpot cannot
+  // OSR-compile a loop entered with a non-empty stack, and a pass that runs
+  // once per block never earns a standard compile, so every block would be
+  // scanned by the bytecode interpreter (BytecodeGuardSpec rejects the
+  // shape).
 
   private def varLen(v: Long): Int = (63 - java.lang.Long.numberOfLeadingZeros(v | 1L)) / 7 + 1
   private def zzLen(v: Int): Int = varLen(((v << 1) ^ (v >> 31)) & 0xFFFFFFFFL)
   private def zzLenL(v: Long): Int = varLen((v << 1) ^ (v >> 63))
 
-  private final class Analysis(values: Array[Int]) {
-    val n: Int = values.length
-    var min: Int = Int.MaxValue
-    var max: Int = Int.MinValue
-    var minD: Long = Long.MaxValue
-    var maxD: Long = Long.MinValue
-    var rleBody: Long = 0L
-    locally {
-      var i = 0
-      var runStart = 0
-      while (i < n) {
-        val v = values(i)
-        if (v < min) min = v
-        if (v > max) max = v
-        if (i > 0) {
-          val d = v.toLong - values(i - 1).toLong
-          if (d < minD) minD = d
-          if (d > maxD) maxD = d
-          if (v != values(i - 1)) {
-            rleBody += zzLen(values(runStart)) + varLen(i - runStart)
-            runStart = i
-          }
+  private def analyze(values: Array[Int]): Analysis = {
+    val n = values.length
+    var min = Int.MaxValue
+    var max = Int.MinValue
+    var minD = Long.MaxValue
+    var maxD = Long.MinValue
+    var rleBody = 0L
+    var i = 0
+    var runStart = 0
+    while (i < n) {
+      val v = values(i)
+      if (v < min) min = v
+      if (v > max) max = v
+      if (i > 0) {
+        val d = v.toLong - values(i - 1).toLong
+        if (d < minD) minD = d
+        if (d > maxD) maxD = d
+        if (v != values(i - 1)) {
+          rleBody += zzLen(values(runStart)) + varLen(i - runStart)
+          runStart = i
         }
-        i += 1
       }
-      if (n > 0) rleBody += zzLen(values(runStart)) + varLen(n - runStart)
+      i += 1
     }
+    if (n > 0) rleBody += zzLen(values(runStart)) + varLen(n - runStart)
+    new Analysis(values, min, max, minD, maxD, rleBody)
+  }
+
+  private final class Analysis(
+      values: Array[Int], min: Int, max: Int, minD: Long, maxD: Long, rleBody: Long) {
+    private val n: Int = values.length
 
     // sizes are Long: 4*n alone overflows Int at n > 2^29 tokens, well
     // below BlockAssembler's 2^31 guard — Int math here made the selector
@@ -133,7 +146,7 @@ object IntBlocks {
     * exactness property test.
     */
   private[codec] def exactSize(id: Int, values: Array[Int]): Option[Long] = {
-    val a = new Analysis(values)
+    val a = analyze(values)
     id match {
       case PLAIN => Some(a.sizePlain)
       case BITPACK => a.sizeBitpack
@@ -185,7 +198,7 @@ object IntBlocks {
       allowDict: Boolean = true,
       allowFsst: Boolean = true): (Array[Byte], Choice) = {
     val cands = candidateIds(values, allowDict, allowFsst)
-    val a = new Analysis(values)
+    val a = analyze(values)
     val sizes = mutable.LinkedHashMap.empty[String, Long]
     var fsstPayload: Array[Byte] = null
     var dictPayload: Array[Byte] = null
@@ -489,14 +502,11 @@ object IntBlocks {
     w.putByte(PFOR); w.putVarInt(n)
     if (n == 0) return
     var min = Int.MaxValue
+    var max = Int.MinValue
     var i = 0
-    while (i < n) { if (values(i) < min) min = values(i); i += 1 }
-    val (width, _, _) = pforPlan(values).getOrElse(
-      (BitPack.bits({ // degenerate: behave like FOR at full width
-        var mx = Long.MinValue; var j = 0
-        while (j < n) { val d = values(j).toLong - min.toLong; if (d > mx) mx = d; j += 1 }
-        math.max(0L, mx)
-      }), 0, 0))
+    while (i < n) { val v = values(i); if (v < min) min = v; if (v > max) max = v; i += 1 }
+    // degenerate plan: behave like FOR at full width
+    val width = pforPlan(values).fold(BitPack.bits(max.toLong - min.toLong))(_._1)
     w.putZigZagInt(min); w.putByte(width)
     val slots = new Array[Long](n)
     var ex = 0
@@ -534,6 +544,72 @@ object IntBlocks {
   private val FsstMaxSymbols = 256
   private val FsstMinPairCount = 8
 
+  /** Symbol-stream codes are non-negative, so a pair key is too and a
+    * negative key can mark an empty [[PairMap]] slot.
+    */
+  private final val NoPair = -1L
+  private def pairKey(l: Int, r: Int): Long = (l.toLong << 32) | (r.toLong & 0xFFFFFFFFL)
+
+  /** Open-addressing map from a non-negative pair key to an Int, slotted
+    * by the top bits of a Fibonacci multiply. Not a boxed
+    * `HashMap[Long, Int]`: `Long.hashCode` folds a pair key to
+    * `left ^ right`, so with a few hundred codes every pair shares a few
+    * hundred hash values and the bins treeify.
+    */
+  private final class PairMap {
+    private var shift = 64 - 10
+    private var keys = emptyKeys(1 << 10)
+    private var vals = new Array[Int](1 << 10)
+    private var size = 0
+
+    def capacity: Int = keys.length
+    def keyAt(slot: Int): Long = keys(slot)
+    def valueAt(slot: Int): Int = vals(slot)
+
+    private def emptyKeys(cap: Int): Array[Long] = {
+      val ks = new Array[Long](cap)
+      java.util.Arrays.fill(ks, NoPair)
+      ks
+    }
+
+    private def slotOf(key: Long): Int = {
+      val mask = keys.length - 1
+      var s = ((key * 0x9E3779B97F4A7C15L) >>> shift).toInt
+      while (keys(s) != NoPair && keys(s) != key) s = (s + 1) & mask
+      s
+    }
+
+    def get(key: Long, absent: Int): Int = {
+      val s = slotOf(key)
+      if (keys(s) == key) vals(s) else absent
+    }
+
+    def add(key: Long, delta: Int): Unit = {
+      val s = slotOf(key)
+      if (keys(s) == key) vals(s) += delta
+      else {
+        keys(s) = key; vals(s) = delta; size += 1
+        if (2 * size > keys.length) grow()
+      }
+    }
+
+    private def grow(): Unit = {
+      val oldK = keys
+      val oldV = vals
+      shift -= 1
+      keys = emptyKeys(oldK.length * 2)
+      vals = new Array[Int](oldK.length * 2)
+      var i = 0
+      while (i < oldK.length) {
+        if (oldK(i) != NoPair) {
+          val s = slotOf(oldK(i))
+          keys(s) = oldK(i); vals(s) = oldV(i)
+        }
+        i += 1
+      }
+    }
+  }
+
   private def encFsst(values: Array[Int], w: ByteWriter): Unit = {
     val n = values.length
     w.putByte(FSST); w.putVarInt(n)
@@ -549,30 +625,27 @@ object IntBlocks {
     while (round < FsstRounds && changed && symbols.size < FsstMaxSymbols) {
       changed = false
       // count adjacent pairs over the current symbol stream
-      val counts = new java.util.HashMap[Long, Int]()
+      val counts = new PairMap()
       var i = 0
       while (i + 1 < stream.length) {
-        val key = (stream(i).toLong << 32) | (stream(i + 1).toLong & 0xFFFFFFFFL)
-        val c = counts.get(key)
-        counts.put(key, c + 1)
+        counts.add(pairKey(stream(i), stream(i + 1)), 1)
         i += 1
       }
       val cands = mutable.ArrayBuffer.empty[(Int, Int, Int)] // (count, left, right)
-      val it = counts.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getValue >= FsstMinPairCount) {
-          val k = e.getKey
-          cands += ((e.getValue, (k >> 32).toInt, (k & 0xFFFFFFFFL).toInt))
-        }
+      var slot = 0
+      while (slot < counts.capacity) {
+        val k = counts.keyAt(slot)
+        if (k != NoPair && counts.valueAt(slot) >= FsstMinPairCount)
+          cands += ((counts.valueAt(slot), (k >> 32).toInt, k.toInt))
+        slot += 1
       }
       val picked = cands.sortBy { case (c, l, r) => (-c, l, r) }
         .take(FsstMaxSymbols - symbols.size)
       if (picked.nonEmpty) {
         changed = true
-        val pairMap = new java.util.HashMap[Long, Int]()
+        val pairMap = new PairMap()
         picked.foreach { case (_, l, r) =>
-          pairMap.put((l.toLong << 32) | (r.toLong & 0xFFFFFFFFL), nextCode)
+          pairMap.add(pairKey(l, r), nextCode)
           symbols += ((l, r))
           nextCode += 1
         }
@@ -582,8 +655,7 @@ object IntBlocks {
         i = 0
         while (i < stream.length) {
           if (i + 1 < stream.length) {
-            val key = (stream(i).toLong << 32) | (stream(i + 1).toLong & 0xFFFFFFFFL)
-            val code = pairMap.getOrDefault(key, -1)
+            val code = pairMap.get(pairKey(stream(i), stream(i + 1)), -1)
             if (code >= 0) { out(oi) = code; oi += 1; i += 2 }
             else { out(oi) = stream(i); oi += 1; i += 1 }
           } else { out(oi) = stream(i); oi += 1; i += 1 }

@@ -3,7 +3,7 @@ package graft.ops
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -484,7 +484,8 @@ object Dedup {
         val idChars = if (m.isNullAt(1)) 0L else m.getLong(1)
         if (directed > 0L && directed <= gate &&
             idChars <= ClustersDriverCharMax)
-          return driverClusters(docs.sparkSession, edges.collect(), ids)
+          return driverClusters(docs.sparkSession,
+            edges.as(Encoders.tuple(Encoders.STRING, Encoders.STRING)).collect(), ids)
         directed == 0L
       } else edges.isEmpty // no edges → nothing to propagate
     while (!converged && iter < maxIters) {
@@ -549,9 +550,13 @@ object Dedup {
         lit(1L).as("cluster_size"), lit(true).as("is_canonical"))
 
   /** Max directed-edge rows for [[clusters]]' driver-side union-find path
-    * (default 2^20 ≈ 1M rows of short ids, tens of MB — the same order as
-    * the edge frame each propagation round would shuffle, so no new
-    * driver-memory class). Overridable for tests via the
+    * (default 2^20 ≈ 1M rows). The budget counts JVM object overhead, not
+    * just id bytes: with compressed oops a collected row of two ~10-char
+    * ids is a Tuple2 (24 B) plus two Strings (24 B each) with their byte
+    * arrays (~32 B each), ~140 B in all, so a full gate holds ~150 MB of
+    * transient driver heap, plus the union-find index over the distinct
+    * ids (a map node, boxed ints and a UTF-8 copy per id, ~100 B each).
+    * Overridable for tests via the
     * graft.clusters.driverEdgeMax system property; 0 disables the fast
     * path entirely.
     */
@@ -559,8 +564,9 @@ object Dedup {
     GateProps.long("graft.clusters.driverEdgeMax", 1L << 20)
 
   /** Companion byte-ish budget for the same gate: total id CHARACTERS
-    * across the directed edge list (default 2^25 ≈ 33M chars — ~64 MB as
-    * UTF-16 plus per-Row overhead, transient). Protects drivers from
+    * across the directed edge list (default 2^25 ≈ 33M chars: 32 MB of
+    * Latin-1 string bytes, 64 MB as UTF-16, on top of the per-row object
+    * overhead the row gate budgets). Protects drivers from
     * long-id corpora (URLs, content digests) that pass the row gate.
     */
   private[ops] def ClustersDriverCharMax: Long =
@@ -580,7 +586,7 @@ object Dedup {
     */
   private def driverClusters(
       spark: SparkSession,
-      edgeRows: Array[org.apache.spark.sql.Row],
+      edgeRows: Array[(String, String)],
       ids: DataFrame): DataFrame = {
     val index = new java.util.HashMap[String, Integer]()
     val names = new scala.collection.mutable.ArrayBuffer[String]()
@@ -601,9 +607,9 @@ object Dedup {
       }
       x
     }
-    edgeRows.foreach { r =>
-      val a = find(vid(r.getString(0)))
-      val b = find(vid(r.getString(1)))
+    edgeRows.foreach { case (v, w) =>
+      val a = find(vid(v))
+      val b = find(vid(w))
       if (a != b) parent(math.max(a, b)) = math.min(a, b)
     }
     val n = names.length

@@ -23,6 +23,19 @@ class CodecSpec extends AnyFunSuite with SeededGens {
     "constant" -> (for {
       n <- Gen.choose(1, 2000); v <- Gen.choose(-1000, 1000)
     } yield Array.fill(n)(v)),
+    // one value block-wide, extremes included: PFOR's plan is empty
+    // (maxB = 0) and encPfor takes its full-width FOR fallback
+    "all-equal" -> (for {
+      n <- Gen.choose(2, 3000)
+      v <- Gen.oneOf(Gen.const(Int.MinValue), Gen.const(Int.MaxValue), Gen.const(0),
+        Gen.choose(Int.MinValue, Int.MaxValue))
+    } yield Array.fill(n)(v)),
+    // n = 1..3: the stats pass and PFOR plan at their smallest inputs
+    "tiny" -> (for {
+      n <- Gen.choose(1, 3)
+      vs <- Gen.listOfN(n, Gen.oneOf(Gen.const(Int.MinValue), Gen.const(Int.MaxValue),
+        Gen.choose(-4, 4), Gen.choose(Int.MinValue, Int.MaxValue)))
+    } yield vs.toArray),
     "long-runs" -> (for {
       runs <- Gen.listOfN(8, for {
         v <- Gen.choose(0, 3); len <- Gen.choose(50, 500)
