@@ -75,14 +75,14 @@ object StreamingEncode {
       tableDir: String,
       keyCol: String = "",
       opts: GraftTable.Options = GraftTable.Options()): Boolean = {
-    val spark = batch.sparkSession
-    val applied = GraftTable.currentSnapshot(spark, tableDir)
-      .flatMap(_.stats.toMap.get(BatchKey)).map(_.toLong)
+    val cur = GraftTable.currentSnapshot(batch.sparkSession, tableDir)
+    val applied = cur.flatMap(_.stats.toMap.get(BatchKey)).map(_.toLong)
     if (applied.exists(batchId <= _)) false
     else if (batch.isEmpty) false
     else {
       val meta = Map(BatchKey -> batchId.toString)
-      if (GraftTable.currentSnapshot(spark, tableDir).isEmpty)
+      // the first batch picks the key column; append has no keyCol
+      if (cur.isEmpty)
         GenericTable.encode(batch, tableDir, keyCol, opts, extraMeta = meta)
       else GenericTable.append(batch, tableDir, opts, extraMeta = meta)
       true

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 import graft.codec.Hashing
 import graft.expr.GraftDecodeAny
 import graft.functions.{graft_codec, graft_range_bucket}
+import graft.table.Commit.{carriedMeta, timed}
 import graft.table.GraftTable.{EncodeResult, Options, Snapshot}
 
 /** Any-schema encoded table (SURVEY.md §2.1 R3/R4 — the ebenezer
@@ -369,6 +370,49 @@ object GenericTable {
     StructType(kept ++ added)
   }
 
+  /** Storage frame: normalized leaves + range key + full-row value hash
+    * (over the storage leaves, in plan order — the resume identity).
+    */
+  private def keyedOf(
+      df: DataFrame, leaves: Seq[Leaf], key: String, keyType: DataType): DataFrame =
+    df.select(leaves.map(l => l.enc.as(l.name)) :+
+        keyExprOf(key, keyType).as("_graft_key"): _*)
+      .withColumn("_graft_rh", rowHash(leaves))
+
+  /** (rows, fingerprint) of a [[keyedOf]] frame. The fingerprint is
+    * value-complete: every leaf value of every row is pinned (xor +
+    * multiplicity-sensitive wrapping sum + count + schema + key); `tag`
+    * leads its preimage.
+    */
+  private def fingerprintOf(
+      keyed: DataFrame, tag: String, key: String, schema: StructType): (Long, String) = {
+    val st = keyed.agg(
+      count(lit(1)).as("rows"),
+      expr("bit_xor(_graft_rh)").as("x"),
+      expr("sum(cast(_graft_rh as decimal(38,0)))").as("s")).head()
+    val rows = st.getLong(0)
+    val xor = if (st.isNullAt(1)) 0L else st.getLong(1)
+    val sumMod =
+      if (st.isNullAt(2)) java.math.BigInteger.ZERO else GraftTable.mod64(st.getDecimal(2))
+    (rows, Hashing.sha256Hex(
+      s"$tag;rows=$rows;xor=$xor;sum=$sumMod;key=$key;schema=${schema.json}"))
+  }
+
+  /** Snapshot stats of a generic version: row count, read schema, the
+    * write schema when recorded, range key and the leaf plan it was
+    * written with, plus `meta`.
+    */
+  private def statsOf(
+      rows: Long,
+      readSchema: StructType,
+      writeSchema: Option[StructType],
+      key: String,
+      leaves: Seq[Leaf],
+      meta: Map[String, String]): Seq[(String, String)] =
+    (Map("rows" -> rows.toString, SchemaKey -> readSchema.json, KeyKey -> key,
+      "generic_leaves" -> leaves.map(l => s"${l.kind}:${l.name}").mkString("\u001f")) ++
+      writeSchema.map(WriteSchemaKey -> _.json) ++ meta).toSeq
+
   // ------------------------------------------------------------- encode
 
   /** Encode any supported DataFrame as an encoded table at `tableDir`.
@@ -376,25 +420,6 @@ object GenericTable {
     * present, else the first column). Idempotent: an unchanged input
     * resumes as a no-op; a changed input commits a fresh version.
     */
-  /** `stream_*` metadata carried forward so interleaved commits never drop
-    * the streaming sink's exactly-once watermark (same contract as the
-    * token lane's carriedMeta).
-    */
-  private def carriedMeta(parent: Option[Snapshot]): Map[String, String] =
-    parent.map(_.stats.filter(_._1.startsWith("stream_")).toMap)
-      .getOrElse(Map.empty)
-
-  private val timing = sys.env.get("GRAFT_TIMING").contains("1")
-  private def timed[T](label: String)(f: => T): T = {
-    if (!timing) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"GRAFT_TIMING g-$label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-  }
-
   def encode(
       df: DataFrame,
       tableDir: String,
@@ -403,60 +428,32 @@ object GenericTable {
       extraMeta: Map[String, String] = Map.empty): EncodeResult = {
     val spark = df.sparkSession
     val schema = df.schema
-    val plan = planOf(schema)
-    val leaves = plan.flatMap(_._2)
+    val leaves = planOf(schema).flatMap(_._2)
     val key =
       if (keyCol.nonEmpty) keyCol
       else if (schema.fieldNames.contains("doc_id")) "doc_id"
       else schema.fieldNames.head
     require(schema.fieldNames.contains(key), s"key column $key not in schema")
 
-    // storage frame: normalized leaves + range key + full-row value hash
-    // (over the storage leaves, in plan order — the resume identity)
-    val keyed = df
-      .select(leaves.map(l => l.enc.as(l.name)) :+
-        keyExprOf(key, schema(key).dataType).as("_graft_key"): _*)
-      .withColumn("_graft_rh", rowHash(leaves))
-
-    val st = timed("fingerprint")(keyed.agg(
-      count(lit(1)).as("rows"),
-      expr("bit_xor(_graft_rh)").as("x"),
-      expr("sum(cast(_graft_rh as decimal(38,0)))").as("s")).head())
-    val rows = st.getLong(0)
-    val xor = if (st.isNullAt(1)) 0L else st.getLong(1)
-    val sumMod =
-      if (st.isNullAt(2)) java.math.BigInteger.ZERO else GraftTable.mod64(st.getDecimal(2))
-    // value-complete fingerprint: every leaf value of every row is pinned
-    // (xor + multiplicity-sensitive wrapping sum + count + schema + key)
-    val fingerprint = Hashing.sha256Hex(
-      s"generic;rows=$rows;xor=$xor;sum=$sumMod;key=$key;schema=${schema.json}")
+    val keyed = keyedOf(df, leaves, key, schema(key).dataType)
+    val (rows, fingerprint) =
+      timed("g-fingerprint")(fingerprintOf(keyed, "generic", key, schema))
 
     val cur = GraftTable.currentSnapshot(spark, tableDir)
     val parent = cur.filter(_.inputFingerprint == fingerprint)
     parent.filter(p => p.complete && opts.blockFilter.isEmpty).foreach { p =>
-      return EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-        p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-        p.contentSig, complete = true)
+      return EncodeResult.of(p, 0L)
     }
     val ver = cur.map(_.version).getOrElse(0) + 1
-    val statsFields = (Map(
-      "rows" -> rows.toString, SchemaKey -> schema.json, KeyKey -> key,
-      "generic_leaves" -> leaves.map(l => s"${l.kind}:${l.name}").mkString("\u001f")) ++
-      carriedMeta(cur) ++ extraMeta).toSeq
+    val statsFields = statsOf(rows, schema, None, key, leaves, carriedMeta(cur) ++ extraMeta)
 
     if (rows == 0L) {
-      val snapshotId = Hashing.sha256Hex(s"v$ver;generic;fp=$fingerprint;empty")
-      val snap = Snapshot(ver, snapshotId, cur.map(_.snapshotId), fingerprint,
-        s"generic:$key", None, numBlocks = 0, blocksEncoded = 0L,
-        complete = true, rowCount = 0L, tokenCount = 0L, bytesTotal = 0L,
-        plainBytes = 0L, contentSig = "0" * 16, dataDirs = Nil,
-        manifestDirs = Nil, stats = statsFields.sorted,
-        committedAt = java.time.Instant.now().toString)
-      GraftTable.writeString(
-        spark, s"$tableDir/metadata/v$ver.json", GraftTable.renderSnapshot(snap))
-      GraftTable.commitPointer(spark, tableDir, ver)
-      return EncodeResult(ver, snapshotId, 0, 0L, 0L, 0L, 0L, 0L, 0L,
-        snap.contentSig, complete = true)
+      val snap = Commit(spark, tableDir, ver, Nil, None) { tot =>
+        tot.snapshot(ver, Hashing.sha256Hex(s"v$ver;generic;fp=$fingerprint;empty"),
+          cur.map(_.snapshotId), fingerprint, s"generic:$key", None, numBlocks = 0,
+          complete = true, Nil, statsFields)
+      }
+      return EncodeResult.of(snap, 0L)
     }
 
     // sample-budget-bounded inputs: cache the keyed frame across the
@@ -467,7 +464,7 @@ object GenericTable {
     val (bounds, boundsDir): (Array[Long], Option[String]) = parent match {
       case Some(p) => (GraftTable.loadBounds(spark, tableDir, p), p.boundsDir)
       case None =>
-        val b = timed("bounds")(GraftTable.computeBounds(
+        val b = timed("g-bounds")(GraftTable.computeBounds(
           keyed, rows, opts.targetRowsPerBlock, opts.sampleRows))
         if (b.isEmpty) (b, None)
         else {
@@ -495,57 +492,28 @@ object GenericTable {
       case None => notDone
     }
 
-    val dataDir = timed("encode+write")(
+    val dataDir = timed("g-encode+write")(
       writeBlocksVersion(todo, tableDir, ver, leaves, numBlocks, rows))
-    // persisted: count + JSON write share one pass over the written blocks
-    // (the manifest aggregate reads every payload byte for block_sig)
-    val manifest = manifestOf(spark, s"$tableDir/$dataDir", leaves.length)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val newBlocks = timed("manifest-count")(manifest.count())
-    if (newBlocks == 0 && parent.nonEmpty) {
-      GraftTable.delete(spark, s"$tableDir/$dataDir")
-      val p = parent.get
-      return EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-        p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-        p.contentSig, p.complete)
+    Commit.withManifest(manifestOf(spark, s"$tableDir/$dataDir", leaves.length)) { manifest =>
+      val newBlocks = timed("g-manifest-count")(manifest.count())
+      if (newBlocks == 0 && parent.nonEmpty) {
+        GraftTable.delete(spark, s"$tableDir/$dataDir")
+        EncodeResult.of(parent.get, 0L)
+      } else {
+        val snap = Commit(spark, tableDir, ver, parent.map(_.manifestDirs).getOrElse(Nil),
+          Some(manifest), phases = Some("g-")) { tot =>
+          val snapshotId = Hashing.sha256Hex(
+            s"v$ver;generic;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
+              s"fp=$fingerprint;bounds=${GraftTable.boundsSig(bounds)};" +
+              s"blocks=${tot.blocks}/$numBlocks;rows=${tot.rows};" +
+              s"bytes=${tot.bytes};sig=${tot.contentSig}")
+          tot.snapshot(ver, snapshotId, cur.map(_.snapshotId), fingerprint,
+            s"generic:$key", boundsDir, numBlocks, complete = tot.blocks == numBlocks,
+            parent.map(_.dataDirs).getOrElse(Nil) :+ dataDir, statsFields)
+        }
+        EncodeResult.of(snap, newBlocks)
+      }
     }
-    val manifestDir = s"manifests/v$ver"
-    timed("manifest-write")(
-      manifest.write.mode("overwrite").json(s"$tableDir/$manifestDir"))
-
-    val manifestDirs = parent.map(_.manifestDirs).getOrElse(Nil) :+ manifestDir
-    val dataDirs = parent.map(_.dataDirs).getOrElse(Nil) :+ dataDir
-    // the new version's totals come from the still-persisted manifest
-    // frame; only pre-existing manifest dirs are read back from JSON
-    val all = GraftTable.manifestTotalsWithFresh(
-      spark, tableDir, parent.map(_.manifestDirs).getOrElse(Nil), manifest)
-    val tot = timed("totals")(all.agg(
-      count(lit(1)).as("blocks"),
-      sum("row_count").as("rows"),
-      sum("bytes_total").as("bytes"),
-      sum("plain_bytes").as("plain"),
-      expr("bit_xor(block_sig)").as("sig")).head())
-
-    val blocksDone = tot.getLong(0)
-    val contentSig = f"${tot.getLong(4)}%016x"
-    val complete = blocksDone == numBlocks
-    val snapshotId = Hashing.sha256Hex(
-      s"v$ver;generic;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
-        s"fp=$fingerprint;bounds=${GraftTable.boundsSig(bounds)};" +
-        s"blocks=$blocksDone/$numBlocks;rows=${tot.getLong(1)};" +
-        s"bytes=${tot.getLong(2)};sig=$contentSig")
-    val snap = Snapshot(ver, snapshotId, cur.map(_.snapshotId), fingerprint,
-      s"generic:$key", boundsDir, numBlocks, blocksDone, complete,
-      tot.getLong(1), tokenCount = 0L, tot.getLong(2), tot.getLong(3),
-      contentSig, dataDirs, manifestDirs, statsFields.sorted,
-      java.time.Instant.now().toString)
-    GraftTable.writeString(
-      spark, s"$tableDir/metadata/v$ver.json", GraftTable.renderSnapshot(snap))
-    GraftTable.commitPointer(spark, tableDir, ver)
-    EncodeResult(ver, snapshotId, numBlocks, newBlocks, blocksDone,
-      tot.getLong(1), 0L, tot.getLong(2), tot.getLong(3), contentSig, complete)
-    } finally { manifest.unpersist(false); () }
     } finally if (keyedCached) { keyed.unpersist(false); () }
   }
 
@@ -564,100 +532,39 @@ object GenericTable {
       extraMeta: Map[String, String] = Map.empty): EncodeResult = {
     val spark = batch.sparkSession
     val cur = GraftTable.currentSnapshot(spark, tableDir)
-    if (cur.isEmpty) return encode(batch, tableDir, opts = opts)
+    if (cur.isEmpty) return encode(batch, tableDir, opts = opts, extraMeta = extraMeta)
     val parent = cur.get
-    val stats = parent.stats.toMap
-    require(stats.contains(SchemaKey),
-      s"$tableDir is a token table — use GraftTable.append")
-    val parentSchema = readSchemaOf(parent)
-    val merged = mergeSchemas(parentSchema, batch.schema)
-    val key = stats(KeyKey)
+    require(isGeneric(parent), s"$tableDir is a token table — use GraftTable.append")
+    val merged = mergeSchemas(readSchemaOf(parent), batch.schema)
+    val key = keyNameOf(parent)
     require(batch.schema.fieldNames.contains(key),
       s"append batch must carry the table key column $key")
 
     val schema = batch.schema
-    val plan = planOf(schema)
-    val leaves = plan.flatMap(_._2)
-    val keyed = batch
-      .select(leaves.map(l => l.enc.as(l.name)) :+
-        keyExprOf(key, schema(key).dataType).as("_graft_key"): _*)
-      .withColumn("_graft_rh", rowHash(leaves))
-    val st = keyed.agg(
-      count(lit(1)).as("rows"),
-      expr("bit_xor(_graft_rh)").as("x"),
-      expr("sum(cast(_graft_rh as decimal(38,0)))").as("s")).head()
-    val rows = st.getLong(0)
-    if (rows == 0L)
-      return EncodeResult(parent.version, parent.snapshotId, parent.numBlocks,
-        0L, parent.blocksEncoded, parent.rowCount, parent.tokenCount,
-        parent.bytesTotal, parent.plainBytes, parent.contentSig, parent.complete)
-    val xor = if (st.isNullAt(1)) 0L else st.getLong(1)
-    val sumMod =
-      if (st.isNullAt(2)) java.math.BigInteger.ZERO else GraftTable.mod64(st.getDecimal(2))
-    val fingerprint = Hashing.sha256Hex(
-      s"generic-append;parent=${parent.snapshotId};rows=$rows;xor=$xor;" +
-        s"sum=$sumMod;key=$key;schema=${schema.json}")
+    val leaves = planOf(schema).flatMap(_._2)
+    val keyed = keyedOf(batch, leaves, key, schema(key).dataType)
+    val (rows, fingerprint) =
+      fingerprintOf(keyed, s"generic-append;parent=${parent.snapshotId}", key, schema)
+    if (rows == 0L) return EncodeResult.of(parent, 0L)
 
     val ver = parent.version + 1
-    val bounds = GraftTable.computeBounds(
-      keyed, rows, opts.targetRowsPerBlock, opts.sampleRows)
-    val boundsDir =
-      if (bounds.isEmpty) None
-      else {
-        val dir = s"metadata/bounds/v$ver"
-        GraftTable.writeBounds(spark, s"$tableDir/$dir", bounds)
-        Some(dir)
-      }
-    val newNumBlocks = bounds.length + 1
-    val bcBounds = spark.sparkContext.broadcast(bounds)
-    val withBlocks = keyed.withColumn(
-      "block_id", graft_range_bucket(col("_graft_key"), bcBounds))
-
-    val dataDir = writeBlocksVersion(withBlocks, tableDir, ver, leaves, newNumBlocks, rows)
-    val manifestDir = s"manifests/v$ver"
-    // persisted across the JSON write and the totals aggregate: one pass
-    // over the written blocks, and totals never re-read this version
-    val manifest = manifestOf(spark, s"$tableDir/$dataDir", leaves.length)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val manifestDirs = parent.manifestDirs :+ manifestDir
-    val dataDirs = parent.dataDirs :+ dataDir
+    val (bounds, dataDir) = writeBatchBlocks(keyed, tableDir, ver, leaves, rows, opts)
+    val numBlocks = parent.numBlocks + bounds.length + 1
     // cross-version totals: manifests of evolved versions differ in their
     // codec_i columns, but the accounting columns are common to all
-    val tot = try {
-      manifest.write.mode("overwrite").json(s"$tableDir/$manifestDir")
-      GraftTable.manifestTotalsWithFresh(spark, tableDir, parent.manifestDirs, manifest)
-        .agg(
-          count(lit(1)).as("blocks"),
-          sum("row_count").as("rows"),
-          sum("bytes_total").as("bytes"),
-          sum("plain_bytes").as("plain"),
-          expr("bit_xor(block_sig)").as("sig")).head()
-    } finally { manifest.unpersist(false); () }
-    val blocksDone = tot.getLong(0)
-    val contentSig = f"${tot.getLong(4)}%016x"
-    val numBlocks = parent.numBlocks + newNumBlocks
-    val statsFields = (Map(
-      "rows" -> tot.getLong(1).toString,
-      SchemaKey -> merged.json,
-      WriteSchemaKey -> schema.json,
-      KeyKey -> key,
-      "generic_leaves" -> leaves.map(l => s"${l.kind}:${l.name}").mkString("\u001f")) ++
-      carriedMeta(cur) ++ extraMeta).toSeq
-    val snapshotId = Hashing.sha256Hex(
-      s"v$ver;generic-append;parent=${parent.snapshotId};fp=$fingerprint;" +
-        s"bounds=${GraftTable.boundsSig(bounds)};blocks=$blocksDone/$numBlocks;" +
-        s"rows=${tot.getLong(1)};bytes=${tot.getLong(2)};sig=$contentSig")
-    val snap = Snapshot(ver, snapshotId, Some(parent.snapshotId), fingerprint,
-      s"generic:$key", boundsDir, numBlocks, blocksDone,
-      complete = parent.complete, tot.getLong(1), tokenCount = 0L,
-      tot.getLong(2), tot.getLong(3), contentSig, dataDirs, manifestDirs,
-      statsFields.sorted, java.time.Instant.now().toString)
-    GraftTable.writeString(
-      spark, s"$tableDir/metadata/v$ver.json", GraftTable.renderSnapshot(snap))
-    GraftTable.commitPointer(spark, tableDir, ver)
-    EncodeResult(ver, snapshotId, numBlocks, newNumBlocks.toLong, blocksDone,
-      tot.getLong(1), 0L, tot.getLong(2), tot.getLong(3), contentSig,
-      complete = parent.complete)
+    val snap = Commit.withManifest(manifestOf(spark, s"$tableDir/$dataDir", leaves.length)) { m =>
+      Commit(spark, tableDir, ver, parent.manifestDirs, Some(m)) { tot =>
+        val snapshotId = Hashing.sha256Hex(
+          s"v$ver;generic-append;parent=${parent.snapshotId};fp=$fingerprint;" +
+            s"bounds=${GraftTable.boundsSig(bounds)};blocks=${tot.blocks}/$numBlocks;" +
+            s"rows=${tot.rows};bytes=${tot.bytes};sig=${tot.contentSig}")
+        tot.snapshot(ver, snapshotId, Some(parent.snapshotId), fingerprint,
+          s"generic:$key", parent.boundsDir, numBlocks, complete = parent.complete,
+          parent.dataDirs :+ dataDir,
+          statsOf(tot.rows, merged, Some(schema), key, leaves, carriedMeta(cur) ++ extraMeta))
+      }
+    }
+    EncodeResult.of(snap, bounds.length + 1L)
   }
 
   /** Incremental compaction for the generic lane (mirror of
@@ -677,9 +584,7 @@ object GenericTable {
     val p = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $tableDir"))
     require(isGeneric(p), s"$tableDir is a token table — use GraftTable.compact")
-    def noop = EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-      p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-      p.contentSig, p.complete)
+    def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
 
     val man = GraftTable.readManifest(spark, tableDir, p)
@@ -722,77 +627,32 @@ object GenericTable {
       opName: String,
       opDetail: String,
       opts: Options): EncodeResult = {
-    val stats = p.stats.toMap
-    val key = stats(KeyKey)
-    val plan = planOf(merged)
-    val leaves = plan.flatMap(_._2)
-    val keyed = rows
-      .select(leaves.map(l => l.enc.as(l.name)) :+
-        keyExprOf(key, merged(key).dataType).as("_graft_key"): _*)
-      .withColumn("_graft_rh", rowHash(leaves))
-      .cache()
+    val key = keyNameOf(p)
+    val leaves = planOf(merged).flatMap(_._2)
+    val keyed = keyedOf(rows, leaves, key, merged(key).dataType).cache()
     try {
       val nRows = keyed.count()
       val ver = p.version + 1
-      val (dataDirs, manifestDirs, newBlocks, freshMan) =
-        if (nRows == 0) (keepData, keepMan, 0L, None)
-        else {
-          val bounds = GraftTable.computeBounds(
-            keyed, nRows, opts.targetRowsPerBlock, opts.sampleRows)
-          val bcBounds = spark.sparkContext.broadcast(bounds)
-          val withBlocks = keyed.withColumn(
-            "block_id", graft_range_bucket(col("_graft_key"), bcBounds))
-          val dataDir = writeBlocksVersion(
-            withBlocks, tableDir, ver, leaves, bounds.length + 1, nRows)
-          val manifestDir = s"manifests/v$ver"
-          // persisted across the JSON write and the totals aggregate; a
-          // failed write must not leak the cached frame (the totals
-          // try/finally below is not yet in scope here)
-          val mf = manifestOf(spark, s"$tableDir/$dataDir", leaves.length)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try mf.write.mode("overwrite").json(s"$tableDir/$manifestDir")
-          catch { case t: Throwable => mf.unpersist(false); throw t }
-          (keepData :+ dataDir, keepMan :+ manifestDir, bounds.length + 1L, Some(mf))
-        }
-      val tot = try {
-        if (manifestDirs.isEmpty) (0L, 0L, 0L, 0L, 0L)
-        else {
-          val all = freshMan match {
-            case Some(mf) =>
-              GraftTable.manifestTotalsWithFresh(spark, tableDir, keepMan, mf)
-            case None => GraftTable.readManifestTotals(spark, tableDir, manifestDirs)
-          }
-          val t = all.agg(
-            count(lit(1)).as("blocks"), sum("row_count").as("rows"),
-            sum("bytes_total").as("bytes"), sum("plain_bytes").as("plain"),
-            expr("bit_xor(block_sig)").as("sig")).head()
-          (t.getLong(0), t.getLong(1), t.getLong(2), t.getLong(3), t.getLong(4))
-        }
-      } finally freshMan.foreach(_.unpersist(false))
-      val contentSig = f"${tot._5}%016x"
       val combinedFp = Hashing.sha256Hex(s"${p.inputFingerprint};$opName=v$ver")
-      val statsFields = (Map(
-        "rows" -> tot._2.toString,
-        SchemaKey -> merged.json,
-        WriteSchemaKey -> merged.json,
-        KeyKey -> key,
-        "generic_leaves" -> leaves.map(l => s"${l.kind}:${l.name}").mkString("\u001f")) ++
-        carriedMeta(Some(p))).toSeq
-      val snapshotId = Hashing.sha256Hex(
-        s"v$ver;generic-$opName;parent=${p.snapshotId};fp=$combinedFp;" +
-          s"$opDetail;rows=${tot._2};" +
-          s"bytes=${tot._3};sig=$contentSig")
-      val snap = Snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp,
-        s"generic:$key", p.boundsDir, tot._1.toInt, tot._1,
-        complete = p.complete, tot._2, tokenCount = 0L,
-        tot._3, tot._4, contentSig, dataDirs, manifestDirs,
-        statsFields.sorted, java.time.Instant.now().toString)
-      GraftTable.writeString(
-        spark, s"$tableDir/metadata/v$ver.json", GraftTable.renderSnapshot(snap))
-      GraftTable.commitPointer(spark, tableDir, ver)
-      EncodeResult(ver, snapshotId, tot._1.toInt, newBlocks,
-        tot._1, tot._2, 0L, tot._3, tot._4,
-        contentSig, complete = p.complete)
+      def commit(dataDirs: Seq[String], fresh: Option[DataFrame]): Snapshot =
+        Commit(spark, tableDir, ver, keepMan, fresh) { tot =>
+          val snapshotId = Hashing.sha256Hex(
+            s"v$ver;generic-$opName;parent=${p.snapshotId};fp=$combinedFp;" +
+              s"$opDetail;rows=${tot.rows};" +
+              s"bytes=${tot.bytes};sig=${tot.contentSig}")
+          tot.snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp,
+            s"generic:$key", p.boundsDir, tot.blocks.toInt, complete = p.complete,
+            dataDirs, statsOf(tot.rows, merged, Some(merged), key, leaves, carriedMeta(Some(p))))
+        }
+      if (nRows == 0) EncodeResult.of(commit(keepData, None), 0L)
+      else {
+        val (bounds, dataDir) = writeBatchBlocks(keyed, tableDir, ver, leaves, nRows, opts)
+        val snap = Commit.withManifest(
+          manifestOf(spark, s"$tableDir/$dataDir", leaves.length)) { m =>
+          commit(keepData :+ dataDir, Some(m))
+        }
+        EncodeResult.of(snap, bounds.length + 1L)
+      }
     } finally keyed.unpersist()
   }
 
@@ -821,9 +681,7 @@ object GenericTable {
     val p = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $tableDir"))
     require(isGeneric(p), s"$tableDir is a token table")
-    def noop = EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-      p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-      p.contentSig, p.complete)
+    def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
     val merged = readSchemaOf(p)
     // detection scan: only the columns the predicate references (all, if
@@ -881,9 +739,7 @@ object GenericTable {
     require(isGeneric(p), s"$tableDir is a token table")
     require(keys.columns.length == 1,
       s"deleteKeys takes a single-column frame, got ${keys.columns.mkString(",")}")
-    def noop = EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-      p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-      p.contentSig, p.complete)
+    def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
     val merged = readSchemaOf(p)
     val key = keyNameOf(p)
@@ -947,9 +803,7 @@ object GenericTable {
     val p = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $tableDir"))
     require(isGeneric(p), s"$tableDir is a token table")
-    def noop = EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-      p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-      p.contentSig, p.complete)
+    def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
     val merged = readSchemaOf(p)
     val key = keyNameOf(p)
@@ -970,10 +824,11 @@ object GenericTable {
       opDetail = s"deleted-range=[$lo,$hi];from=${hit.toSeq.sorted.mkString(",")}", opts)
   }
 
-  /** The shared block-encode pipeline of encode() and append(): one
-    * explicit hash exchange on block_id (spill-aware partition count),
-    * Tungsten sortWithinPartitions, streaming one-block-at-a-time
-    * assembly; writes `data/v<ver>` and returns its relative dir.
+  /** The block-encode pipeline of every generic commit (encode, append
+    * and the rewrite commits of compact and the deletes): one explicit
+    * hash exchange on block_id (spill-aware partition count), Tungsten
+    * sortWithinPartitions, streaming one-block-at-a-time assembly; writes
+    * `data/v<ver>` and returns its relative dir.
     */
   private def writeBlocksVersion(
       withBlocks: DataFrame,
@@ -1006,6 +861,26 @@ object GenericTable {
     val dataDir = s"data/v$ver"
     blocks.write.mode("overwrite").parquet(s"$tableDir/$dataDir")
     dataDir
+  }
+
+  /** Write `keyed` (an append batch or rewritten rows) as `data/v<ver>`,
+    * range-blocked by its own bounds. The bounds are broadcast only: no
+    * file is kept, because bounds files are read back only to resume an
+    * encode, and these versions never resume. Returns (bounds, data dir).
+    */
+  private def writeBatchBlocks(
+      keyed: DataFrame,
+      tableDir: String,
+      ver: Int,
+      leaves: Seq[Leaf],
+      rows: Long,
+      opts: Options): (Array[Long], String) = {
+    val bounds = GraftTable.computeBounds(
+      keyed, rows, opts.targetRowsPerBlock, opts.sampleRows)
+    val bcBounds = keyed.sparkSession.sparkContext.broadcast(bounds)
+    val withBlocks = keyed.withColumn(
+      "block_id", graft_range_bucket(col("_graft_key"), bcBounds))
+    (bounds, writeBlocksVersion(withBlocks, tableDir, ver, leaves, bounds.length + 1, rows))
   }
 
   /** Manifest from the WRITTEN data files: per-leaf codec evidence + sizes
@@ -1082,13 +957,6 @@ object GenericTable {
     DataType.fromJson(json).asInstanceOf[StructType]
   }
 
-  /** Decode, version by version: each version's blocks are read with the
-    * leaf plan of the schema they were written with, projected onto the
-    * requested fields of the current (merged) read schema — fields a
-    * version predates read as null, exactly like Parquet/Iceberg schema
-    * evolution. The per-version frames union by position (same projected
-    * column list).
-    */
   /** Decode only rows whose range key falls in [lo, hi]: block pruning on
     * the per-block key_min/key_max zone maps (a plain predicate on the
     * block files, so parquet row-group statistics skip whole groups), then
@@ -1147,6 +1015,13 @@ object GenericTable {
     }
   }
 
+  /** Decode, version by version: each version's blocks are read with the
+    * leaf plan of the schema they were written with, projected onto the
+    * requested fields of the current (merged) read schema — fields a
+    * version predates read as null, exactly like Parquet/Iceberg schema
+    * evolution. The per-version frames union by position (same projected
+    * column list).
+    */
   private def decodeFields(
       spark: SparkSession,
       tableDir: String,

@@ -12,6 +12,7 @@ import org.json4s.jackson.JsonMethods
 import graft.GateProps
 import graft.codec.Hashing
 import graft.functions._
+import graft.table.Commit.{carriedMeta, timed}
 
 /** Iceberg-shaped encoded token table (SURVEY.md §1.2, E4–E5, E13–E16).
   *
@@ -27,7 +28,7 @@ import graft.functions._
   * {{{
   *   data/v<N>/part-*.parquet     encoded block rows (payload columns)
   *   manifests/v<N>/part-*.json   manifest entries for blocks encoded in vN
-  *   metadata/v<N>.json           snapshot (bounds, lineage, metrics, stats)
+  *   metadata/v<N>.json           snapshot (bounds dir, lineage, totals, column stats)
   *   metadata/current             latest committed version number
   * }}}
   *
@@ -115,6 +116,16 @@ object GraftTable {
       if (plainBytes == 0) 1.0 else bytesTotal.toDouble / plainBytes
   }
 
+  object EncodeResult {
+    /** The result of a call that leaves `snap` current and encoded
+      * `blocksThisRun` blocks (0 for a no-op on an unchanged `snap`).
+      */
+    def of(snap: Snapshot, blocksThisRun: Long): EncodeResult =
+      EncodeResult(snap.version, snap.snapshotId, snap.numBlocks, blocksThisRun,
+        snap.blocksEncoded, snap.rowCount, snap.tokenCount, snap.bytesTotal,
+        snap.plainBytes, snap.contentSig, snap.complete)
+  }
+
   /** Blocking/sort key: numeric doc_id when the string is a canonical
     * decimal (the input_hint corpus), else a deterministic 64-bit hash —
     * blocking stays valid, range pruning degrades gracefully.
@@ -122,18 +133,12 @@ object GraftTable {
   private val KeyExpr = "coalesce(try_cast(doc_id as bigint), xxhash64(doc_id))"
   private val KeyStrategy = "numeric_or_xxhash64"
 
-  // ------------------------------------------------------------- encode
+  /** Input-shaped token rows plus the blocking key `_graft_key`. */
+  private def keyedOf(tokens: DataFrame): DataFrame = tokens.select(
+    col("doc_id"), col("tokens"), col("n_tok"), col("source"),
+    expr(KeyExpr).as("_graft_key"))
 
-  private val timing = sys.env.get("GRAFT_TIMING").contains("1")
-  private def timed[T](label: String)(f: => T): T = {
-    if (!timing) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"GRAFT_TIMING $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-  }
+  // ------------------------------------------------------------- encode
 
   /** Input contract: `doc_id` values are unique (the input_hint's table
     * key). Duplicate ids still round-trip correctly, but rows that tie on
@@ -156,9 +161,7 @@ object GraftTable {
       opts: Options = Options(),
       extraMeta: Map[String, String] = Map.empty): EncodeResult = {
     val spark = tokens.sparkSession
-    val keyed = tokens.select(
-      col("doc_id"), col("tokens"), col("n_tok"), col("source"),
-      expr(KeyExpr).as("_graft_key"))
+    val keyed = keyedOf(tokens)
 
     val stats = timed("stats")(Stats.collect(keyed, opts.sampleRows))
     val cur = currentSnapshot(spark, tableDir)
@@ -176,9 +179,7 @@ object GraftTable {
     // of this input — return without loading bounds, broadcasting, or
     // running an empty encode job (at 15M blocks those cost real seconds)
     parent.filter(p => p.complete && opts.blockFilter.isEmpty).foreach { p =>
-      return EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-        p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-        p.contentSig, complete = true)
+      return EncodeResult.of(p, 0L)
     }
     val ver = cur.map(_.version).getOrElse(0) + 1
 
@@ -243,18 +244,71 @@ object GraftTable {
       case None => notDone
     }
 
-    // block assembly: ONE shuffle (explicit repartition on block_id — the
-    // fixed partition count is immune to AQE's bytes-based coalescing,
-    // which would serialize this CPU-bound stage) + sortWithinPartitions
-    // (Tungsten external sort, spill-safe) + a streaming per-partition
-    // grouper that holds exactly ONE block in memory while encoding.
-    //
-    // A declarative groupBy + array_sort(collect_list(...)) is the obvious
-    // alternative, but collect_list's map-side partial aggregation buffers
-    // entire shuffle partitions in the agg hash map (no size reduction —
-    // measured 3–13× slower with erratic spill behavior at a few hundred
-    // MB). mapPartitions over the sorted stream is the memory-bounded
-    // typed-Dataset form of the same plan.
+    // overwrite: a same-version dir can only be an orphan from a crashed
+    // run (versions enter data_dirs only after the snapshot commit below)
+    val dataDir = timed("encode+write")(
+      writeBlocksVersion(todo, tableDir, ver, numBlocks, stats))
+
+    // manifest from the WRITTEN files (column-pruned scan, no re-encode)
+    Commit.withManifest(manifestOf(spark, s"$tableDir/$dataDir")) { manifest =>
+      val newBlocks = timed("manifest-count")(manifest.count())
+      if (newBlocks == 0) {
+        // nothing to write: drop the empty version dir
+        delete(spark, s"$tableDir/$dataDir")
+        parent match {
+          case Some(p) => EncodeResult.of(p, 0L) // the current snapshot stands
+          case None =>
+            // empty input, no parent: commit an empty (complete) snapshot —
+            // spark.read.json cannot infer a schema from a rowless manifest dir
+            val snap = Commit(spark, tableDir, ver, Nil, None) { tot =>
+              tot.snapshot(ver,
+                Hashing.sha256Hex(s"v$ver;parent=none;fp=${stats.fingerprint};empty"),
+                None, stats.fingerprint, KeyStrategy, boundsDir, numBlocks = 0,
+                complete = true, Nil, stats.asJsonFields ++ meta.toSeq)
+            }
+            EncodeResult.of(snap, 0L)
+        }
+      } else {
+        val snap = Commit(spark, tableDir, ver, parent.map(_.manifestDirs).getOrElse(Nil),
+          Some(manifest), phases = Some("")) { tot =>
+          val snapshotId = Hashing.sha256Hex(
+            s"v$ver;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
+              s"fp=${stats.fingerprint};bounds=${boundsRef.sigHex()};" +
+              s"blocks=${tot.blocks}/$numBlocks;rows=${tot.rows};" +
+              s"tokens=${tot.tokens};bytes=${tot.bytes};sig=${tot.contentSig}")
+          tot.snapshot(ver, snapshotId, parent.map(_.snapshotId), stats.fingerprint,
+            KeyStrategy, boundsDir, numBlocks, complete = tot.blocks == numBlocks,
+            parent.map(_.dataDirs).getOrElse(Nil) :+ dataDir,
+            stats.asJsonFields ++ meta.toSeq)
+        }
+        EncodeResult.of(snap, newBlocks)
+      }
+    }
+    } finally if (keyedCached) { keyed.unpersist(false); () }
+  }
+
+  /** Block assembly for `withBlocks` (keyed rows plus `block_id`): ONE
+    * shuffle (explicit repartition on block_id — the fixed partition count
+    * is immune to AQE's bytes-based coalescing, which would serialize this
+    * CPU-bound stage) + sortWithinPartitions (Tungsten external sort,
+    * spill-safe) + a streaming per-partition grouper that holds exactly ONE
+    * block in memory while encoding. Writes `data/v<ver>` and returns its
+    * relative dir.
+    *
+    * A declarative groupBy + array_sort(collect_list(...)) is the obvious
+    * alternative, but collect_list's map-side partial aggregation buffers
+    * entire shuffle partitions in the agg hash map (no size reduction —
+    * measured 3–13× slower with erratic spill behavior at a few hundred
+    * MB). mapPartitions over the sorted stream is the memory-bounded
+    * typed-Dataset form of the same plan.
+    */
+  private def writeBlocksVersion(
+      withBlocks: DataFrame,
+      tableDir: String,
+      ver: Int,
+      numBlocks: Int,
+      stats: ColumnStats): String = {
+    val spark = withBlocks.sparkSession
     import spark.implicits._
     val parallelism = spark.sparkContext.defaultParallelism
     val encodeParts = encodePartitions(numBlocks, parallelism, stats.tokensTotal)
@@ -265,7 +319,7 @@ object GraftTable {
     // (shuffle+sort 3.7 s → 3.2 s at local[8]). On a real cluster those
     // bytes cross the network. BlockAssembler unpacks after the exchange;
     // table bytes are unchanged (packing is per-row and lossless).
-    val blocks = todo
+    val blocks = withBlocks
       .select(col("block_id"), col("_graft_key").as("k"), col("doc_id"),
         graft_encode(col("tokens"), "for").as("tokens"),
         col("n_tok"), col("source"))
@@ -274,152 +328,35 @@ object GraftTable {
       .as[BlockInput]
       .mapPartitions(it =>
         BlockAssembler.assemble(it, ver, stats.allowDict, stats.allowFsst))
-
-    // overwrite: a same-version dir can only be an orphan from a crashed
-    // run (versions enter data_dirs only after the snapshot commit below)
     val dataDir = s"data/v$ver"
-    timed("encode+write")(
-      blocks.write.mode("overwrite").parquet(s"$tableDir/$dataDir"))
-
-    // manifest from the WRITTEN files (column-pruned scan, no re-encode);
-    // persisted so count + JSON write share one computation instead of
-    // re-aggregating the written blocks twice
-    val manifest = manifestOf(spark, s"$tableDir/$dataDir")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val newBlocks = timed("manifest-count")(manifest.count())
-    if (newBlocks == 0 && parent.nonEmpty) {
-      // nothing to do: drop the empty version dir, current snapshot stands
-      delete(spark, s"$tableDir/$dataDir")
-      val p = parent.get
-      return EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-        p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-        p.contentSig, p.complete)
-    }
-    if (newBlocks == 0) {
-      // empty input, no parent: commit an empty (complete) snapshot —
-      // spark.read.json cannot infer a schema from a rowless manifest dir
-      delete(spark, s"$tableDir/$dataDir")
-      val snapshotId = Hashing.sha256Hex(
-        s"v$ver;parent=none;fp=${stats.fingerprint};empty")
-      val snap = Snapshot(ver, snapshotId, None, stats.fingerprint,
-        KeyStrategy, boundsDir, numBlocks = 0, blocksEncoded = 0L,
-        complete = true, rowCount = 0L, tokenCount = 0L, bytesTotal = 0L,
-        plainBytes = 0L, contentSig = "0" * 16, dataDirs = Nil,
-        manifestDirs = Nil, stats = (stats.asJsonFields ++ meta.toSeq).sorted,
-        committedAt = java.time.Instant.now().toString)
-      writeString(spark, s"$tableDir/metadata/v$ver.json", renderSnapshot(snap))
-      commitPointer(spark, tableDir, ver)
-      return EncodeResult(ver, snapshotId, 0, 0L, 0L, 0L, 0L, 0L, 0L,
-        snap.contentSig, complete = true)
-    }
-
-    val manifestDir = s"manifests/v$ver"
-    timed("manifest-write")(manifest.write.mode("overwrite").json(s"$tableDir/$manifestDir"))
-
-    val manifestDirs = parent.map(_.manifestDirs).getOrElse(Nil) :+ manifestDir
-    val dataDirs = parent.map(_.dataDirs).getOrElse(Nil) :+ dataDir
-
-    // snapshot totals over ALL live manifests: O(1) driver state; the new
-    // version comes from the still-persisted manifest frame, so only
-    // pre-existing manifest dirs are read back from JSON
-    val all = manifestTotalsWithFresh(
-      spark, tableDir, parent.map(_.manifestDirs).getOrElse(Nil), manifest)
-    val tot = timed("totals")(all.agg(
-      count(lit(1)).as("blocks"),
-      sum("row_count").as("rows"),
-      sum("token_count").as("tokens"),
-      sum("bytes_total").as("bytes"),
-      sum("plain_bytes").as("plain"),
-      expr("bit_xor(block_sig)").as("sig")).head())
-
-    val blocksDone = tot.getLong(0)
-    val contentSig = f"${tot.getLong(5)}%016x"
-    val complete = blocksDone == numBlocks
-    val snapshotId = Hashing.sha256Hex(
-      s"v$ver;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
-        s"fp=${stats.fingerprint};bounds=${boundsRef.sigHex()};" +
-        s"blocks=$blocksDone/$numBlocks;rows=${tot.getLong(1)};" +
-        s"tokens=${tot.getLong(2)};bytes=${tot.getLong(3)};sig=$contentSig")
-
-    val snap = Snapshot(
-      version = ver,
-      snapshotId = snapshotId,
-      parentId = parent.map(_.snapshotId),
-      inputFingerprint = stats.fingerprint,
-      keyStrategy = KeyStrategy,
-      boundsDir = boundsDir,
-      numBlocks = numBlocks,
-      blocksEncoded = blocksDone,
-      complete = complete,
-      rowCount = tot.getLong(1),
-      tokenCount = tot.getLong(2),
-      bytesTotal = tot.getLong(3),
-      plainBytes = tot.getLong(4),
-      contentSig = contentSig,
-      dataDirs = dataDirs,
-      manifestDirs = manifestDirs,
-      stats = (stats.asJsonFields ++ meta.toSeq).sorted,
-      committedAt = java.time.Instant.now().toString)
-
-    writeString(spark, s"$tableDir/metadata/v$ver.json", renderSnapshot(snap))
-    commitPointer(spark, tableDir, ver)
-
-    EncodeResult(ver, snapshotId, numBlocks, newBlocks, blocksDone,
-      tot.getLong(1), tot.getLong(2), tot.getLong(3), tot.getLong(4),
-      contentSig, complete)
-    } finally { manifest.unpersist(false); () }
-    } finally if (keyedCached) { keyed.unpersist(false); () }
+    blocks.write.mode("overwrite").parquet(s"$tableDir/$dataDir")
+    dataDir
   }
 
-  /** `stream_*` snapshot metadata (the streaming sink's exactly-once
-    * batchId watermark) inherited from the parent snapshot when the caller
-    * doesn't override it, so compaction / manual writes interleaved with an
-    * active stream never erase the replay guard (ADVICE r2).
+  /** Write `keyed` (an append batch or compacted rows) as `data/v<ver>`,
+    * range-blocked by its own bounds into block ids from `blockOffset`.
+    * The bounds are ephemeral (blocks are assigned and written within this
+    * call; append and compact have no mid-batch resume) — broadcast only,
+    * no file. Returns (blocks written, data dir).
     */
-  private def carriedMeta(parent: Option[Snapshot]): Map[String, String] =
-    parent.map(_.stats.filter(_._1.startsWith("stream_")).toMap)
-      .getOrElse(Map.empty)
-
-  /** Totals-projection schema for manifest JSON reads: every totals
-    * aggregate in the commit paths touches only these five LONG fields, so
-    * reading with an explicit schema skips spark.read.json's
-    * schema-inference pass (a full extra read of every manifest file).
-    * Token-lane manifests carry all five; generic-lane manifests have no
-    * token_count (reads null, which no generic consumer aggregates).
-    */
-  private[table] val manifestTotalsSchema = StructType(Seq(
-    StructField("row_count", LongType),
-    StructField("token_count", LongType),
-    StructField("bytes_total", LongType),
-    StructField("plain_bytes", LongType),
-    StructField("block_sig", LongType)))
-
-  private[table] def readManifestTotals(
-      spark: SparkSession, tableDir: String, manifestDirs: Seq[String]): DataFrame =
-    spark.read.schema(manifestTotalsSchema)
-      .json(manifestDirs.map(d => s"$tableDir/$d"): _*)
-
-  /** Totals frame over live manifests where the LAST dir was just written
-    * from `fresh`: pre-existing dirs read their (small) JSON files; the
-    * new version aggregates the in-memory frame that produced its file —
-    * the totals job never re-reads data the same commit just wrote.
-    * Columns are pinned to [[manifestTotalsSchema]]; generic manifests
-    * carry no token_count and contribute null there, exactly as the JSON
-    * read would.
-    */
-  private[table] def manifestTotalsWithFresh(
-      spark: SparkSession, tableDir: String,
-      oldDirs: Seq[String], fresh: DataFrame): DataFrame = {
-    val freshCols = fresh.columns.toSet
-    val freshTot = fresh.select(manifestTotalsSchema.fields.toIndexedSeq.map(f =>
-      (if (freshCols(f.name)) col(f.name).cast(f.dataType)
-       else lit(null).cast(f.dataType)).as(f.name)): _*)
-    if (oldDirs.isEmpty) freshTot
-    else readManifestTotals(spark, tableDir, oldDirs).unionByName(freshTot)
+  private def writeBatchBlocks(
+      keyed: DataFrame,
+      stats: ColumnStats,
+      opts: Options,
+      tableDir: String,
+      ver: Int,
+      blockOffset: Int): (Int, String) = {
+    val bounds = computeBounds(keyed, stats.rows, opts.targetRowsPerBlock, opts.sampleRows)
+    val bcBounds = keyed.sparkSession.sparkContext.broadcast(bounds)
+    val withBlocks = keyed.withColumn("block_id",
+      graft_range_bucket(col("_graft_key"), bcBounds) + blockOffset)
+    val numNew = bounds.length + 1
+    (numNew, writeBlocksVersion(withBlocks, tableDir, ver, numNew, stats))
   }
 
-  /** Key-span projection for version pruning (same pinned-schema idiom). */
+  /** Key-span projection for version pruning: a pinned schema skips the
+    * manifest JSON schema-inference pass.
+    */
   private[graft] val manifestSpanSchema = StructType(Seq(
     StructField("ver", LongType),
     StructField("key_min", LongType),
@@ -779,11 +716,6 @@ object GraftTable {
     } else spark.read.parquet(snap.dataDirs.map(d => s"$tableDir/$d"): _*)
   }
 
-  /** Snapshot as of an older `version` (time travel). Every committed
-    * version keeps its metadata/vN.json, so any version is addressable
-    * until [[expireSnapshots]] reclaims its files — after which this
-    * fails loud rather than returning a partial table.
-    */
   /** Version number of a `data/vN` / `manifests/vN` relative dir. */
   private[graft] def versionOfDir(dir: String): Int =
     dir.substring(dir.lastIndexOf("/v") + 2).toInt
@@ -793,6 +725,11 @@ object GraftTable {
       spark: SparkSession, tableDir: String, version: Int): Option[Snapshot] =
     readStringOpt(spark, s"$tableDir/metadata/v$version.json").map(parseSnapshot)
 
+  /** Snapshot as of an older `version` (time travel). Every committed
+    * version keeps its metadata/vN.json, so any version is addressable
+    * until [[expireSnapshots]] reclaims its files — after which this
+    * fails loud rather than returning a partial table.
+    */
   def snapshotAt(spark: SparkSession, tableDir: String, version: Int): Snapshot = {
     val s = snapshotVersion(spark, tableDir, version)
       .getOrElse(throw new IllegalArgumentException(
@@ -912,75 +849,28 @@ object GraftTable {
     val p = parent.get
     val ver = p.version + 1
 
-    val keyed = batch.select(
-      col("doc_id"), col("tokens"), col("n_tok"), col("source"),
-      expr(KeyExpr).as("_graft_key"))
+    val keyed = keyedOf(batch)
     val stats = Stats.collect(keyed, opts.sampleRows)
-    if (stats.rows == 0L)
-      return EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-        p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-        p.contentSig, p.complete)
+    if (stats.rows == 0L) return EncodeResult.of(p, 0L)
 
     val blockOffset =
       if (p.manifestDirs.isEmpty) 0
       else readManifest(spark, tableDir, p)
         .agg(max(col("block_id").cast("int"))).head().getInt(0) + 1
-    // batch bounds are ephemeral (blocks are assigned and written within
-    // this call; append has no mid-batch resume) — broadcast only, no file
-    val bounds = computeBounds(keyed, stats.rows, opts.targetRowsPerBlock, opts.sampleRows)
-    val bcBounds = spark.sparkContext.broadcast(bounds)
-    val numNew = bounds.length + 1
-
-    import spark.implicits._
-    val parallelism = spark.sparkContext.defaultParallelism
-    val encodeParts = encodePartitions(numNew, parallelism, stats.tokensTotal)
-    val blocks = keyed
-      .select(
-        (graft_range_bucket(col("_graft_key"), bcBounds) + blockOffset).as("block_id"),
-        col("_graft_key").as("k"), col("doc_id"),
-        graft_encode(col("tokens"), "for").as("tokens"),
-        col("n_tok"), col("source"))
-      .repartition(encodeParts, col("block_id"))
-      .sortWithinPartitions(col("block_id"), col("k"), col("doc_id"))
-      .as[BlockInput]
-      .mapPartitions(it =>
-        BlockAssembler.assemble(it, ver, stats.allowDict, stats.allowFsst))
-
-    val dataDir = s"data/v$ver"
-    blocks.write.mode("overwrite").parquet(s"$tableDir/$dataDir")
-    // persisted across the JSON write and the totals aggregate: one pass
-    // over the written blocks, and totals never re-read this version
-    val manifest = manifestOf(spark, s"$tableDir/$dataDir")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val manifestDir = s"manifests/v$ver"
-    val manifestDirs = p.manifestDirs :+ manifestDir
-    val dataDirs = p.dataDirs :+ dataDir
-    val tot = try {
-      manifest.write.mode("overwrite").json(s"$tableDir/$manifestDir")
-      manifestTotalsWithFresh(spark, tableDir, p.manifestDirs, manifest).agg(
-        count(lit(1)).as("blocks"), sum("row_count").as("rows"),
-        sum("token_count").as("tokens"), sum("bytes_total").as("bytes"),
-        sum("plain_bytes").as("plain"), expr("bit_xor(block_sig)").as("sig")).head()
-    } finally { manifest.unpersist(false); () }
-
+    val (numNew, dataDir) = writeBatchBlocks(keyed, stats, opts, tableDir, ver, blockOffset)
     val combinedFp = Hashing.sha256Hex(s"${p.inputFingerprint}+${stats.fingerprint}")
-    val contentSig = f"${tot.getLong(5)}%016x"
-    val totalBlocks = p.numBlocks + numNew
-    val snapshotId = Hashing.sha256Hex(
-      s"v$ver;parent=${p.snapshotId};fp=$combinedFp;append=$numNew;" +
-        s"rows=${tot.getLong(1)};tokens=${tot.getLong(2)};" +
-        s"bytes=${tot.getLong(3)};sig=$contentSig")
-    val snap = Snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp,
-      KeyStrategy, p.boundsDir, totalBlocks, tot.getLong(0), complete = true,
-      tot.getLong(1), tot.getLong(2), tot.getLong(3), tot.getLong(4),
-      contentSig, dataDirs, manifestDirs,
-      (stats.asJsonFields ++ (carriedMeta(Some(p)) ++ extraMeta).toSeq).sorted,
-      java.time.Instant.now().toString)
-    writeString(spark, s"$tableDir/metadata/v$ver.json", renderSnapshot(snap))
-    commitPointer(spark, tableDir, ver)
-    EncodeResult(ver, snapshotId, totalBlocks, numNew.toLong, tot.getLong(0),
-      tot.getLong(1), tot.getLong(2), tot.getLong(3), tot.getLong(4),
-      contentSig, complete = true)
+    val snap = Commit.withManifest(manifestOf(spark, s"$tableDir/$dataDir")) { m =>
+      Commit(spark, tableDir, ver, p.manifestDirs, Some(m)) { tot =>
+        val snapshotId = Hashing.sha256Hex(
+          s"v$ver;parent=${p.snapshotId};fp=$combinedFp;append=$numNew;" +
+            s"rows=${tot.rows};tokens=${tot.tokens};" +
+            s"bytes=${tot.bytes};sig=${tot.contentSig}")
+        tot.snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp, KeyStrategy,
+          p.boundsDir, p.numBlocks + numNew, complete = true, p.dataDirs :+ dataDir,
+          stats.asJsonFields ++ (carriedMeta(Some(p)) ++ extraMeta).toSeq)
+      }
+    }
+    EncodeResult.of(snap, numNew.toLong)
   }
 
   /** Incremental compaction (Iceberg OPTIMIZE analogue, rewrite-only-what-
@@ -1002,9 +892,7 @@ object GraftTable {
       fillFactor: Double = 0.5): EncodeResult = {
     val p = currentSnapshot(spark, tableDir).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-    def noop = EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-      p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-      p.contentSig, p.complete)
+    def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
 
     val man = readManifest(spark, tableDir, p)
@@ -1030,67 +918,27 @@ object GraftTable {
     val rows = decodeBlocks(spark, tableDir, hit).toDF()
 
     val ver = p.version + 1
-    val keyed = rows.select(
-      col("doc_id"), col("tokens"), col("n_tok"), col("source"),
-      expr(KeyExpr).as("_graft_key"))
+    val keyed = keyedOf(rows)
     val stats = Stats.collect(keyed, opts.sampleRows)
     // merged blocks get ids after every existing one (incl. the dropped
     // fragments' — uniqueness matters, compactness doesn't)
     val blockOffset =
       man.agg(max(col("block_id").cast("int"))).head().getInt(0) + 1
-    val bounds = computeBounds(keyed, stats.rows, opts.targetRowsPerBlock, opts.sampleRows)
-    val bcBounds = spark.sparkContext.broadcast(bounds)
-    val numNew = bounds.length + 1
-
-    import spark.implicits._
-    val parallelism = spark.sparkContext.defaultParallelism
-    val encodeParts = encodePartitions(numNew, parallelism, stats.tokensTotal)
-    val blocks = keyed
-      .select(
-        (graft_range_bucket(col("_graft_key"), bcBounds) + blockOffset).as("block_id"),
-        col("_graft_key").as("k"), col("doc_id"),
-        graft_encode(col("tokens"), "for").as("tokens"),
-        col("n_tok"), col("source"))
-      .repartition(encodeParts, col("block_id"))
-      .sortWithinPartitions(col("block_id"), col("k"), col("doc_id"))
-      .as[BlockInput]
-      .mapPartitions(it =>
-        BlockAssembler.assemble(it, ver, stats.allowDict, stats.allowFsst))
-
-    val dataDir = s"data/v$ver"
-    blocks.write.mode("overwrite").parquet(s"$tableDir/$dataDir")
-    // persisted across the JSON write and the totals aggregate (see append)
-    val manifest = manifestOf(spark, s"$tableDir/$dataDir")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val manifestDir = s"manifests/v$ver"
-    val manifestDirs = keepMan :+ manifestDir
-    val dataDirs = keepData :+ dataDir
-    val tot = try {
-      manifest.write.mode("overwrite").json(s"$tableDir/$manifestDir")
-      manifestTotalsWithFresh(spark, tableDir, keepMan, manifest).agg(
-        count(lit(1)).as("blocks"), sum("row_count").as("rows"),
-        sum("token_count").as("tokens"), sum("bytes_total").as("bytes"),
-        sum("plain_bytes").as("plain"), expr("bit_xor(block_sig)").as("sig")).head()
-    } finally { manifest.unpersist(false); () }
-
+    val (numNew, dataDir) = writeBatchBlocks(keyed, stats, opts, tableDir, ver, blockOffset)
     val combinedFp = Hashing.sha256Hex(s"${p.inputFingerprint};compact=v$ver")
-    val contentSig = f"${tot.getLong(5)}%016x"
-    val totalBlocks = tot.getLong(0).toInt
-    val snapshotId = Hashing.sha256Hex(
-      s"v$ver;parent=${p.snapshotId};fp=$combinedFp;compacted=${frag.toSeq.sorted.mkString(",")};" +
-        s"rows=${tot.getLong(1)};tokens=${tot.getLong(2)};" +
-        s"bytes=${tot.getLong(3)};sig=$contentSig")
-    val snap = Snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp,
-      KeyStrategy, p.boundsDir, totalBlocks, tot.getLong(0), complete = true,
-      tot.getLong(1), tot.getLong(2), tot.getLong(3), tot.getLong(4),
-      contentSig, dataDirs, manifestDirs,
-      (stats.asJsonFields ++ carriedMeta(Some(p)).toSeq).sorted,
-      java.time.Instant.now().toString)
-    writeString(spark, s"$tableDir/metadata/v$ver.json", renderSnapshot(snap))
-    commitPointer(spark, tableDir, ver)
-    EncodeResult(ver, snapshotId, totalBlocks, numNew.toLong, tot.getLong(0),
-      tot.getLong(1), tot.getLong(2), tot.getLong(3), tot.getLong(4),
-      contentSig, complete = true)
+    val snap = Commit.withManifest(manifestOf(spark, s"$tableDir/$dataDir")) { m =>
+      Commit(spark, tableDir, ver, keepMan, Some(m)) { tot =>
+        val snapshotId = Hashing.sha256Hex(
+          s"v$ver;parent=${p.snapshotId};fp=$combinedFp;" +
+            s"compacted=${frag.toSeq.sorted.mkString(",")};" +
+            s"rows=${tot.rows};tokens=${tot.tokens};" +
+            s"bytes=${tot.bytes};sig=${tot.contentSig}")
+        tot.snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp, KeyStrategy,
+          p.boundsDir, tot.blocks.toInt, complete = true, keepData :+ dataDir,
+          stats.asJsonFields ++ carriedMeta(Some(p)).toSeq)
+      }
+    }
+    EncodeResult.of(snap, numNew.toLong)
   }
 
   /** Delete data/manifest/bounds dirs not referenced by the CURRENT

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.codec.{Hashing, IntBlocks}
+import graft.table.Commit.timed
 
 /** Sampled per-column statistics that drive codec auto-selection (SURVEY.md
   * E6–E7) plus the input fingerprint that anchors resume lineage.
@@ -59,20 +60,6 @@ object Stats {
 
   val SampleSeed = 42L
 
-  /** `tokens` must be the input-shaped table (doc_id, tokens, n_tok, source)
-    * with a `_graft_key` bigint column already attached.
-    */
-  private val timing = sys.env.get("GRAFT_TIMING").contains("1")
-  private def timed[T](label: String)(f: => T): T = {
-    if (!timing) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"GRAFT_TIMING $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-  }
-
   /** The sampled pass as one single-row frame `(td, adj, pairs)`: approximate
     * distinct tokens, adjacent equal-token pairs, and adjacent pairs, over
     * the rows whose `pmod(xxhash64(doc_id), stride) = 0` (all rows at
@@ -104,6 +91,9 @@ object Stats {
       sum(when(col("pos") > 0, 1L).otherwise(0L)).as("pairs"))
   }
 
+  /** `keyed` must be the input-shaped table (doc_id, tokens, n_tok, source)
+    * with a `_graft_key` bigint column already attached.
+    */
   def collect(keyed: DataFrame, sampleRows: Long = 1L << 20): ColumnStats = {
     // fingerprint hashes the cheap scalar fields only: hashing every token
     // would tax the hot path (~15 ns/token measured at local[8]) for a

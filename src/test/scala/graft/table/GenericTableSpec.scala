@@ -883,4 +883,32 @@ class GenericTableSpec extends AnyFunSuite {
     GenericTable.encode(tokens, dirG, opts = GraftTable.Options(targetRowsPerBlock = 64))
     assertSameRows(GenericTable.decode(spark, dirG), tokens)
   }
+
+  test("append into an empty dir commits the caller's extraMeta") {
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val dir = tmpDir("append-empty-meta")
+    val res = GenericTable.append(docs, dir, extraMeta = Map("stream_batch_id" -> "7"))
+    val snap = GraftTable.currentSnapshot(spark, dir).get
+    assert(res.version == 1 && snap.version == 1)
+    assert(snap.stats.toMap.get("stream_batch_id").contains("7"), snap.stats.toString)
+  }
+
+  test("append keeps the parent's bounds and writes no bounds file of its own") {
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val dir = tmpDir("append-bounds")
+    val opts = GraftTable.Options(targetRowsPerBlock = 64)
+    GenericTable.encode(docs.where(col("doc_id") < 300), dir, opts = opts)
+    val base = GraftTable.currentSnapshot(spark, dir).get
+    assert(base.boundsDir.contains("metadata/bounds/v1"))
+    // 200 rows at 64 per block: the batch has bounds of its own
+    val res = GenericTable.append(docs.where(col("doc_id") >= 300), dir, opts)
+    assert(res.numBlocks - base.numBlocks > 1)
+    val fs = java.nio.file.Paths.get(dir)
+    assert(!Files.exists(fs.resolve(s"metadata/bounds/v${res.version}")))
+    val snap = GraftTable.snapshotAt(spark, dir, res.version)
+    assert(snap.boundsDir == base.boundsDir)
+    GraftTable.expireSnapshots(spark, dir)
+    assert(Files.exists(fs.resolve("metadata/bounds/v1")))
+    assertSameRows(GenericTable.decode(spark, dir), docs)
+  }
 }
