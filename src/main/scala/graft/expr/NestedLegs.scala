@@ -1,57 +1,25 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Shared IMPERATIVE rebuild of (possibly deeply nested) values from their
-  * decoded storage legs — the single implementation behind both the DSv2
-  * generic reader and [[GraftNestedRebuild]] (the Scala-API decode path
-  * for non-scalar-element arrays).
+/** IMPERATIVE rebuild of (possibly deeply nested) values from their
+  * decoded storage legs, behind the generic lane's one decoder
+  * ([[graft.sources.GraftGenericPartitionReader]]).
   *
   * Why imperative: Spark evaluates higher-order-function lambdas WITHOUT
   * common-subexpression elimination, so an expression-tree rebuild of a
   * depth-3 array re-runs the whole inner rebuild once per OUTER element —
   * measured 95× slower than this linear pass at 2000 rows × 1000 ints
-  * (tools/DeepNestProbe: 33.2 s vs 0.35 s). One builder tree is compiled
-  * per column at plan time; per row it reads each leg exactly once.
+  * (33.2 s vs 0.35 s). One builder tree is compiled per column at plan
+  * time; per row it reads each leg exactly once.
   *
   * Leg naming mirrors GenericTable.fieldLeaves exactly: `__ll`/`__lv`
   * nested repetition, `__ap`/`__af.<f>` array-of-struct, `__amk`/`__amv`
   * array-of-map, `__p` struct presence, `__mk`/`__mv` maps.
   */
 object NestedLegs {
-
-  /** Leaf leg names under (path, dt), in fieldLeaves order. */
-  def leafNames(path: String, dt: DataType, nullable: Boolean): Seq[String] = dt match {
-    case ArrayType(inner: ArrayType, _) =>
-      s"$path.__ll" +:
-        leafNames(s"$path.__lv", ArrayType(inner.elementType, containsNull = true),
-          nullable = true)
-    case ArrayType(st: StructType, cn) =>
-      (if (cn) Seq(s"$path.__ap") else Nil) ++
-        st.fields.toIndexedSeq.flatMap(f =>
-          leafNames(s"$path.__af.${f.name}", ArrayType(f.dataType, containsNull = true),
-            nullable = true))
-    case ArrayType(mt: MapType, _) =>
-      leafNames(s"$path.__amk",
-        ArrayType(ArrayType(mt.keyType, containsNull = false), containsNull = true),
-        nullable = true) ++
-        leafNames(s"$path.__amv",
-          ArrayType(ArrayType(mt.valueType, mt.valueContainsNull), containsNull = true),
-          nullable = true)
-    case _: ArrayType => Seq(path)
-    case st: StructType =>
-      (if (nullable) Seq(s"$path.__p") else Nil) ++
-        st.fields.toIndexedSeq.flatMap(f =>
-          leafNames(s"$path.${f.name}", f.dataType, nullable = true))
-    case MapType(kt, vt, vcn) =>
-      leafNames(s"$path.__mk", ArrayType(kt, containsNull = false), nullable) ++
-        leafNames(s"$path.__mv", ArrayType(vt, vcn), nullable)
-    case _ => Seq(path)
-  }
 
   /** Per-row builder for one field: `vals(slot(name))` must hold this
     * row's decoded value of leaf `name` (storage form — int-backed
@@ -255,36 +223,4 @@ object NestedLegs {
       case _ =>
         val s = slot(path); vals => vals(s)
     }
-}
-
-/** One-shot imperative rebuild of a nested-array column from its decoded
-  * leg columns (`legs` in [[NestedLegs.leafNames]] order) — used by the
-  * Scala-API decode for arrays with non-scalar elements, where an
-  * expression-tree rebuild is super-linear per row (no CSE inside HOF
-  * lambdas; see [[NestedLegs]]). Interpreted eval, one pass per row.
-  */
-case class GraftNestedRebuild(legs: Seq[Expression], typeJson: String)
-    extends Expression with CodegenFallback {
-
-  @transient private lazy val dt = DataType.fromJson(typeJson)
-  @transient private lazy val slotOf =
-    NestedLegs.leafNames("$", dt, nullable = true).zipWithIndex.toMap
-  @transient private lazy val build =
-    NestedLegs.builder("$", dt, nullable = true, slotOf)
-
-  override def children: Seq[Expression] = legs
-  override def dataType: DataType = dt
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_nested_rebuild"
-
-  override def eval(input: InternalRow): Any = {
-    val vals = new Array[Any](legs.length)
-    var i = 0
-    while (i < vals.length) { vals(i) = legs(i).eval(input); i += 1 }
-    build(vals)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): GraftNestedRebuild =
-    copy(legs = newChildren)
 }

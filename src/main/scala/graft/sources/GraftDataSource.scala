@@ -16,7 +16,8 @@ import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns,
+  SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.functions.{array_position, col}
@@ -50,9 +51,8 @@ import graft.table.{GenericTable, GraftTable}
   *     totals, so the optimizer can (e.g.) choose a broadcast join of a
   *     decoded dimension table without scanning it.
   *
-  * The generic (any-schema) lane stays on [[GenericTable.decode]] and the
-  * catalog views; this connector serves the fixed token schema, where the
-  * per-block payload decode can emit `InternalRow`s directly.
+  * Generic (any-schema) tables are served by [[GraftGenericScanBuilder]],
+  * which is also the only decoder behind every `GenericTable` read.
   */
 class GraftDataSource extends TableProvider with DataSourceRegister
     with org.apache.spark.sql.sources.CreatableRelationProvider {
@@ -211,12 +211,26 @@ object GraftDataSource {
   }
 }
 
-class GraftSparkTable(tableDir: String, provided: StructType) extends Table
+/** The connector's table. `pinned` fixes the snapshot a read sees instead
+  * of the current one, and `keyRange` adds a key interval to a generic
+  * scan: the Scala API reads generic tables through these (time travel,
+  * copy-on-write rewrites of a subset of versions, key ranges on keys
+  * whose SQL filters cannot reach the interval).
+  */
+class GraftSparkTable private[graft] (
+    tableDir: String,
+    provided: StructType,
+    pinned: Option[GraftTable.Snapshot],
+    keyRange: Option[(Long, Long)]) extends Table
     with SupportsRead
+    with SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
 
-  private lazy val snapOpt = GraftTable.currentSnapshot(SparkSession.active, tableDir)
+  def this(tableDir: String, provided: StructType) = this(tableDir, provided, None, None)
+
+  private lazy val snapOpt =
+    pinned.orElse(GraftTable.currentSnapshot(SparkSession.active, tableDir))
 
   private lazy val snap = snapOpt.getOrElse(
     throw new IllegalArgumentException(s"no committed graft table at $tableDir"))
@@ -238,8 +252,16 @@ class GraftSparkTable(tableDir: String, provided: StructType) extends Table
       TableCapability.V1_BATCH_WRITE,
       TableCapability.TRUNCATE).asJava
 
+  /** Generic tables expose each row's version ([[GraftGenericScan.VersionColumn]]). */
+  override def metadataColumns(): Array[MetadataColumn] =
+    if (snapOpt.exists(GenericTable.isGeneric)) Array(GraftGenericScan.VersionColumn)
+    else Array.empty
+
+  // a pinned snapshot may be a subset of a committed one (whose row total
+  // would not answer COUNT(*)) or carry a key interval
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    if (GenericTable.isGeneric(snap)) new GraftGenericScanBuilder(tableDir, snap)
+    if (GenericTable.isGeneric(snap))
+      new GraftGenericScanBuilder(tableDir, snap, keyRange, metadataCount = pinned.isEmpty)
     else new GraftScanBuilder(tableDir, snap)
 
   override def newWriteBuilder(
@@ -550,8 +572,8 @@ class GraftReaderFactory(
 /** Block-granular cursor over one token-lane data file: opens the parquet
   * reader with a projection of ONLY the payload columns the projection
   * needs, skips pruned block ids via a parquet row-group/record filter,
-  * and decodes one block's payloads at a time into plain arrays. Shared
-  * by the row and columnar readers.
+  * and decodes one block's payloads at a time into plain arrays for
+  * [[GraftPartitionReader]].
   */
 private[sources] final class TokenBlockCursor(
     part: GraftInputPartition,
@@ -620,8 +642,8 @@ private[sources] final class TokenBlockCursor(
   def close(): Unit = reader.close()
 }
 
-/** Row-at-a-time reader (the non-columnar fallback): emits InternalRows of
-  * the projected columns from the shared block cursor.
+/** Row-at-a-time reader: emits InternalRows of the projected columns from
+  * the block cursor.
   */
 class GraftPartitionReader(
     part: GraftInputPartition,

@@ -15,6 +15,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
+import org.apache.spark.sql.connector.catalog.MetadataColumn
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{
   EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
@@ -23,26 +24,35 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.table.{AnyColumn, GenericTable, GraftTable}
 
-/** DataSource V2 scan for GENERIC (any-schema) graft tables — the SQL
-  * pushdown parity the Scala `GenericTable.decode` API already has:
+/** DataSource V2 scan for GENERIC (any-schema) graft tables, and the one
+  * decoder of the generic lane: SQL reads and every `GenericTable` read
+  * (decode, time travel, column selection, key ranges and the reads of
+  * the copy-on-write rewrites) plan this scan.
   *
   *   - column pruning: only the codec payloads (`pl_<i>`) of the leaves
   *     backing the REQUESTED top-level fields are read from parquet;
   *   - key-range pushdown: comparisons on the table's integral range-key
-  *     column compose into one [lo, hi] interval pushed as a parquet
-  *     row-group + record filter on the per-block `key_min`/`key_max`
-  *     zone-map columns — no driver-side id set at ANY table size (the
-  *     interval, not the surviving ids, travels to the executors) — plus
-  *     whole-VERSION pruning from the manifest key spans;
+  *     column compose into one [lo, hi] interval, intersected with the
+  *     table's pinned interval when it has one (`GenericTable.decodeRange`
+  *     pins it for keys of any order-preserving type). The interval is
+  *     pushed as a parquet row-group + record filter on the per-block
+  *     `key_min`/`key_max` zone-map columns — no driver-side id set at ANY
+  *     table size (the interval, not the surviving ids, travels to the
+  *     executors) — plus whole-VERSION pruning from the manifest key spans;
   *   - schema evolution: each partition decodes under the write schema of
-  *     its version and null-fills fields that postdate it, exactly like
-  *     [[GenericTable.decodeFields]];
+  *     its version and null-fills fields that postdate it;
+  *   - the version of each row as the metadata column
+  *     [[GraftGenericScan.VersionColumn]];
   *   - metadata COUNT(*) and snapshot statistics, as in the token scan.
   *
   * Every accepted filter stays residual, so pruning is never the
   * correctness mechanism.
   */
-class GraftGenericScanBuilder(tableDir: String, snap: GraftTable.Snapshot)
+class GraftGenericScanBuilder(
+    tableDir: String,
+    snap: GraftTable.Snapshot,
+    pinnedRange: Option[(Long, Long)],
+    metadataCount: Boolean)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit {
 
@@ -64,7 +74,7 @@ class GraftGenericScanBuilder(tableDir: String, snap: GraftTable.Snapshot)
 
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    pushed.isEmpty && agg.groupByExpressions.isEmpty &&
+    metadataCount && pushed.isEmpty && agg.groupByExpressions.isEmpty &&
       agg.aggregateExpressions.nonEmpty &&
       agg.aggregateExpressions.forall(
         _.isInstanceOf[org.apache.spark.sql.connector.expressions.aggregate.CountStar])
@@ -104,13 +114,13 @@ class GraftGenericScanBuilder(tableDir: String, snap: GraftTable.Snapshot)
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  /** The conjunction of the pushed key filters as one conservative
-    * [lo, hi] interval (In widens to its min..max envelope).
+  /** The conjunction of the pinned interval and the pushed key filters as
+    * one conservative [lo, hi] interval (In widens to its min..max
+    * envelope).
     */
   private[sources] def keyRange: Option[(Long, Long)] = {
-    if (pushed.isEmpty) return None
-    var lo = Long.MinValue
-    var hi = Long.MaxValue
+    if (pushed.isEmpty) return pinnedRange
+    var (lo, hi) = pinnedRange.getOrElse((Long.MinValue, Long.MaxValue))
     pushed.foreach {
       case EqualTo(_, v) =>
         val n = asLong(v).get; lo = math.max(lo, n); hi = math.min(hi, n)
@@ -134,7 +144,8 @@ class GraftGenericScanBuilder(tableDir: String, snap: GraftTable.Snapshot)
     // an empty prune (count over a pruned scan) still needs row
     // multiplicity; the reader derives it from the block row_count, so an
     // empty StructType is legal here
-    required = StructType(fields)
+    required = StructType(fields ++
+      requiredSchema.fields.find(_.name == GraftGenericScan.VersionColumn.name()))
   }
 
   override def build(): Scan =
@@ -142,16 +153,33 @@ class GraftGenericScanBuilder(tableDir: String, snap: GraftTable.Snapshot)
     else new GraftGenericScan(tableDir, snap, required, pushed, keyRange, limit)
 }
 
-/** One partition = one parquet data file + the write schema of its
-  * version + the pushed key interval.
+/** One partition = one parquet data file + its version and that
+  * version's write schema + the pushed key interval.
   */
 final case class GraftGenericInputPartition(
     file: String,
+    version: Int,
     writeSchemaJson: String,
     range: Option[(Long, Long)],
     splitStart: Long = 0L,
     splitEnd: Long = Long.MaxValue) extends InputPartition
 
+object GraftGenericScan {
+
+  /** The version whose data file holds a row: an `int` metadata column,
+    * selected by name like Iceberg's `_file`. The reserved `_graft` prefix
+    * keeps it apart from every data column.
+    */
+  val VersionColumn: MetadataColumn = new MetadataColumn {
+    override def name(): String = "_graft_version"
+    override def dataType(): DataType = IntegerType
+    override def isNullable: Boolean = false
+  }
+}
+
+/** `required` holds the requested data fields, then the version metadata
+  * column when it was requested.
+  */
 class GraftGenericScan(
     tableDir: String,
     snap: GraftTable.Snapshot,
@@ -197,7 +225,7 @@ class GraftGenericScan(
               // not files (see GraftScan.splitRanges)
               GraftScan.splitRanges(st.getLen, splitBytes).foreach { case (lo, hi) =>
                 parts += GraftGenericInputPartition(
-                  st.getPath.toString, wjson, range, lo, hi)
+                  st.getPath.toString, ver, wjson, range, lo, hi)
               }
           }
         }
@@ -255,12 +283,14 @@ class GraftGenericPartitionReader(
     fields.flatMap(leavesOf).distinct
   }
 
+  /** The payload columns this reader reads: those of [[neededLeaves]]. */
+  private[graft] val payloadColumns: Seq[String] = neededLeaves.map(n => s"pl_${leafIdx(n)}")
+
   // decoded leaf arrays of the CURRENT block, in a dense slot array:
   // builders resolve their slot ONCE at construction; per row the needed
   // leg values land in one flat array that every field builder indexes —
-  // no hash probes in the hot loop. The rebuild logic itself is the
-  // shared graft.expr.NestedLegs (same implementation the Scala-API
-  // decode uses for non-scalar-element arrays).
+  // no hash probes in the hot loop. The rebuild logic itself is
+  // graft.expr.NestedLegs.
   private val leafSlot: Map[String, Int] = neededLeaves.zipWithIndex.toMap
   private val leafArr: Array[Array[Any]] = new Array(neededLeaves.length)
 
@@ -272,6 +302,9 @@ class GraftGenericPartitionReader(
       byName.get(f.name) match {
         case Some(wf) => graft.expr.NestedLegs.builder(
           wf.name, wf.dataType, wf.nullable, leafSlot)
+        case None if f.name == GraftGenericScan.VersionColumn.name() =>
+          val v = Int.box(part.version)
+          (_: Array[Any]) => v
         case None => (_: Array[Any]) => null
       }
     }
@@ -283,8 +316,7 @@ class GraftGenericPartitionReader(
     val fileSchema = try footer.getFooter.getFileMetaData.getSchema finally footer.close()
     // row_count drives multiplicity (no payload needed for SELECT count
     // shapes); key_min/key_max ride along for the record-level filter
-    val names = Seq("row_count", "key_min", "key_max") ++
-      neededLeaves.map(n => s"pl_${leafIdx(n)}")
+    val names = Seq("row_count", "key_min", "key_max") ++ payloadColumns
     val proj = new MessageType(fileSchema.getName,
       names.map(n => fileSchema.getType(fileSchema.getFieldIndex(n))): _*)
     conf.set(ReadSupport.PARQUET_READ_SCHEMA, proj.toString)
@@ -315,9 +347,8 @@ class GraftGenericPartitionReader(
       if (g == null) return false
       var s = 0
       while (s < neededLeaves.length) {
-        val n = neededLeaves(s)
         leafArr(s) = AnyColumn.decodeCatalyst(
-          kinds(n), g.getBinary(s"pl_${leafIdx(n)}", 0).getBytes).array
+          kinds(neededLeaves(s)), g.getBinary(payloadColumns(s), 0).getBytes).array
         s += 1
       }
       nRows = g.getLong("row_count", 0).toInt

@@ -80,10 +80,11 @@ private[table] object Commit {
         Some(readManifestTotals(spark, tableDir, keptManifests))
       case None => None
     }
+    // every aggregate is coalesced: kept manifests may hold no row
     val tot = all.fold(Totals(dirs, 0L, 0L, 0L, 0L, 0L, 0L)) { df =>
-      val t = phase("totals")(df.agg(
-        count(lit(1)), sum("row_count"), coalesce(sum("token_count"), lit(0L)),
-        sum("bytes_total"), sum("plain_bytes"), expr("bit_xor(block_sig)")).head())
+      val t = phase("totals")(df.agg(count(lit(1)),
+        Seq(sum("row_count"), sum("token_count"), sum("bytes_total"), sum("plain_bytes"),
+          expr("bit_xor(block_sig)")).map(coalesce(_, lit(0L))): _*).head())
       Totals(dirs, t.getLong(0), t.getLong(1), t.getLong(2), t.getLong(3),
         t.getLong(4), t.getLong(5))
     }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.codec.Hashing
-import graft.expr.GraftDecodeAny
 import graft.functions.{graft_codec, graft_range_bucket}
 import graft.table.Commit.{carriedMeta, timed}
 import graft.table.GraftTable.{EncodeResult, Options, Snapshot}
@@ -78,7 +77,7 @@ object GenericTable {
     }
   }
 
-  /** timestamp_ntz ↔ micros-since-epoch without a timezone: pure local
+  /** timestamp_ntz → micros-since-epoch without a timezone: pure local
     * datetime arithmetic (a session-tz cast would corrupt values inside
     * DST gaps — spring-forward local times have no instant).
     */
@@ -88,10 +87,6 @@ object GenericTable {
   private def ntzMicros(c: Column): Column =
     GraftSql.column(org.apache.spark.sql.catalyst.expressions.TimestampDiff(
       "MICROSECOND", ntzEpoch, GraftSql.expression(c)))
-
-  private def ntzFromMicros(c: Column): Column =
-    GraftSql.column(org.apache.spark.sql.catalyst.expressions.TimestampAdd(
-      "MICROSECOND", GraftSql.expression(c), ntzEpoch))
 
   /** (array leaf kind, per-element storage normalization) for a scalar
     * field inside an array-of-struct — the element analogue of the
@@ -117,19 +112,6 @@ object GenericTable {
         s"column $path: array-of-struct field type ${other.catalogString} is not " +
           "supported (scalar types only inside list<struct>)")
     }
-
-  /** Inverse of [[arrayElemLeaf]]'s normalization, applied per element. */
-  private def arrayElemRestore(dt: DataType): Column => Column = dt match {
-    case ByteType | ShortType | BooleanType => _.cast(dt)
-    case DateType => date_from_unix_date
-    case TimestampType => timestamp_micros
-    case TimestampNTZType => ntzFromMicros
-    case d: DecimalType if d.precision <= 18 =>
-      c => (c.cast(DecimalType(19, 0)) * // see the decimal note in restore
-        lit(new java.math.BigDecimal(java.math.BigInteger.ONE, d.scale))).cast(d)
-    case d: DecimalType => _.cast(d) // wide: string leg → exact decimal
-    case _ => identity
-  }
 
   private def fieldLeaves(
       path: String, c: Column, dt: DataType, nullable: Boolean): Seq[Leaf] = dt match {
@@ -234,7 +216,7 @@ object GenericTable {
         fieldLeaves(s"$path.${f.name}", c.getField(f.name), f.dataType, nullable = true))
     case MapType(kt, vt, _) =>
       // maps shred into parallel key/value array leaves (thrift map<K,V>
-      // parity); restored via map_from_arrays. A null map yields null
+      // parity); rebuilt from both legs on decode. A null map yields null
       // arrays on both legs, so no presence leaf is needed. Both legs
       // recurse through the array shredding, so keys and values may be
       // scalars, structs, or arrays. Map-typed keys are rejected loud:
@@ -262,57 +244,6 @@ object GenericTable {
     case StructType(fs) => fs.exists(f => containsMap(f.dataType))
     case _ => false
   }
-
-  /** Rebuild the original column from decoded storage leaves. */
-  private def restore(
-      path: String, dt: DataType, nullable: Boolean, get: String => Column): Column =
-    dt match {
-      case IntegerType | LongType | StringType | DoubleType | FloatType |
-           BinaryType => get(path)
-      case ByteType | ShortType | BooleanType => get(path).cast(dt)
-      case DateType => date_from_unix_date(get(path))
-      case TimestampType => timestamp_micros(get(path))
-      case TimestampNTZType => ntzFromMicros(get(path))
-      case d: DecimalType if d.precision > 18 =>
-        get(path).cast(d) // exact string → decimal (stored via cast to string)
-      case d: DecimalType =>
-        // DecimalType(19,0) (still holds any int64) keeps the product at
-        // precision 20+s ≤ 38 for s ≤ 18, so Spark never invokes
-        // adjustPrecisionScale — a (38,0) operand would push the product
-        // past 38 digits and silently clamp the scale to 6, rounding away
-        // fractional digits 7..18
-        (get(path).cast(DecimalType(19, 0)) *
-          lit(new java.math.BigDecimal(java.math.BigInteger.ONE, d.scale))).cast(d)
-      case ArrayType(et @ (ByteType | ShortType | BooleanType), _) =>
-        transform(get(path), _.cast(et)) // see the encode-side transform note
-      case ArrayType(et @ (DateType | TimestampType | TimestampNTZType | _: DecimalType), _) =>
-        transform(get(path), arrayElemRestore(et))
-      case at @ ArrayType(_: ArrayType | _: StructType | _: MapType, _) =>
-        // non-scalar-element arrays rebuild IMPERATIVELY in one custom
-        // expression over all their storage legs: an expression-tree
-        // rebuild (fold + slice / indexed transform + element_at) is
-        // super-linear per row because Spark evaluates HOF lambdas
-        // without CSE — the inner rebuild re-runs once per outer element
-        // (measured 95x at depth 3, tools/DeepNestProbe). GraftNestedRebuild
-        // reads each leg exactly once per row; the DSv2 reader shares the
-        // same NestedLegs builder.
-        val names = graft.expr.NestedLegs.leafNames(path, at, nullable = true)
-        GraftSql.column(graft.expr.GraftNestedRebuild(
-          names.map(n => GraftSql.expression(get(n))), at.json))
-      case _: ArrayType => get(path).cast(dt) // realign containsNull flags
-      case st: StructType =>
-        val body = struct(st.fields.toIndexedSeq.map(f =>
-          restore(s"$path.${f.name}", f.dataType, nullable = true, get).as(f.name)): _*)
-        if (nullable) when(get(s"$path.__p") === 1, body) else body
-      case MapType(kt, vt, vcn) =>
-        // legs rebuilt with exactly dt's nullability so map_from_arrays
-        // already has type dt (a map-to-map cast can't relax
-        // valueContainsNull, so there must be no outer cast here)
-        val keys = restore(s"$path.__mk", ArrayType(kt, containsNull = false), nullable, get)
-        val values = restore(s"$path.__mv", ArrayType(vt, containsNull = vcn), nullable, get)
-        when(keys.isNull, lit(null).cast(dt)).otherwise(map_from_arrays(keys, values))
-      case other => throw new UnsupportedOperationException(other.catalogString)
-    }
 
   /** Range/sort key: numeric-ish keys order natively, anything else gets a
     * deterministic 64-bit hash (blocking stays valid; range pruning
@@ -348,8 +279,10 @@ object GenericTable {
 
   /** Union-by-name schema merge (Iceberg-style evolution): fields shared
     * with the parent must keep the SAME type (loud error otherwise — no
-    * silent coercion); parent-only fields stay (new rows read null),
-    * batch-only fields are appended as nullable (old rows read null).
+    * silent coercion) and admit the nulls of either side, nested flags
+    * included (the decoder emits rows under this schema); parent-only
+    * fields stay (new rows read null), batch-only fields are appended as
+    * nullable (old rows read null).
     */
   private[table] def mergeSchemas(parent: StructType, batch: StructType): StructType = {
     val batchByName = batch.fields.map(f => f.name -> f).toMap
@@ -359,7 +292,8 @@ object GenericTable {
           require(GraftSql.sameType(pf.dataType, bf.dataType),
             s"schema evolution cannot change the type of column ${pf.name}: " +
               s"${pf.dataType.catalogString} -> ${bf.dataType.catalogString}")
-          pf.copy(nullable = pf.nullable || bf.nullable)
+          pf.copy(dataType = GraftSql.unionType(pf.dataType, bf.dataType),
+            nullable = pf.nullable || bf.nullable)
         case None => pf.copy(nullable = true) // absent from new rows
       }
     }
@@ -479,11 +413,11 @@ object GenericTable {
       "block_id", graft_range_bucket(col("_graft_key"), bcBounds))
 
     val notDone = parent match {
-      case Some(p) =>
+      case Some(p) if p.manifestDirs.nonEmpty =>
         val done = GraftTable.readManifest(spark, tableDir, p)
           .select(col("block_id").cast("int").as("block_id")).distinct()
         withBlocks.join(done, Seq("block_id"), "left_anti")
-      case None => withBlocks
+      case _ => withBlocks
     }
     val todo = opts.blockFilter match {
       case Some(f) =>
@@ -496,12 +430,14 @@ object GenericTable {
       writeBlocksVersion(todo, tableDir, ver, leaves, numBlocks, rows))
     Commit.withManifest(manifestOf(spark, s"$tableDir/$dataDir", leaves.length)) { manifest =>
       val newBlocks = timed("g-manifest-count")(manifest.count())
-      if (newBlocks == 0 && parent.nonEmpty) {
-        GraftTable.delete(spark, s"$tableDir/$dataDir")
-        EncodeResult.of(parent.get, 0L)
-      } else {
+      // a blockFilter selecting no block leaves an empty version dir: drop
+      // it; with no parent the commit records the bounds and no block
+      if (newBlocks == 0) GraftTable.delete(spark, s"$tableDir/$dataDir")
+      if (newBlocks == 0 && parent.nonEmpty) EncodeResult.of(parent.get, 0L)
+      else {
+        val fresh = if (newBlocks == 0) None else Some(dataDir)
         val snap = Commit(spark, tableDir, ver, parent.map(_.manifestDirs).getOrElse(Nil),
-          Some(manifest), phases = Some("g-")) { tot =>
+          fresh.map(_ => manifest), phases = Some("g-")) { tot =>
           val snapshotId = Hashing.sha256Hex(
             s"v$ver;generic;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
               s"fp=$fingerprint;bounds=${GraftTable.boundsSig(bounds)};" +
@@ -509,7 +445,7 @@ object GenericTable {
               s"bytes=${tot.bytes};sig=${tot.contentSig}")
           tot.snapshot(ver, snapshotId, cur.map(_.snapshotId), fingerprint,
             s"generic:$key", boundsDir, numBlocks, complete = tot.blocks == numBlocks,
-            parent.map(_.dataDirs).getOrElse(Nil) :+ dataDir, statsFields)
+            parent.map(_.dataDirs).getOrElse(Nil) ++ fresh, statsFields)
         }
         EncodeResult.of(snap, newBlocks)
       }
@@ -559,7 +495,7 @@ object GenericTable {
             s"bounds=${GraftTable.boundsSig(bounds)};blocks=${tot.blocks}/$numBlocks;" +
             s"rows=${tot.rows};bytes=${tot.bytes};sig=${tot.contentSig}")
         tot.snapshot(ver, snapshotId, Some(parent.snapshotId), fingerprint,
-          s"generic:$key", parent.boundsDir, numBlocks, complete = parent.complete,
+          s"generic:$key", None, numBlocks, complete = parent.complete,
           parent.dataDirs :+ dataDir,
           statsOf(tot.rows, merged, Some(schema), key, leaves, carriedMeta(cur) ++ extraMeta))
       }
@@ -581,8 +517,7 @@ object GenericTable {
       tableDir: String,
       opts: Options = Options(),
       fillFactor: Double = 0.5): EncodeResult = {
-    val p = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+    val p = current(spark, tableDir)
     require(isGeneric(p), s"$tableDir is a token table — use GraftTable.compact")
     def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
@@ -603,8 +538,7 @@ object GenericTable {
 
     // decode ONLY the fragmented versions, projected onto the merged schema
     val merged = readSchemaOf(p)
-    val rows = decodeFields(spark, tableDir, p.copy(dataDirs = fragData),
-      merged, merged.fieldNames.toIndexedSeq)
+    val rows = scanOf(spark, tableDir, p.copy(dataDirs = fragData))
     rewriteCommit(spark, tableDir, p, merged, keepData, keepMan, rows,
       opName = "compact",
       opDetail = s"compacted=${frag.toSeq.sorted.mkString(",")}", opts)
@@ -641,7 +575,7 @@ object GenericTable {
               s"$opDetail;rows=${tot.rows};" +
               s"bytes=${tot.bytes};sig=${tot.contentSig}")
           tot.snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp,
-            s"generic:$key", p.boundsDir, tot.blocks.toInt, complete = p.complete,
+            s"generic:$key", None, tot.blocks.toInt, complete = p.complete,
             dataDirs, statsOf(tot.rows, merged, Some(merged), key, leaves, carriedMeta(Some(p))))
         }
       if (nRows == 0) EncodeResult.of(commit(keepData, None), 0L)
@@ -661,11 +595,11 @@ object GenericTable {
     * versions stay by reference (their files are never rewritten).
     *
     * Two passes: (1) a column-pruned detection scan tags every matching
-    * row with its source version (`input_file_name()` inside the scan
-    * stage resolves `data/v<N>` — one job, epoch-bounded plan); (2) the
-    * affected versions COW-rewrite through the same commit path as
-    * [[compact]]. Rows where the predicate evaluates NULL are KEPT
-    * (delete removes only what matches TRUE — SQL DELETE semantics).
+    * row with its source version (the scan's version metadata column —
+    * one job, one scan); (2) the affected versions COW-rewrite through
+    * the same commit path as [[compact]]. Rows where the predicate
+    * evaluates NULL are KEPT (delete removes only what matches TRUE —
+    * SQL DELETE semantics).
     *
     * At 100 TB the detection pass reads only the predicate's columns,
     * and the rewrite cost is proportional to the AFFECTED versions'
@@ -678,8 +612,7 @@ object GenericTable {
       tableDir: String,
       predicate: Column,
       opts: Options = Options()): EncodeResult = {
-    val p = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+    val p = current(spark, tableDir)
     require(isGeneric(p), s"$tableDir is a token table")
     def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
@@ -701,20 +634,15 @@ object GenericTable {
       if (refs.nonEmpty && matched.length == refs.length)
         matched.distinct.toIndexedSeq
       else merged.fieldNames.toIndexedSeq
-    val tagged = decodeFields(spark, tableDir, p, merged, scanCols)
-      .withColumn("__gver",
-        regexp_extract(input_file_name(), "/data/v(\\d+)/", 1).cast("int"))
-    val hitRows = tagged.where(predicate).select("__gver").distinct().collect()
-    require(hitRows.forall(!_.isNullAt(0)),
-      "internal: version attribution failed — a data file path did not " +
-        "match data/v<N> (input_file_name detection)")
-    val affected = hitRows.map(_.getInt(0)).toSet
+    val version = graft.sources.GraftGenericScan.VersionColumn.name()
+    val affected = scanOf(spark, tableDir, p)
+      .select(scanCols.map(c => col(quoted(c))) :+ col(version): _*)
+      .where(predicate).select(version).distinct().collect().map(_.getInt(0)).toSet
     if (affected.isEmpty) return noop
     val keepData = p.dataDirs.filterNot(d => affected(versionOf(d)))
     val keepMan = p.manifestDirs.filterNot(d => affected(versionOf(d)))
     val hitData = p.dataDirs.filter(d => affected(versionOf(d)))
-    val survivors = decodeFields(spark, tableDir, p.copy(dataDirs = hitData),
-      merged, merged.fieldNames.toIndexedSeq)
+    val survivors = scanOf(spark, tableDir, p.copy(dataDirs = hitData))
       .where(coalesce(!predicate, lit(true)))
     rewriteCommit(spark, tableDir, p, merged, keepData, keepMan, survivors,
       opName = "delete",
@@ -734,8 +662,7 @@ object GenericTable {
       tableDir: String,
       keys: DataFrame,
       opts: Options = Options()): EncodeResult = {
-    val p = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+    val p = current(spark, tableDir)
     require(isGeneric(p), s"$tableDir is a token table")
     require(keys.columns.length == 1,
       s"deleteKeys takes a single-column frame, got ${keys.columns.mkString(",")}")
@@ -756,8 +683,7 @@ object GenericTable {
       val hit = hitData.map(versionOf).toSet
       val keepData = p.dataDirs.filterNot(d => hit(versionOf(d)))
       val keepMan = p.manifestDirs.filterNot(d => hit(versionOf(d)))
-      val survivors = decodeFields(spark, tableDir, p.copy(dataDirs = hitData),
-        merged, merged.fieldNames.toIndexedSeq)
+      val survivors = scanOf(spark, tableDir, p.copy(dataDirs = hitData))
         .join(kRaw, col(quoted(key)) === col("__dk"), "left_anti")
       rewriteCommit(spark, tableDir, p, merged, keepData, keepMan, survivors,
         opName = "delete",
@@ -778,8 +704,7 @@ object GenericTable {
       tableDir: String,
       opts: Options = Options()): EncodeResult = {
     val spark = batch.sparkSession
-    val p = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+    val p = current(spark, tableDir)
     require(isGeneric(p), s"$tableDir is a token table")
     val key = keyNameOf(p)
     require(batch.columns.contains(key),
@@ -800,8 +725,7 @@ object GenericTable {
       lo: Long,
       hi: Long,
       opts: Options = Options()): EncodeResult = {
-    val p = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+    val p = current(spark, tableDir)
     require(isGeneric(p), s"$tableDir is a token table")
     def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
@@ -816,8 +740,7 @@ object GenericTable {
     // decodeRange: for integral keys that IS the value; null keys are
     // explicitly kept (a range never deletes null keys)
     val kc = keyExprOf(key, merged(key).dataType)
-    val survivors = decodeFields(spark, tableDir, p.copy(dataDirs = hitData),
-      merged, merged.fieldNames.toIndexedSeq)
+    val survivors = scanOf(spark, tableDir, p.copy(dataDirs = hitData))
       .where(col(quoted(key)).isNull || !kc.between(lo, hi))
     rewriteCommit(spark, tableDir, p, merged, keepData, keepMan, survivors,
       opName = "delete",
@@ -911,38 +834,50 @@ object GenericTable {
     DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
 
+  /** Rows of `snap` through the connector's generic scan, the lane's one
+    * decoder: each version decodes under its own write schema, projected
+    * onto `snap`'s read schema (fields a version predates read null, as in
+    * Parquet/Iceberg schema evolution). `snap` is a committed snapshot or
+    * a copy of one limited to some of its data dirs; `range` pins a key
+    * interval on the scan, which prunes versions by their manifest key
+    * spans and blocks by their key_min/key_max zone maps.
+    */
+  private def scanOf(
+      spark: SparkSession,
+      tableDir: String,
+      snap: Snapshot,
+      range: Option[(Long, Long)] = None): DataFrame =
+    GraftSql.tableFrame(spark,
+      new graft.sources.GraftSparkTable(tableDir, null, Some(snap), range))
+
+  private def current(spark: SparkSession, tableDir: String): Snapshot =
+    GraftTable.currentSnapshot(spark, tableDir).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+
   /** Decode the current snapshot back to the original schema, bit-identical
     * per row (order not guaranteed, as with any distributed scan).
     */
-  def decode(spark: SparkSession, tableDir: String): DataFrame = {
-    val snap = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-    val schema = readSchemaOf(snap)
-    decodeFields(spark, tableDir, snap, schema, schema.fieldNames.toIndexedSeq)
-  }
+  def decode(spark: SparkSession, tableDir: String): DataFrame =
+    scanOf(spark, tableDir, current(spark, tableDir))
 
   /** Time-travel decode: the table exactly as of `version` (schema
     * included — each version's snapshot pins the schema it was written
     * with).
     */
-  def decodeAt(spark: SparkSession, tableDir: String, version: Int): DataFrame = {
-    val snap = GraftTable.snapshotAt(spark, tableDir, version)
-    val schema = readSchemaOf(snap)
-    decodeFields(spark, tableDir, snap, schema, schema.fieldNames.toIndexedSeq)
-  }
+  def decodeAt(spark: SparkSession, tableDir: String, version: Int): DataFrame =
+    scanOf(spark, tableDir, GraftTable.snapshotAt(spark, tableDir, version))
 
   /** Column-pruned decode: only `columns` (top-level names) are
     * reconstructed, and the scan reads ONLY their leaf payloads.
     */
   def decodeSelect(
       spark: SparkSession, tableDir: String, columns: Seq[String]): DataFrame = {
-    val snap = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-    val schema = readSchemaOf(snap)
-    require(columns.nonEmpty && columns.forall(schema.fieldNames.contains),
-      s"decodeSelect columns must be among ${schema.fieldNames.mkString(", ")}")
-    decodeFields(spark, tableDir, snap, schema,
-      schema.fieldNames.filter(columns.contains).toIndexedSeq)
+    val snap = current(spark, tableDir)
+    val names = readSchemaOf(snap).fieldNames
+    require(columns.nonEmpty && columns.forall(names.contains),
+      s"decodeSelect columns must be among ${names.mkString(", ")}")
+    scanOf(spark, tableDir, snap)
+      .select(names.filter(columns.contains).map(c => col(quoted(c))).toIndexedSeq: _*)
   }
 
   private def versionOf(dataDir: String): Int = GraftTable.versionOfDir(dataDir)
@@ -957,31 +892,24 @@ object GenericTable {
     DataType.fromJson(json).asInstanceOf[StructType]
   }
 
-  /** Decode only rows whose range key falls in [lo, hi]: block pruning on
-    * the per-block key_min/key_max zone maps (a plain predicate on the
-    * block files, so parquet row-group statistics skip whole groups), then
-    * an exact row filter on the recomputed key. Meaningful when the key
-    * strategy is order-preserving (integral / numeric-string / date /
-    * timestamp keys — `generic:<key>` in the snapshot); a hash-keyed
-    * table's ranges are hash ranges (resume/shard math, not user queries).
+  /** Decode only rows whose range key falls in [lo, hi]: the scan skips
+    * versions and blocks whose key spans miss the interval, then an exact
+    * row filter on the recomputed key. Meaningful when the key strategy is
+    * order-preserving (integral / numeric-string / date / timestamp keys —
+    * `generic:<key>` in the snapshot); a hash-keyed table's ranges are
+    * hash ranges (resume/shard math, not user queries).
     */
   def decodeRange(
       spark: SparkSession, tableDir: String, lo: Long, hi: Long): DataFrame = {
-    val snap = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-    val schema = readSchemaOf(snap)
-    val key = snap.stats.toMap.apply(KeyKey)
-    val pruned = decodeFields(spark, tableDir, snap, schema,
-      schema.fieldNames.toIndexedSeq,
-      col("key_max").geq(lo) && col("key_min").leq(hi),
-      dataDirs = Some(rangeDataDirs(spark, tableDir, snap, lo, hi)))
+    val snap = current(spark, tableDir)
+    val key = keyNameOf(snap)
     // null keys hash-bucket on encode (keyExprOf is never null — a null
     // input lands on the xxhash64 seed), but a range slice must not return
-    // them: SQL BETWEEN on a null key is false, and the DSv2 path filters
-    // on the raw column. The explicit isNotNull keeps both paths agreeing
-    // even when [lo, hi] happens to contain the null-hash value.
-    pruned.where(col(quoted(key)).isNotNull &&
-      keyExprOf(key, schema(key).dataType).between(lo, hi))
+    // them: SQL BETWEEN on a null key is false. The explicit isNotNull
+    // holds even when [lo, hi] happens to contain the null-hash value.
+    scanOf(spark, tableDir, snap, Some((lo, hi)))
+      .where(col(quoted(key)).isNotNull &&
+        keyExprOf(key, readSchemaOf(snap)(key).dataType).between(lo, hi))
   }
 
   /** Data dirs whose per-version key span intersects [lo, hi] — the
@@ -1015,88 +943,15 @@ object GenericTable {
     }
   }
 
-  /** Decode, version by version: each version's blocks are read with the
-    * leaf plan of the schema they were written with, projected onto the
-    * requested fields of the current (merged) read schema — fields a
-    * version predates read as null, exactly like Parquet/Iceberg schema
-    * evolution. The per-version frames union by position (same projected
-    * column list).
-    */
-  private def decodeFields(
-      spark: SparkSession,
-      tableDir: String,
-      snap: Snapshot,
-      readSchema: StructType,
-      fieldNames: IndexedSeq[String],
-      blockPredicate: Column = lit(true),
-      dataDirs: Option[Seq[String]] = None): DataFrame = {
-    val wanted = readSchema.fields.toIndexedSeq.filter(f => fieldNames.contains(f.name))
-    val liveDirs = dataDirs.getOrElse(snap.dataDirs)
-    if (liveDirs.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[Row](), StructType(wanted))
-    // One scan branch per distinct WRITE SCHEMA, not per version: a
-    // long-running streamed table (one version per micro-batch) must not
-    // build a thousand-branch union — versions written under the same
-    // schema share one leaf plan and therefore one multi-dir parquet scan.
-    // Plan size now grows with schema EVOLUTIONS (rare), not ingests.
-    val byVersion = liveDirs.groupBy(versionOf).toSeq.sortBy(_._1).map {
-      case (ver, dirs) =>
-        val vsnap =
-          if (ver == snap.version) snap
-          else GraftTable.snapshotVersion(spark, tableDir, ver).getOrElse(
-            throw new IllegalStateException(
-              s"data dir of v$ver is live but metadata/v$ver.json is missing"))
-        (ver, dirs, writeSchemaOf(vsnap))
-    }
-    val bySchema = byVersion.groupBy(_._3.json).toSeq
-      .sortBy(_._2.map(_._1).min).map { case (_, group) => group }
-    val perGroup = bySchema.map { group =>
-      val wplan = planOf(group.head._3)
-      val dirs = group.flatMap(_._2)
-      val leafIdx = wplan.flatMap(_._2).map(_.name).zipWithIndex.toMap
-      val byName = wplan.map(p => p._1.name -> p).toMap
-      val present = wanted.flatMap(f => byName.get(f.name))
-      // at least one decoded leaf must drive the per-row explode even
-      // when every wanted column postdates this schema (null rows of
-      // the right multiplicity); prefer a cheap fixed-width leaf
-      val driver =
-        if (present.nonEmpty) Nil
-        else {
-          val all = wplan.flatMap(_._2)
-          Seq(all.find(l => Set("int", "long", "f32", "f64").contains(l.kind))
-            .getOrElse(all.head))
-        }
-      val leaves = present.flatMap(_._2) ++ driver
-      val zipped = leaves.map { l =>
-        val i = leafIdx(l.name)
-        GraftSql.column(GraftDecodeAny(
-          GraftSql.expression(col(s"pl_$i")), l.kind)).as(s"c$i")
-      }
-      val blocksDf = spark.read.parquet(dirs.map(d => s"$tableDir/$d"): _*)
-        .where(blockPredicate)
-      val exploded = blocksDf.select(explode(arrays_zip(zipped: _*)).as("r"))
-      def get(name: String): Column = col("r").getField(s"c${leafIdx(name)}")
-      exploded.select(wanted.map { f =>
-        byName.get(f.name) match {
-          case Some((wf, _)) => restore(wf.name, wf.dataType, wf.nullable, get).as(f.name)
-          case None => lit(null).cast(f.dataType).as(f.name)
-        }
-      }: _*)
-    }
-    perGroup.reduce(_ unionAll _)
-  }
-
   /** Per-(column, codec) selection evidence, the generic `describe`.
     * One plan branch per distinct WRITE SCHEMA (leaf indices differ per
     * schema epoch, so manifests group by epoch, not per version — a
-    * 1000-micro-batch streamed table plans #epochs branches, exactly like
-    * decodeFields), and within a branch every leaf unpivots through ONE
+    * 1000-micro-batch streamed table plans #epochs branches), and within
+    * a branch every leaf unpivots through ONE
     * explode instead of a per-leaf union.
     */
   def describe(spark: SparkSession, tableDir: String): DataFrame = {
-    val snap = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+    val snap = current(spark, tableDir)
     val byVersion = snap.manifestDirs.groupBy(versionOf).toSeq.sortBy(_._1).map {
       case (ver, dirs) =>
         val vsnap =

@@ -3,7 +3,7 @@ package graft.table
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.json4s._
@@ -231,11 +231,11 @@ object GraftTable {
 
     // resume (E5): encode only blocks absent from the parent manifest
     val notDone = parent match {
-      case Some(p) =>
+      case Some(p) if p.manifestDirs.nonEmpty =>
         val done = readManifest(spark, tableDir, p)
           .select(col("block_id").cast("int").as("block_id")).distinct()
         withBlocks.join(done, Seq("block_id"), "left_anti")
-      case None => withBlocks
+      case _ => withBlocks
     }
     val todo = opts.blockFilter match {
       case Some(f) =>
@@ -252,25 +252,25 @@ object GraftTable {
     // manifest from the WRITTEN files (column-pruned scan, no re-encode)
     Commit.withManifest(manifestOf(spark, s"$tableDir/$dataDir")) { manifest =>
       val newBlocks = timed("manifest-count")(manifest.count())
-      if (newBlocks == 0) {
-        // nothing to write: drop the empty version dir
-        delete(spark, s"$tableDir/$dataDir")
-        parent match {
-          case Some(p) => EncodeResult.of(p, 0L) // the current snapshot stands
-          case None =>
-            // empty input, no parent: commit an empty (complete) snapshot —
-            // spark.read.json cannot infer a schema from a rowless manifest dir
-            val snap = Commit(spark, tableDir, ver, Nil, None) { tot =>
-              tot.snapshot(ver,
-                Hashing.sha256Hex(s"v$ver;parent=none;fp=${stats.fingerprint};empty"),
-                None, stats.fingerprint, KeyStrategy, boundsDir, numBlocks = 0,
-                complete = true, Nil, stats.asJsonFields ++ meta.toSeq)
-            }
-            EncodeResult.of(snap, 0L)
+      // nothing written: drop the empty version dir
+      if (newBlocks == 0) delete(spark, s"$tableDir/$dataDir")
+      if (newBlocks == 0 && parent.nonEmpty) EncodeResult.of(parent.get, 0L)
+      else if (newBlocks == 0 && stats.rows == 0) {
+        // empty input, no parent: commit an empty (complete) snapshot —
+        // spark.read.json cannot infer a schema from a rowless manifest dir
+        val snap = Commit(spark, tableDir, ver, Nil, None) { tot =>
+          tot.snapshot(ver,
+            Hashing.sha256Hex(s"v$ver;parent=none;fp=${stats.fingerprint};empty"),
+            None, stats.fingerprint, KeyStrategy, boundsDir, numBlocks = 0,
+            complete = true, Nil, stats.asJsonFields ++ meta.toSeq)
         }
+        EncodeResult.of(snap, 0L)
       } else {
+        // a blockFilter that selected no block, with no parent, commits the
+        // bounds and no block: incomplete, so a later encode does the work
+        val fresh = if (newBlocks == 0) None else Some(dataDir)
         val snap = Commit(spark, tableDir, ver, parent.map(_.manifestDirs).getOrElse(Nil),
-          Some(manifest), phases = Some("")) { tot =>
+          fresh.map(_ => manifest), phases = Some("")) { tot =>
           val snapshotId = Hashing.sha256Hex(
             s"v$ver;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
               s"fp=${stats.fingerprint};bounds=${boundsRef.sigHex()};" +
@@ -278,7 +278,7 @@ object GraftTable {
               s"tokens=${tot.tokens};bytes=${tot.bytes};sig=${tot.contentSig}")
           tot.snapshot(ver, snapshotId, parent.map(_.snapshotId), stats.fingerprint,
             KeyStrategy, boundsDir, numBlocks, complete = tot.blocks == numBlocks,
-            parent.map(_.dataDirs).getOrElse(Nil) :+ dataDir,
+            parent.map(_.dataDirs).getOrElse(Nil) ++ fresh,
             stats.asJsonFields ++ meta.toSeq)
         }
         EncodeResult.of(snap, newBlocks)
@@ -503,7 +503,7 @@ object GraftTable {
     */
   private def resumeValuesMatch(
       spark: SparkSession, tableDir: String, p: Snapshot, keyed: DataFrame): Boolean = {
-    if (p.numBlocks == 0) return true // empty parent ⇔ empty input (fp pins rows=0)
+    if (p.manifestDirs.isEmpty) return true // no block done: nothing to confirm
     def sig(df: DataFrame): (Long, java.math.BigInteger) = {
       val r = df.agg(
         expr(s"bit_xor($rowHashSql)").as("x"),
@@ -757,9 +757,13 @@ object GraftTable {
   }
 
   private def decodeSnap(
-      spark: SparkSession, snap: Snapshot, tableDir: String): Dataset[TokenRow] = {
-    import spark.implicits._
-    readBlocks(spark, tableDir, snap)
+      spark: SparkSession, snap: Snapshot, tableDir: String): Dataset[TokenRow] =
+    decodeRows(readBlocks(spark, tableDir, snap))
+
+  /** The token rows of `blocks`, a frame of data-file rows. */
+  private def decodeRows(blocks: DataFrame): Dataset[TokenRow] = {
+    import blocks.sparkSession.implicits._
+    blocks
       .select(explode(arrays_zip(
         graft_decode_str(col("pl_doc_id")).as("doc_id"),
         graft_reslice(graft_decode(col("pl_tokens")), graft_decode(col("pl_n_tok")))
@@ -866,7 +870,7 @@ object GraftTable {
             s"rows=${tot.rows};tokens=${tot.tokens};" +
             s"bytes=${tot.bytes};sig=${tot.contentSig}")
         tot.snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp, KeyStrategy,
-          p.boundsDir, p.numBlocks + numNew, complete = true, p.dataDirs :+ dataDir,
+          None, p.numBlocks + numNew, complete = true, p.dataDirs :+ dataDir,
           stats.asJsonFields ++ (carriedMeta(Some(p)) ++ extraMeta).toSeq)
       }
     }
@@ -934,7 +938,7 @@ object GraftTable {
             s"rows=${tot.rows};tokens=${tot.tokens};" +
             s"bytes=${tot.bytes};sig=${tot.contentSig}")
         tot.snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp, KeyStrategy,
-          p.boundsDir, tot.blocks.toInt, complete = true, keepData :+ dataDir,
+          None, tot.blocks.toInt, complete = true, keepData :+ dataDir,
           stats.asJsonFields ++ carriedMeta(Some(p)).toSeq)
       }
     }
@@ -1081,41 +1085,28 @@ object GraftTable {
   def decodeWhere(
       spark: SparkSession, tableDir: String, sources: Seq[String]): Dataset[TokenRow] = {
     require(sources.nonEmpty, "decodeWhere needs at least one source value")
-    val wanted = array(sources.map(lit): _*)
-    val hit = readManifest(spark, tableDir)
-      .where(col("src_list").isNull || arrays_overlap(col("src_list"), wanted))
+    val hit = readManifest(spark, tableDir).where(holdsSources(sources))
       .select(col("ver").cast("int").as("ver"),
         col("block_id").cast("int").as("block_id"))
     decodeBlocks(spark, tableDir, hit)
       .where(col("source").isin(sources.map(s => s: Any): _*))
   }
 
+  /** Manifest rows whose block may hold one of `sources` (a null
+    * `src_list` overflowed its cap and is kept).
+    */
+  private def holdsSources(sources: Seq[String]): Column =
+    col("src_list").isNull || arrays_overlap(col("src_list"), array(sources.map(lit): _*))
+
   /** Block ids [[decodeWhere]] would read — PlanSpec asserts pruning. */
   private[table] def blocksForSources(
       spark: SparkSession, tableDir: String, sources: Seq[String]): Long =
-    readManifest(spark, tableDir)
-      .where(col("src_list").isNull ||
-        arrays_overlap(col("src_list"), array(sources.map(lit): _*)))
-      .count()
+    readManifest(spark, tableDir).where(holdsSources(sources)).count()
 
   private def decodeBlocks(
-      spark: SparkSession, tableDir: String,
-      liveBlocks: DataFrame): Dataset[TokenRow] = {
-    import spark.implicits._
-    readBlocks(spark, tableDir)
-      .join(broadcast(liveBlocks), Seq("ver", "block_id"), "left_semi")
-      .select(explode(arrays_zip(
-        graft_decode_str(col("pl_doc_id")).as("doc_id"),
-        graft_reslice(graft_decode(col("pl_tokens")), graft_decode(col("pl_n_tok")))
-          .as("tokens"),
-        graft_decode_str(col("pl_source")).as("source"))).as("r"))
-      .select(
-        col("r.doc_id").as("doc_id"),
-        col("r.tokens").as("tokens"),
-        size(col("r.tokens")).as("n_tok"),
-        col("r.source").as("source"))
-      .as[TokenRow]
-  }
+      spark: SparkSession, tableDir: String, liveBlocks: DataFrame): Dataset[TokenRow] =
+    decodeRows(readBlocks(spark, tableDir)
+      .join(broadcast(liveBlocks), Seq("ver", "block_id"), "left_semi"))
 
   def readManifest(spark: SparkSession, tableDir: String, snap: Snapshot): DataFrame =
     spark.read.json(snap.manifestDirs.map(d => s"$tableDir/$d"): _*)

@@ -13,6 +13,20 @@ object GraftSql {
 
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** A DataFrame reading a connector `table` the caller built, planned as
+    * `spark.read.format(...).load()` plans its table (`Dataset.ofRows` is
+    * private[sql]).
+    */
+  def tableFrame(spark: SparkSession, table: connector.catalog.Table): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      execution.datasources.v2.DataSourceV2Relation.create(table, None, None))
+
+  /** `a` with each nested nullability flag widened by `b`'s, as in a
+    * union's output type (private[sql] in Spark).
+    */
+  def unionType(a: types.DataType, b: types.DataType): types.DataType =
+    types.StructType.unionLikeMerge(a, b)
+
   /** Type equality ignoring nullability/case (private[sql] in Spark). */
   def sameType(a: types.DataType, b: types.DataType): Boolean = a.sameType(b)
 

@@ -3,11 +3,13 @@ package graft.table
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sources.{GraftGenericInputPartition, GraftGenericPartitionReader}
 
 /** Any-schema table tests (SURVEY.md §2.1 R3/R4): the generic encode →
   * decode path must round-trip arbitrary supported schemas bit-identically —
@@ -21,6 +23,22 @@ class GenericTableSpec extends AnyFunSuite {
 
   private def tmpDir(tag: String): String =
     Files.createTempDirectory(s"graft-gen-$tag").toString
+
+  private def scansOf(df: DataFrame): Seq[BatchScanExec] =
+    df.queryExecution.executedPlan.collect { case s: BatchScanExec => s }
+
+  /** The input partitions the generic scan of `df` plans. */
+  private def partitionsOf(df: DataFrame): Seq[GraftGenericInputPartition] =
+    scansOf(df).head.scan.toBatch.planInputPartitions().toSeq
+      .map(_.asInstanceOf[GraftGenericInputPartition])
+
+  /** The payload columns a reader of `df`'s generic scan reads. */
+  private def payloadColumnsOf(df: DataFrame): Set[String] = {
+    val batch = scansOf(df).head.scan.toBatch
+    val reader = batch.createReaderFactory().createReader(batch.planInputPartitions().head)
+    try reader.asInstanceOf[GraftGenericPartitionReader].payloadColumns.toSet
+    finally reader.close()
+  }
 
   /** Order-insensitive exact comparison via two-sided except (null-safe). */
   private def assertSameRows(
@@ -131,6 +149,15 @@ class GenericTableSpec extends AnyFunSuite {
     assert(r2.complete)
     assert(r2.blocksEncodedThisRun == r2.numBlocks - r1.blocksDone)
     assertSameRows(GenericTable.decode(spark, dir), docs)
+    // a filter selecting no block commits no block and no data dir; the
+    // unfiltered encode of the same input then does all the work
+    val dir0 = tmpDir("partial0")
+    val r0 = GenericTable.encode(docs, dir0, opts = opts.copy(blockFilter = Some(_ => false)))
+    assert(!r0.complete && r0.blocksDone == 0 && r0.rowCount == 0)
+    assert(!Files.exists(java.nio.file.Paths.get(dir0, "data/v1")))
+    val r0b = GenericTable.encode(docs, dir0, opts = opts)
+    assert(r0b.complete && r0b.blocksEncodedThisRun == r0b.numBlocks && r0b.rowCount == 500)
+    assertSameRows(GenericTable.decode(spark, dir0), docs)
   }
 
   test("determinism: independent encodes at different layouts byte-identical") {
@@ -150,11 +177,9 @@ class GenericTableSpec extends AnyFunSuite {
     val dec = GenericTable.decodeSelect(spark, dir, Seq("doc_id", "lang"))
     assert(dec.schema.fieldNames.toSeq == Seq("doc_id", "lang"))
     assertSameRows(dec, docs.select("doc_id", "lang"))
-    // the physical scan reads ONLY the two wanted payload columns
-    val read = dec.queryExecution.executedPlan.collectLeaves()
-      .map(_.toString).mkString("\n")
-    val m = "pl_(\\d+)".r.findAllMatchIn(read).map(_.group(1).toInt).toSet
-    assert(m.size == 2, s"expected 2 payload columns in ReadSchema, got $m")
+    // the scan's reader reads ONLY the two wanted payload columns
+    val m = payloadColumnsOf(dec)
+    assert(m.size == 2, s"expected 2 payload columns read, got $m")
   }
 
   test("describe reports per-leaf codec selection; unsupported types fail loud") {
@@ -325,9 +350,33 @@ class GenericTableSpec extends AnyFunSuite {
     val got: Array[Long] = out.select("id").collect().map(_.getLong(0)).sorted
     val want: Array[Long] = (480L to 520L).toArray
     assert(got.sameElements(want), got.mkString(","))
-    // the zone-map predicate reaches the parquet scan (row-group pruning)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("key_min") && plan.contains("key_max"), plan)
+    // the interval reaches the scan, and every partition applies it as a
+    // key_min/key_max row-group + record filter
+    val desc = scansOf(out).head.scan.description()
+    assert(desc.contains("range=[480,520]"), desc)
+    val parts = partitionsOf(out)
+    assert(parts.nonEmpty && parts.forall(_.range.contains((480L, 520L))))
+    // date and numeric-string keys have no SQL interval pushdown; the
+    // pinned interval still skips every version outside it. Four versions
+    // of 200 rows; version i holds rows [200 (i - 1), 200 i).
+    def fourVersions(tag: String, rows: (Int, Int) => DataFrame, key: String,
+        lo: Long, hi: Long, want: DataFrame): Unit = {
+      val d = tmpDir(tag)
+      GenericTable.encode(rows(0, 200), d, keyCol = key, opts)
+      (1 until 4).foreach(i => GenericTable.append(rows(i * 200, i * 200 + 200), d, opts))
+      val slice = GenericTable.decodeRange(spark, d, lo, hi)
+      assert(partitionsOf(slice).map(_.version).toSet == Set(2), tag)
+      assert(partitionsOf(GenericTable.decode(spark, d)).map(_.version).toSet == Set(1, 2, 3, 4))
+      assertSameRows(slice, want)
+    }
+    val byDay = (lo: Int, hi: Int) => (lo until hi).toDF("i").select(
+      date_add(lit("2024-01-01").cast("date"), col("i")).as("d"),
+      concat(lit("v"), col("i")).as("v"))
+    val day0 = java.time.LocalDate.of(2024, 1, 1).toEpochDay
+    fourVersions("range-date", byDay, "d", day0 + 250, day0 + 300, byDay(250, 301))
+    val byNumStr = (lo: Int, hi: Int) => (lo until hi).toDF("i").select(
+      (col("i") * 3).cast("string").as("s"), col("i").cast("long").as("n"))
+    fourVersions("range-numstr", byNumStr, "s", 750L, 900L, byNumStr(250, 301))
   }
 
   test("decimal columns round-trip exactly through unscaled-long storage") {
@@ -404,15 +453,14 @@ class GenericTableSpec extends AnyFunSuite {
     val dec = GenericTable.decode(spark, dir)
     assert(dec.count() == 1200)
     // a streamed table (one version per micro-batch) must not union one
-    // plan branch per version: same-write-schema versions share one
-    // multi-dir parquet scan, so 12 versions plan as ONE scan
-    val plan = dec.queryExecution.executedPlan.toString
-    assert("Scan parquet".r.findAllIn(plan).length == 1, plan.take(3000))
-    // a schema EVOLUTION (new leaf plan) adds exactly one more branch
+    // plan branch per version: 12 versions plan as ONE scan
+    assert(scansOf(dec).length == 1, dec.queryExecution.executedPlan.toString.take(3000))
+    // a schema EVOLUTION (new leaf plan) still plans one scan: each
+    // partition decodes under its own version's write schema
     GenericTable.append(
       mk(1200, 1300).withColumn("extra", lit(1)), dir, opts)
-    val plan2 = GenericTable.decode(spark, dir).queryExecution.executedPlan.toString
-    assert("Scan parquet".r.findAllIn(plan2).length == 2, plan2.take(3000))
+    val dec2 = GenericTable.decode(spark, dir)
+    assert(scansOf(dec2).length == 1, dec2.queryExecution.executedPlan.toString.take(3000))
     // decodeRange consults the manifest's per-version key spans and drops
     // whole versions' data dirs before any parquet footer is opened
     val snap = GraftTable.currentSnapshot(spark, dir).get
@@ -771,6 +819,26 @@ class GenericTableSpec extends AnyFunSuite {
     assert(dec.where(col("id") < 100).count() == 100, "v1 rows must survive")
     assert(m1 == before, "v1 predates `b` - it must stay by reference")
     assert(dec.schema.fieldNames.toSeq == Seq("id", "a", "b"))
+    // more versions, one more of them evolved: each row reads the version
+    // of the data dir holding it, and only the versions with a match rewrite
+    GenericTable.append((200 until 300).toDF("k").select(
+      col("k").cast("long").as("id"), concat(lit("a"), col("k")).as("a")), dir, opts)
+    GenericTable.append(v2.select((col("id") + 200).as("id"), col("a"), col("b"),
+      lit(1).as("c")), dir, opts)
+    val snap = GraftTable.currentSnapshot(spark, dir).get
+    val tagged = GenericTable.decode(spark, dir)
+      .select(col("id"), col(graft.sources.GraftGenericScan.VersionColumn.name()))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(tagged.size == 390)
+    assert(tagged.values.toSet == snap.dataDirs.map(GraftTable.versionOfDir).toSet)
+    assert(tagged.filter(_._1 < 100).values.toSet == Set(1))
+    assert(tagged.filter(_._1 >= 300).values.toSet == Set(snap.version))
+    GenericTable.deleteWhere(spark, dir, col("b") === 4L && col("id") >= 300L)
+    val after = GraftTable.currentSnapshot(spark, dir).get
+    assert(after.dataDirs.toSet ==
+      (snap.dataDirs.toSet - s"data/v${snap.version}") + s"data/v${after.version}")
+    val left = GenericTable.decode(spark, dir)
+    assert(left.count() == 380 && left.where(col("b") === 4L).count() == 10)
   }
 
   test("deleteWhere resolves nested-field and case-mismatched references") {
@@ -893,7 +961,7 @@ class GenericTableSpec extends AnyFunSuite {
     assert(snap.stats.toMap.get("stream_batch_id").contains("7"), snap.stats.toString)
   }
 
-  test("append keeps the parent's bounds and writes no bounds file of its own") {
+  test("append records no bounds dir and writes no bounds file of its own") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val dir = tmpDir("append-bounds")
     val opts = GraftTable.Options(targetRowsPerBlock = 64)
@@ -905,10 +973,32 @@ class GenericTableSpec extends AnyFunSuite {
     assert(res.numBlocks - base.numBlocks > 1)
     val fs = java.nio.file.Paths.get(dir)
     assert(!Files.exists(fs.resolve(s"metadata/bounds/v${res.version}")))
+    // bounds are read back only to resume an encode, never an append's
+    // child: the append records none, so the encode's file is reclaimable
     val snap = GraftTable.snapshotAt(spark, dir, res.version)
-    assert(snap.boundsDir == base.boundsDir)
+    assert(snap.boundsDir.isEmpty)
     GraftTable.expireSnapshots(spark, dir)
-    assert(Files.exists(fs.resolve("metadata/bounds/v1")))
+    assert(!Files.exists(fs.resolve("metadata/bounds/v1")))
     assertSameRows(GenericTable.decode(spark, dir), docs)
+  }
+
+  test("an append admitting nested nulls its table's schema excludes keeps them") {
+    val dir = tmpDir("widen")
+    def batch(lo: Int, nulls: Boolean): DataFrame = {
+      val schema = StructType(Seq(StructField("id", LongType),
+        StructField("a", ArrayType(IntegerType, containsNull = nulls)),
+        StructField("st", StructType(Seq(
+          StructField("x", ArrayType(LongType, containsNull = nulls)))))))
+      val rows = (lo until lo + 50).map(i => Row(i.toLong,
+        Seq(i, if (nulls && i % 3 == 0) null else 5),
+        Row(Seq(if (nulls && i % 4 == 0) null else 1L, i.toLong))))
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    }
+    GenericTable.encode(batch(0, nulls = false), dir, keyCol = "id")
+    GenericTable.append(batch(50, nulls = true), dir)
+    val dec = GenericTable.decode(spark, dir)
+    assert(dec.where(col("a")(1).isNull).count() == 17)
+    assert(dec.where(col("st.x")(0).isNull).count() == 12)
+    assertSameRows(dec, batch(0, nulls = false).union(batch(50, nulls = true)))
   }
 }

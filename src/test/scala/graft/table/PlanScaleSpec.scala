@@ -2,6 +2,7 @@ package graft.table
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,10 +31,12 @@ class PlanScaleSpec extends AnyFunSuite {
     (1 until 30).foreach(i => GenericTable.append(mkV1(i * 5), dir, opts))
     (30 until 60).foreach(i => GenericTable.append(mkV2(i * 5), dir, opts))
 
-    // decode: one parquet scan per EPOCH (2), never per version (60)
+    // decode: ONE scan whatever the versions (60) and epochs (2) — each
+    // partition decodes under its own version's write schema
+    def scans(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.executedPlan.collect { case s: BatchScanExec => s }.length
     val dec = GenericTable.decode(spark, dir)
-    val decPlan = dec.queryExecution.executedPlan.toString
-    assert("Scan parquet".r.findAllIn(decPlan).length == 2, decPlan.take(3000))
+    assert(scans(dec) == 1, dec.queryExecution.executedPlan.toString.take(3000))
     assert(dec.count() == 300)
 
     // describe: manifests of an epoch share ONE json scan; leaves unpivot
@@ -61,7 +64,6 @@ class PlanScaleSpec extends AnyFunSuite {
     val after = GenericTable.decode(spark, dir)
     assert(after.count() == 300)
     assert(after.where(col("extra").isNotNull).count() == 150)
-    val afterPlan = after.queryExecution.executedPlan.toString
-    assert("Scan parquet".r.findAllIn(afterPlan).length <= 2, afterPlan.take(3000))
+    assert(scans(after) == 1, after.queryExecution.executedPlan.toString.take(3000))
   }
 }

@@ -124,6 +124,17 @@ class TableSpec extends AnyFunSuite {
     // and the final table decodes bit-identically
     assert(collectRows(GraftTable.decode(spark, dir))
       .sameElements(collectRows(source)))
+
+    // a filter selecting no block, with no parent, commits no block and
+    // no data dir and is not complete: the unfiltered encode of the same
+    // input does the work instead of a no-op
+    val dir0 = tmpDir("resume0")
+    val r0 = GraftTable.encode(source.toDF(), dir0, opts.copy(blockFilter = Some(_ => false)))
+    assert(!r0.complete && r0.blocksDone == 0 && r0.rowCount == 0)
+    assert(!Files.exists(java.nio.file.Paths.get(dir0, "data/v1")))
+    val r0b = GraftTable.encode(source.toDF(), dir0, opts)
+    assert(r0b.complete && r0b.blocksEncodedThisRun == r0b.numBlocks && r0b.rowCount == 500)
+    assert(collectRows(GraftTable.decode(spark, dir0)).sameElements(collectRows(source)))
   }
 
   test("idempotence: re-running a complete table is a no-op") {
