@@ -235,10 +235,17 @@ class GraftSparkTable private[graft] (
   private lazy val snap = snapOpt.getOrElse(
     throw new IllegalArgumentException(s"no committed graft table at $tableDir"))
 
+  // a generic snapshot's live versions' write schemas: read once, for the
+  // table schema and for the scan's partitions
+  private lazy val writeSchemas =
+    GenericTable.writeSchemasOf(SparkSession.active, tableDir, snap)
+
+  private lazy val genericSchema = GenericTable.liveSchemaOf(snap, writeSchemas)
+
   override def name(): String = s"graft:`$tableDir`"
 
   override def schema(): StructType = snapOpt match {
-    case Some(s) if GenericTable.isGeneric(s) => GenericTable.readSchemaOf(s)
+    case Some(s) if GenericTable.isGeneric(s) => genericSchema
     case Some(_) => GraftDataSource.TokenSchema
     case None => if (provided != null) provided else GraftDataSource.TokenSchema
   }
@@ -257,11 +264,12 @@ class GraftSparkTable private[graft] (
     if (snapOpt.exists(GenericTable.isGeneric)) Array(GraftGenericScan.VersionColumn)
     else Array.empty
 
-  // a pinned snapshot may be a subset of a committed one (whose row total
-  // would not answer COUNT(*)) or carry a key interval
+  // a pinned snapshot may be a subset of a committed one, whose totals
+  // then answer neither COUNT(*) nor the scan's statistics
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     if (GenericTable.isGeneric(snap))
-      new GraftGenericScanBuilder(tableDir, snap, keyRange, metadataCount = pinned.isEmpty)
+      new GraftGenericScanBuilder(tableDir, snap, genericSchema, writeSchemas, keyRange,
+        committedTotals = pinned.isEmpty)
     else new GraftScanBuilder(tableDir, snap)
 
   override def newWriteBuilder(

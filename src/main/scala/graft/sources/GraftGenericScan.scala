@@ -40,10 +40,13 @@ import graft.table.{AnyColumn, GenericTable, GraftTable}
   *     table size (the interval, not the surviving ids, travels to the
   *     executors) — plus whole-VERSION pruning from the manifest key spans;
   *   - schema evolution: each partition decodes under the write schema of
-  *     its version and null-fills fields that postdate it;
+  *     its version and null-fills fields that postdate it; rows are emitted
+  *     under the snapshot's live schema (`GenericTable.liveSchemaOf`);
   *   - the version of each row as the metadata column
   *     [[GraftGenericScan.VersionColumn]];
-  *   - metadata COUNT(*) and snapshot statistics, as in the token scan.
+  *   - metadata COUNT(*) and snapshot statistics, as in the token scan,
+  *     when the snapshot's totals describe the scanned dirs; otherwise
+  *     statistics from the scanned files' sizes.
   *
   * Every accepted filter stays residual, so pruning is never the
   * correctness mechanism.
@@ -51,12 +54,13 @@ import graft.table.{AnyColumn, GenericTable, GraftTable}
 class GraftGenericScanBuilder(
     tableDir: String,
     snap: GraftTable.Snapshot,
+    fullSchema: StructType,
+    writeSchemas: Map[Int, StructType],
     pinnedRange: Option[(Long, Long)],
-    metadataCount: Boolean)
+    committedTotals: Boolean)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit {
 
-  private val fullSchema = GenericTable.readSchemaOf(snap)
   private val keyName = GenericTable.keyNameOf(snap)
   private val keyIsIntegral = fullSchema.fields.find(_.name == keyName)
     .exists(_.dataType match {
@@ -74,7 +78,7 @@ class GraftGenericScanBuilder(
 
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    metadataCount && pushed.isEmpty && agg.groupByExpressions.isEmpty &&
+    committedTotals && pushed.isEmpty && agg.groupByExpressions.isEmpty &&
       agg.aggregateExpressions.nonEmpty &&
       agg.aggregateExpressions.forall(
         _.isInstanceOf[org.apache.spark.sql.connector.expressions.aggregate.CountStar])
@@ -150,7 +154,8 @@ class GraftGenericScanBuilder(
 
   override def build(): Scan =
     if (countPushed) new GraftCountScan(tableDir, snap)
-    else new GraftGenericScan(tableDir, snap, required, pushed, keyRange, limit)
+    else new GraftGenericScan(
+      tableDir, snap, writeSchemas, committedTotals, required, pushed, keyRange, limit)
 }
 
 /** One partition = one parquet data file + its version and that
@@ -178,11 +183,16 @@ object GraftGenericScan {
 }
 
 /** `required` holds the requested data fields, then the version metadata
-  * column when it was requested.
+  * column when it was requested. `writeSchemas` holds the write schema of
+  * every version live in `snap`; `committedTotals` says whether `snap`'s
+  * row and byte totals describe its data dirs (a pinned copy limited to
+  * some of them keeps the full snapshot's totals).
   */
 class GraftGenericScan(
     tableDir: String,
     snap: GraftTable.Snapshot,
+    writeSchemas: Map[Int, StructType],
+    committedTotals: Boolean,
     required: StructType,
     pushed: Array[Filter],
     range: Option[(Long, Long)],
@@ -192,45 +202,46 @@ class GraftGenericScan(
 
   override def toBatch: Batch = this
 
-  override def estimateStatistics(): Statistics = new Statistics {
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(snap.bytesTotal)
-    override def numRows(): OptionalLong = OptionalLong.of(snap.rowCount)
-  }
+  override def estimateStatistics(): Statistics =
+    if (committedTotals) new Statistics {
+      override def sizeInBytes(): OptionalLong = OptionalLong.of(snap.bytesTotal)
+      override def numRows(): OptionalLong = OptionalLong.of(snap.rowCount)
+    } else new Statistics {
+      override def sizeInBytes(): OptionalLong =
+        OptionalLong.of(files.iterator.map(_._2.getLen).sum)
+      override def numRows(): OptionalLong = OptionalLong.empty()
+    }
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** (version, parquet data file) of every file the scan reads: the live
+    * dirs after whole-version pruning from the manifest key spans (tiny
+    * JSON read on the driver — the interval itself, never an id set).
+    */
+  private lazy val files: Seq[(Int, org.apache.hadoop.fs.FileStatus)] = {
     val spark = SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
-    val splitBytes = spark.sessionState.conf.filesMaxPartitionBytes
-    // whole-version pruning from the manifest key spans (tiny JSON read on
-    // the driver — the interval itself, never an id set)
     val liveDirs = range match {
       case Some((lo, hi)) => GenericTable.rangeDataDirs(spark, tableDir, snap, lo, hi)
       case None => snap.dataDirs
     }
-    val parts = Seq.newBuilder[InputPartition]
-    liveDirs.groupBy(GraftTable.versionOfDir).toSeq.sortBy(_._1).foreach {
-      case (ver, dirs) =>
-        val vsnap =
-          if (ver == snap.version) snap
-          else GraftTable.snapshotVersion(spark, tableDir, ver).getOrElse(
-            throw new IllegalStateException(s"metadata/v$ver.json missing"))
-        val wjson = GenericTable.writeSchemaOf(vsnap).json
-        dirs.foreach { d =>
-          val dir = new HPath(s"$tableDir/$d")
-          val fs = dir.getFileSystem(conf)
-          fs.listStatus(dir).foreach { st =>
-            val n = st.getPath.getName
-            if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-              // sub-file splits: read parallelism bounded by row groups,
-              // not files (see GraftScan.splitRanges)
-              GraftScan.splitRanges(st.getLen, splitBytes).foreach { case (lo, hi) =>
-                parts += GraftGenericInputPartition(
-                  st.getPath.toString, ver, wjson, range, lo, hi)
-              }
-          }
-        }
+    liveDirs.sortBy(GraftTable.versionOfDir).flatMap { d =>
+      val dir = new HPath(s"$tableDir/$d")
+      dir.getFileSystem(conf).listStatus(dir).toSeq.filter { st =>
+        val n = st.getPath.getName
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }.map(GraftTable.versionOfDir(d) -> _)
     }
-    parts.result().toArray
+  }
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    val splitBytes = SparkSession.active.sessionState.conf.filesMaxPartitionBytes
+    val wjson = writeSchemas.map { case (v, ws) => v -> ws.json }
+    files.flatMap { case (ver, st) =>
+      // sub-file splits: read parallelism bounded by row groups, not
+      // files (see GraftScan.splitRanges)
+      GraftScan.splitRanges(st.getLen, splitBytes).map { case (lo, hi) =>
+        GraftGenericInputPartition(st.getPath.toString, ver, wjson(ver), range, lo, hi)
+      }
+    }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

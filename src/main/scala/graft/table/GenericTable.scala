@@ -537,7 +537,7 @@ object GenericTable {
     val fragData = p.dataDirs.filter(d => frag(versionOf(d)))
 
     // decode ONLY the fragmented versions, projected onto the merged schema
-    val merged = readSchemaOf(p)
+    val merged = liveSchemaOf(spark, tableDir, p)
     val rows = scanOf(spark, tableDir, p.copy(dataDirs = fragData))
     rewriteCommit(spark, tableDir, p, merged, keepData, keepMan, rows,
       opName = "compact",
@@ -616,7 +616,7 @@ object GenericTable {
     require(isGeneric(p), s"$tableDir is a token table")
     def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
-    val merged = readSchemaOf(p)
+    val merged = liveSchemaOf(spark, tableDir, p)
     // detection scan: only the columns the predicate references (all, if
     // the expression is opaque). Each reference is matched by its FIRST
     // name part, case-insensitively, against the top-level schema — a
@@ -668,7 +668,7 @@ object GenericTable {
       s"deleteKeys takes a single-column frame, got ${keys.columns.mkString(",")}")
     def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
-    val merged = readSchemaOf(p)
+    val merged = liveSchemaOf(spark, tableDir, p)
     val key = keyNameOf(p)
     val kt = merged(key).dataType
     val kRaw = keys.select(col(keys.columns.head).cast(kt).as("__dk"))
@@ -729,7 +729,7 @@ object GenericTable {
     require(isGeneric(p), s"$tableDir is a token table")
     def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
-    val merged = readSchemaOf(p)
+    val merged = liveSchemaOf(spark, tableDir, p)
     val key = keyNameOf(p)
     val hitData = rangeDataDirs(spark, tableDir, p, lo, hi)
     if (hitData.isEmpty) return noop
@@ -834,9 +834,37 @@ object GenericTable {
     DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
 
+  /** The write schema of each version live in `snap`: one metadata read
+    * per version other than `snap`'s own.
+    */
+  private[graft] def writeSchemasOf(
+      spark: SparkSession, tableDir: String, snap: Snapshot): Map[Int, StructType] =
+    snap.dataDirs.map(versionOf).distinct.map { ver =>
+      val vsnap =
+        if (ver == snap.version) snap
+        else GraftTable.snapshotVersion(spark, tableDir, ver).getOrElse(
+          throw new IllegalStateException(
+            s"data dir of v$ver is live but metadata/v$ver.json is missing"))
+      ver -> writeSchemaOf(vsnap)
+    }.toMap
+
+  /** The schema rows of `snap` decode under: its read schema merged with
+    * the write schema of every live version. On tables whose every append
+    * went through [[mergeSchemas]] this is the read schema itself; earlier
+    * builds kept the parent's nested nullability on append, so their read
+    * schema can exclude nested nulls a later version holds, and rows
+    * emitted under it would read those nulls as 0.
+    */
+  private[graft] def liveSchemaOf(
+      snap: Snapshot, writeSchemas: Map[Int, StructType]): StructType =
+    writeSchemas.toSeq.sortBy(_._1).map(_._2).foldLeft(readSchemaOf(snap))(mergeSchemas)
+
+  private def liveSchemaOf(spark: SparkSession, tableDir: String, snap: Snapshot): StructType =
+    liveSchemaOf(snap, writeSchemasOf(spark, tableDir, snap))
+
   /** Rows of `snap` through the connector's generic scan, the lane's one
     * decoder: each version decodes under its own write schema, projected
-    * onto `snap`'s read schema (fields a version predates read null, as in
+    * onto `snap`'s live schema (fields a version predates read null, as in
     * Parquet/Iceberg schema evolution). `snap` is a committed snapshot or
     * a copy of one limited to some of its data dirs; `range` pins a key
     * interval on the scan, which prunes versions by their manifest key
@@ -952,13 +980,9 @@ object GenericTable {
     */
   def describe(spark: SparkSession, tableDir: String): DataFrame = {
     val snap = current(spark, tableDir)
+    val writeSchemas = writeSchemasOf(spark, tableDir, snap)
     val byVersion = snap.manifestDirs.groupBy(versionOf).toSeq.sortBy(_._1).map {
-      case (ver, dirs) =>
-        val vsnap =
-          if (ver == snap.version) snap
-          else GraftTable.snapshotVersion(spark, tableDir, ver).getOrElse(
-            throw new IllegalStateException(s"metadata/v$ver.json missing"))
-        (ver, dirs, writeSchemaOf(vsnap))
+      case (ver, dirs) => (ver, dirs, writeSchemas(ver))
     }
     val bySchema = byVersion.groupBy(_._3.json).toSeq
       .sortBy(_._2.map(_._1).min).map(_._2)

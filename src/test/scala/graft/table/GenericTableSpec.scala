@@ -839,6 +839,16 @@ class GenericTableSpec extends AnyFunSuite {
       (snap.dataDirs.toSet - s"data/v${snap.version}") + s"data/v${after.version}")
     val left = GenericTable.decode(spark, dir)
     assert(left.count() == 380 && left.where(col("b") === 4L).count() == 10)
+    // the metadata column's name cannot name a data column: the _graft
+    // prefix is reserved on encode and on append
+    val clash = (0 until 10).toDF("k").select(
+      col("k").cast("long").as("id"), col("k").as("_graft_version"))
+    for (write <- Seq[() => Any](
+        () => GenericTable.encode(clash, tmpDir("delclash"), keyCol = "id"),
+        () => GenericTable.append(clash, dir, opts))) {
+      val e = intercept[IllegalArgumentException](write())
+      assert(e.getMessage.contains("_graft prefix is reserved"), e.getMessage)
+    }
   }
 
   test("deleteWhere resolves nested-field and case-mismatched references") {
@@ -982,23 +992,83 @@ class GenericTableSpec extends AnyFunSuite {
     assertSameRows(GenericTable.decode(spark, dir), docs)
   }
 
+  /** 50 rows from id `lo` with an `array<int>` and a struct of
+    * `array<long>`; with `nulls`, the schema admits null elements and some
+    * rows hold them.
+    */
+  private def nestedBatch(lo: Int, nulls: Boolean): DataFrame = {
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("a", ArrayType(IntegerType, containsNull = nulls)),
+      StructField("st", StructType(Seq(
+        StructField("x", ArrayType(LongType, containsNull = nulls)))))))
+    val rows = (lo until lo + 50).map(i => Row(i.toLong,
+      Seq(i, if (nulls && i % 3 == 0) null else 5),
+      Row(Seq(if (nulls && i % 4 == 0) null else 1L, i.toLong))))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
   test("an append admitting nested nulls its table's schema excludes keeps them") {
     val dir = tmpDir("widen")
-    def batch(lo: Int, nulls: Boolean): DataFrame = {
-      val schema = StructType(Seq(StructField("id", LongType),
-        StructField("a", ArrayType(IntegerType, containsNull = nulls)),
-        StructField("st", StructType(Seq(
-          StructField("x", ArrayType(LongType, containsNull = nulls)))))))
-      val rows = (lo until lo + 50).map(i => Row(i.toLong,
-        Seq(i, if (nulls && i % 3 == 0) null else 5),
-        Row(Seq(if (nulls && i % 4 == 0) null else 1L, i.toLong))))
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    }
-    GenericTable.encode(batch(0, nulls = false), dir, keyCol = "id")
-    GenericTable.append(batch(50, nulls = true), dir)
+    GenericTable.encode(nestedBatch(0, nulls = false), dir, keyCol = "id")
+    GenericTable.append(nestedBatch(50, nulls = true), dir)
     val dec = GenericTable.decode(spark, dir)
     assert(dec.where(col("a")(1).isNull).count() == 17)
     assert(dec.where(col("st.x")(0).isNull).count() == 12)
-    assertSameRows(dec, batch(0, nulls = false).union(batch(50, nulls = true)))
+    assertSameRows(dec, nestedBatch(0, nulls = false).union(nestedBatch(50, nulls = true)))
+  }
+
+  test("a read schema recorded without a version's nested nulls still reads them") {
+    // earlier builds kept the parent's nested nullability on append: forge
+    // that snapshot, whose read schema excludes the appended null elements
+    val dir = tmpDir("narrow")
+    val source = nestedBatch(0, nulls = false).union(nestedBatch(50, nulls = true))
+    GenericTable.encode(nestedBatch(0, nulls = false), dir, keyCol = "id")
+    GenericTable.append(nestedBatch(50, nulls = true), dir)
+    val snap = GraftTable.currentSnapshot(spark, dir).get
+    val narrow = nestedBatch(0, nulls = false).schema
+    GraftTable.writeString(spark, s"$dir/metadata/v${snap.version}.json",
+      GraftTable.renderSnapshot(snap.copy(stats = snap.stats.map {
+        case ("generic_schema", _) => "generic_schema" -> narrow.json
+        case kv => kv
+      })))
+    assert(GenericTable.readSchemaOf(GraftTable.currentSnapshot(spark, dir).get) == narrow)
+    def nulls(df: DataFrame): (Long, Long) =
+      (df.where(col("a")(1).isNull).count(), df.where(col("st.x")(0).isNull).count())
+    assert(nulls(GenericTable.decode(spark, dir)) == ((17L, 12L)))
+    assertSameRows(GenericTable.decode(spark, dir), source)
+    assertSameRows(spark.read.format("graft").load(dir), source)
+    // the rewrites re-encode what the scan emits: compact must keep the
+    // nulls, and it records the schema that admits them
+    val res = GenericTable.compact(spark, dir)
+    assert(res.version == snap.version + 1)
+    val compacted = GraftTable.currentSnapshot(spark, dir).get
+    assert(compacted.dataDirs == Seq(s"data/v${res.version}"))
+    assert(GenericTable.readSchemaOf(compacted) ==
+      GenericTable.mergeSchemas(narrow, nestedBatch(50, nulls = true).schema))
+    assertSameRows(GenericTable.decode(spark, dir), source)
+    GenericTable.deleteWhere(spark, dir, col("id") === 3L)
+    assertSameRows(GenericTable.decode(spark, dir), source.where(col("id") =!= 3L))
+  }
+
+  test("a scan pinned to some of a snapshot's versions reports their file sizes") {
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val dir = tmpDir("pinstats")
+    val opts = GraftTable.Options(targetRowsPerBlock = 64)
+    GenericTable.encode(docs.where(col("doc_id") < 100), dir, opts = opts)
+    GenericTable.append(docs.where(col("doc_id") >= 100), dir, opts)
+    val snap = GraftTable.currentSnapshot(spark, dir).get
+    def statsOf(t: graft.sources.GraftSparkTable) =
+      scansOf(org.apache.spark.sql.GraftSql.tableFrame(spark, t)).head.scan
+        .asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
+        .estimateStatistics()
+    val current = statsOf(new graft.sources.GraftSparkTable(dir, null))
+    assert(current.numRows().getAsLong == 500L)
+    assert(current.sizeInBytes().getAsLong == snap.bytesTotal)
+    val v1 = statsOf(new graft.sources.GraftSparkTable(
+      dir, null, Some(snap.copy(dataDirs = Seq("data/v1"))), None))
+    val v1Bytes = new java.io.File(s"$dir/data/v1").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+    assert(!v1.numRows().isPresent)
+    assert(v1.sizeInBytes().getAsLong == v1Bytes)
   }
 }
