@@ -54,8 +54,6 @@ final class ByteWriter(initialCapacity: Int = 64) {
   * nested blobs are decoded by simply continuing at `pos`.
   */
 final class ByteReader(val buf: Array[Byte], var pos: Int = 0) {
-  def remaining: Int = buf.length - pos
-
   def getByte(): Int = { val b = buf(pos); pos += 1; b & 0xFF }
 
   def getVarLong(): Long = {

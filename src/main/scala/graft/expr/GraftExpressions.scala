@@ -67,9 +67,6 @@ object GraftRuntime {
 
   def encodeAuto(a: ArrayData): Array[Byte] = IntBlocks.encodeAuto(toInts(a))
 
-  def encodeAutoGated(a: ArrayData, allowDict: Boolean, allowFsst: Boolean): Array[Byte] =
-    IntBlocks.encodeAutoChoice(toInts(a), allowDict, allowFsst)._1
-
   def encodeStrAuto(a: ArrayData): Array[Byte] = StrBlocks.encodeAuto(toStrings(a))
 
   /** Codec family name from a self-describing payload's leading id byte
@@ -135,15 +132,9 @@ object GraftRuntime {
   * trial-based auto-selector picks the smallest payload per row; with a
   * codec name the encoding is forced (used by the per-codec oracle queries
   * and tests). SURVEY.md E8a–E8e as a native Catalyst expression — codegen
-  * via a static call, not a Scala UDF. `allowDict` / `allowFsst` gate the
-  * trial set from the sampled stats pass (SURVEY.md E6–E7): a column whose
-  * sampled cardinality exceeds the dict cap skips the wasted trial encodes.
+  * via a static call, not a Scala UDF.
   */
-case class GraftEncode(
-    child: Expression,
-    codec: Option[String] = None,
-    allowDict: Boolean = true,
-    allowFsst: Boolean = true)
+case class GraftEncode(child: Expression, codec: Option[String] = None)
     extends UnaryExpression {
 
   private val codecId: Option[Int] = codec.map { name =>
@@ -160,15 +151,14 @@ case class GraftEncode(
     val a = input.asInstanceOf[ArrayData]
     codecId match {
       case Some(id) => GraftRuntime.encodeWith(id, a)
-      case None     => GraftRuntime.encodeAutoGated(a, allowDict, allowFsst)
+      case None     => GraftRuntime.encodeAuto(a)
     }
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     codecId match {
       case Some(id) => defineCodeGen(ctx, ev, c => s"graft.expr.GraftRuntime.encodeWith($id, $c)")
-      case None     => defineCodeGen(ctx, ev,
-        c => s"graft.expr.GraftRuntime.encodeAutoGated($c, $allowDict, $allowFsst)")
+      case None     => defineCodeGen(ctx, ev, c => s"graft.expr.GraftRuntime.encodeAuto($c)")
     }
 
   override protected def withNewChildInternal(newChild: Expression): GraftEncode =

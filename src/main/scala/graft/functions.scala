@@ -19,12 +19,6 @@ object functions {
   def graft_encode(c: Column, codec: String): Column =
     GraftSql.column(expr.GraftEncode(GraftSql.expression(c), Some(codec)))
 
-  /** Auto-encode with the trial set gated by sampled column stats
-    * (SURVEY.md E6–E7): skip dict/FSST trials when cardinality rules them out.
-    */
-  def graft_encode_gated(c: Column, allowDict: Boolean, allowFsst: Boolean): Column =
-    GraftSql.column(expr.GraftEncode(GraftSql.expression(c), None, allowDict, allowFsst))
-
   /** Encode an `array<string>` column (doc_id / source blocks). */
   def graft_encode_str(c: Column): Column =
     GraftSql.column(expr.GraftEncodeStr(GraftSql.expression(c)))

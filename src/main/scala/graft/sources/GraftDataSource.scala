@@ -187,10 +187,12 @@ object GraftDataSource {
     val spark = data.sparkSession
     val existing = GraftTable.currentSnapshot(spark, tableDir)
     val existingGeneric = existing.exists(GenericTable.isGeneric)
-    val opts = GraftTable.Options(
-      targetRowsPerBlock =
-        options.get("targetrowsperblock").orElse(options.get("targetRowsPerBlock"))
-          .map(_.toInt).getOrElse(GraftTable.Options().targetRowsPerBlock))
+    val opts = options.get("targetrowsperblock").orElse(options.get("targetRowsPerBlock"))
+      .fold(GraftTable.Options()) { v =>
+        GraftTable.Options(targetRowsPerBlock = v.toIntOption.getOrElse(
+          throw new IllegalArgumentException(
+            s"targetRowsPerBlock must be a positive integer, got '$v'")))
+      }
     val tokenLane =
       if (existing.isEmpty) isTokenShape(data.schema)
       else !existingGeneric
@@ -563,7 +565,7 @@ class GraftReaderFactory(
     columns: Array[String],
     conf: graft.expr.SerializableHadoopConf,
     limit: Int = -1) extends PartitionReaderFactory {
-  // Deliberately row-at-a-time, MEASURED (tools/SqlScanProbe, 27M tokens,
+  // Deliberately row-at-a-time, MEASURED (SQL-route scan of 27M tokens,
   // idle host): a ColumnarBatch emit (OnHeapColumnVector per block, bulk
   // putInts for the token child vector) read 12.0 M tok/s vs 19.6 M on
   // this path, and a residual-filtered string scan was 3.7x slower —
@@ -572,6 +574,7 @@ class GraftReaderFactory(
   // vector, while this reader hands Spark a finished UnsafeArrayData
   // via one memcpy (fromPrimitiveArray). Columnar would only pay off
   // with a vectorized consumer, which Spark's aggregates are not.
+  // perfbench `--trace 1` times this route as `sources.exec_ms`.
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GraftPartitionReader(
       partition.asInstanceOf[GraftInputPartition], columns, conf, limit)

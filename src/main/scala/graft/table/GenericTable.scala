@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import graft.codec.Hashing
 import graft.functions.{graft_codec, graft_range_bucket}
 import graft.table.Commit.{carriedMeta, timed}
-import graft.table.GraftTable.{EncodeResult, Options, Snapshot}
+import graft.table.GraftTable.{EncodeResult, Options, Snapshot, current}
 
 /** Any-schema encoded table (SURVEY.md §2.1 R3/R4 — the ebenezer
   * any-thrift-struct capability): encode an ARBITRARY DataFrame into the
@@ -877,10 +877,6 @@ object GenericTable {
       range: Option[(Long, Long)] = None): DataFrame =
     GraftSql.tableFrame(spark,
       new graft.sources.GraftSparkTable(tableDir, null, Some(snap), range))
-
-  private def current(spark: SparkSession, tableDir: String): Snapshot =
-    GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
 
   /** Decode the current snapshot back to the original schema, bit-identical
     * per row (order not guaranteed, as with any distributed scan).

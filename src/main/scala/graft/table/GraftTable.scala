@@ -56,12 +56,6 @@ object GraftTable {
       sampleRows: Long = 1L << 20,
       /** Test/backfill hook: restrict this run to a subset of block ids. */
       blockFilter: Option[Int => Boolean] = None,
-      /** Before trusting a resume candidate (scalar fingerprint match),
-        * confirm token VALUES by decode-and-compare (see [[encode]] doc).
-        * Disable only when input immutability is guaranteed externally and
-        * the two confirm scans matter.
-        */
-      verifyResume: Boolean = true,
       /** Bounds count at or above which the table switches to TWO-LEVEL
         * bounds: the driver materializes and broadcasts only coarse cuts
         * (one per [[graft.expr.BoundsChunks.ChunkSize]] fine bounds) and
@@ -72,7 +66,10 @@ object GraftTable {
         * 10^12-row / 15M-block table crosses it and stops costing the
         * driver 120 MB of heap + broadcast.
         */
-      chunkedBoundsMinBounds: Int = 1 << 20)
+      chunkedBoundsMinBounds: Int = 1 << 20) {
+    require(targetRowsPerBlock > 0,
+      s"targetRowsPerBlock must be a positive integer, got $targetRowsPerBlock")
+  }
 
   final case class Snapshot(
       version: Int,
@@ -153,7 +150,7 @@ object GraftTable {
     * manifest's per-block `row_xor` (recorded during assembly — a metadata
     * aggregate, no table decode). An input whose tokens changed while
     * preserving the scalar stats therefore triggers a fresh encode, not a
-    * silent stale-table no-op. Opt out via [[Options.verifyResume]].
+    * silent stale-table no-op.
     */
   def encode(
       tokens: DataFrame,
@@ -172,8 +169,7 @@ object GraftTable {
     val meta = carriedMeta(cur) ++ extraMeta
     val parent = cur
       .filter(_.inputFingerprint == stats.fingerprint) // fp change => fresh encode
-      .filter(p => !opts.verifyResume ||
-        timed("resume-confirm")(resumeValuesMatch(spark, tableDir, p, keyed)))
+      .filter(p => timed("resume-confirm")(resumeValuesMatch(spark, tableDir, p, keyed)))
 
     // complete-table no-op: the (confirmed) current snapshot IS the encode
     // of this input — return without loading bounds, broadcasting, or
@@ -314,8 +310,8 @@ object GraftTable {
     val encodeParts = encodePartitions(numBlocks, parallelism, stats.tokensTotal)
     // tokens are FOR-packed on the MAP side: they dominate the one data
     // shuffle, and ~5-bit ids packed cut MEASURED shuffle-write bytes
-    // 3.8× even after lz4 (828 MB → 217 MB for 270M tokens —
-    // tools/ShuffleProbe), plus the corresponding serialization CPU
+    // 3.8× even after lz4 (828 MB → 217 MB for 270M tokens; perfbench
+    // traces it as `table.encode.shuffle_write_mb`), plus the serialization CPU
     // (shuffle+sort 3.7 s → 3.2 s at local[8]). On a real cluster those
     // bytes cross the network. BlockAssembler unpacks after the exchange;
     // table bytes are unchanged (packing is per-row and lossless).
@@ -384,14 +380,8 @@ object GraftTable {
     */
   private[table] def computeBounds(
       keyed: DataFrame, rows: Long, targetRows: Int, sampleRows: Long): Array[Long] = {
-    val numBlocks = math.max(1L, (rows + targetRows - 1) / targetRows.toLong)
-    if (numBlocks <= 1) return Array.empty
-    val budget = math.max(sampleRows, numBlocks * 8L)
-    val stride = math.max(1L, rows / budget)
-    val s = keyed
-      .where(col("_graft_key").isNotNull &&
-        pmod(xxhash64(col("_graft_key")), lit(stride)) === 0)
-      .select(col("_graft_key").as("k"))
+    val sample = boundsSample(keyed, rows, targetRows, sampleRows).getOrElse(return Array.empty)
+    val BoundsSample(s, numBlocks, expectedSample) = sample
 
     // small-sample fast path: the boundary keys land on the driver either
     // way (the bounds array IS driver state), so when the sample itself is
@@ -408,7 +398,6 @@ object GraftTable {
     // unboundedly-skewed sample (the count is one cheap column-pruned
     // job; the fast path still replaces the 3-4 jobs of the distributed
     // rank machinery with 2)
-    val expectedSample = rows / stride
     if (expectedSample <= SmallBoundsSampleMax &&
         s.count() <= SmallBoundsSampleMax) {
       val ks = s.collect().map(_.getLong(0)).sorted
@@ -427,17 +416,46 @@ object GraftTable {
       return out.result().distinct.sorted
     }
 
-    val parallelism = keyed.sparkSession.sparkContext.defaultParallelism
+    rankedCuts(sample)(_.collect().map(_.getLong(0)).distinct.sorted)
+      .getOrElse(Array.empty)
+  }
+
+  /** The key sample both bounds builders cut: keys whose
+    * `pmod(xxhash64(key), stride) = 0`, the stride sized so that about
+    * max(sampleRows, 8·numBlocks) of `rows` pass (`expected`). None for a
+    * table of one block.
+    */
+  private final case class BoundsSample(keys: DataFrame, numBlocks: Long, expected: Long)
+
+  private def boundsSample(
+      keyed: DataFrame, rows: Long, targetRows: Int, sampleRows: Long): Option[BoundsSample] = {
+    val numBlocks = math.max(1L, (rows + targetRows - 1) / targetRows.toLong)
+    if (numBlocks <= 1) return None
+    val budget = math.max(sampleRows, numBlocks * 8L)
+    val stride = math.max(1L, rows / budget)
+    val keys = keyed
+      .where(col("_graft_key").isNotNull &&
+        pmod(xxhash64(col("_graft_key")), lit(stride)) === 0)
+      .select(col("_graft_key").as("k"))
+    Some(BoundsSample(keys, numBlocks, rows / stride))
+  }
+
+  /** Ranks the sample over the cluster ([[Ranks.withRank]]) and hands `use`
+    * the cut keys `k`: the interior rows where floor(rn·numBlocks/cnt)
+    * crosses a bucket edge. None when fewer distinct keys than blocks were
+    * sampled (a degenerate key space: one block).
+    */
+  private def rankedCuts[T](sample: BoundsSample)(use: DataFrame => T): Option[T] = {
+    val BoundsSample(s, numBlocks, _) = sample
+    val parallelism = s.sparkSession.sparkContext.defaultParallelism
     val (ranked, cnt, release) = Ranks.withRank(s, col("k"), "rn", parallelism * 2)
     try {
-      if (cnt < numBlocks) // degenerate: few distinct sampled keys — one block
-        return Array.empty
-      ranked
-        // boundary rows: where floor(rn·numBlocks/cnt) crosses a bucket edge
+      if (cnt < numBlocks) None
+      else Some(use(ranked
         .where((col("rn") * numBlocks).divide(cnt).cast("long") =!=
           ((col("rn") - 1) * numBlocks).divide(cnt).cast("long"))
-        .where(col("rn") =!= 1 && col("rn") =!= cnt) // interior cuts only
-        .select("k").collect().map(_.getLong(0)).distinct.sorted
+        .where(col("rn") =!= 1 && col("rn") =!= cnt)
+        .select("k")))
     } finally release()
   }
 
@@ -587,23 +605,9 @@ object GraftTable {
       keyed: DataFrame, rows: Long, targetRows: Int, sampleRows: Long,
       binPath: String): Option[ChunkedBoundsRef] = {
     val spark = keyed.sparkSession
-    val numBlocks = math.max(1L, (rows + targetRows - 1) / targetRows.toLong)
-    if (numBlocks <= 1) return None
-    val budget = math.max(sampleRows, numBlocks * 8L)
-    val stride = math.max(1L, rows / budget)
-    val s = keyed
-      .where(col("_graft_key").isNotNull &&
-        pmod(xxhash64(col("_graft_key")), lit(stride)) === 0)
-      .select(col("_graft_key").as("k"))
-    val parallelism = spark.sparkContext.defaultParallelism
-    val (ranked, cnt, release) = Ranks.withRank(s, col("k"), "rn", parallelism * 2)
-    try {
-      if (cnt < numBlocks) return None
-      val boundary = ranked
-        .where((col("rn") * numBlocks).divide(cnt).cast("long") =!=
-          ((col("rn") - 1) * numBlocks).divide(cnt).cast("long"))
-        .where(col("rn") =!= 1 && col("rn") =!= cnt)
-        .select("k").distinct().orderBy("k")
+    val sample = boundsSample(keyed, rows, targetRows, sampleRows).getOrElse(return None)
+    rankedCuts(sample) { cuts =>
+      val boundary = cuts.distinct().orderBy("k")
       val chunkSize = graft.expr.BoundsChunks.ChunkSize
       val md = java.security.MessageDigest.getInstance("SHA-256")
       val digestBuf = java.nio.ByteBuffer.allocate(8)
@@ -626,10 +630,12 @@ object GraftTable {
         if (n % chunkSize != 0) coarse += last
         dout.flush()
       } finally out.close()
-      if (n == 0) { delete(spark, binPath); return None }
-      val sig = md.digest().map("%02x".format(_)).mkString
-      Some(ChunkedBoundsRef(binPath, n, coarse.result(), () => sig))
-    } finally release()
+      if (n == 0) { delete(spark, binPath); None }
+      else {
+        val sig = md.digest().map("%02x".format(_)).mkString
+        Some(ChunkedBoundsRef(binPath, n, coarse.result(), () => sig))
+      }
+    }.flatten
   }
 
   /** Resolve a snapshot's bounds to a probe handle: `bounds.bin` present →
@@ -706,8 +712,7 @@ object GraftTable {
     * scan needs no manifest join.
     */
   def readBlocks(spark: SparkSession, tableDir: String): DataFrame =
-    readBlocks(spark, tableDir, currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir")))
+    readBlocks(spark, tableDir, current(spark, tableDir))
 
   def readBlocks(spark: SparkSession, tableDir: String, snap: Snapshot): DataFrame = {
     if (snap.dataDirs.isEmpty) {
@@ -750,11 +755,8 @@ object GraftTable {
   /** Decode the current snapshot back to the input-shaped token table.
     * Bit-identical per row to the encoded source (BASELINE.json:6).
     */
-  def decode(spark: SparkSession, tableDir: String): Dataset[TokenRow] = {
-    import spark.implicits._
-    decodeSnap(spark, currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir")), tableDir)
-  }
+  def decode(spark: SparkSession, tableDir: String): Dataset[TokenRow] =
+    decodeSnap(spark, current(spark, tableDir), tableDir)
 
   private def decodeSnap(
       spark: SparkSession, snap: Snapshot, tableDir: String): Dataset[TokenRow] =
@@ -894,8 +896,7 @@ object GraftTable {
       tableDir: String,
       opts: Options = Options(),
       fillFactor: Double = 0.5): EncodeResult = {
-    val p = currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+    val p = current(spark, tableDir)
     def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
 
@@ -914,12 +915,10 @@ object GraftTable {
     val keepData = p.dataDirs.filterNot(d => frag(verOf(d)))
     val keepMan = p.manifestDirs.filterNot(d => frag(verOf(d)))
 
-    // decode ONLY the fragmented versions' blocks
-    val hit = man
-      .where(col("ver").cast("int").isin(frag.toSeq.map(Int.box): _*))
-      .select(col("ver").cast("int").as("ver"),
-        col("block_id").cast("int").as("block_id"))
-    val rows = decodeBlocks(spark, tableDir, hit).toDF()
+    // decode ONLY the fragmented versions: data dir vN holds exactly the
+    // blocks with ver = N
+    val rows = decodeRows(readBlocks(spark, tableDir,
+      p.copy(dataDirs = p.dataDirs.filter(d => frag(verOf(d)))))).toDF()
 
     val ver = p.version + 1
     val keyed = keyedOf(rows)
@@ -1064,12 +1063,13 @@ object GraftTable {
     // still contain in-range numeric ids (hash-key fallback interleaves
     // them), so NULL bounds are NON-prunable (coalesce → keep) and the
     // exact row filter below decides.
-    val hit = readManifest(spark, tableDir)
+    val snap = current(spark, tableDir)
+    val hit = readManifest(spark, tableDir, snap)
       .where(coalesce(expr("try_cast(doc_id_max as bigint)") >= minId, lit(true)) &&
         coalesce(expr("try_cast(doc_id_min as bigint)") <= maxId, lit(true)))
       .select(col("ver").cast("int").as("ver"),
         col("block_id").cast("int").as("block_id"))
-    decodeBlocks(spark, tableDir, hit)
+    decodeBlocks(spark, tableDir, snap, hit)
       .where(expr("try_cast(doc_id as bigint)").between(minId, maxId))
   }
 
@@ -1085,10 +1085,11 @@ object GraftTable {
   def decodeWhere(
       spark: SparkSession, tableDir: String, sources: Seq[String]): Dataset[TokenRow] = {
     require(sources.nonEmpty, "decodeWhere needs at least one source value")
-    val hit = readManifest(spark, tableDir).where(holdsSources(sources))
+    val snap = current(spark, tableDir)
+    val hit = readManifest(spark, tableDir, snap).where(holdsSources(sources))
       .select(col("ver").cast("int").as("ver"),
         col("block_id").cast("int").as("block_id"))
-    decodeBlocks(spark, tableDir, hit)
+    decodeBlocks(spark, tableDir, snap, hit)
       .where(col("source").isin(sources.map(s => s: Any): _*))
   }
 
@@ -1103,17 +1104,20 @@ object GraftTable {
       spark: SparkSession, tableDir: String, sources: Seq[String]): Long =
     readManifest(spark, tableDir).where(holdsSources(sources)).count()
 
+  /** The token rows of `snap`'s blocks listed in `liveBlocks` (ver, block_id),
+    * a selection from the same snapshot's manifest.
+    */
   private def decodeBlocks(
-      spark: SparkSession, tableDir: String, liveBlocks: DataFrame): Dataset[TokenRow] =
-    decodeRows(readBlocks(spark, tableDir)
+      spark: SparkSession, tableDir: String, snap: Snapshot,
+      liveBlocks: DataFrame): Dataset[TokenRow] =
+    decodeRows(readBlocks(spark, tableDir, snap)
       .join(broadcast(liveBlocks), Seq("ver", "block_id"), "left_semi"))
 
   def readManifest(spark: SparkSession, tableDir: String, snap: Snapshot): DataFrame =
     spark.read.json(snap.manifestDirs.map(d => s"$tableDir/$d"): _*)
 
   def readManifest(spark: SparkSession, tableDir: String): DataFrame =
-    readManifest(spark, tableDir, currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir")))
+    readManifest(spark, tableDir, current(spark, tableDir))
 
   // ------------------------------------------------------------ metadata
 
@@ -1123,6 +1127,11 @@ object GraftTable {
         .getOrElse(throw new IllegalStateException(
           s"dangling current pointer v$v at $tableDir")))
     }
+
+  /** The current snapshot; fails when the table has none. */
+  private[table] def current(spark: SparkSession, tableDir: String): Snapshot =
+    currentSnapshot(spark, tableDir).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
 
   /** Full lineage chain, newest first (resume audit trail). */
   def lineage(spark: SparkSession, tableDir: String): Seq[Snapshot] = {

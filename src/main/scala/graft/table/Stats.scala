@@ -58,8 +58,6 @@ final case class ColumnStats(
 
 object Stats {
 
-  val SampleSeed = 42L
-
   /** The sampled pass as one single-row frame `(td, adj, pairs)`: approximate
     * distinct tokens, adjacent equal-token pairs, and adjacent pairs, over
     * the rows whose `pmod(xxhash64(doc_id), stride) = 0` (all rows at

@@ -66,13 +66,6 @@ object Tokenize {
       .toArray
   }
 
-  /** (token_id, word, cnt) as a DataFrame (q_vocab / catalog surface). */
-  def vocabDF(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    vocabEntries(docs).toIndexedSeq.toDF()
-  }
-
   /** Sorted distinct words across the corpus (compat surface for callers
     * that build their own id mapping).
     */

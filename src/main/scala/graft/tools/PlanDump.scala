@@ -71,8 +71,8 @@ object PlanDump {
         "with the size filter; id-only pair dedup; full shingle arrays re-join for the " +
         "exact verify. Lossless, never all-pairs. The rarest-first `ordered` frame is " +
         "PERSISTED - its posts-join-freq + collect_list subtree appears once, and all three " +
-        "consumers read InMemoryTableScan (steady-state 1.35 s at sf0.1 per " +
-        "JaccardProbe; the bench's first-call number is codegen/JIT-dominated). " +
+        "consumers read InMemoryTableScan (steady-state 1.35 s at sf0.1; perfbench `dedup` " +
+        "times it as `ops.jaccard_s`; the bench's first-call number is codegen/JIT-dominated). " +
         "Prefix posting lists above maxPrefixBucket are skipped (degenerate floods).",
       graft.ops.Dedup.jaccardPairs(
         spark.read.parquet(s"$sfDir/documents.parquet"), threshold = 0.9))

@@ -230,6 +230,23 @@ class DataSourceSpec extends AnyFunSuite {
     assert(spark.read.format("graft").load(dir).count() == 500)
   }
 
+  test("a bad targetRowsPerBlock fails naming the option and its value, writing nothing") {
+    val rows = spark.range(0, 300).select(col("id"), (col("id") % 7).as("v"))
+    val tokens = Tokenize.tokenTable(spark, SfDir).toDF()
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    for ((batch, key) <- Seq((rows, Some("id")), (tokens, None)); v <- Seq("abc", "0", "-5")) {
+      val dir = Files.createTempDirectory("graft-dsv2-badrows").toString
+      val w = key.fold(batch.write.format("graft"))(batch.write.format("graft").option("key", _))
+      val e = intercept[Exception](w.option("targetRowsPerBlock", v).mode("append").save(dir))
+      val msg = messages(e)
+      assert(msg.contains("targetRowsPerBlock") && msg.contains(v), msg)
+      assert(!Files.exists(java.nio.file.Paths.get(dir, "metadata")), s"$v wrote metadata")
+    }
+    val e = intercept[IllegalArgumentException](GraftTable.Options(targetRowsPerBlock = 0))
+    assert(e.getMessage.contains("targetRowsPerBlock"), e.getMessage)
+  }
+
   test("SQL-only round trip: CTAS + INSERT INTO + SELECT through the connector") {
     val dir = Files.createTempDirectory("graft-dsv2-sql").toString
     spark.sql("DROP TABLE IF EXISTS graft_sqlw")
