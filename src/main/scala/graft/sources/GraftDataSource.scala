@@ -494,7 +494,7 @@ class GraftScan(
     if (docIds.isEmpty && sources.isEmpty) None
     else {
       val spark = SparkSession.active
-      var man = GraftTable.readManifest(spark, tableDir, snap)
+      var man = GraftTable.manifestRows(spark, tableDir, snap.manifestDirs)
       docIds.flatMap(v => scala.util.Try(v.toLong).toOption) match {
         case nums if nums.nonEmpty && nums.length == docIds.length =>
           val lo = col("doc_id_min").cast("long")

@@ -1,18 +1,23 @@
 package graft.table
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.time.{Instant, ZoneOffset}
+import java.time.format.DateTimeFormatter
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 import graft.table.GraftTable.Snapshot
 
 /** The one snapshot commit of both table lanes (Iceberg's single commit
   * operation over manifest → snapshot → pointer, SURVEY.md §1.2). A commit
   * of version N:
-  *   1. writes the fresh version's manifest frame to `manifests/vN`;
-  *   2. aggregates totals over the kept manifests plus that frame — O(1)
-  *      driver state, and the new version is never re-read from JSON;
+  *   1. writes the fresh version's manifest frame to `manifests/vN` in one
+  *      job ([[writeManifest]]), whose [[Sums]] are observed on that write;
+  *   2. takes the kept manifests' totals from the parent snapshot by
+  *      arithmetic — parent + fresh for an append or a resumed encode,
+  *      parent − dropped + fresh for a rewrite (the dropped versions' sums
+  *      come from the manifest aggregate the rewrite already runs), as
+  *      Iceberg updates its snapshot summary — so no kept manifest is read;
   *   3. builds the snapshot from the totals — the caller owns the
   *      snapshot-id preimage, fingerprint and lineage fields, which are the
   *      on-disk format of its lane;
@@ -24,19 +29,64 @@ import graft.table.GraftTable.Snapshot
   */
 private[table] object Commit {
 
-  /** Totals over the live manifests of a new version. Generic manifests
-    * carry no `token_count`, so their `tokens` is 0.
+  /** Aggregates over manifest rows: the block count, Σ `row_count`,
+    * Σ `token_count` (0 for generic manifests), Σ `bytes_total`,
+    * Σ `plain_bytes` and `bit_xor(block_sig)`. The sums add and subtract,
+    * and the xor is its own inverse, so the totals of kept manifests follow
+    * from the parent's without reading them.
     */
-  final case class Totals(
-      manifestDirs: Seq[String],
-      blocks: Long,
-      rows: Long,
-      tokens: Long,
-      bytes: Long,
-      plain: Long,
+  final case class Sums(blocks: Long, rows: Long, tokens: Long, bytes: Long, plain: Long,
       sig: Long) {
+    def +(o: Sums): Sums = Sums(blocks + o.blocks, rows + o.rows, tokens + o.tokens,
+      bytes + o.bytes, plain + o.plain, sig ^ o.sig)
+    def -(o: Sums): Sums = Sums(blocks - o.blocks, rows - o.rows, tokens - o.tokens,
+      bytes - o.bytes, plain - o.plain, sig ^ o.sig)
+  }
 
-    def contentSig: String = f"$sig%016x"
+  object Sums {
+    val Zero: Sums = Sums(0L, 0L, 0L, 0L, 0L, 0L)
+
+    /** The totals `s` recorded over its manifests. */
+    def of(s: Snapshot): Sums = Sums(s.blocksEncoded, s.rowCount, s.tokenCount,
+      s.bytesTotal, s.plainBytes, java.lang.Long.parseUnsignedLong(s.contentSig, 16))
+
+    /** The six aggregates over manifest rows, in [[Sums]] order and each
+      * coalesced (an empty group reads 0). A frame without `token_count`
+      * (a generic manifest) sums 0 tokens.
+      */
+    def aggs(df: DataFrame): Seq[Column] = {
+      def total(c: String): Column =
+        if (df.columns.contains(c)) sum(col(c).cast("long")) else lit(0L)
+      Seq(count(lit(1)), total("row_count"), total("token_count"), total("bytes_total"),
+        total("plain_bytes"), bit_xor(col("block_sig"))).map(coalesce(_, lit(0L)))
+    }
+
+    /** The [[aggs]] of `df`: one job. */
+    def over(df: DataFrame): Sums = {
+      val a = aggs(df)
+      at(df.agg(a.head, a.tail: _*).head(), 0)
+    }
+
+    /** The [[aggs]] values of `r` from column `from` on. */
+    def at(r: Row, from: Int): Sums = Sums(r.getLong(from), r.getLong(from + 1),
+      r.getLong(from + 2), r.getLong(from + 3), r.getLong(from + 4), r.getLong(from + 5))
+  }
+
+  /** The manifests of a new version and their [[Sums]]. */
+  final case class Totals(manifestDirs: Seq[String], sums: Sums) {
+    def blocks: Long = sums.blocks
+    def rows: Long = sums.rows
+    def tokens: Long = sums.tokens
+    def bytes: Long = sums.bytes
+    def contentSig: String = f"${sums.sig}%016x"
+
+    /** These totals plus version `ver`'s fresh manifest, written with `fresh`. */
+    def add(ver: Int, fresh: Sums): Totals =
+      Totals(manifestDirs :+ manifestDir(ver), sums + fresh)
+
+    /** These totals without the manifests of `vers`, whose sums are `dropped`. */
+    def drop(vers: Set[Int], dropped: Sums): Totals =
+      Totals(manifestDirs.filterNot(d => vers(GraftTable.versionOfDir(d))), sums - dropped)
 
     /** The snapshot of these totals; `stats` are sorted here. */
     def snapshot(
@@ -51,59 +101,55 @@ private[table] object Commit {
         dataDirs: Seq[String],
         stats: Seq[(String, String)]): Snapshot =
       Snapshot(version, snapshotId, parentId, inputFingerprint, keyStrategy,
-        boundsDir, numBlocks, blocks, complete, rows, tokens, bytes, plain,
-        contentSig, dataDirs, manifestDirs, stats.sorted,
-        java.time.Instant.now().toString)
+        boundsDir, numBlocks, blocks, complete, rows, tokens, bytes, sums.plain,
+        contentSig, dataDirs, manifestDirs, stats.sorted, committedAt(Instant.now()))
   }
 
-  /** Commit version `ver` over `keptManifests` plus the `fresh` manifest
-    * frame (persisted by [[withManifest]]), which is written to
-    * `manifests/v<ver>` first. With no manifest at all the totals are
-    * zero and no job runs. `phases`, when set, is the `GRAFT_TIMING`
-    * label prefix of the manifest-write and totals phases.
+  object Totals {
+    val Empty: Totals = Totals(Nil, Sums.Zero)
+
+    /** The totals `s` committed: its manifests and their sums. */
+    def of(s: Snapshot): Totals = Totals(s.manifestDirs, Sums.of(s))
+  }
+
+  /** `committed_at`: UTC with a 9-digit fraction, so every snapshot JSON of
+    * a table has the same width (`Instant.toString` drops trailing zero
+    * digit groups).
     */
-  def apply(
-      spark: SparkSession,
-      tableDir: String,
-      ver: Int,
-      keptManifests: Seq[String],
-      fresh: Option[DataFrame],
-      phases: Option[String] = None)(build: Totals => Snapshot): Snapshot = {
-    def phase[T](label: String)(f: => T): T = phases.fold(f)(p => timed(p + label)(f))
-    val freshDir = s"manifests/v$ver"
-    fresh.foreach(m =>
-      phase("manifest-write")(m.write.mode("overwrite").json(s"$tableDir/$freshDir")))
-    val dirs = keptManifests ++ fresh.map(_ => freshDir)
-    val all = fresh match {
-      case Some(m) => Some(manifestTotalsWithFresh(spark, tableDir, keptManifests, m))
-      case None if keptManifests.nonEmpty =>
-        Some(readManifestTotals(spark, tableDir, keptManifests))
-      case None => None
-    }
-    // every aggregate is coalesced: kept manifests may hold no row
-    val tot = all.fold(Totals(dirs, 0L, 0L, 0L, 0L, 0L, 0L)) { df =>
-      val t = phase("totals")(df.agg(count(lit(1)),
-        Seq(sum("row_count"), sum("token_count"), sum("bytes_total"), sum("plain_bytes"),
-          expr("bit_xor(block_sig)")).map(coalesce(_, lit(0L))): _*).head())
-      Totals(dirs, t.getLong(0), t.getLong(1), t.getLong(2), t.getLong(3),
-        t.getLong(4), t.getLong(5))
-    }
+  private val CommittedAt =
+    DateTimeFormatter.ofPattern("uuuu-MM-dd'T'HH:mm:ss.SSSSSSSSS'Z'").withZone(ZoneOffset.UTC)
+
+  private[table] def committedAt(t: Instant): String = CommittedAt.format(t)
+
+  /** The relative manifest dir of version `ver`. */
+  private def manifestDir(ver: Int): String = s"manifests/v$ver"
+
+  /** Write `manifest` (a fresh version's manifest frame) to
+    * `manifests/v<ver>` and return its [[Sums]], observed on the write: one
+    * job over the written blocks, which are never read again for the
+    * count or the totals. A manifest of no block leaves no dir behind.
+    */
+  def writeManifest(spark: SparkSession, tableDir: String, ver: Int, manifest: DataFrame): Sums = {
+    val obs = Observation()
+    val aggs = Sums.aggs(manifest).zipWithIndex.map { case (c, i) => c.as(s"s$i") }
+    val path = s"$tableDir/${manifestDir(ver)}"
+    manifest.observe(obs, aggs.head, aggs.tail: _*).write.mode("overwrite").json(path)
+    val m = obs.get
+    val sums = Sums.at(Row.fromSeq(aggs.indices.map(i => m(s"s$i"))), 0)
+    if (sums.blocks == 0) GraftTable.delete(spark, path)
+    sums
+  }
+
+  /** Commit version `ver` with totals `tot`: build the snapshot, write
+    * `metadata/v<ver>.json` and move the pointer. No job runs.
+    */
+  def apply(spark: SparkSession, tableDir: String, ver: Int, tot: Totals)(
+      build: Totals => Snapshot): Snapshot = {
     val snap = build(tot)
     GraftTable.writeString(
       spark, s"$tableDir/metadata/v$ver.json", GraftTable.renderSnapshot(snap))
     GraftTable.commitPointer(spark, tableDir, ver)
     snap
-  }
-
-  /** Persist a fresh version's manifest frame for `body`: its count, JSON
-    * write and totals then share one pass over the written blocks (the
-    * manifest aggregate reads every payload byte for `block_sig`). It is
-    * unpersisted in `finally`, so a failed write does not leak the cache.
-    */
-  def withManifest[T](manifest: DataFrame)(body: DataFrame => T): T = {
-    manifest.persist(StorageLevel.MEMORY_AND_DISK)
-    try body(manifest)
-    finally { manifest.unpersist(false); () }
   }
 
   /** `stream_*` snapshot metadata (the streaming sink's exactly-once
@@ -128,40 +174,5 @@ private[table] object Commit {
       println(f"GRAFT_TIMING $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
       r
     }
-  }
-
-  /** Totals-projection schema for manifest JSON reads: the totals
-    * aggregate touches only these five LONG fields, so reading with an
-    * explicit schema skips spark.read.json's schema-inference pass (a full
-    * extra read of every manifest file). Token-lane manifests carry all
-    * five; generic-lane manifests have no token_count (reads null).
-    */
-  private val manifestTotalsSchema = StructType(Seq(
-    StructField("row_count", LongType),
-    StructField("token_count", LongType),
-    StructField("bytes_total", LongType),
-    StructField("plain_bytes", LongType),
-    StructField("block_sig", LongType)))
-
-  private def readManifestTotals(
-      spark: SparkSession, tableDir: String, manifestDirs: Seq[String]): DataFrame =
-    spark.read.schema(manifestTotalsSchema)
-      .json(manifestDirs.map(d => s"$tableDir/$d"): _*)
-
-  /** Totals frame over `oldDirs` plus the in-memory `fresh` frame that
-    * produced the new version's manifest file — the totals job never
-    * re-reads data the same commit just wrote. Columns are pinned to
-    * [[manifestTotalsSchema]]; a generic frame has no token_count and
-    * contributes null there, exactly as the JSON read would.
-    */
-  private def manifestTotalsWithFresh(
-      spark: SparkSession, tableDir: String,
-      oldDirs: Seq[String], fresh: DataFrame): DataFrame = {
-    val freshCols = fresh.columns.toSet
-    val freshTot = fresh.select(manifestTotalsSchema.fields.toIndexedSeq.map(f =>
-      (if (freshCols(f.name)) col(f.name).cast(f.dataType)
-       else lit(null).cast(f.dataType)).as(f.name)): _*)
-    if (oldDirs.isEmpty) freshTot
-    else readManifestTotals(spark, tableDir, oldDirs).unionByName(freshTot)
   }
 }

@@ -382,7 +382,7 @@ object GenericTable {
     val statsFields = statsOf(rows, schema, None, key, leaves, carriedMeta(cur) ++ extraMeta)
 
     if (rows == 0L) {
-      val snap = Commit(spark, tableDir, ver, Nil, None) { tot =>
+      val snap = Commit(spark, tableDir, ver, Commit.Totals.Empty) { tot =>
         tot.snapshot(ver, Hashing.sha256Hex(s"v$ver;generic;fp=$fingerprint;empty"),
           cur.map(_.snapshotId), fingerprint, s"generic:$key", None, numBlocks = 0,
           complete = true, Nil, statsFields)
@@ -414,7 +414,7 @@ object GenericTable {
 
     val notDone = parent match {
       case Some(p) if p.manifestDirs.nonEmpty =>
-        val done = GraftTable.readManifest(spark, tableDir, p)
+        val done = GraftTable.manifestRows(spark, tableDir, p.manifestDirs)
           .select(col("block_id").cast("int").as("block_id")).distinct()
         withBlocks.join(done, Seq("block_id"), "left_anti")
       case _ => withBlocks
@@ -428,27 +428,28 @@ object GenericTable {
 
     val dataDir = timed("g-encode+write")(
       writeBlocksVersion(todo, tableDir, ver, leaves, numBlocks, rows))
-    Commit.withManifest(manifestOf(spark, s"$tableDir/$dataDir", leaves.length)) { manifest =>
-      val newBlocks = timed("g-manifest-count")(manifest.count())
-      // a blockFilter selecting no block leaves an empty version dir: drop
-      // it; with no parent the commit records the bounds and no block
-      if (newBlocks == 0) GraftTable.delete(spark, s"$tableDir/$dataDir")
-      if (newBlocks == 0 && parent.nonEmpty) EncodeResult.of(parent.get, 0L)
-      else {
-        val fresh = if (newBlocks == 0) None else Some(dataDir)
-        val snap = Commit(spark, tableDir, ver, parent.map(_.manifestDirs).getOrElse(Nil),
-          fresh.map(_ => manifest), phases = Some("g-")) { tot =>
-          val snapshotId = Hashing.sha256Hex(
-            s"v$ver;generic;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
-              s"fp=$fingerprint;bounds=${GraftTable.boundsSig(bounds)};" +
-              s"blocks=${tot.blocks}/$numBlocks;rows=${tot.rows};" +
-              s"bytes=${tot.bytes};sig=${tot.contentSig}")
-          tot.snapshot(ver, snapshotId, cur.map(_.snapshotId), fingerprint,
-            s"generic:$key", boundsDir, numBlocks, complete = tot.blocks == numBlocks,
-            parent.map(_.dataDirs).getOrElse(Nil) ++ fresh, statsFields)
-        }
-        EncodeResult.of(snap, newBlocks)
+    val fresh = timed("g-manifest-write")(Commit.writeManifest(spark, tableDir, ver,
+      manifestOf(spark, s"$tableDir/$dataDir", leaves.length)))
+    val newBlocks = fresh.blocks
+    // a blockFilter selecting no block leaves an empty version dir: drop
+    // it; with no parent the commit records the bounds and no block
+    if (newBlocks == 0) GraftTable.delete(spark, s"$tableDir/$dataDir")
+    if (newBlocks == 0 && parent.nonEmpty) EncodeResult.of(parent.get, 0L)
+    else {
+      val freshDir = if (newBlocks == 0) None else Some(dataDir)
+      val kept = parent.fold(Commit.Totals.Empty)(Commit.Totals.of)
+      val snap = Commit(spark, tableDir, ver,
+          if (newBlocks == 0) kept else kept.add(ver, fresh)) { tot =>
+        val snapshotId = Hashing.sha256Hex(
+          s"v$ver;generic;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
+            s"fp=$fingerprint;bounds=${GraftTable.boundsSig(bounds)};" +
+            s"blocks=${tot.blocks}/$numBlocks;rows=${tot.rows};" +
+            s"bytes=${tot.bytes};sig=${tot.contentSig}")
+        tot.snapshot(ver, snapshotId, cur.map(_.snapshotId), fingerprint,
+          s"generic:$key", boundsDir, numBlocks, complete = tot.blocks == numBlocks,
+          parent.map(_.dataDirs).getOrElse(Nil) ++ freshDir, statsFields)
       }
+      EncodeResult.of(snap, newBlocks)
     }
     } finally if (keyedCached) { keyed.unpersist(false); () }
   }
@@ -486,19 +487,17 @@ object GenericTable {
     val ver = parent.version + 1
     val (bounds, dataDir) = writeBatchBlocks(keyed, tableDir, ver, leaves, rows, opts)
     val numBlocks = parent.numBlocks + bounds.length + 1
-    // cross-version totals: manifests of evolved versions differ in their
-    // codec_i columns, but the accounting columns are common to all
-    val snap = Commit.withManifest(manifestOf(spark, s"$tableDir/$dataDir", leaves.length)) { m =>
-      Commit(spark, tableDir, ver, parent.manifestDirs, Some(m)) { tot =>
-        val snapshotId = Hashing.sha256Hex(
-          s"v$ver;generic-append;parent=${parent.snapshotId};fp=$fingerprint;" +
-            s"bounds=${GraftTable.boundsSig(bounds)};blocks=${tot.blocks}/$numBlocks;" +
-            s"rows=${tot.rows};bytes=${tot.bytes};sig=${tot.contentSig}")
-        tot.snapshot(ver, snapshotId, Some(parent.snapshotId), fingerprint,
-          s"generic:$key", None, numBlocks, complete = parent.complete,
-          parent.dataDirs :+ dataDir,
-          statsOf(tot.rows, merged, Some(schema), key, leaves, carriedMeta(cur) ++ extraMeta))
-      }
+    val fresh = Commit.writeManifest(spark, tableDir, ver,
+      manifestOf(spark, s"$tableDir/$dataDir", leaves.length))
+    val snap = Commit(spark, tableDir, ver, Commit.Totals.of(parent).add(ver, fresh)) { tot =>
+      val snapshotId = Hashing.sha256Hex(
+        s"v$ver;generic-append;parent=${parent.snapshotId};fp=$fingerprint;" +
+          s"bounds=${GraftTable.boundsSig(bounds)};blocks=${tot.blocks}/$numBlocks;" +
+          s"rows=${tot.rows};bytes=${tot.bytes};sig=${tot.contentSig}")
+      tot.snapshot(ver, snapshotId, Some(parent.snapshotId), fingerprint,
+        s"generic:$key", None, numBlocks, complete = parent.complete,
+        parent.dataDirs :+ dataDir,
+        statsOf(tot.rows, merged, Some(schema), key, leaves, carriedMeta(cur) ++ extraMeta))
     }
     EncodeResult.of(snap, bounds.length + 1L)
   }
@@ -522,33 +521,36 @@ object GenericTable {
     def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
 
-    val man = GraftTable.readManifest(spark, tableDir, p)
+    // per version: average fill and the Sums a rewrite drops
+    val man = GraftTable.manifestRows(spark, tableDir, p.manifestDirs)
     val perVer = man.groupBy(col("ver").cast("int").as("ver"))
-      .agg(avg(col("row_count")).as("avg_rows"), count(lit(1)).as("blocks"))
+      .agg(avg(col("row_count")).as("avg_rows"), Commit.Sums.aggs(man): _*)
       .collect()
     val frag = perVer
       .filter(_.getDouble(1) < fillFactor * opts.targetRowsPerBlock)
       .map(_.getInt(0)).toSet
-    val fragBlocks = perVer.filter(r => frag(r.getInt(0))).map(_.getLong(2)).sum
-    if (frag.isEmpty || (frag.size == 1 && fragBlocks <= 1)) return noop
+    val dropped = perVer.filter(r => frag(r.getInt(0)))
+      .map(Commit.Sums.at(_, 2)).foldLeft(Commit.Sums.Zero)(_ + _)
+    if (frag.isEmpty || (frag.size == 1 && dropped.blocks <= 1)) return noop
 
     val keepData = p.dataDirs.filterNot(d => frag(versionOf(d)))
-    val keepMan = p.manifestDirs.filterNot(d => frag(versionOf(d)))
     val fragData = p.dataDirs.filter(d => frag(versionOf(d)))
 
     // decode ONLY the fragmented versions, projected onto the merged schema
     val merged = liveSchemaOf(spark, tableDir, p)
     val rows = scanOf(spark, tableDir, p.copy(dataDirs = fragData))
-    rewriteCommit(spark, tableDir, p, merged, keepData, keepMan, rows,
+    rewriteCommit(spark, tableDir, p, merged, keepData,
+      Commit.Totals.of(p).drop(frag, dropped), rows,
       opName = "compact",
       opDetail = s"compacted=${frag.toSeq.sorted.mkString(",")}", opts)
   }
 
   /** Copy-on-write rewrite commit shared by [[compact]] and the delete
     * APIs: re-encodes `rows` (projected onto `merged`) as version
-    * `p.version + 1`, keeps `keepData`/`keepMan` by reference, and commits
-    * the combined snapshot. An EMPTY `rows` commits a snapshot of only the
-    * kept versions (a delete can empty every rewritten version).
+    * `p.version + 1`, keeps `keepData` and the manifests of `kept` by
+    * reference, and commits the combined snapshot. An EMPTY `rows` commits
+    * a snapshot of only the kept versions (a delete can empty every
+    * rewritten version).
     */
   private def rewriteCommit(
       spark: SparkSession,
@@ -556,7 +558,7 @@ object GenericTable {
       p: Snapshot,
       merged: StructType,
       keepData: Seq[String],
-      keepMan: Seq[String],
+      kept: Commit.Totals,
       rows: DataFrame,
       opName: String,
       opDetail: String,
@@ -568,8 +570,8 @@ object GenericTable {
       val nRows = keyed.count()
       val ver = p.version + 1
       val combinedFp = Hashing.sha256Hex(s"${p.inputFingerprint};$opName=v$ver")
-      def commit(dataDirs: Seq[String], fresh: Option[DataFrame]): Snapshot =
-        Commit(spark, tableDir, ver, keepMan, fresh) { tot =>
+      def commit(dataDirs: Seq[String], totals: Commit.Totals): Snapshot =
+        Commit(spark, tableDir, ver, totals) { tot =>
           val snapshotId = Hashing.sha256Hex(
             s"v$ver;generic-$opName;parent=${p.snapshotId};fp=$combinedFp;" +
               s"$opDetail;rows=${tot.rows};" +
@@ -578,14 +580,12 @@ object GenericTable {
             s"generic:$key", None, tot.blocks.toInt, complete = p.complete,
             dataDirs, statsOf(tot.rows, merged, Some(merged), key, leaves, carriedMeta(Some(p))))
         }
-      if (nRows == 0) EncodeResult.of(commit(keepData, None), 0L)
+      if (nRows == 0) EncodeResult.of(commit(keepData, kept), 0L)
       else {
         val (bounds, dataDir) = writeBatchBlocks(keyed, tableDir, ver, leaves, nRows, opts)
-        val snap = Commit.withManifest(
-          manifestOf(spark, s"$tableDir/$dataDir", leaves.length)) { m =>
-          commit(keepData :+ dataDir, Some(m))
-        }
-        EncodeResult.of(snap, bounds.length + 1L)
+        val fresh = Commit.writeManifest(spark, tableDir, ver,
+          manifestOf(spark, s"$tableDir/$dataDir", leaves.length))
+        EncodeResult.of(commit(keepData :+ dataDir, kept.add(ver, fresh)), bounds.length + 1L)
       }
     } finally keyed.unpersist()
   }
@@ -640,11 +640,14 @@ object GenericTable {
       .where(predicate).select(version).distinct().collect().map(_.getInt(0)).toSet
     if (affected.isEmpty) return noop
     val keepData = p.dataDirs.filterNot(d => affected(versionOf(d)))
-    val keepMan = p.manifestDirs.filterNot(d => affected(versionOf(d)))
     val hitData = p.dataDirs.filter(d => affected(versionOf(d)))
+    // the Sums of the rewritten versions: only their manifests are read
+    val dropped = Commit.Sums.over(GraftTable.manifestRows(spark, tableDir,
+      p.manifestDirs.filter(d => affected(versionOf(d)))))
     val survivors = scanOf(spark, tableDir, p.copy(dataDirs = hitData))
       .where(coalesce(!predicate, lit(true)))
-    rewriteCommit(spark, tableDir, p, merged, keepData, keepMan, survivors,
+    rewriteCommit(spark, tableDir, p, merged, keepData,
+      Commit.Totals.of(p).drop(affected, dropped), survivors,
       opName = "delete",
       opDetail = s"deleted-from=${affected.toSeq.sorted.mkString(",")}", opts)
   }
@@ -674,18 +677,19 @@ object GenericTable {
     val kRaw = keys.select(col(keys.columns.head).cast(kt).as("__dk"))
       .where(col("__dk").isNotNull).distinct().cache()
     try {
-      if (kRaw.isEmpty) return noop
-      // conservative version prune: the keys' order-domain envelope
+      // conservative version prune: the keys' order-domain envelope, and
+      // whether there is any key at all, in one job
       val env = kRaw.select(keyExprOf("__dk", kt).as("_k"))
-        .agg(min(col("_k")), max(col("_k"))).head()
-      val hitData = rangeDataDirs(spark, tableDir, p, env.getLong(0), env.getLong(1))
+        .agg(count(lit(1)), min(col("_k")), max(col("_k"))).head()
+      if (env.getLong(0) == 0) return noop
+      val (hitData, dropped) = rangeHits(spark, tableDir, p, env.getLong(1), env.getLong(2))
       if (hitData.isEmpty) return noop
       val hit = hitData.map(versionOf).toSet
       val keepData = p.dataDirs.filterNot(d => hit(versionOf(d)))
-      val keepMan = p.manifestDirs.filterNot(d => hit(versionOf(d)))
       val survivors = scanOf(spark, tableDir, p.copy(dataDirs = hitData))
         .join(kRaw, col(quoted(key)) === col("__dk"), "left_anti")
-      rewriteCommit(spark, tableDir, p, merged, keepData, keepMan, survivors,
+      rewriteCommit(spark, tableDir, p, merged, keepData,
+        Commit.Totals.of(p).drop(hit, dropped), survivors,
         opName = "delete",
         opDetail = s"deleted-keys;from=${hit.toSeq.sorted.mkString(",")}", opts)
     } finally kRaw.unpersist()
@@ -731,18 +735,18 @@ object GenericTable {
     if (p.dataDirs.isEmpty) return noop
     val merged = liveSchemaOf(spark, tableDir, p)
     val key = keyNameOf(p)
-    val hitData = rangeDataDirs(spark, tableDir, p, lo, hi)
+    val (hitData, dropped) = rangeHits(spark, tableDir, p, lo, hi)
     if (hitData.isEmpty) return noop
     val hit = hitData.map(versionOf).toSet
     val keepData = p.dataDirs.filterNot(d => hit(versionOf(d)))
-    val keepMan = p.manifestDirs.filterNot(d => hit(versionOf(d)))
     // the range addresses the key ORDER DOMAIN (keyExprOf), exactly like
     // decodeRange: for integral keys that IS the value; null keys are
     // explicitly kept (a range never deletes null keys)
     val kc = keyExprOf(key, merged(key).dataType)
     val survivors = scanOf(spark, tableDir, p.copy(dataDirs = hitData))
       .where(col(quoted(key)).isNull || !kc.between(lo, hi))
-    rewriteCommit(spark, tableDir, p, merged, keepData, keepMan, survivors,
+    rewriteCommit(spark, tableDir, p, merged, keepData,
+      Commit.Totals.of(p).drop(hit, dropped), survivors,
       opName = "delete",
       opDetail = s"deleted-range=[$lo,$hi];from=${hit.toSeq.sorted.mkString(",")}", opts)
   }
@@ -765,22 +769,13 @@ object GenericTable {
     val encodeParts = GraftTable.encodePartitions(
       numBlocks, parallelism, rows * leaves.length) // ~1 cell ≈ 1 token proxy
     val kinds = leaves.map(_.kind).toArray
-    val outSchema = StructType(IndexedSeq(
-      StructField("block_id", IntegerType, nullable = false),
-      StructField("ver", IntegerType, nullable = false),
-      StructField("row_count", LongType, nullable = false),
-      StructField("key_min", LongType, nullable = false),
-      StructField("key_max", LongType, nullable = false),
-      StructField("plain_bytes", LongType, nullable = false),
-      StructField("row_xor", LongType, nullable = false),
-      StructField("row_sum", LongType, nullable = false)) ++
-      leaves.indices.map(i => StructField(s"pl_$i", BinaryType, nullable = false)))
     val blocks = withBlocks
       .select(Seq(col("block_id"), col("_graft_key").as("k"),
         col("_graft_rh").as("rh")) ++ leaves.map(l => col(quoted(l.name))): _*)
       .repartition(encodeParts, col("block_id"))
       .sortWithinPartitions(col("block_id"), col("k"), col("rh"))
-      .mapPartitions(it => GenericAssembler.assemble(it, ver, kinds))(Encoders.row(outSchema))
+      .mapPartitions(it => GenericAssembler.assemble(it, ver, kinds))(
+        Encoders.row(blockSchema(leaves.length)))
     val dataDir = s"data/v$ver"
     blocks.write.mode("overwrite").parquet(s"$tableDir/$dataDir")
     dataDir
@@ -806,12 +801,26 @@ object GenericTable {
     (bounds, writeBlocksVersion(withBlocks, tableDir, ver, leaves, bounds.length + 1, rows))
   }
 
+  /** The schema blocks of `nLeaves` leaf payloads are written with. */
+  private def blockSchema(nLeaves: Int): StructType = StructType(IndexedSeq(
+    StructField("block_id", IntegerType, nullable = false),
+    StructField("ver", IntegerType, nullable = false),
+    StructField("row_count", LongType, nullable = false),
+    StructField("key_min", LongType, nullable = false),
+    StructField("key_max", LongType, nullable = false),
+    StructField("plain_bytes", LongType, nullable = false),
+    StructField("row_xor", LongType, nullable = false),
+    StructField("row_sum", LongType, nullable = false)) ++
+    (0 until nLeaves).map(i => StructField(s"pl_$i", BinaryType, nullable = false)))
+
   /** Manifest from the WRITTEN data files: per-leaf codec evidence + sizes
     * (leaf index ↔ name mapping lives in the snapshot's generic_leaves).
+    * The files are read with the schema they were written with, so no
+    * schema-inference job runs.
     */
   private def manifestOf(spark: SparkSession, dataPath: String, nLeaves: Int): DataFrame = {
     val pls = (0 until nLeaves).map(i => col(s"pl_$i"))
-    spark.read.parquet(dataPath).select(
+    spark.read.schema(blockSchema(nLeaves)).parquet(dataPath).select(
       Seq(col("block_id"), col("ver"), col("row_count"),
         col("key_min"), col("key_max"), col("plain_bytes"),
         col("row_xor"), col("row_sum")) ++
@@ -948,23 +957,31 @@ object GenericTable {
       tableDir: String,
       snap: Snapshot,
       lo: Long,
-      hi: Long): Seq[String] = {
-    if (snap.manifestDirs.isEmpty) return snap.dataDirs
-    // explicit schema: the span prune touches three fields — skip the
-    // manifest JSON schema-inference pass
-    val spans = spark.read.schema(GraftTable.manifestSpanSchema)
-      .json(snap.manifestDirs.map(d => s"$tableDir/$d"): _*)
-      .groupBy(col("ver").cast("int").as("v"))
-      .agg(min(col("key_min").cast("long")).as("kmin"),
-        max(col("key_max").cast("long")).as("kmax"))
+      hi: Long): Seq[String] = rangeHits(spark, tableDir, snap, lo, hi)._1
+
+  /** [[rangeDataDirs]] and the [[Commit.Sums]] of those versions'
+    * manifests (what a rewrite of them drops), from the same one aggregate.
+    */
+  private def rangeHits(
+      spark: SparkSession,
+      tableDir: String,
+      snap: Snapshot,
+      lo: Long,
+      hi: Long): (Seq[String], Commit.Sums) = {
+    if (snap.manifestDirs.isEmpty) return (snap.dataDirs, Commit.Sums.Zero)
+    val man = GraftTable.manifestRows(spark, tableDir, snap.manifestDirs)
+    val spans = man.groupBy(col("ver").cast("int").as("v"))
+      .agg(min(col("key_min")).as("kmin"), max(col("key_max")) +: Commit.Sums.aggs(man): _*)
       .collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    snap.dataDirs.filter { d =>
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), Commit.Sums.at(r, 3))).toMap
+    val hit = snap.dataDirs.filter { d =>
       spans.get(versionOf(d)) match {
-        case Some((kmin, kmax)) => kmax >= lo && kmin <= hi
+        case Some((kmin, kmax, _)) => kmax >= lo && kmin <= hi
         case None => true
       }
     }
+    (hit, hit.flatMap(d => spans.get(versionOf(d))).map(_._3)
+      .foldLeft(Commit.Sums.Zero)(_ + _))
   }
 
   /** Per-(column, codec) selection evidence, the generic `describe`.

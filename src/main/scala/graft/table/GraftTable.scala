@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -228,7 +228,7 @@ object GraftTable {
     // resume (E5): encode only blocks absent from the parent manifest
     val notDone = parent match {
       case Some(p) if p.manifestDirs.nonEmpty =>
-        val done = readManifest(spark, tableDir, p)
+        val done = manifestRows(spark, tableDir, p.manifestDirs)
           .select(col("block_id").cast("int").as("block_id")).distinct()
         withBlocks.join(done, Seq("block_id"), "left_anti")
       case _ => withBlocks
@@ -246,39 +246,39 @@ object GraftTable {
       writeBlocksVersion(todo, tableDir, ver, numBlocks, stats))
 
     // manifest from the WRITTEN files (column-pruned scan, no re-encode)
-    Commit.withManifest(manifestOf(spark, s"$tableDir/$dataDir")) { manifest =>
-      val newBlocks = timed("manifest-count")(manifest.count())
-      // nothing written: drop the empty version dir
-      if (newBlocks == 0) delete(spark, s"$tableDir/$dataDir")
-      if (newBlocks == 0 && parent.nonEmpty) EncodeResult.of(parent.get, 0L)
-      else if (newBlocks == 0 && stats.rows == 0) {
-        // empty input, no parent: commit an empty (complete) snapshot —
-        // spark.read.json cannot infer a schema from a rowless manifest dir
-        val snap = Commit(spark, tableDir, ver, Nil, None) { tot =>
-          tot.snapshot(ver,
-            Hashing.sha256Hex(s"v$ver;parent=none;fp=${stats.fingerprint};empty"),
-            None, stats.fingerprint, KeyStrategy, boundsDir, numBlocks = 0,
-            complete = true, Nil, stats.asJsonFields ++ meta.toSeq)
-        }
-        EncodeResult.of(snap, 0L)
-      } else {
-        // a blockFilter that selected no block, with no parent, commits the
-        // bounds and no block: incomplete, so a later encode does the work
-        val fresh = if (newBlocks == 0) None else Some(dataDir)
-        val snap = Commit(spark, tableDir, ver, parent.map(_.manifestDirs).getOrElse(Nil),
-          fresh.map(_ => manifest), phases = Some("")) { tot =>
-          val snapshotId = Hashing.sha256Hex(
-            s"v$ver;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
-              s"fp=${stats.fingerprint};bounds=${boundsRef.sigHex()};" +
-              s"blocks=${tot.blocks}/$numBlocks;rows=${tot.rows};" +
-              s"tokens=${tot.tokens};bytes=${tot.bytes};sig=${tot.contentSig}")
-          tot.snapshot(ver, snapshotId, parent.map(_.snapshotId), stats.fingerprint,
-            KeyStrategy, boundsDir, numBlocks, complete = tot.blocks == numBlocks,
-            parent.map(_.dataDirs).getOrElse(Nil) ++ fresh,
-            stats.asJsonFields ++ meta.toSeq)
-        }
-        EncodeResult.of(snap, newBlocks)
+    val fresh = timed("manifest-write")(
+      Commit.writeManifest(spark, tableDir, ver, manifestOf(spark, s"$tableDir/$dataDir")))
+    val newBlocks = fresh.blocks
+    // nothing written: drop the empty version dir
+    if (newBlocks == 0) delete(spark, s"$tableDir/$dataDir")
+    if (newBlocks == 0 && parent.nonEmpty) EncodeResult.of(parent.get, 0L)
+    else if (newBlocks == 0 && stats.rows == 0) {
+      // empty input, no parent: commit an empty (complete) snapshot
+      val snap = Commit(spark, tableDir, ver, Commit.Totals.Empty) { tot =>
+        tot.snapshot(ver,
+          Hashing.sha256Hex(s"v$ver;parent=none;fp=${stats.fingerprint};empty"),
+          None, stats.fingerprint, KeyStrategy, boundsDir, numBlocks = 0,
+          complete = true, Nil, stats.asJsonFields ++ meta.toSeq)
       }
+      EncodeResult.of(snap, 0L)
+    } else {
+      // a blockFilter that selected no block, with no parent, commits the
+      // bounds and no block: incomplete, so a later encode does the work
+      val freshDir = if (newBlocks == 0) None else Some(dataDir)
+      val kept = parent.fold(Commit.Totals.Empty)(Commit.Totals.of)
+      val snap = Commit(spark, tableDir, ver,
+        if (newBlocks == 0) kept else kept.add(ver, fresh)) { tot =>
+        val snapshotId = Hashing.sha256Hex(
+          s"v$ver;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
+            s"fp=${stats.fingerprint};bounds=${boundsRef.sigHex()};" +
+            s"blocks=${tot.blocks}/$numBlocks;rows=${tot.rows};" +
+            s"tokens=${tot.tokens};bytes=${tot.bytes};sig=${tot.contentSig}")
+        tot.snapshot(ver, snapshotId, parent.map(_.snapshotId), stats.fingerprint,
+          KeyStrategy, boundsDir, numBlocks, complete = tot.blocks == numBlocks,
+          parent.map(_.dataDirs).getOrElse(Nil) ++ freshDir,
+          stats.asJsonFields ++ meta.toSeq)
+      }
+      EncodeResult.of(snap, newBlocks)
     }
     } finally if (keyedCached) { keyed.unpersist(false); () }
   }
@@ -350,14 +350,6 @@ object GraftTable {
     (numNew, writeBlocksVersion(withBlocks, tableDir, ver, numNew, stats))
   }
 
-  /** Key-span projection for version pruning: a pinned schema skips the
-    * manifest JSON schema-inference pass.
-    */
-  private[graft] val manifestSpanSchema = StructType(Seq(
-    StructField("ver", LongType),
-    StructField("key_min", LongType),
-    StructField("key_max", LongType)))
-
   /** Range-block bounds from a hash-strided key sample. Properties a plain
     * `df.sample(seed)` + approxQuantile would NOT give:
     *   - layout independence: `sample()` seeds per partition, so the chosen
@@ -397,9 +389,11 @@ object GraftTable {
     // before collecting it, so the driver never materializes an
     // unboundedly-skewed sample (the count is one cheap column-pruned
     // job; the fast path still replaces the 3-4 jobs of the distributed
-    // rank machinery with 2)
-    if (expectedSample <= SmallBoundsSampleMax &&
-        s.count() <= SmallBoundsSampleMax) {
+    // rank machinery with 2). The sample is a subset of the `rows` input
+    // rows, so at most `rows` keys can pass: up to the gate the count
+    // cannot exceed it and is skipped.
+    val gate = SmallBoundsSampleMax
+    if (expectedSample <= gate && (rows <= gate || s.count() <= gate)) {
       val ks = s.collect().map(_.getLong(0)).sorted
       val cnt = ks.length.toLong
       if (cnt < numBlocks) return Array.empty
@@ -529,7 +523,7 @@ object GraftTable {
       (if (r.isNullAt(0)) 0L else r.getLong(0),
         if (r.isNullAt(1)) java.math.BigInteger.ZERO else mod64(r.getDecimal(1)))
     }
-    val man = readManifest(spark, tableDir, p)
+    val man = manifestRows(spark, tableDir, p.manifestDirs)
     val stored = {
       val r = man.agg(
         expr("bit_xor(row_xor)").as("x"),
@@ -810,12 +804,16 @@ object GraftTable {
     exploded.select(out: _*)
   }
 
+  /** The schema token blocks are written with. */
+  private val BlockRowSchema = org.apache.spark.sql.Encoders.product[BlockRow].schema
+
   /** Manifest rows derived from WRITTEN block files (codec names, dict
     * hashes, sizes, content signature) — a column-pruned scan, never a
-    * re-run of the encode lineage.
+    * re-run of the encode lineage. The files are read with the schema they
+    * were written with, so no schema-inference job runs.
     */
   private def manifestOf(spark: SparkSession, dataPath: String): DataFrame =
-    spark.read.parquet(dataPath).select(
+    spark.read.schema(BlockRowSchema).parquet(dataPath).select(
       col("block_id"), col("ver"), col("row_count"), col("token_count"),
       col("doc_id_min"), col("doc_id_max"),
       col("tok_min"), col("tok_max"), col("plain_bytes"),
@@ -861,20 +859,20 @@ object GraftTable {
 
     val blockOffset =
       if (p.manifestDirs.isEmpty) 0
-      else readManifest(spark, tableDir, p)
+      else manifestRows(spark, tableDir, p.manifestDirs)
         .agg(max(col("block_id").cast("int"))).head().getInt(0) + 1
     val (numNew, dataDir) = writeBatchBlocks(keyed, stats, opts, tableDir, ver, blockOffset)
     val combinedFp = Hashing.sha256Hex(s"${p.inputFingerprint}+${stats.fingerprint}")
-    val snap = Commit.withManifest(manifestOf(spark, s"$tableDir/$dataDir")) { m =>
-      Commit(spark, tableDir, ver, p.manifestDirs, Some(m)) { tot =>
-        val snapshotId = Hashing.sha256Hex(
-          s"v$ver;parent=${p.snapshotId};fp=$combinedFp;append=$numNew;" +
-            s"rows=${tot.rows};tokens=${tot.tokens};" +
-            s"bytes=${tot.bytes};sig=${tot.contentSig}")
-        tot.snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp, KeyStrategy,
-          None, p.numBlocks + numNew, complete = true, p.dataDirs :+ dataDir,
-          stats.asJsonFields ++ (carriedMeta(Some(p)) ++ extraMeta).toSeq)
-      }
+    val fresh =
+      Commit.writeManifest(spark, tableDir, ver, manifestOf(spark, s"$tableDir/$dataDir"))
+    val snap = Commit(spark, tableDir, ver, Commit.Totals.of(p).add(ver, fresh)) { tot =>
+      val snapshotId = Hashing.sha256Hex(
+        s"v$ver;parent=${p.snapshotId};fp=$combinedFp;append=$numNew;" +
+          s"rows=${tot.rows};tokens=${tot.tokens};" +
+          s"bytes=${tot.bytes};sig=${tot.contentSig}")
+      tot.snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp, KeyStrategy,
+        None, p.numBlocks + numNew, complete = true, p.dataDirs :+ dataDir,
+        stats.asJsonFields ++ (carriedMeta(Some(p)) ++ extraMeta).toSeq)
     }
     EncodeResult.of(snap, numNew.toLong)
   }
@@ -900,20 +898,21 @@ object GraftTable {
     def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
 
-    val man = readManifest(spark, tableDir, p)
+    // per version: average fill and the Sums a rewrite drops
+    val man = manifestRows(spark, tableDir, p.manifestDirs)
     val perVer = man.groupBy(col("ver").cast("int").as("ver"))
-      .agg(avg(col("row_count")).as("avg_rows"), count(lit(1)).as("blocks"))
+      .agg(avg(col("row_count")).as("avg_rows"), Commit.Sums.aggs(man): _*)
       .collect()
     val frag = perVer
       .filter(_.getDouble(1) < fillFactor * opts.targetRowsPerBlock)
       .map(_.getInt(0)).toSet
-    val fragBlocks = perVer.filter(r => frag(r.getInt(0))).map(_.getLong(2)).sum
+    val dropped = perVer.filter(r => frag(r.getInt(0)))
+      .map(Commit.Sums.at(_, 2)).foldLeft(Commit.Sums.Zero)(_ + _)
     // nothing to merge: no fragment, or one fragment that is one block
-    if (frag.isEmpty || (frag.size == 1 && fragBlocks <= 1)) return noop
+    if (frag.isEmpty || (frag.size == 1 && dropped.blocks <= 1)) return noop
 
     def verOf(dir: String): Int = versionOfDir(dir)
     val keepData = p.dataDirs.filterNot(d => frag(verOf(d)))
-    val keepMan = p.manifestDirs.filterNot(d => frag(verOf(d)))
 
     // decode ONLY the fragmented versions: data dir vN holds exactly the
     // blocks with ver = N
@@ -929,17 +928,18 @@ object GraftTable {
       man.agg(max(col("block_id").cast("int"))).head().getInt(0) + 1
     val (numNew, dataDir) = writeBatchBlocks(keyed, stats, opts, tableDir, ver, blockOffset)
     val combinedFp = Hashing.sha256Hex(s"${p.inputFingerprint};compact=v$ver")
-    val snap = Commit.withManifest(manifestOf(spark, s"$tableDir/$dataDir")) { m =>
-      Commit(spark, tableDir, ver, keepMan, Some(m)) { tot =>
-        val snapshotId = Hashing.sha256Hex(
-          s"v$ver;parent=${p.snapshotId};fp=$combinedFp;" +
-            s"compacted=${frag.toSeq.sorted.mkString(",")};" +
-            s"rows=${tot.rows};tokens=${tot.tokens};" +
-            s"bytes=${tot.bytes};sig=${tot.contentSig}")
-        tot.snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp, KeyStrategy,
-          None, tot.blocks.toInt, complete = true, keepData :+ dataDir,
-          stats.asJsonFields ++ carriedMeta(Some(p)).toSeq)
-      }
+    val fresh =
+      Commit.writeManifest(spark, tableDir, ver, manifestOf(spark, s"$tableDir/$dataDir"))
+    val snap = Commit(spark, tableDir, ver,
+        Commit.Totals.of(p).drop(frag, dropped).add(ver, fresh)) { tot =>
+      val snapshotId = Hashing.sha256Hex(
+        s"v$ver;parent=${p.snapshotId};fp=$combinedFp;" +
+          s"compacted=${frag.toSeq.sorted.mkString(",")};" +
+          s"rows=${tot.rows};tokens=${tot.tokens};" +
+          s"bytes=${tot.bytes};sig=${tot.contentSig}")
+      tot.snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp, KeyStrategy,
+        None, tot.blocks.toInt, complete = true, keepData :+ dataDir,
+        stats.asJsonFields ++ carriedMeta(Some(p)).toSeq)
     }
     EncodeResult.of(snap, numNew.toLong)
   }
@@ -1064,7 +1064,7 @@ object GraftTable {
     // them), so NULL bounds are NON-prunable (coalesce → keep) and the
     // exact row filter below decides.
     val snap = current(spark, tableDir)
-    val hit = readManifest(spark, tableDir, snap)
+    val hit = manifestRows(spark, tableDir, snap.manifestDirs)
       .where(coalesce(expr("try_cast(doc_id_max as bigint)") >= minId, lit(true)) &&
         coalesce(expr("try_cast(doc_id_min as bigint)") <= maxId, lit(true)))
       .select(col("ver").cast("int").as("ver"),
@@ -1086,7 +1086,7 @@ object GraftTable {
       spark: SparkSession, tableDir: String, sources: Seq[String]): Dataset[TokenRow] = {
     require(sources.nonEmpty, "decodeWhere needs at least one source value")
     val snap = current(spark, tableDir)
-    val hit = readManifest(spark, tableDir, snap).where(holdsSources(sources))
+    val hit = manifestRows(spark, tableDir, snap.manifestDirs).where(holdsSources(sources))
       .select(col("ver").cast("int").as("ver"),
         col("block_id").cast("int").as("block_id"))
     decodeBlocks(spark, tableDir, snap, hit)
@@ -1102,7 +1102,8 @@ object GraftTable {
   /** Block ids [[decodeWhere]] would read — PlanSpec asserts pruning. */
   private[table] def blocksForSources(
       spark: SparkSession, tableDir: String, sources: Seq[String]): Long =
-    readManifest(spark, tableDir).where(holdsSources(sources)).count()
+    manifestRows(spark, tableDir, current(spark, tableDir).manifestDirs)
+      .where(holdsSources(sources)).count()
 
   /** The token rows of `snap`'s blocks listed in `liveBlocks` (ver, block_id),
     * a selection from the same snapshot's manifest.
@@ -1113,11 +1114,40 @@ object GraftTable {
     decodeRows(readBlocks(spark, tableDir, snap)
       .join(broadcast(liveBlocks), Seq("ver", "block_id"), "left_semi"))
 
-  def readManifest(spark: SparkSession, tableDir: String, snap: Snapshot): DataFrame =
-    spark.read.json(snap.manifestDirs.map(d => s"$tableDir/$d"): _*)
-
+  /** The current snapshot's manifest with every field its JSON holds (the
+    * schema is inferred): the user-facing view behind [[describe]], the
+    * `<name>_manifest` view and SQL.
+    */
   def readManifest(spark: SparkSession, tableDir: String): DataFrame =
-    readManifest(spark, tableDir, current(spark, tableDir))
+    spark.read.json(current(spark, tableDir).manifestDirs.map(d => s"$tableDir/$d"): _*)
+
+  /** The manifest fields engine-internal reads use, of both lanes, in the
+    * order schema inference gives them; a field a lane does not write
+    * reads null (generic manifests have no `token_count`, token manifests
+    * no `key_min`).
+    */
+  private val ManifestFields = StructType(Seq(
+    StructField("block_id", LongType),
+    StructField("block_sig", LongType),
+    StructField("bytes_total", LongType),
+    StructField("doc_id_max", StringType),
+    StructField("doc_id_min", StringType),
+    StructField("key_max", LongType),
+    StructField("key_min", LongType),
+    StructField("plain_bytes", LongType),
+    StructField("row_count", LongType),
+    StructField("row_sum", LongType),
+    StructField("row_xor", LongType),
+    StructField("src_list", ArrayType(StringType)),
+    StructField("token_count", LongType),
+    StructField("ver", LongType)))
+
+  /** Manifest rows of `manifestDirs` under [[ManifestFields]]: the pinned
+    * schema skips the JSON schema-inference job an inferred read runs.
+    */
+  private[graft] def manifestRows(
+      spark: SparkSession, tableDir: String, manifestDirs: Seq[String]): DataFrame =
+    spark.read.schema(ManifestFields).json(manifestDirs.map(d => s"$tableDir/$d"): _*)
 
   // ------------------------------------------------------------ metadata
 
