@@ -71,16 +71,25 @@ object SketchRuntime {
 
   /** MinHash signature: for seed i in [0, n), the minimum of hash(elem, i)
     * over the (shingle) set. P(sig_a[i] == sig_b[i]) = Jaccard(a, b).
+    * Each element's bytes are fetched once, not once per seed: on an
+    * unsafe-backed array every `getUTF8String(j).getBytes` copies.
     */
   def minHash(a: ArrayData, n: Int): ArrayData = {
     val m = a.numElements()
+    val bytes = new Array[Array[Byte]](m)
+    var j = 0
+    while (j < m) {
+      bytes(j) = a.getUTF8String(j).getBytes
+      j += 1
+    }
     val sig = new Array[Long](n)
     var i = 0
     while (i < n) {
       var min = Long.MaxValue
-      var j = 0
+      j = 0
       while (j < m) {
-        val h = hashString(a.getUTF8String(j), i.toLong)
+        val b = bytes(j)
+        val h = hashBytes(b, 0, b.length, i.toLong)
         if (h < min) min = h
         j += 1
       }

@@ -38,7 +38,8 @@ import graft.table.{AnyColumn, GenericTable, GraftTable}
   *     pushed as a parquet row-group + record filter on the per-block
   *     `key_min`/`key_max` zone-map columns — no driver-side id set at ANY
   *     table size (the interval, not the surviving ids, travels to the
-  *     executors) — plus whole-VERSION pruning from the manifest key spans;
+  *     executors) — plus whole-VERSION pruning from the snapshot's
+  *     per-version key spans;
   *   - schema evolution: each partition decodes under the write schema of
   *     its version and null-fills fields that postdate it; rows are emitted
   *     under the snapshot's live schema (`GenericTable.liveSchemaOf`);
@@ -213,8 +214,8 @@ class GraftGenericScan(
     }
 
   /** (version, parquet data file) of every file the scan reads: the live
-    * dirs after whole-version pruning from the manifest key spans (tiny
-    * JSON read on the driver — the interval itself, never an id set).
+    * dirs after whole-version pruning from the key spans the snapshot
+    * records (no manifest read — the interval itself, never an id set).
     */
   private lazy val files: Seq[(Int, org.apache.hadoop.fs.FileStatus)] = {
     val spark = SparkSession.active

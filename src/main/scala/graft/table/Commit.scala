@@ -12,12 +12,15 @@ import graft.table.GraftTable.Snapshot
   * operation over manifest → snapshot → pointer, SURVEY.md §1.2). A commit
   * of version N:
   *   1. writes the fresh version's manifest frame to `manifests/vN` in one
-  *      job ([[writeManifest]]), whose [[Sums]] are observed on that write;
-  *   2. takes the kept manifests' totals from the parent snapshot by
-  *      arithmetic — parent + fresh for an append or a resumed encode,
-  *      parent − dropped + fresh for a rewrite (the dropped versions' sums
-  *      come from the manifest aggregate the rewrite already runs), as
-  *      Iceberg updates its snapshot summary — so no kept manifest is read;
+  *      job ([[writeManifest]]), whose [[VersionSummary]] — its [[Sums]],
+  *      key span and largest block id — is observed on that write;
+  *   2. takes the kept versions' summaries from the parent snapshot, which
+  *      records one per live version: the parent's list without the
+  *      versions a rewrite drops, plus the fresh one ([[Totals]]). The
+  *      totals are their fold, and every whole-version question (a
+  *      compact's fill, a range's versions, the next block id) is
+  *      arithmetic on the list, as Iceberg plans from its manifest list —
+  *      so no kept manifest is read;
   *   3. builds the snapshot from the totals — the caller owns the
   *      snapshot-id preimage, fingerprint and lineage fields, which are the
   *      on-disk format of its lane;
@@ -31,24 +34,17 @@ private[table] object Commit {
 
   /** Aggregates over manifest rows: the block count, Σ `row_count`,
     * Σ `token_count` (0 for generic manifests), Σ `bytes_total`,
-    * Σ `plain_bytes` and `bit_xor(block_sig)`. The sums add and subtract,
-    * and the xor is its own inverse, so the totals of kept manifests follow
-    * from the parent's without reading them.
+    * Σ `plain_bytes` and `bit_xor(block_sig)`. The sums add, and the xor is
+    * its own inverse, so a snapshot's totals are the fold of its versions'.
     */
   final case class Sums(blocks: Long, rows: Long, tokens: Long, bytes: Long, plain: Long,
       sig: Long) {
     def +(o: Sums): Sums = Sums(blocks + o.blocks, rows + o.rows, tokens + o.tokens,
       bytes + o.bytes, plain + o.plain, sig ^ o.sig)
-    def -(o: Sums): Sums = Sums(blocks - o.blocks, rows - o.rows, tokens - o.tokens,
-      bytes - o.bytes, plain - o.plain, sig ^ o.sig)
   }
 
   object Sums {
     val Zero: Sums = Sums(0L, 0L, 0L, 0L, 0L, 0L)
-
-    /** The totals `s` recorded over its manifests. */
-    def of(s: Snapshot): Sums = Sums(s.blocksEncoded, s.rowCount, s.tokenCount,
-      s.bytesTotal, s.plainBytes, java.lang.Long.parseUnsignedLong(s.contentSig, 16))
 
     /** The six aggregates over manifest rows, in [[Sums]] order and each
       * coalesced (an empty group reads 0). A frame without `token_count`
@@ -61,32 +57,32 @@ private[table] object Commit {
         total("plain_bytes"), bit_xor(col("block_sig"))).map(coalesce(_, lit(0L)))
     }
 
-    /** The [[aggs]] of `df`: one job. */
-    def over(df: DataFrame): Sums = {
-      val a = aggs(df)
-      at(df.agg(a.head, a.tail: _*).head(), 0)
-    }
-
     /** The [[aggs]] values of `r` from column `from` on. */
     def at(r: Row, from: Int): Sums = Sums(r.getLong(from), r.getLong(from + 1),
       r.getLong(from + 2), r.getLong(from + 3), r.getLong(from + 4), r.getLong(from + 5))
   }
 
-  /** The manifests of a new version and their [[Sums]]. */
-  final case class Totals(manifestDirs: Seq[String], sums: Sums) {
+  /** The live versions of a new snapshot, one [[VersionSummary]] each in
+    * `manifest_dirs` order; the snapshot totals are their fold.
+    */
+  final case class Totals(versions: Seq[VersionSummary]) {
+    lazy val sums: Sums = versions.foldLeft(Sums.Zero)(_ + _.sums)
     def blocks: Long = sums.blocks
     def rows: Long = sums.rows
     def tokens: Long = sums.tokens
     def bytes: Long = sums.bytes
     def contentSig: String = f"${sums.sig}%016x"
+    def manifestDirs: Seq[String] = versions.map(v => manifestDir(v.ver))
 
-    /** These totals plus version `ver`'s fresh manifest, written with `fresh`. */
-    def add(ver: Int, fresh: Sums): Totals =
-      Totals(manifestDirs :+ manifestDir(ver), sums + fresh)
+    /** The first block id after every live one. */
+    def nextBlockId: Int =
+      if (versions.isEmpty) 0 else versions.map(_.blockMax).max.toInt + 1
 
-    /** These totals without the manifests of `vers`, whose sums are `dropped`. */
-    def drop(vers: Set[Int], dropped: Sums): Totals =
-      Totals(manifestDirs.filterNot(d => vers(GraftTable.versionOfDir(d))), sums - dropped)
+    /** These versions plus the fresh one. */
+    def add(fresh: VersionSummary): Totals = Totals(versions :+ fresh)
+
+    /** These versions without `vers`. */
+    def drop(vers: Set[Int]): Totals = Totals(versions.filterNot(v => vers(v.ver)))
 
     /** The snapshot of these totals; `stats` are sorted here. */
     def snapshot(
@@ -102,14 +98,16 @@ private[table] object Commit {
         stats: Seq[(String, String)]): Snapshot =
       Snapshot(version, snapshotId, parentId, inputFingerprint, keyStrategy,
         boundsDir, numBlocks, blocks, complete, rows, tokens, bytes, sums.plain,
-        contentSig, dataDirs, manifestDirs, stats.sorted, committedAt(Instant.now()))
+        contentSig, dataDirs, manifestDirs, stats.sorted, committedAt(Instant.now()),
+        Some(versions))
   }
 
   object Totals {
-    val Empty: Totals = Totals(Nil, Sums.Zero)
+    val Empty: Totals = Totals(Nil)
 
-    /** The totals `s` committed: its manifests and their sums. */
-    def of(s: Snapshot): Totals = Totals(s.manifestDirs, Sums.of(s))
+    /** The live versions `s` committed ([[VersionSummary.of]]). */
+    def of(spark: SparkSession, tableDir: String, s: Snapshot): Totals =
+      Totals(VersionSummary.of(spark, tableDir, s))
   }
 
   /** `committed_at`: UTC with a 9-digit fraction, so every snapshot JSON of
@@ -125,19 +123,21 @@ private[table] object Commit {
   private def manifestDir(ver: Int): String = s"manifests/v$ver"
 
   /** Write `manifest` (a fresh version's manifest frame) to
-    * `manifests/v<ver>` and return its [[Sums]], observed on the write: one
-    * job over the written blocks, which are never read again for the
-    * count or the totals. A manifest of no block leaves no dir behind.
+    * `manifests/v<ver>` and return its [[VersionSummary]], observed on the
+    * write: one job over the written blocks, which are never read again
+    * for the count, the totals or the key span. A manifest of no block
+    * leaves no dir behind.
     */
-  def writeManifest(spark: SparkSession, tableDir: String, ver: Int, manifest: DataFrame): Sums = {
+  def writeManifest(
+      spark: SparkSession, tableDir: String, ver: Int, manifest: DataFrame): VersionSummary = {
     val obs = Observation()
-    val aggs = Sums.aggs(manifest).zipWithIndex.map { case (c, i) => c.as(s"s$i") }
+    val aggs = VersionSummary.aggs(manifest).zipWithIndex.map { case (c, i) => c.as(s"s$i") }
     val path = s"$tableDir/${manifestDir(ver)}"
     manifest.observe(obs, aggs.head, aggs.tail: _*).write.mode("overwrite").json(path)
     val m = obs.get
-    val sums = Sums.at(Row.fromSeq(aggs.indices.map(i => m(s"s$i"))), 0)
-    if (sums.blocks == 0) GraftTable.delete(spark, path)
-    sums
+    val fresh = VersionSummary.at(ver, Row.fromSeq(aggs.indices.map(i => m(s"s$i"))), 0)
+    if (fresh.sums.blocks == 0) GraftTable.delete(spark, path)
+    fresh
   }
 
   /** Commit version `ver` with totals `tot`: build the snapshot, write

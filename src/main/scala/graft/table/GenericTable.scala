@@ -430,16 +430,16 @@ object GenericTable {
       writeBlocksVersion(todo, tableDir, ver, leaves, numBlocks, rows))
     val fresh = timed("g-manifest-write")(Commit.writeManifest(spark, tableDir, ver,
       manifestOf(spark, s"$tableDir/$dataDir", leaves.length)))
-    val newBlocks = fresh.blocks
+    val newBlocks = fresh.sums.blocks
     // a blockFilter selecting no block leaves an empty version dir: drop
     // it; with no parent the commit records the bounds and no block
     if (newBlocks == 0) GraftTable.delete(spark, s"$tableDir/$dataDir")
     if (newBlocks == 0 && parent.nonEmpty) EncodeResult.of(parent.get, 0L)
     else {
       val freshDir = if (newBlocks == 0) None else Some(dataDir)
-      val kept = parent.fold(Commit.Totals.Empty)(Commit.Totals.of)
+      val kept = parent.fold(Commit.Totals.Empty)(Commit.Totals.of(spark, tableDir, _))
       val snap = Commit(spark, tableDir, ver,
-          if (newBlocks == 0) kept else kept.add(ver, fresh)) { tot =>
+          if (newBlocks == 0) kept else kept.add(fresh)) { tot =>
         val snapshotId = Hashing.sha256Hex(
           s"v$ver;generic;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
             s"fp=$fingerprint;bounds=${GraftTable.boundsSig(bounds)};" +
@@ -489,7 +489,8 @@ object GenericTable {
     val numBlocks = parent.numBlocks + bounds.length + 1
     val fresh = Commit.writeManifest(spark, tableDir, ver,
       manifestOf(spark, s"$tableDir/$dataDir", leaves.length))
-    val snap = Commit(spark, tableDir, ver, Commit.Totals.of(parent).add(ver, fresh)) { tot =>
+    val snap = Commit(spark, tableDir, ver,
+        Commit.Totals.of(spark, tableDir, parent).add(fresh)) { tot =>
       val snapshotId = Hashing.sha256Hex(
         s"v$ver;generic-append;parent=${parent.snapshotId};fp=$fingerprint;" +
           s"bounds=${GraftTable.boundsSig(bounds)};blocks=${tot.blocks}/$numBlocks;" +
@@ -521,17 +522,11 @@ object GenericTable {
     def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
 
-    // per version: average fill and the Sums a rewrite drops
-    val man = GraftTable.manifestRows(spark, tableDir, p.manifestDirs)
-    val perVer = man.groupBy(col("ver").cast("int").as("ver"))
-      .agg(avg(col("row_count")).as("avg_rows"), Commit.Sums.aggs(man): _*)
-      .collect()
-    val frag = perVer
-      .filter(_.getDouble(1) < fillFactor * opts.targetRowsPerBlock)
-      .map(_.getInt(0)).toSet
-    val dropped = perVer.filter(r => frag(r.getInt(0)))
-      .map(Commit.Sums.at(_, 2)).foldLeft(Commit.Sums.Zero)(_ + _)
-    if (frag.isEmpty || (frag.size == 1 && dropped.blocks <= 1)) return noop
+    // the fragmented versions, from the snapshot's per-version summaries
+    val live = Commit.Totals.of(spark, tableDir, p)
+    val fragVers = live.versions.filter(_.fill < fillFactor * opts.targetRowsPerBlock)
+    val frag = fragVers.map(_.ver).toSet
+    if (frag.isEmpty || (frag.size == 1 && fragVers.head.sums.blocks <= 1)) return noop
 
     val keepData = p.dataDirs.filterNot(d => frag(versionOf(d)))
     val fragData = p.dataDirs.filter(d => frag(versionOf(d)))
@@ -539,8 +534,7 @@ object GenericTable {
     // decode ONLY the fragmented versions, projected onto the merged schema
     val merged = liveSchemaOf(spark, tableDir, p)
     val rows = scanOf(spark, tableDir, p.copy(dataDirs = fragData))
-    rewriteCommit(spark, tableDir, p, merged, keepData,
-      Commit.Totals.of(p).drop(frag, dropped), rows,
+    rewriteCommit(spark, tableDir, p, merged, keepData, live.drop(frag), rows,
       opName = "compact",
       opDetail = s"compacted=${frag.toSeq.sorted.mkString(",")}", opts)
   }
@@ -585,7 +579,7 @@ object GenericTable {
         val (bounds, dataDir) = writeBatchBlocks(keyed, tableDir, ver, leaves, nRows, opts)
         val fresh = Commit.writeManifest(spark, tableDir, ver,
           manifestOf(spark, s"$tableDir/$dataDir", leaves.length))
-        EncodeResult.of(commit(keepData :+ dataDir, kept.add(ver, fresh)), bounds.length + 1L)
+        EncodeResult.of(commit(keepData :+ dataDir, kept.add(fresh)), bounds.length + 1L)
       }
     } finally keyed.unpersist()
   }
@@ -604,8 +598,8 @@ object GenericTable {
     * At 100 TB the detection pass reads only the predicate's columns,
     * and the rewrite cost is proportional to the AFFECTED versions'
     * data, not the table. Key-range deletes should prefer
-    * [[deleteRange]], which skips the detection scan entirely via
-    * manifest key spans.
+    * [[deleteRange]], which skips the detection scan entirely via the
+    * snapshot's per-version key spans.
     */
   def deleteWhere(
       spark: SparkSession,
@@ -641,13 +635,10 @@ object GenericTable {
     if (affected.isEmpty) return noop
     val keepData = p.dataDirs.filterNot(d => affected(versionOf(d)))
     val hitData = p.dataDirs.filter(d => affected(versionOf(d)))
-    // the Sums of the rewritten versions: only their manifests are read
-    val dropped = Commit.Sums.over(GraftTable.manifestRows(spark, tableDir,
-      p.manifestDirs.filter(d => affected(versionOf(d)))))
     val survivors = scanOf(spark, tableDir, p.copy(dataDirs = hitData))
       .where(coalesce(!predicate, lit(true)))
     rewriteCommit(spark, tableDir, p, merged, keepData,
-      Commit.Totals.of(p).drop(affected, dropped), survivors,
+      Commit.Totals.of(spark, tableDir, p).drop(affected), survivors,
       opName = "delete",
       opDetail = s"deleted-from=${affected.toSeq.sorted.mkString(",")}", opts)
   }
@@ -655,7 +646,7 @@ object GenericTable {
   /** Copy-on-write delete of every row whose KEY appears in `keys` (one
     * column, any name — cast to the table key's type; nulls ignored): the
     * contamination-removal primitive ("remove these doc ids"). Version
-    * pruning is conservative via the manifest key spans of the keys'
+    * pruning is conservative via the per-version key spans of the keys'
     * ORDER-DOMAIN envelope; row matching is an EXACT raw-key anti join
     * (never the 64-bit order hash, so non-integral keys cannot
     * collide-delete).
@@ -682,14 +673,14 @@ object GenericTable {
       val env = kRaw.select(keyExprOf("__dk", kt).as("_k"))
         .agg(count(lit(1)), min(col("_k")), max(col("_k"))).head()
       if (env.getLong(0) == 0) return noop
-      val (hitData, dropped) = rangeHits(spark, tableDir, p, env.getLong(1), env.getLong(2))
+      val live = Commit.Totals.of(spark, tableDir, p)
+      val hitData = rangeDataDirs(p, live.versions, env.getLong(1), env.getLong(2))
       if (hitData.isEmpty) return noop
       val hit = hitData.map(versionOf).toSet
       val keepData = p.dataDirs.filterNot(d => hit(versionOf(d)))
       val survivors = scanOf(spark, tableDir, p.copy(dataDirs = hitData))
         .join(kRaw, col(quoted(key)) === col("__dk"), "left_anti")
-      rewriteCommit(spark, tableDir, p, merged, keepData,
-        Commit.Totals.of(p).drop(hit, dropped), survivors,
+      rewriteCommit(spark, tableDir, p, merged, keepData, live.drop(hit), survivors,
         opName = "delete",
         opDetail = s"deleted-keys;from=${hit.toSeq.sorted.mkString(",")}", opts)
     } finally kRaw.unpersist()
@@ -720,8 +711,8 @@ object GenericTable {
   /** Copy-on-write delete of every row whose RANGE KEY falls in
     * [lo, hi] — the targeted-removal fast path (contaminated id spans,
     * right-to-be-forgotten key blocks). Affected versions come straight
-    * from the manifest key spans — no data scan at all before the
-    * rewrite; null-key rows never match a range.
+    * from the snapshot's per-version key spans — no manifest read and no
+    * data scan before the rewrite; null-key rows never match a range.
     */
   def deleteRange(
       spark: SparkSession,
@@ -735,7 +726,8 @@ object GenericTable {
     if (p.dataDirs.isEmpty) return noop
     val merged = liveSchemaOf(spark, tableDir, p)
     val key = keyNameOf(p)
-    val (hitData, dropped) = rangeHits(spark, tableDir, p, lo, hi)
+    val live = Commit.Totals.of(spark, tableDir, p)
+    val hitData = rangeDataDirs(p, live.versions, lo, hi)
     if (hitData.isEmpty) return noop
     val hit = hitData.map(versionOf).toSet
     val keepData = p.dataDirs.filterNot(d => hit(versionOf(d)))
@@ -745,8 +737,7 @@ object GenericTable {
     val kc = keyExprOf(key, merged(key).dataType)
     val survivors = scanOf(spark, tableDir, p.copy(dataDirs = hitData))
       .where(col(quoted(key)).isNull || !kc.between(lo, hi))
-    rewriteCommit(spark, tableDir, p, merged, keepData,
-      Commit.Totals.of(p).drop(hit, dropped), survivors,
+    rewriteCommit(spark, tableDir, p, merged, keepData, live.drop(hit), survivors,
       opName = "delete",
       opDetail = s"deleted-range=[$lo,$hi];from=${hit.toSeq.sorted.mkString(",")}", opts)
   }
@@ -876,7 +867,7 @@ object GenericTable {
     * onto `snap`'s live schema (fields a version predates read null, as in
     * Parquet/Iceberg schema evolution). `snap` is a committed snapshot or
     * a copy of one limited to some of its data dirs; `range` pins a key
-    * interval on the scan, which prunes versions by their manifest key
+    * interval on the scan, which prunes versions by their recorded key
     * spans and blocks by their key_min/key_max zone maps.
     */
   private def scanOf(
@@ -946,42 +937,24 @@ object GenericTable {
   }
 
   /** Data dirs whose per-version key span intersects [lo, hi] — the
-    * manifest (tiny JSON) answers this without touching a data file, so a
-    * range probe on a many-version table skips whole versions' files
-    * instead of opening every footer only to prune its row groups (the
-    * token lane's manifest-semi-join shape). Versions absent from the
-    * manifest aggregate (shouldn't happen) stay — never wrongly pruned.
+    * snapshot's version summaries answer this without reading a manifest
+    * or touching a data file, so a range probe on a many-version table
+    * skips whole versions' files instead of opening every footer only to
+    * prune its row groups. A version without a summary (shouldn't happen)
+    * stays — never wrongly pruned.
     */
   private[graft] def rangeDataDirs(
       spark: SparkSession,
       tableDir: String,
       snap: Snapshot,
       lo: Long,
-      hi: Long): Seq[String] = rangeHits(spark, tableDir, snap, lo, hi)._1
+      hi: Long): Seq[String] =
+    rangeDataDirs(snap, VersionSummary.of(spark, tableDir, snap), lo, hi)
 
-  /** [[rangeDataDirs]] and the [[Commit.Sums]] of those versions'
-    * manifests (what a rewrite of them drops), from the same one aggregate.
-    */
-  private def rangeHits(
-      spark: SparkSession,
-      tableDir: String,
-      snap: Snapshot,
-      lo: Long,
-      hi: Long): (Seq[String], Commit.Sums) = {
-    if (snap.manifestDirs.isEmpty) return (snap.dataDirs, Commit.Sums.Zero)
-    val man = GraftTable.manifestRows(spark, tableDir, snap.manifestDirs)
-    val spans = man.groupBy(col("ver").cast("int").as("v"))
-      .agg(min(col("key_min")).as("kmin"), max(col("key_max")) +: Commit.Sums.aggs(man): _*)
-      .collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), Commit.Sums.at(r, 3))).toMap
-    val hit = snap.dataDirs.filter { d =>
-      spans.get(versionOf(d)) match {
-        case Some((kmin, kmax, _)) => kmax >= lo && kmin <= hi
-        case None => true
-      }
-    }
-    (hit, hit.flatMap(d => spans.get(versionOf(d))).map(_._3)
-      .foldLeft(Commit.Sums.Zero)(_ + _))
+  private def rangeDataDirs(
+      snap: Snapshot, versions: Seq[VersionSummary], lo: Long, hi: Long): Seq[String] = {
+    val byVer = versions.map(v => v.ver -> v).toMap
+    snap.dataDirs.filter(d => byVer.get(versionOf(d)).forall(_.overlaps(lo, hi)))
   }
 
   /** Per-(column, codec) selection evidence, the generic `describe`.

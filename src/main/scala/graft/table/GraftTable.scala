@@ -29,6 +29,8 @@ import graft.table.Commit.{carriedMeta, timed}
   *   data/v<N>/part-*.parquet     encoded block rows (payload columns)
   *   manifests/v<N>/part-*.json   manifest entries for blocks encoded in vN
   *   metadata/v<N>.json           snapshot (bounds dir, lineage, totals, column stats)
+  *                                and `versions`: per live version its sums, key span
+  *                                and largest block id (VersionSummary)
   *   metadata/current             latest committed version number
   * }}}
   *
@@ -95,7 +97,12 @@ object GraftTable {
       dataDirs: Seq[String],
       manifestDirs: Seq[String],
       stats: Seq[(String, String)],
-      committedAt: String)
+      committedAt: String,
+      /** One summary per live version, in `manifestDirs` order; None in a
+        * snapshot written before snapshots recorded them — read them
+        * through [[VersionSummary.of]].
+        */
+      versions: Option[Seq[VersionSummary]])
 
   final case class EncodeResult(
       version: Int,
@@ -248,7 +255,7 @@ object GraftTable {
     // manifest from the WRITTEN files (column-pruned scan, no re-encode)
     val fresh = timed("manifest-write")(
       Commit.writeManifest(spark, tableDir, ver, manifestOf(spark, s"$tableDir/$dataDir")))
-    val newBlocks = fresh.blocks
+    val newBlocks = fresh.sums.blocks
     // nothing written: drop the empty version dir
     if (newBlocks == 0) delete(spark, s"$tableDir/$dataDir")
     if (newBlocks == 0 && parent.nonEmpty) EncodeResult.of(parent.get, 0L)
@@ -265,9 +272,9 @@ object GraftTable {
       // a blockFilter that selected no block, with no parent, commits the
       // bounds and no block: incomplete, so a later encode does the work
       val freshDir = if (newBlocks == 0) None else Some(dataDir)
-      val kept = parent.fold(Commit.Totals.Empty)(Commit.Totals.of)
+      val kept = parent.fold(Commit.Totals.Empty)(Commit.Totals.of(spark, tableDir, _))
       val snap = Commit(spark, tableDir, ver,
-        if (newBlocks == 0) kept else kept.add(ver, fresh)) { tot =>
+        if (newBlocks == 0) kept else kept.add(fresh)) { tot =>
         val snapshotId = Hashing.sha256Hex(
           s"v$ver;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
             s"fp=${stats.fingerprint};bounds=${boundsRef.sigHex()};" +
@@ -857,15 +864,13 @@ object GraftTable {
     val stats = Stats.collect(keyed, opts.sampleRows)
     if (stats.rows == 0L) return EncodeResult.of(p, 0L)
 
-    val blockOffset =
-      if (p.manifestDirs.isEmpty) 0
-      else manifestRows(spark, tableDir, p.manifestDirs)
-        .agg(max(col("block_id").cast("int"))).head().getInt(0) + 1
-    val (numNew, dataDir) = writeBatchBlocks(keyed, stats, opts, tableDir, ver, blockOffset)
+    val live = Commit.Totals.of(spark, tableDir, p)
+    val (numNew, dataDir) =
+      writeBatchBlocks(keyed, stats, opts, tableDir, ver, live.nextBlockId)
     val combinedFp = Hashing.sha256Hex(s"${p.inputFingerprint}+${stats.fingerprint}")
     val fresh =
       Commit.writeManifest(spark, tableDir, ver, manifestOf(spark, s"$tableDir/$dataDir"))
-    val snap = Commit(spark, tableDir, ver, Commit.Totals.of(p).add(ver, fresh)) { tot =>
+    val snap = Commit(spark, tableDir, ver, live.add(fresh)) { tot =>
       val snapshotId = Hashing.sha256Hex(
         s"v$ver;parent=${p.snapshotId};fp=$combinedFp;append=$numNew;" +
           s"rows=${tot.rows};tokens=${tot.tokens};" +
@@ -898,18 +903,12 @@ object GraftTable {
     def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
 
-    // per version: average fill and the Sums a rewrite drops
-    val man = manifestRows(spark, tableDir, p.manifestDirs)
-    val perVer = man.groupBy(col("ver").cast("int").as("ver"))
-      .agg(avg(col("row_count")).as("avg_rows"), Commit.Sums.aggs(man): _*)
-      .collect()
-    val frag = perVer
-      .filter(_.getDouble(1) < fillFactor * opts.targetRowsPerBlock)
-      .map(_.getInt(0)).toSet
-    val dropped = perVer.filter(r => frag(r.getInt(0)))
-      .map(Commit.Sums.at(_, 2)).foldLeft(Commit.Sums.Zero)(_ + _)
+    // the fragmented versions, from the snapshot's per-version summaries
+    val live = Commit.Totals.of(spark, tableDir, p)
+    val fragVers = live.versions.filter(_.fill < fillFactor * opts.targetRowsPerBlock)
+    val frag = fragVers.map(_.ver).toSet
     // nothing to merge: no fragment, or one fragment that is one block
-    if (frag.isEmpty || (frag.size == 1 && dropped.blocks <= 1)) return noop
+    if (frag.isEmpty || (frag.size == 1 && fragVers.head.sums.blocks <= 1)) return noop
 
     def verOf(dir: String): Int = versionOfDir(dir)
     val keepData = p.dataDirs.filterNot(d => frag(verOf(d)))
@@ -924,14 +923,13 @@ object GraftTable {
     val stats = Stats.collect(keyed, opts.sampleRows)
     // merged blocks get ids after every existing one (incl. the dropped
     // fragments' — uniqueness matters, compactness doesn't)
-    val blockOffset =
-      man.agg(max(col("block_id").cast("int"))).head().getInt(0) + 1
-    val (numNew, dataDir) = writeBatchBlocks(keyed, stats, opts, tableDir, ver, blockOffset)
+    val (numNew, dataDir) =
+      writeBatchBlocks(keyed, stats, opts, tableDir, ver, live.nextBlockId)
     val combinedFp = Hashing.sha256Hex(s"${p.inputFingerprint};compact=v$ver")
     val fresh =
       Commit.writeManifest(spark, tableDir, ver, manifestOf(spark, s"$tableDir/$dataDir"))
     val snap = Commit(spark, tableDir, ver,
-        Commit.Totals.of(p).drop(frag, dropped).add(ver, fresh)) { tot =>
+        live.drop(frag).add(fresh)) { tot =>
       val snapshotId = Hashing.sha256Hex(
         s"v$ver;parent=${p.snapshotId};fp=$combinedFp;" +
           s"compacted=${frag.toSeq.sorted.mkString(",")};" +
@@ -1200,8 +1198,15 @@ object GraftTable {
        |  "data_dirs": [${s.dataDirs.map(js).mkString(", ")}],
        |  "manifest_dirs": [${s.manifestDirs.map(js).mkString(", ")}],
        |  "column_stats": $statsJson,
-       |  "committed_at": ${js(s.committedAt)}
+       |  "committed_at": ${js(s.committedAt)}${versionsJson(s)}
        |}""".stripMargin
+  }
+
+  /** The `versions` field, one array of [[VersionSummary.fields]] per live
+    * version; nothing for a snapshot that records none.
+    */
+  private def versionsJson(s: Snapshot): String = s.versions.fold("") { vs =>
+    vs.map(_.fields.mkString("[", ",", "]")).mkString(",\n  \"versions\": [", ",", "]")
   }
 
   private def parseSnapshot(text: String): Snapshot = {
@@ -1225,7 +1230,11 @@ object GraftTable {
       dataDirs = (j \ "data_dirs").extract[Seq[String]],
       manifestDirs = (j \ "manifest_dirs").extract[Seq[String]],
       stats = (j \ "column_stats").extract[Map[String, String]].toSeq.sorted,
-      committedAt = (j \ "committed_at").extract[String])
+      committedAt = (j \ "committed_at").extract[String],
+      versions = (j \ "versions") match {
+        case JArray(vs) => Some(vs.map(v => VersionSummary.ofFields(v.extract[Seq[Long]])))
+        case _ => None
+      })
   }
 
   // ------------------------------------------------ Hadoop FS metadata IO

@@ -11,10 +11,11 @@ import graft.TestSpark
 import graft.table.GraftTable.{EncodeResult, Options}
 
 /** A commit runs only the jobs that do its work, and that number does not
-  * grow with the table's history: an append on a table of 2 live manifest
-  * dirs and on one of 20 runs the same, pinned, number of Spark jobs. A side
-  * job that comes back (a manifest count, a totals aggregate over the kept
-  * manifests, a schema-inference pass) fails here.
+  * grow with the table's history: an append or a range delete on a table of
+  * 2 live manifest dirs and on one of 20 runs the same, pinned, number of
+  * Spark jobs. A side job that comes back (a manifest count, a totals
+  * aggregate over the kept manifests, a schema-inference pass, a manifest
+  * read for a whole-version answer the snapshot records) fails here.
   */
 class CommitJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -23,11 +24,11 @@ class CommitJobsSpec extends AnyFunSuite {
 
   /** Jobs of a one-block token append. Adaptive execution runs each
     * shuffle's map stage as a job of its own, so an aggregate or an
-    * exchange costs two: the stats pass, its sample and the block-id
-    * offset from the manifest (two each), the block write (two) and the
-    * manifest write (one).
+    * exchange costs two: the stats pass and its sample (two each), the
+    * block write (two) and the manifest write (one). The block-id offset
+    * comes from the snapshot's version summaries.
     */
-  private val TokenAppendJobs = 9
+  private val TokenAppendJobs = 7
 
   /** Jobs of a one-block generic append: the fingerprint and the block
     * write (two each) and the manifest write (one).
@@ -47,6 +48,24 @@ class CommitJobsSpec extends AnyFunSuite {
     assert(live == 20)
     val at20 = JobCounter(spark.sparkContext)(append(20))._2
     (at2, at20)
+  }
+
+  /** Jobs of a `deleteRange` that rewrites one one-block version: the
+    * count of the rows it keeps (two), the bounds sample (one), the block
+    * write (two) and the manifest write (one). The versions the range
+    * meets, and the totals they drop, come from the snapshot's version
+    * summaries.
+    */
+  private val DeleteRangeJobs = 6
+
+  /** Jobs of `op` on a table of `n` live versions made by `create(dir, i)`
+    * for `i` in `0 until n`.
+    */
+  private def jobsOn(n: Int, create: (String, Int) => Any)(op: String => Any): Int = {
+    val dir = Files.createTempDirectory("graft-jobs-op").toString
+    (0 until n).foreach(create(dir, _))
+    assert(GraftTable.currentSnapshot(spark, dir).get.manifestDirs.length == n)
+    JobCounter(spark.sparkContext)(op(dir))._2
   }
 
   private def tokenBatch(i: Int): DataFrame = spark.range(i * 50L, i * 50L + 50)
@@ -71,5 +90,36 @@ class CommitJobsSpec extends AnyFunSuite {
       else GenericTable.append(genericBatch(i), dir, Opts))
     assert(at2 == at20, s"2 live manifests: $at2 jobs, 20: $at20")
     assert(at20 == GenericAppendJobs)
+  }
+
+  private def createToken(dir: String, i: Int): Any = GraftTable.append(tokenBatch(i), dir, Opts)
+
+  private def createGeneric(dir: String, i: Int): Any =
+    if (i == 0) GenericTable.encode(genericBatch(0), dir, keyCol = "id", opts = Opts)
+    else GenericTable.append(genericBatch(i), dir, Opts)
+
+  test("a no-op compact runs no job, in both lanes") {
+    Seq[(String => EncodeResult, (String, Int) => Any)](
+      (dir => GraftTable.compact(spark, dir, Opts), createToken),
+      (dir => GenericTable.compact(spark, dir, Opts), createGeneric)).foreach {
+      case (compact, create) =>
+        // the first compact merges the 3 one-block versions; the second has
+        // nothing left to merge
+        val dir = Files.createTempDirectory("graft-jobs-compact").toString
+        (0 until 3).foreach(create(dir, _))
+        val merged = compact(dir)
+        assert(merged.blocksEncodedThisRun == 1)
+        val (again, n) = JobCounter(spark.sparkContext)(compact(dir))
+        assert(again.version == merged.version && again.blocksEncodedThisRun == 0)
+        assert(n == 0, s"a no-op compact ran $n jobs")
+    }
+  }
+
+  test("deleteRange: the same pinned job count on 2 and on 20 live versions") {
+    // rows [60, 69] are in batch 1 alone: one version is rewritten
+    val Seq(at2, at20) = Seq(2, 20).map(n =>
+      jobsOn(n, createGeneric)(dir => GenericTable.deleteRange(spark, dir, 60L, 69L, Opts)))
+    assert(at2 == at20, s"2 live versions: $at2 jobs, 20: $at20")
+    assert(at20 == DeleteRangeJobs)
   }
 }

@@ -15,7 +15,9 @@ import graft.table.GraftTable.Options
 /** Snapshot totals are arithmetic on the parent snapshot (parent + fresh,
   * parent − dropped + fresh). Over a long seeded mix of every commit kind
   * of a lane, each committed snapshot's totals and `content_sig` must still
-  * equal a full aggregate over its own manifest dirs.
+  * equal a full aggregate over its own manifest dirs, and the version
+  * summaries it records must name exactly those dirs, each equal to the
+  * aggregate over its own dir.
   */
 class TotalsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -38,6 +40,24 @@ class TotalsSpec extends AnyFunSuite {
         f"${r.getLong(5)}%016x")
     }
 
+  /** (blocks, rows, tokens, bytes, plain, sig, min key_min, max key_max,
+    * max block_id) of manifest dir `m`, read with an inferred schema; a
+    * token manifest has no key and spans 0. Manifest dirs never change
+    * once written, so each is aggregated once.
+    */
+  private val dirSummaries = scala.collection.mutable.Map.empty[String, Seq[Long]]
+
+  private def manifestSummary(dir: String, m: String): Seq[Long] =
+    dirSummaries.getOrElseUpdate(s"$dir/$m", {
+      val man = spark.read.json(s"$dir/$m")
+      def opt(c: String, f: String => org.apache.spark.sql.Column) =
+        if (man.columns.contains(c)) f(c) else lit(0L)
+      val r = man.agg(count(lit(1)), sum("row_count"), opt("token_count", sum),
+        sum("bytes_total"), sum("plain_bytes"), bit_xor(col("block_sig")),
+        opt("key_min", min), opt("key_max", max), max("block_id")).head()
+      (0 until 9).map(r.getLong)
+    })
+
   /** Checks every version committed since `from`; returns the next one. */
   private def checkFrom(dir: String, from: Int): Int = {
     val cur = GraftTable.currentSnapshot(spark, dir).get.version
@@ -45,6 +65,12 @@ class TotalsSpec extends AnyFunSuite {
       val s = GraftTable.snapshotVersion(spark, dir, v).get
       assert((s.blocksEncoded, s.rowCount, s.tokenCount, s.bytesTotal, s.plainBytes,
         s.contentSig) == manifestTotals(dir, s), s"v$v")
+      val versions = s.versions.getOrElse(fail(s"v$v records no version summaries"))
+      assert(versions.map(x => s"manifests/v${x.ver}") == s.manifestDirs, s"v$v")
+      versions.foreach { x =>
+        assert(x.fields.tail == manifestSummary(dir, s"manifests/v${x.ver}"),
+          s"v$v: summary of v${x.ver}")
+      }
     }
     cur + 1
   }
