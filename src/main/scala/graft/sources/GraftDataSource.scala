@@ -20,7 +20,7 @@ import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataC
   SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.functions.{array_position, col}
+import org.apache.spark.sql.functions.{array, arrays_overlap, coalesce, col, expr, lit}
 import org.apache.spark.sql.sources.{AlwaysFalse, AlwaysTrue, And, DataSourceRegister,
   EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull,
   IsNull, LessThan, LessThanOrEqual, Not, Or, StringContains, StringEndsWith,
@@ -34,7 +34,8 @@ import graft.table.{GenericTable, GraftTable}
 
 /** Spark DataSource V2 read path for graft token tables:
   * `spark.read.format("graft").load(tableDir)` or
-  * `CREATE TABLE t USING graft OPTIONS (path '...')`.
+  * `CREATE TABLE t USING graft OPTIONS (path '...')`. Its scan is also the
+  * only decoder behind every `GraftTable` read.
   *
   * What Catalyst hands the connector is used for real work at plan time:
   *   - column pruning (`SupportsPushDownRequiredColumns`) reaches the
@@ -42,14 +43,16 @@ import graft.table.{GenericTable, GraftTable}
   *     column, never the token/string payloads (≈half the read volume at
   *     100 TB);
   *   - `doc_id`/`source` equality and IN filters
-  *     (`SupportsPushDownFilters`) prune whole BLOCKS on the driver via
+  *     (`SupportsPushDownFilters`) and a pinned numeric doc_id interval
+  *     prune whole BLOCKS on the driver via
   *     the manifest zone maps (doc_id min/max, src_list) before any
   *     executor starts, and the surviving block ids become a parquet
   *     row-group + record filter inside each file. Filters are also left
   *     in the residual plan, so correctness never depends on pruning;
   *   - `SupportsReportStatistics` reports the snapshot's exact row/byte
   *     totals, so the optimizer can (e.g.) choose a broadcast join of a
-  *     decoded dimension table without scanning it.
+  *     decoded dimension table without scanning it. A scan of a pinned
+  *     snapshot (every Scala API read) reports its files' size instead.
   *
   * Generic (any-schema) tables are served by [[GraftGenericScanBuilder]],
   * which is also the only decoder behind every `GenericTable` read.
@@ -127,8 +130,7 @@ object GraftDataSource {
     * (conjunctive; None = untranslatable, the delete is rejected at
     * analysis via canDeleteWhere — never a silent partial delete).
     */
-  private[sources] def filterColumn(f: Filter): Option[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.{col, lit}
+  private[sources] def filterColumn(f: Filter): Option[org.apache.spark.sql.Column] =
     f match {
       case EqualTo(a, v) => Some(col(a) === lit(v))
       case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
@@ -151,7 +153,6 @@ object GraftDataSource {
       case _: AlwaysFalse => Some(lit(false))
       case _ => None
     }
-  }
 
   /** A batch rides the specialized token lane when it IS the token shape.
     * containsNull on `tokens` is ignored for routing: Spark's write
@@ -214,10 +215,10 @@ object GraftDataSource {
 }
 
 /** The connector's table. `pinned` fixes the snapshot a read sees instead
-  * of the current one, and `keyRange` adds a key interval to a generic
-  * scan: the Scala API reads generic tables through these (time travel,
-  * copy-on-write rewrites of a subset of versions, key ranges on keys
-  * whose SQL filters cannot reach the interval).
+  * of the current one, and `keyRange` adds a key interval to the scan (a
+  * generic table's range key, a token table's numeric doc_id): the Scala
+  * API reads both lanes through these (time travel, rewrites of a subset
+  * of versions, key ranges that SQL filters cannot express).
   */
 class GraftSparkTable private[graft] (
     tableDir: String,
@@ -268,11 +269,13 @@ class GraftSparkTable private[graft] (
 
   // a pinned snapshot may be a subset of a committed one, whose totals
   // then answer neither COUNT(*) nor the scan's statistics
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val committedTotals = pinned.isEmpty
     if (GenericTable.isGeneric(snap))
       new GraftGenericScanBuilder(tableDir, snap, genericSchema, writeSchemas, keyRange,
-        committedTotals = pinned.isEmpty)
-    else new GraftScanBuilder(tableDir, snap)
+        committedTotals)
+    else new GraftScanBuilder(tableDir, snap, keyRange, committedTotals)
+  }
 
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -330,7 +333,17 @@ class GraftWriteBuilder(tableDir: String, options: Map[String, String])
     }
 }
 
-class GraftScanBuilder(tableDir: String, snap: GraftTable.Snapshot)
+/** Token-lane scan builder, and the one decoder of the token lane: SQL
+  * reads and every `GraftTable` read plan its scan. `pinnedRange` is a
+  * numeric doc_id interval (`GraftTable.decodeRange`); `committedTotals`
+  * says whether `snap`'s totals describe its data dirs, as in
+  * [[GraftGenericScanBuilder]].
+  */
+class GraftScanBuilder(
+    tableDir: String,
+    snap: GraftTable.Snapshot,
+    pinnedRange: Option[(Long, Long)],
+    committedTotals: Boolean)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit {
 
@@ -349,11 +362,12 @@ class GraftScanBuilder(tableDir: String, snap: GraftTable.Snapshot)
     * exact row total — a metadata-only query, no data file is opened (the
     * Iceberg/parquet count optimization). Any filter or grouping falls
     * back to the normal scan: zone-map pruning is conservative, counts
-    * must be exact.
+    * must be exact. So does a pinned snapshot, whose totals may cover
+    * more data dirs than it lists.
     */
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    pushed.isEmpty && agg.groupByExpressions.isEmpty &&
+    committedTotals && pushed.isEmpty && agg.groupByExpressions.isEmpty &&
       agg.aggregateExpressions.nonEmpty &&
       agg.aggregateExpressions.forall(
         _.isInstanceOf[org.apache.spark.sql.connector.expressions.aggregate.CountStar])
@@ -392,7 +406,7 @@ class GraftScanBuilder(tableDir: String, snap: GraftTable.Snapshot)
 
   override def build(): Scan =
     if (countPushed) new GraftCountScan(tableDir, snap)
-    else new GraftScan(tableDir, snap, required, pushed, limit)
+    else new GraftScan(tableDir, snap, committedTotals, required, pushed, pinnedRange, limit)
 }
 
 /** Metadata-only COUNT(*): one partition, one row, zero data files read. */
@@ -452,26 +466,65 @@ object GraftScan {
   private[sources] def splitRanges(len: Long, splitBytes: Long): Seq[(Long, Long)] =
     if (len <= splitBytes || splitBytes <= 0) Seq((0L, Long.MaxValue))
     else (0L until len by splitBytes).map(s => (s, math.min(s + splitBytes, len)))
+
+  /** (version, parquet data file) of every file in `dataDirs`, in version
+    * order.
+    */
+  private[sources] def dataFiles(
+      tableDir: String, dataDirs: Seq[String]): Seq[(Int, org.apache.hadoop.fs.FileStatus)] = {
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
+    dataDirs.sortBy(GraftTable.versionOfDir).flatMap { d =>
+      val dir = new HPath(s"$tableDir/$d")
+      dir.getFileSystem(conf).listStatus(dir).toSeq.filter { st =>
+        val n = st.getPath.getName
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }.map(GraftTable.versionOfDir(d) -> _)
+    }
+  }
+
+  /** A scan's statistics: `snap`'s totals when they describe its data
+    * dirs (`committedTotals`), else the size of the files it reads.
+    */
+  private[sources] def statistics(
+      snap: GraftTable.Snapshot,
+      committedTotals: Boolean,
+      files: => Seq[(Int, org.apache.hadoop.fs.FileStatus)]): Statistics =
+    if (committedTotals) new Statistics {
+      override def sizeInBytes(): OptionalLong = OptionalLong.of(snap.bytesTotal)
+      override def numRows(): OptionalLong = OptionalLong.of(snap.rowCount)
+    } else new Statistics {
+      override def sizeInBytes(): OptionalLong =
+        OptionalLong.of(files.iterator.map(_._2.getLen).sum)
+      override def numRows(): OptionalLong = OptionalLong.empty()
+    }
 }
 
 class GraftScan(
     tableDir: String,
     snap: GraftTable.Snapshot,
+    committedTotals: Boolean,
     required: StructType,
     pushed: Array[Filter],
+    range: Option[(Long, Long)],
     limit: Int = -1) extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
 
   override def toBatch: Batch = this
 
-  override def estimateStatistics(): Statistics = new Statistics {
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(snap.bytesTotal)
-    override def numRows(): OptionalLong = OptionalLong.of(snap.rowCount)
-  }
+  override def estimateStatistics(): Statistics =
+    GraftScan.statistics(snap, committedTotals, files)
 
-  /** (docIdValues, sourceValues) the pushed filters demand (conjunctive). */
-  private def pushedValues: (Seq[String], Seq[String]) = {
+  private lazy val files = GraftScan.dataFiles(tableDir, snap.dataDirs)
+
+  /** The lane's one block selector, driver-side zone-map pruning: the
+    * blocks whose [doc_id_min, doc_id_max] meets the pinned interval and
+    * holds one of the pushed numeric doc_ids, and whose src_list holds one
+    * of the pushed sources. A bound that is not a number (a hash-keyed
+    * block's first or last id) or an overflowed src_list keeps its block.
+    * Returns ver -> allowed block ids; None = no pruning.
+    */
+  private lazy val allowedByVer: Option[Map[Int, Array[Int]]] = {
     var docIds = Seq.empty[String]
     var sources = Seq.empty[String]
     pushed.foreach {
@@ -481,31 +534,20 @@ class GraftScan(
       case In("source", vs) => sources = vs.map(_.asInstanceOf[String]).toSeq
       case _ =>
     }
-    (docIds, sources)
-  }
-
-  /** Driver-side zone-map pruning: blocks whose [doc_id_min, doc_id_max]
-    * can hold one of the doc_ids AND whose src_list intersects the sources.
-    * Blocks with unparseable bounds / overflowed src_list stay (never
-    * wrongly pruned). Returns ver -> allowed block ids; None = no pruning.
-    */
-  private lazy val allowedByVer: Option[Map[Int, Array[Int]]] = {
-    val (docIds, sources) = pushedValues
-    if (docIds.isEmpty && sources.isEmpty) None
+    // the block key of a numeric doc_id is its value; any other id's is a
+    // hash, which the bounds cannot place
+    val nums = docIds.flatMap(_.toLongOption)
+    val idPoints = if (nums.nonEmpty && nums.length == docIds.length) Some(nums) else None
+    // try_cast: bounds are strings, and a non-numeric one reads NULL
+    val lo = expr("try_cast(doc_id_min as bigint)")
+    val hi = expr("try_cast(doc_id_max as bigint)")
+    def meets(a: Long, b: Long) = coalesce(lo <= b, lit(true)) && coalesce(hi >= a, lit(true))
+    val conds = range.map { case (a, b) => meets(a, b) }.toSeq ++
+      idPoints.map(_.map(n => meets(n, n)).reduce(_ || _)) ++
+      Some(sources).filter(_.nonEmpty).map(ss =>
+        col("src_list").isNull || arrays_overlap(col("src_list"), array(ss.map(lit): _*)))
+    if (conds.isEmpty) None
     else {
-      val spark = SparkSession.active
-      var man = GraftTable.manifestRows(spark, tableDir, snap.manifestDirs)
-      docIds.flatMap(v => scala.util.Try(v.toLong).toOption) match {
-        case nums if nums.nonEmpty && nums.length == docIds.length =>
-          val lo = col("doc_id_min").cast("long")
-          val hi = col("doc_id_max").cast("long")
-          man = man.where(lo.isNull || hi.isNull ||
-            nums.map(n => lo.leq(n) && hi.geq(n)).reduce(_ || _))
-        case _ => // non-numeric doc_id: bounds are numeric, cannot prune
-      }
-      if (sources.nonEmpty)
-        man = man.where(col("src_list").isNull ||
-          sources.map(s => array_position(col("src_list"), s) > 0).reduce(_ || _))
       // Bounded collect: an UNSELECTIVE filter over a 15M-block table
       // would otherwise pull every surviving (ver, block_id) to the
       // driver and ship the array into each partition — the same
@@ -514,7 +556,9 @@ class GraftScan(
       // past the cap, pruning is skipped entirely (it is a pure
       // optimization — every filter stays residual in the Spark plan,
       // so correctness never depends on it).
-      val rows = man.select(col("ver").cast("int"), col("block_id").cast("int"))
+      val rows = GraftTable.manifestRows(SparkSession.active, tableDir, snap.manifestDirs)
+        .where(conds.reduce(_ && _))
+        .select(col("ver").cast("int"), col("block_id").cast("int"))
         .limit(GraftScan.MaxPrunedBlockIds + 1)
         .collect()
       if (rows.length > GraftScan.MaxPrunedBlockIds) None
@@ -525,26 +569,15 @@ class GraftScan(
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    val conf = spark.sparkContext.hadoopConfiguration
-    val splitBytes = spark.sessionState.conf.filesMaxPartitionBytes
-    val parts = Seq.newBuilder[InputPartition]
-    snap.dataDirs.foreach { d =>
-      val ver = GraftTable.versionOfDir(d)
+    val splitBytes = SparkSession.active.sessionState.conf.filesMaxPartitionBytes
+    files.flatMap { case (ver, st) =>
+      // a fully-pruned version's files are skipped
       val allowed = allowedByVer.map(_.getOrElse(ver, Array.empty[Int]))
-      if (!allowed.exists(_.isEmpty)) { // fully-pruned version: skip its files
-        val dir = new HPath(s"$tableDir/$d")
-        val fs = dir.getFileSystem(conf)
-        fs.listStatus(dir).foreach { st =>
-          val n = st.getPath.getName
-          if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-            GraftScan.splitRanges(st.getLen, splitBytes).foreach { case (s, e) =>
-              parts += GraftInputPartition(st.getPath.toString, allowed, s, e)
-            }
-        }
+      if (allowed.exists(_.isEmpty)) Nil
+      else GraftScan.splitRanges(st.getLen, splitBytes).map { case (s, e) =>
+        GraftInputPartition(st.getPath.toString, allowed, s, e)
       }
-    }
-    parts.result().toArray
+    }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -557,6 +590,7 @@ class GraftScan(
       .getOrElse("all")
     s"graft blocks=$pruned/${snap.blocksEncoded} " +
       s"columns=[${required.fieldNames.mkString(",")}] " +
+      s"range=${range.map(r => s"[${r._1},${r._2}]").getOrElse("all")} " +
       s"pushed=[${pushed.mkString(",")}]"
   }
 }

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.OptionalLong
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.filter2.compat.FilterCompat
@@ -204,34 +202,16 @@ class GraftGenericScan(
   override def toBatch: Batch = this
 
   override def estimateStatistics(): Statistics =
-    if (committedTotals) new Statistics {
-      override def sizeInBytes(): OptionalLong = OptionalLong.of(snap.bytesTotal)
-      override def numRows(): OptionalLong = OptionalLong.of(snap.rowCount)
-    } else new Statistics {
-      override def sizeInBytes(): OptionalLong =
-        OptionalLong.of(files.iterator.map(_._2.getLen).sum)
-      override def numRows(): OptionalLong = OptionalLong.empty()
-    }
+    GraftScan.statistics(snap, committedTotals, files)
 
   /** (version, parquet data file) of every file the scan reads: the live
     * dirs after whole-version pruning from the key spans the snapshot
     * records (no manifest read — the interval itself, never an id set).
     */
-  private lazy val files: Seq[(Int, org.apache.hadoop.fs.FileStatus)] = {
-    val spark = SparkSession.active
-    val conf = spark.sparkContext.hadoopConfiguration
-    val liveDirs = range match {
-      case Some((lo, hi)) => GenericTable.rangeDataDirs(spark, tableDir, snap, lo, hi)
-      case None => snap.dataDirs
-    }
-    liveDirs.sortBy(GraftTable.versionOfDir).flatMap { d =>
-      val dir = new HPath(s"$tableDir/$d")
-      dir.getFileSystem(conf).listStatus(dir).toSeq.filter { st =>
-        val n = st.getPath.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }.map(GraftTable.versionOfDir(d) -> _)
-    }
-  }
+  private lazy val files = GraftScan.dataFiles(tableDir, range match {
+    case Some((lo, hi)) => GenericTable.rangeDataDirs(SparkSession.active, tableDir, snap, lo, hi)
+    case None => snap.dataDirs
+  })
 
   override def planInputPartitions(): Array[InputPartition] = {
     val splitBytes = SparkSession.active.sessionState.conf.filesMaxPartitionBytes

@@ -3,7 +3,7 @@ package graft.table
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 import org.json4s._
@@ -712,10 +712,8 @@ object GraftTable {
     * Blocks are written exactly once under exactly one live data dir, so the
     * scan needs no manifest join.
     */
-  def readBlocks(spark: SparkSession, tableDir: String): DataFrame =
-    readBlocks(spark, tableDir, current(spark, tableDir))
-
-  def readBlocks(spark: SparkSession, tableDir: String, snap: Snapshot): DataFrame = {
+  def readBlocks(spark: SparkSession, tableDir: String): DataFrame = {
+    val snap = current(spark, tableDir)
     if (snap.dataDirs.isEmpty) {
       import spark.implicits._
       spark.emptyDataset[BlockRow].toDF()
@@ -749,66 +747,50 @@ object GraftTable {
     s
   }
 
+  /** Token rows of `snap` through the connector's token scan, the lane's
+    * one decoder. `snap` is a committed snapshot or a copy of one limited
+    * to some of its data dirs; `range` pins a numeric doc_id interval on
+    * the scan, which prunes blocks by their doc_id zone maps. Filters and
+    * projections on the frame reach the scan: `source` equality/IN prunes
+    * blocks by their src_list, and a projection reads only the payload
+    * columns it needs.
+    */
+  private def scanOf(
+      spark: SparkSession,
+      tableDir: String,
+      snap: Snapshot,
+      range: Option[(Long, Long)] = None): DataFrame =
+    org.apache.spark.sql.GraftSql.tableFrame(spark,
+      new graft.sources.GraftSparkTable(tableDir, null, Some(snap), range))
+
+  private def tokenRows(df: DataFrame): Dataset[TokenRow] = {
+    import df.sparkSession.implicits._
+    df.as[TokenRow]
+  }
+
   /** Time-travel decode: the token table exactly as of `version`. */
   def decodeAt(spark: SparkSession, tableDir: String, version: Int): Dataset[TokenRow] =
-    decodeSnap(spark, snapshotAt(spark, tableDir, version), tableDir)
+    tokenRows(scanOf(spark, tableDir, snapshotAt(spark, tableDir, version)))
 
   /** Decode the current snapshot back to the input-shaped token table.
     * Bit-identical per row to the encoded source (BASELINE.json:6).
     */
   def decode(spark: SparkSession, tableDir: String): Dataset[TokenRow] =
-    decodeSnap(spark, current(spark, tableDir), tableDir)
-
-  private def decodeSnap(
-      spark: SparkSession, snap: Snapshot, tableDir: String): Dataset[TokenRow] =
-    decodeRows(readBlocks(spark, tableDir, snap))
-
-  /** The token rows of `blocks`, a frame of data-file rows. */
-  private def decodeRows(blocks: DataFrame): Dataset[TokenRow] = {
-    import blocks.sparkSession.implicits._
-    blocks
-      .select(explode(arrays_zip(
-        graft_decode_str(col("pl_doc_id")).as("doc_id"),
-        graft_reslice(graft_decode(col("pl_tokens")), graft_decode(col("pl_n_tok")))
-          .as("tokens"),
-        graft_decode_str(col("pl_source")).as("source"))).as("r"))
-      .select(
-        col("r.doc_id").as("doc_id"),
-        col("r.tokens").as("tokens"),
-        size(col("r.tokens")).as("n_tok"),
-        col("r.source").as("source"))
-      .as[TokenRow]
-  }
+    tokenRows(scanOf(spark, tableDir, current(spark, tableDir)))
 
   /** Column-pruned decode: reconstruct only `columns` (any subset of
     * doc_id / tokens / n_tok / source, emitted in canonical order). The
     * scan reads ONLY the payload columns those need — a tokens-only
     * training feed skips the string payloads entirely, which at 100 TB is
-    * roughly half the read volume (PlanSpec asserts the pruned ReadSchema).
+    * roughly half the read volume (PlanSpec asserts the scan's columns).
     */
   def decodeSelect(
       spark: SparkSession, tableDir: String, columns: Seq[String]): DataFrame = {
     val valid = Seq("doc_id", "tokens", "n_tok", "source")
     require(columns.nonEmpty && columns.forall(valid.contains),
       s"decodeSelect columns must be among ${valid.mkString(", ")}")
-    val want = valid.filter(columns.contains)
-    val arrays = Seq.newBuilder[org.apache.spark.sql.Column]
-    if (want.contains("doc_id"))
-      arrays += graft_decode_str(col("pl_doc_id")).as("doc_id")
-    if (want.contains("tokens"))
-      arrays += graft_reslice(graft_decode(col("pl_tokens")), graft_decode(col("pl_n_tok")))
-        .as("tokens")
-    if (want.contains("n_tok") && !want.contains("tokens"))
-      arrays += graft_decode(col("pl_n_tok")).as("n_tok")
-    if (want.contains("source"))
-      arrays += graft_decode_str(col("pl_source")).as("source")
-    val exploded = readBlocks(spark, tableDir)
-      .select(explode(arrays_zip(arrays.result(): _*)).as("r"))
-    val out = want.map {
-      case "n_tok" if want.contains("tokens") => size(col("r.tokens")).as("n_tok")
-      case c => col(s"r.$c").as(c)
-    }
-    exploded.select(out: _*)
+    scanOf(spark, tableDir, current(spark, tableDir))
+      .select(valid.filter(columns.contains).map(col): _*)
   }
 
   /** The schema token blocks are written with. */
@@ -915,8 +897,7 @@ object GraftTable {
 
     // decode ONLY the fragmented versions: data dir vN holds exactly the
     // blocks with ver = N
-    val rows = decodeRows(readBlocks(spark, tableDir,
-      p.copy(dataDirs = p.dataDirs.filter(d => frag(verOf(d)))))).toDF()
+    val rows = scanOf(spark, tableDir, p.copy(dataDirs = p.dataDirs.filter(d => frag(verOf(d)))))
 
     val ver = p.version + 1
     val keyed = keyedOf(rows)
@@ -977,10 +958,10 @@ object GraftTable {
   def registerViews(spark: SparkSession, tableDir: String, name: String = "graft"): Unit = {
     readBlocks(spark, tableDir).createOrReplaceTempView(s"${name}_blocks")
     readManifest(spark, tableDir).createOrReplaceTempView(s"${name}_manifest")
-    // the decoded view routes through the DSv2 connector (both lanes), so
-    // SQL over the view keeps block pruning, key-range interval pushdown,
-    // column projection, and metadata COUNT(*) — a view over the eager
-    // decode DataFrame would full-decode then filter
+    // the decoded view reads the connector unpinned (both lanes), so SQL
+    // over the view keeps block pruning, key-range interval pushdown and
+    // column projection, and also answers COUNT(*) from the current
+    // snapshot's totals, which a view over decode()'s pinned scan would not
     spark.read.format("graft").load(tableDir).createOrReplaceTempView(name)
   }
 
@@ -1047,70 +1028,35 @@ object GraftTable {
   }
 
   /** Decode only the rows whose numeric doc_id falls in [minId, maxId]:
-    * block-level pruning via the snapshot's range bounds (metadata-only —
-    * the same summary-stats partition elimination Iceberg manifests give),
-    * then an exact row filter on the decoded slice. At 10^12 rows this
-    * reads ceil(span/blockSpan) blocks instead of the table.
+    * block-level pruning via the manifest's doc_id zone maps (the same
+    * summary-stats partition elimination Iceberg manifests give), then an
+    * exact row filter on the decoded slice. At 10^12 rows this reads
+    * ceil(span/blockSpan) blocks instead of the table. A block whose first
+    * or last doc_id is not a number can still hold in-range numeric ids
+    * (hash keys interleave them), so the scan keeps it and the row filter
+    * decides.
     */
   def decodeRange(
-      spark: SparkSession, tableDir: String, minId: Long, maxId: Long): Dataset[TokenRow] = {
-    // live blocks whose [doc_id_min, doc_id_max] intersects [minId, maxId]
-    // — works for both ranged encodes and appended versions; the id set is
-    // applied as a semi join so it never collects to the driver. A block
-    // whose min/max doc_id is NON-numeric casts to NULL — such blocks can
-    // still contain in-range numeric ids (hash-key fallback interleaves
-    // them), so NULL bounds are NON-prunable (coalesce → keep) and the
-    // exact row filter below decides.
-    val snap = current(spark, tableDir)
-    val hit = manifestRows(spark, tableDir, snap.manifestDirs)
-      .where(coalesce(expr("try_cast(doc_id_max as bigint)") >= minId, lit(true)) &&
-        coalesce(expr("try_cast(doc_id_min as bigint)") <= maxId, lit(true)))
-      .select(col("ver").cast("int").as("ver"),
-        col("block_id").cast("int").as("block_id"))
-    decodeBlocks(spark, tableDir, snap, hit)
-      .where(expr("try_cast(doc_id as bigint)").between(minId, maxId))
-  }
+      spark: SparkSession, tableDir: String, minId: Long, maxId: Long): Dataset[TokenRow] =
+    tokenRows(scanOf(spark, tableDir, current(spark, tableDir), Some((minId, maxId)))
+      .where(expr("try_cast(doc_id as bigint)").between(minId, maxId)))
 
-  /** Decode only the rows whose `source` is one of `sources`: block-level
-    * pruning via the manifest's per-block distinct-source zone map
-    * (`src_list`, recorded during assembly), then an exact row filter on
-    * the decoded slice. Sources are low-cardinality provenance labels and
-    * range partitioning is on doc_id, so a single source typically touches
-    * a minority of blocks only when ingestion batches correlate with
-    * source — exactly the case zone maps exist for. Blocks whose list
-    * overflowed the cap carry null and are kept (never wrongly pruned).
+  /** Decode only the rows whose `source` is one of `sources`: the filter
+    * reaches the scan, which prunes blocks by the manifest's per-block
+    * distinct-source zone map (`src_list`, recorded during assembly), and
+    * stays as the exact row filter. Sources are low-cardinality provenance
+    * labels and range partitioning is on doc_id, so a single source
+    * typically touches a minority of blocks only when ingestion batches
+    * correlate with source — exactly the case zone maps exist for. Blocks
+    * whose list overflowed the cap carry null and are kept (never wrongly
+    * pruned).
     */
   def decodeWhere(
       spark: SparkSession, tableDir: String, sources: Seq[String]): Dataset[TokenRow] = {
     require(sources.nonEmpty, "decodeWhere needs at least one source value")
-    val snap = current(spark, tableDir)
-    val hit = manifestRows(spark, tableDir, snap.manifestDirs).where(holdsSources(sources))
-      .select(col("ver").cast("int").as("ver"),
-        col("block_id").cast("int").as("block_id"))
-    decodeBlocks(spark, tableDir, snap, hit)
-      .where(col("source").isin(sources.map(s => s: Any): _*))
+    tokenRows(scanOf(spark, tableDir, current(spark, tableDir))
+      .where(col("source").isin(sources.map(s => s: Any): _*)))
   }
-
-  /** Manifest rows whose block may hold one of `sources` (a null
-    * `src_list` overflowed its cap and is kept).
-    */
-  private def holdsSources(sources: Seq[String]): Column =
-    col("src_list").isNull || arrays_overlap(col("src_list"), array(sources.map(lit): _*))
-
-  /** Block ids [[decodeWhere]] would read — PlanSpec asserts pruning. */
-  private[table] def blocksForSources(
-      spark: SparkSession, tableDir: String, sources: Seq[String]): Long =
-    manifestRows(spark, tableDir, current(spark, tableDir).manifestDirs)
-      .where(holdsSources(sources)).count()
-
-  /** The token rows of `snap`'s blocks listed in `liveBlocks` (ver, block_id),
-    * a selection from the same snapshot's manifest.
-    */
-  private def decodeBlocks(
-      spark: SparkSession, tableDir: String, snap: Snapshot,
-      liveBlocks: DataFrame): Dataset[TokenRow] =
-    decodeRows(readBlocks(spark, tableDir, snap)
-      .join(broadcast(liveBlocks), Seq("ver", "block_id"), "left_semi"))
 
   /** The current snapshot's manifest with every field its JSON holds (the
     * schema is inferred): the user-facing view behind [[describe]], the

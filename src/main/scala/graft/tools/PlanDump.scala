@@ -39,12 +39,13 @@ object PlanDump {
       Tokenize.tokenTable(spark, sfDir).toDF())
 
     dump("Column-pruned decode (tokens only)",
-      "ReadSchema carries only pl_tokens/pl_n_tok (+ block metadata): the string payloads are never read.",
+      "The connector scan reads columns=[tokens]: its reader opens only the pl_tokens/pl_n_tok " +
+        "payloads (+ block_id), so the string payloads are never read.",
       GraftTable.decodeSelect(spark, dir, Seq("tokens")))
 
     dump("decodeRange(100, 150)",
-      "Manifest min/max prune to the covering blocks (broadcast semi join on (ver, block_id)), " +
-        "then the exact row filter.",
+      "The scan's pinned range=[100,150] prunes on the driver to the blocks whose manifest " +
+        "doc_id bounds meet it (blocks=<kept>/<total>); the exact row filter stays above the scan.",
       GraftTable.decodeRange(spark, dir, 100L, 150L).toDF())
 
     dump("Banded-LSH ANN top-k",
@@ -87,10 +88,11 @@ object PlanDump {
       gdir, GraftTable.Options(targetRowsPerBlock = 64))
 
     dump("Generic decodeRange over an evolved table",
-      "key_min/key_max zone-map predicate reaches each version's parquet scan as PushedFilters " +
-        "(row-group pruning); versions sharing a write schema share ONE scan branch; " +
-        "non-overlapping versions' data dirs are dropped via the manifest key spans " +
-        "before any footer opens; columns a version predates project as null.",
+      "ONE connector scan with range=[100,150]: versions whose recorded key spans miss " +
+        "the interval are dropped before any footer opens, and the interval reaches each " +
+        "file as a parquet row-group/record filter on key_min/key_max; each version decodes " +
+        "under its own write schema and columns it predates read null; the exact row " +
+        "filter stays above the scan.",
       graft.table.GenericTable.decodeRange(spark, gdir, 100L, 150L))
 
     val deepDir = java.nio.file.Files.createTempDirectory("graft-plandeep").toString
@@ -102,10 +104,9 @@ object PlanDump {
         expr("array(map(lang, CAST(n_chars AS INT)))").as("lm")),
       deepDir, keyCol = "doc_id", opts = GraftTable.Options(targetRowsPerBlock = 64))
     dump("Arbitrary-depth nested decode (array<array<array<int>>> + array<map>)",
-      "depth composes from the same two-leg step per level (inner-lengths leg + " +
-        "recursively restored flat leg), so the whole restore is ONE expression tree " +
-        "over the decoded leaves -- no shuffle, no extra scan branch, still one scan " +
-        "per schema epoch.",
+      "the connector scan restores every depth inside its reader, straight into " +
+        "Catalyst arrays and maps: the plan is ONE scan -- no shuffle, no expression " +
+        "tree, no extra branch.",
       graft.table.GenericTable.decode(spark, deepDir))
 
     dump("Near-dup cluster labels (final round output)",

@@ -122,6 +122,48 @@ class DataSourceSpec extends AnyFunSuite {
     assert(spark.read.format("graft").load(tableDir).count() == 500)
   }
 
+  test("doc_id pruning keeps blocks with non-numeric bounds (ANSI on)") {
+    // 200 non-numeric ids (hash keys) around 20 numeric ids: blocks whose
+    // first or last doc_id is not a number must neither fail the prune
+    // nor be dropped by it
+    val rows = (0 until 200).map(i =>
+      graft.table.TokenRow(s"alpha-$i", Array(i % 31), 1, "s")) ++
+      (1 to 20).map(i => graft.table.TokenRow(i.toString, Array(i % 31), 1, "s"))
+    val dir = Files.createTempDirectory("graft-dsv2-alpha").toString
+    val res = GraftTable.encode(rows.toDF(), dir, GraftTable.Options(targetRowsPerBlock = 64))
+    assert(res.complete && res.numBlocks > 1)
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("doc_id").as[String].collect().toSeq.sorted
+    val one = spark.read.format("graft").load(dir).where("doc_id = '7'")
+    assert(ids(one) == Seq("7"))
+    assert(one.count() == 1)
+    assert(ids(one) == ids(GraftTable.decodeRange(spark, dir, 7L, 7L).toDF()))
+    val two = spark.read.format("graft").load(dir).where("doc_id IN ('7', '8')")
+    assert(ids(two) == Seq("7", "8"))
+    assert(ids(two) == ids(GraftTable.decodeRange(spark, dir, 7L, 8L).toDF()))
+  }
+
+  test("a scan pinned to some of a snapshot's versions counts its own rows") {
+    val dir = Files.createTempDirectory("graft-dsv2-pin").toString
+    val opts = GraftTable.Options(targetRowsPerBlock = 64)
+    val tok = Tokenize.tokenTable(spark, SfDir).toDF()
+    GraftTable.encode(tok.where(col("doc_id").cast("long") < 300), dir, opts)
+    GraftTable.append(tok.where(col("doc_id").cast("long") >= 300), dir, opts)
+    val snap = GraftTable.currentSnapshot(spark, dir).get
+    val fragment = org.apache.spark.sql.GraftSql.tableFrame(spark,
+      new GraftSparkTable(dir, null, Some(snap.copy(dataDirs = Seq(snap.dataDirs.last))), None))
+    // neither COUNT(*) nor the statistics answer from the full snapshot
+    assert(fragment.count() == 200)
+    assert(fragment.collect().length == 200)
+    val stats = scanOf(fragment).scan
+      .asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
+      .estimateStatistics()
+    val fileBytes = new java.io.File(s"$dir/${snap.dataDirs.last}").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+    assert(!stats.numRows().isPresent)
+    assert(stats.sizeInBytes().getAsLong == fileBytes)
+  }
+
   test("COUNT(*) answers from snapshot metadata; appended versions scan fine") {
     val dir = Files.createTempDirectory("graft-dsv2-ct").toString
     val opts = GraftTable.Options(targetRowsPerBlock = 64)

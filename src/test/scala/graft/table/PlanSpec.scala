@@ -2,6 +2,7 @@ package graft.table
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,8 +10,9 @@ import graft.TestSpark
 
 /** Physical-plan quality gates (the "explain and iterate" requirement):
   * column pruning and predicate pushdown must reach the Parquet scan of the
-  * encoded table, and the codec expressions must stay inside whole-stage
-  * codegen (ExprSpec covers the WSCG assertion for encode/decode).
+  * encoded blocks and the connector scan of every token read, and the
+  * codec expressions must stay inside whole-stage codegen (ExprSpec covers
+  * the WSCG assertion for encode/decode).
   */
 class PlanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -35,14 +37,16 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  /** The `columns=[...]` the connector scan of `df` reads. */
+  private def scanColumns(df: DataFrame): String = {
+    val plan = df.queryExecution.executedPlan.toString
+    "columns=\\[[^\\]]*\\]".r.findFirstIn(plan).getOrElse(fail(s"no graft scan: $plan"))
+  }
+
   test("decodeSelect(tokens) reads only the token payloads") {
     val df = GraftTable.decodeSelect(spark, tableDir, Seq("tokens", "n_tok"))
-    val plan = df.queryExecution.executedPlan.toString
-    val readSchema = "ReadSchema: [^\\n]*".r.findFirstIn(plan).getOrElse("")
-    assert(readSchema.contains("pl_tokens") && readSchema.contains("pl_n_tok"), plan)
-    Seq("pl_doc_id", "pl_source").foreach { c =>
-      assert(!readSchema.contains(c), s"$c not pruned: $readSchema")
-    }
+    // the scan's columns pick its payloads: pl_tokens and pl_n_tok only
+    assert(scanColumns(df) == "columns=[tokens,n_tok]")
     // values equal the full decode's projection
     val full = GraftTable.decode(spark, tableDir).toDF()
       .agg(sum(Tokenize.checksumCol(col("tokens"))), sum(col("n_tok").cast("long"))).head()
@@ -51,11 +55,25 @@ class PlanSpec extends AnyFunSuite {
     assert(full == slim)
     // n_tok-only variant skips even pl_tokens
     val nOnly = GraftTable.decodeSelect(spark, tableDir, Seq("n_tok"))
-    val rs2 = "ReadSchema: [^\\n]*".r
-      .findFirstIn(nOnly.queryExecution.executedPlan.toString).getOrElse("")
-    assert(rs2.contains("pl_n_tok") && !rs2.contains("pl_tokens"), rs2)
+    assert(scanColumns(nOnly) == "columns=[n_tok]")
     assert(nOnly.agg(sum(col("n_tok").cast("long"))).head() ==
       GraftTable.decode(spark, tableDir).toDF().agg(sum(col("n_tok").cast("long"))).head())
+  }
+
+  test("every token read plans one connector scan and no expression decode") {
+    val reads = Seq(
+      "decode" -> GraftTable.decode(spark, tableDir).toDF(),
+      "decodeAt" -> GraftTable.decodeAt(spark, tableDir, 1).toDF(),
+      "decodeSelect" -> GraftTable.decodeSelect(spark, tableDir, Seq("tokens")),
+      "decodeRange" -> GraftTable.decodeRange(spark, tableDir, 100L, 150L).toDF(),
+      "decodeWhere" -> GraftTable.decodeWhere(spark, tableDir, Seq("src3")).toDF())
+    reads.foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert("BatchScan graft".r.findAllMatchIn(plan).length == 1, s"$name: $plan")
+      Seq("graft_decode", "Generate").foreach { n =>
+        assert(!plan.contains(n), s"$name plans $n: $plan")
+      }
+    }
   }
 
   test("block-range predicates push down to the Parquet scan") {

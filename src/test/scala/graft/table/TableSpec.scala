@@ -493,14 +493,17 @@ class TableSpec extends AnyFunSuite {
     val res = GraftTable.encode(rows.toDF(), dir,
       GraftTable.Options(targetRowsPerBlock = 64))
     assert(res.complete)
-    val got = GraftTable.decodeWhere(spark, dir, Seq("src2"))
+    val src2 = GraftTable.decodeWhere(spark, dir, Seq("src2"))
+    val got = src2
       .collect().map(r => (r.doc_id, r.tokens.toSeq, r.source)).sortBy(_._1.toLong)
     val want = rows.filter(_.source == "src2")
       .map(r => (r.doc_id, r.tokens.toSeq, r.source)).sortBy(_._1.toLong)
     assert(got.sameElements(want))
     // zone-map pruning is real: src2 occupies ~1/4 of the key space, so
-    // the touched block count must be well below the total
-    val touched = GraftTable.blocksForSources(spark, dir, Seq("src2"))
+    // the block count decodeWhere's scan reads must be well below the total
+    val plan = src2.queryExecution.executedPlan.toString
+    val touched = "blocks=(\\d+)/".r.findFirstMatchIn(plan).map(_.group(1).toInt)
+      .getOrElse(fail(s"no pruned scan in the plan: $plan"))
     assert(touched < res.numBlocks / 2,
       s"no pruning: $touched of ${res.numBlocks} blocks")
     // multi-source select works too
