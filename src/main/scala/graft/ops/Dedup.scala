@@ -144,6 +144,13 @@ object Dedup {
     org.apache.spark.sql.GraftSql.column(graft.expr.WordShingles(
       org.apache.spark.sql.GraftSql.expression(text), k))
 
+  /** Whether doc id `a` orders before `b` numerically: by length, then
+    * lexicographically — the one order every pair output follows
+    * (`doc_a` before `doc_b`).
+    */
+  private def idBefore(a: Column, b: Column): Column =
+    length(a) < length(b) || (length(a) === length(b) && a < b)
+
   /** Exact duplicates via content digest: `is_dup` marks every row after
     * the first (by doc_id order) with the same text.
     */
@@ -235,10 +242,7 @@ object Dedup {
     val candidates = a.join(b,
         col("a.band") === col("b.band") &&
           col("a.bucket") === col("b.bucket") &&
-          // numeric doc_id order via (length, lexicographic)
-          (length(col("a.doc_id")) < length(col("b.doc_id")) ||
-            (length(col("a.doc_id")) === length(col("b.doc_id")) &&
-              col("a.doc_id") < col("b.doc_id"))))
+          idBefore(col("a.doc_id"), col("b.doc_id")))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .dropDuplicates("doc_a", "doc_b") // same pair from multiple bands
 
@@ -314,10 +318,7 @@ object Dedup {
     val b = prefixed.alias("b")
     val candidates = a.join(b,
         col("a.g") === col("b.g") &&
-          // numeric doc_id order via (length, lexicographic)
-          (length(col("a.doc_id")) < length(col("b.doc_id")) ||
-            (length(col("a.doc_id")) === length(col("b.doc_id")) &&
-              col("a.doc_id") < col("b.doc_id"))) &&
+          idBefore(col("a.doc_id"), col("b.doc_id")) &&
           // size filter: t·max ≤ min is necessary for Jaccard ≥ t
           col("a.sz") >= col("b.sz") * threshold &&
           col("b.sz") >= col("a.sz") * threshold)
@@ -375,9 +376,7 @@ object Dedup {
     a.join(b,
         col("a.band") === col("b.band") &&
           col("a.bucket") === col("b.bucket") &&
-          (length(col("a.doc_id")) < length(col("b.doc_id")) ||
-            (length(col("a.doc_id")) === length(col("b.doc_id")) &&
-              col("a.doc_id") < col("b.doc_id"))))
+          idBefore(col("a.doc_id"), col("b.doc_id")))
       .select(
         col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.sk").as("sk_a"), col("b.sk").as("sk_b"))
@@ -672,9 +671,7 @@ object Dedup {
     val a = sh.alias("a")
     val b = sh.alias("b")
     a.crossJoin(b)
-      .where(length(col("a.doc_id")) < length(col("b.doc_id")) ||
-        (length(col("a.doc_id")) === length(col("b.doc_id")) &&
-          col("a.doc_id") < col("b.doc_id")))
+      .where(idBefore(col("a.doc_id"), col("b.doc_id")))
       .select(
         col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         (size(array_intersect(col("a.sh"), col("b.sh"))).cast("double") /

@@ -28,6 +28,33 @@ object StreamingEncode {
 
   private[streaming] val BatchKey = "stream_batch_id"
 
+  /** Runs `append(cur)` for a batch that is neither empty nor already
+    * applied (its id at or below the recorded one), `cur` being the
+    * current snapshot; returns whether it ran. `append` must commit
+    * `batchMeta(batchId)` with the batch's last commit.
+    */
+  private def applyOnce(batch: DataFrame, batchId: Long, tableDir: String)(
+      append: Option[GraftTable.Snapshot] => Any): Boolean = {
+    val cur = GraftTable.currentSnapshot(batch.sparkSession, tableDir)
+    val applied = cur.flatMap(_.stats.toMap.get(BatchKey)).map(_.toLong)
+    if (applied.exists(batchId <= _) || batch.isEmpty) false
+    else { append(cur); true }
+  }
+
+  private def batchMeta(batchId: Long): Map[String, String] = Map(BatchKey -> batchId.toString)
+
+  /** The stream's sink: `apply` on each micro-batch, checkpointed at
+    * `checkpointDir`.
+    */
+  private def sink(stream: DataFrame, checkpointDir: String, outputMode: String,
+      trigger: Trigger)(apply: (DataFrame, Long) => Boolean): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(outputMode)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) => apply(batch, batchId); () }
+      .start()
+
   /** Idempotent per-batch apply; returns true when the batch was appended,
     * false when skipped as already applied. Exposed for direct testing of
     * the replay path.
@@ -36,18 +63,9 @@ object StreamingEncode {
       batch: DataFrame,
       batchId: Long,
       tableDir: String,
-      opts: GraftTable.Options = GraftTable.Options()): Boolean = {
-    val spark = batch.sparkSession
-    val applied = GraftTable.currentSnapshot(spark, tableDir)
-      .flatMap(_.stats.toMap.get(BatchKey)).map(_.toLong)
-    if (applied.exists(batchId <= _)) false
-    else if (batch.isEmpty) false
-    else {
-      GraftTable.append(batch, tableDir, opts,
-        extraMeta = Map(BatchKey -> batchId.toString))
-      true
-    }
-  }
+      opts: GraftTable.Options = GraftTable.Options()): Boolean =
+    applyOnce(batch, batchId, tableDir)(_ =>
+      GraftTable.append(batch, tableDir, opts, extraMeta = batchMeta(batchId)))
 
   def start(
       stream: DataFrame,
@@ -55,14 +73,7 @@ object StreamingEncode {
       checkpointDir: String,
       opts: GraftTable.Options = GraftTable.Options(),
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, tableDir, opts); ()
-      }
-      .start()
+    sink(stream, checkpointDir, "append", trigger)(applyBatch(_, _, tableDir, opts))
 
   /** Generic-lane twin of [[applyBatch]]: any supported schema, same
     * batchId-idempotent exactly-once contract, schema evolution included
@@ -74,20 +85,13 @@ object StreamingEncode {
       batchId: Long,
       tableDir: String,
       keyCol: String = "",
-      opts: GraftTable.Options = GraftTable.Options()): Boolean = {
-    val cur = GraftTable.currentSnapshot(batch.sparkSession, tableDir)
-    val applied = cur.flatMap(_.stats.toMap.get(BatchKey)).map(_.toLong)
-    if (applied.exists(batchId <= _)) false
-    else if (batch.isEmpty) false
-    else {
-      val meta = Map(BatchKey -> batchId.toString)
+      opts: GraftTable.Options = GraftTable.Options()): Boolean =
+    applyOnce(batch, batchId, tableDir) { cur =>
       // the first batch picks the key column; append has no keyCol
       if (cur.isEmpty)
-        GenericTable.encode(batch, tableDir, keyCol, opts, extraMeta = meta)
-      else GenericTable.append(batch, tableDir, opts, extraMeta = meta)
-      true
+        GenericTable.encode(batch, tableDir, keyCol, opts, extraMeta = batchMeta(batchId))
+      else GenericTable.append(batch, tableDir, opts, extraMeta = batchMeta(batchId))
     }
-  }
 
   /** CDC-style upsert ingest: each micro-batch's rows REPLACE same-key
     * rows and new keys append ([[GenericTable.deleteKeys]] + append),
@@ -103,24 +107,15 @@ object StreamingEncode {
       batchId: Long,
       tableDir: String,
       keyCol: String,
-      opts: GraftTable.Options = GraftTable.Options()): Boolean = {
-    val spark = batch.sparkSession
-    val cur = GraftTable.currentSnapshot(spark, tableDir)
-    val applied = cur.flatMap(_.stats.toMap.get(BatchKey)).map(_.toLong)
-    if (applied.exists(batchId <= _)) false
-    else if (batch.isEmpty) false
-    else {
-      val meta = Map(BatchKey -> batchId.toString)
-      if (cur.isEmpty)
-        GenericTable.encode(batch, tableDir, keyCol, opts, extraMeta = meta)
-      else {
-        val key = GenericTable.keyNameOf(cur.get)
-        GenericTable.deleteKeys(spark, tableDir, batch.select(batch(key)), opts)
-        GenericTable.append(batch, tableDir, opts, extraMeta = meta)
-      }
-      true
+      opts: GraftTable.Options = GraftTable.Options()): Boolean =
+    applyOnce(batch, batchId, tableDir) {
+      case None =>
+        GenericTable.encode(batch, tableDir, keyCol, opts, extraMeta = batchMeta(batchId))
+      case Some(cur) =>
+        val key = GenericTable.keyNameOf(cur)
+        GenericTable.deleteKeys(batch.sparkSession, tableDir, batch.select(batch(key)), opts)
+        GenericTable.append(batch, tableDir, opts, extraMeta = batchMeta(batchId))
     }
-  }
 
   /** Streaming upsert-by-key into a generic table (CDC apply). */
   def startUpsert(
@@ -130,14 +125,7 @@ object StreamingEncode {
       keyCol: String,
       opts: GraftTable.Options = GraftTable.Options(),
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("update")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchUpsert(batch, batchId, tableDir, keyCol, opts); ()
-      }
-      .start()
+    sink(stream, checkpointDir, "update", trigger)(applyBatchUpsert(_, _, tableDir, keyCol, opts))
 
   /** Micro-batch ingest of ANY supported schema into a generic table. */
   def startGeneric(
@@ -147,12 +135,5 @@ object StreamingEncode {
       keyCol: String = "",
       opts: GraftTable.Options = GraftTable.Options(),
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchGeneric(batch, batchId, tableDir, keyCol, opts); ()
-      }
-      .start()
+    sink(stream, checkpointDir, "append", trigger)(applyBatchGeneric(_, _, tableDir, keyCol, opts))
 }

@@ -84,6 +84,15 @@ private[table] object Commit {
     /** These versions without `vers`. */
     def drop(vers: Set[Int]): Totals = Totals(versions.filterNot(v => vers(v.ver)))
 
+    /** The versions a compact merges: those whose average block fill is
+      * below `minFill` rows; none when there is nothing to merge (no such
+      * version, or one of one block).
+      */
+    def fragments(minFill: Double): Set[Int] = versions.filter(_.fill < minFill) match {
+      case Seq(one) if one.sums.blocks <= 1 => Set.empty
+      case frag => frag.map(_.ver).toSet
+    }
+
     /** The snapshot of these totals; `stats` are sorted here. */
     def snapshot(
         version: Int,

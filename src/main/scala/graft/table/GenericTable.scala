@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.codec.Hashing
-import graft.functions.{graft_codec, graft_range_bucket}
+import graft.functions.graft_codec
 import graft.table.Commit.{carriedMeta, timed}
-import graft.table.GraftTable.{EncodeResult, Options, Snapshot, current}
+import graft.table.GraftTable.{EncodeResult, Options, Snapshot, current, scanOf}
 
 /** Any-schema encoded table (SURVEY.md §2.1 R3/R4 — the ebenezer
   * any-thrift-struct capability): encode an ARBITRARY DataFrame into the
@@ -35,15 +35,17 @@ import graft.table.GraftTable.{EncodeResult, Options, Snapshot, current}
   * empty structs (binary at any position, including inside arrays, is
   * supported via the bin/arr_bin kinds).
   *
-  * Shares the token table's scale machinery: hash-strided sampled range
-  * bounds ([[GraftTable.computeBounds]] — distributed, layout-independent),
-  * broadcast bucket probe, one explicit hash exchange + Tungsten
-  * sortWithinPartitions + a streaming one-block-at-a-time assembler, resume
-  * by manifest anti-join. Because the generic row hash covers EVERY leaf
-  * value, the input fingerprint here is value-complete — no separate
-  * resume-confirm scan is needed (the token path keeps the cheap-scalar +
-  * confirm split because hashing 10^12-token arrays on every encode is the
-  * dominant cost there; hashing once per generic row is not).
+  * Shares the token table's block-write path ([[BlockWrite]]): hash-strided
+  * sampled range bounds (distributed, layout-independent, flat or
+  * two-level), the bucket probe, resume by manifest anti-join, the block
+  * filter and the ephemeral-bounds batch write; this lane adds one
+  * explicit hash exchange + Tungsten sortWithinPartitions + a streaming
+  * one-block-at-a-time assembler. Because the generic row hash covers
+  * EVERY leaf value, the input fingerprint here is value-complete — no
+  * separate resume-confirm scan is needed (the token path keeps the
+  * cheap-scalar + confirm split because hashing 10^12-token arrays on
+  * every encode is the dominant cost there; hashing once per generic row
+  * is not).
   *
   * The specialized token path ([[GraftTable.encode]]) remains the hot lane
   * for the benchmark schema (map-side FOR packing of the token stream,
@@ -375,83 +377,17 @@ object GenericTable {
 
     val cur = GraftTable.currentSnapshot(spark, tableDir)
     val parent = cur.filter(_.inputFingerprint == fingerprint)
-    parent.filter(p => p.complete && opts.blockFilter.isEmpty).foreach { p =>
-      return EncodeResult.of(p, 0L)
-    }
-    val ver = cur.map(_.version).getOrElse(0) + 1
-    val statsFields = statsOf(rows, schema, None, key, leaves, carriedMeta(cur) ++ extraMeta)
-
-    if (rows == 0L) {
-      val snap = Commit(spark, tableDir, ver, Commit.Totals.Empty) { tot =>
-        tot.snapshot(ver, Hashing.sha256Hex(s"v$ver;generic;fp=$fingerprint;empty"),
-          cur.map(_.snapshotId), fingerprint, s"generic:$key", None, numBlocks = 0,
-          complete = true, Nil, statsFields)
-      }
-      return EncodeResult.of(snap, 0L)
-    }
-
-    // sample-budget-bounded inputs: cache the keyed frame across the
-    // bounds sample scan and the encode exchange (see GraftTable.encode)
-    val keyedCached = rows * math.max(1, leaves.length) <= opts.sampleRows
-    if (keyedCached) keyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val (bounds, boundsDir): (Array[Long], Option[String]) = parent match {
-      case Some(p) => (GraftTable.loadBounds(spark, tableDir, p), p.boundsDir)
-      case None =>
-        val b = timed("g-bounds")(GraftTable.computeBounds(
-          keyed, rows, opts.targetRowsPerBlock, opts.sampleRows))
-        if (b.isEmpty) (b, None)
-        else {
-          val dir = s"metadata/bounds/v$ver"
-          GraftTable.writeBounds(spark, s"$tableDir/$dir", b)
-          (b, Some(dir))
-        }
-    }
-    val numBlocks = bounds.length + 1
-    val bcBounds = spark.sparkContext.broadcast(bounds)
-    val withBlocks = keyed.withColumn(
-      "block_id", graft_range_bucket(col("_graft_key"), bcBounds))
-
-    val notDone = parent match {
-      case Some(p) if p.manifestDirs.nonEmpty =>
-        val done = GraftTable.manifestRows(spark, tableDir, p.manifestDirs)
-          .select(col("block_id").cast("int").as("block_id")).distinct()
-        withBlocks.join(done, Seq("block_id"), "left_anti")
-      case _ => withBlocks
-    }
-    val todo = opts.blockFilter match {
-      case Some(f) =>
-        val allowed = (0 until numBlocks).filter(f)
-        notDone.filter(col("block_id").isin(allowed.map(Int.box): _*))
-      case None => notDone
-    }
-
-    val dataDir = timed("g-encode+write")(
-      writeBlocksVersion(todo, tableDir, ver, leaves, numBlocks, rows))
-    val fresh = timed("g-manifest-write")(Commit.writeManifest(spark, tableDir, ver,
-      manifestOf(spark, s"$tableDir/$dataDir", leaves.length)))
-    val newBlocks = fresh.sums.blocks
-    // a blockFilter selecting no block leaves an empty version dir: drop
-    // it; with no parent the commit records the bounds and no block
-    if (newBlocks == 0) GraftTable.delete(spark, s"$tableDir/$dataDir")
-    if (newBlocks == 0 && parent.nonEmpty) EncodeResult.of(parent.get, 0L)
-    else {
-      val freshDir = if (newBlocks == 0) None else Some(dataDir)
-      val kept = parent.fold(Commit.Totals.Empty)(Commit.Totals.of(spark, tableDir, _))
-      val snap = Commit(spark, tableDir, ver,
-          if (newBlocks == 0) kept else kept.add(fresh)) { tot =>
-        val snapshotId = Hashing.sha256Hex(
-          s"v$ver;generic;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
-            s"fp=$fingerprint;bounds=${GraftTable.boundsSig(bounds)};" +
-            s"blocks=${tot.blocks}/$numBlocks;rows=${tot.rows};" +
-            s"bytes=${tot.bytes};sig=${tot.contentSig}")
-        tot.snapshot(ver, snapshotId, cur.map(_.snapshotId), fingerprint,
-          s"generic:$key", boundsDir, numBlocks, complete = tot.blocks == numBlocks,
-          parent.map(_.dataDirs).getOrElse(Nil) ++ freshDir, statsFields)
-      }
-      EncodeResult.of(snap, newBlocks)
-    }
-    } finally if (keyedCached) { keyed.unpersist(false); () }
+    // the id preimage names the resume parent; `parent_id` records `cur`
+    val resumedFrom = parent.map(_.snapshotId).getOrElse("none")
+    BlockWrite.encode(keyed, tableDir, opts, rows, rows * math.max(1, leaves.length), cur,
+      parent, formatOf(spark, leaves, rows),
+      BlockWrite.Identity(fingerprint, s"generic:$key",
+        statsOf(rows, schema, None, key, leaves, carriedMeta(cur) ++ extraMeta),
+        emptyId = ver => Hashing.sha256Hex(s"v$ver;generic;fp=$fingerprint;empty"),
+        writtenId = (ver, bounds, tot) => Hashing.sha256Hex(
+          s"v$ver;generic;parent=$resumedFrom;fp=$fingerprint;bounds=${bounds.sigHex()};" +
+            s"blocks=${tot.blocks}/${bounds.numBlocks};rows=${tot.rows};" +
+            s"bytes=${tot.bytes};sig=${tot.contentSig}")))
   }
 
   /** Append a batch to a generic table, with Iceberg-style schema
@@ -485,22 +421,21 @@ object GenericTable {
     if (rows == 0L) return EncodeResult.of(parent, 0L)
 
     val ver = parent.version + 1
-    val (bounds, dataDir) = writeBatchBlocks(keyed, tableDir, ver, leaves, rows, opts)
-    val numBlocks = parent.numBlocks + bounds.length + 1
-    val fresh = Commit.writeManifest(spark, tableDir, ver,
-      manifestOf(spark, s"$tableDir/$dataDir", leaves.length))
+    val (bounds, dataDir, fresh) =
+      BlockWrite.writeBatch(keyed, rows, tableDir, ver, 0, opts, formatOf(spark, leaves, rows))
+    val numBlocks = parent.numBlocks + bounds.numBlocks
     val snap = Commit(spark, tableDir, ver,
         Commit.Totals.of(spark, tableDir, parent).add(fresh)) { tot =>
       val snapshotId = Hashing.sha256Hex(
         s"v$ver;generic-append;parent=${parent.snapshotId};fp=$fingerprint;" +
-          s"bounds=${GraftTable.boundsSig(bounds)};blocks=${tot.blocks}/$numBlocks;" +
+          s"bounds=${bounds.sigHex()};blocks=${tot.blocks}/$numBlocks;" +
           s"rows=${tot.rows};bytes=${tot.bytes};sig=${tot.contentSig}")
       tot.snapshot(ver, snapshotId, Some(parent.snapshotId), fingerprint,
         s"generic:$key", None, numBlocks, complete = parent.complete,
         parent.dataDirs :+ dataDir,
         statsOf(tot.rows, merged, Some(schema), key, leaves, carriedMeta(cur) ++ extraMeta))
     }
-    EncodeResult.of(snap, bounds.length + 1L)
+    EncodeResult.of(snap, bounds.numBlocks.toLong)
   }
 
   /** Incremental compaction for the generic lane (mirror of
@@ -522,14 +457,10 @@ object GenericTable {
     def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
 
-    // the fragmented versions, from the snapshot's per-version summaries
     val live = Commit.Totals.of(spark, tableDir, p)
-    val fragVers = live.versions.filter(_.fill < fillFactor * opts.targetRowsPerBlock)
-    val frag = fragVers.map(_.ver).toSet
-    if (frag.isEmpty || (frag.size == 1 && fragVers.head.sums.blocks <= 1)) return noop
-
-    val keepData = p.dataDirs.filterNot(d => frag(versionOf(d)))
-    val fragData = p.dataDirs.filter(d => frag(versionOf(d)))
+    val frag = live.fragments(fillFactor * opts.targetRowsPerBlock)
+    if (frag.isEmpty) return noop
+    val (fragData, keepData) = p.dataDirs.partition(d => frag(versionOf(d)))
 
     // decode ONLY the fragmented versions, projected onto the merged schema
     val merged = liveSchemaOf(spark, tableDir, p)
@@ -576,10 +507,9 @@ object GenericTable {
         }
       if (nRows == 0) EncodeResult.of(commit(keepData, kept), 0L)
       else {
-        val (bounds, dataDir) = writeBatchBlocks(keyed, tableDir, ver, leaves, nRows, opts)
-        val fresh = Commit.writeManifest(spark, tableDir, ver,
-          manifestOf(spark, s"$tableDir/$dataDir", leaves.length))
-        EncodeResult.of(commit(keepData :+ dataDir, kept.add(fresh)), bounds.length + 1L)
+        val (bounds, dataDir, fresh) = BlockWrite.writeBatch(keyed, nRows, tableDir, ver, 0, opts,
+          formatOf(spark, leaves, nRows))
+        EncodeResult.of(commit(keepData :+ dataDir, kept.add(fresh)), bounds.numBlocks.toLong)
       }
     } finally keyed.unpersist()
   }
@@ -742,54 +672,35 @@ object GenericTable {
       opDetail = s"deleted-range=[$lo,$hi];from=${hit.toSeq.sorted.mkString(",")}", opts)
   }
 
-  /** The block-encode pipeline of every generic commit (encode, append
-    * and the rewrite commits of compact and the deletes): one explicit
-    * hash exchange on block_id (spill-aware partition count), Tungsten
-    * sortWithinPartitions, streaming one-block-at-a-time assembly; writes
-    * `data/v<ver>` and returns its relative dir.
+  /** The generic lane's block format over `leaves` for an input of `rows`
+    * rows: [[blocksOf]] assembly and the [[manifestOf]] manifest.
     */
-  private def writeBlocksVersion(
+  private def formatOf(spark: SparkSession, leaves: Seq[Leaf], rows: Long): BlockWrite.Format =
+    BlockWrite.Format(blocksOf(_, _, _, leaves, rows), manifestOf(spark, _, leaves.length))
+
+  /** The block assembly of every generic commit (encode, append and the
+    * rewrite commits of compact and the deletes): one explicit hash
+    * exchange on block_id (spill-aware partition count), Tungsten
+    * sortWithinPartitions, streaming one-block-at-a-time assembly into the
+    * block rows of version `ver`.
+    */
+  private def blocksOf(
       withBlocks: DataFrame,
-      tableDir: String,
       ver: Int,
-      leaves: Seq[Leaf],
       numBlocks: Int,
-      rows: Long): String = {
-    val spark = withBlocks.sparkSession
-    val parallelism = spark.sparkContext.defaultParallelism
-    val encodeParts = GraftTable.encodePartitions(
+      leaves: Seq[Leaf],
+      rows: Long): DataFrame = {
+    val parallelism = withBlocks.sparkSession.sparkContext.defaultParallelism
+    val encodeParts = BlockWrite.encodePartitions(
       numBlocks, parallelism, rows * leaves.length) // ~1 cell ≈ 1 token proxy
     val kinds = leaves.map(_.kind).toArray
-    val blocks = withBlocks
+    withBlocks
       .select(Seq(col("block_id"), col("_graft_key").as("k"),
         col("_graft_rh").as("rh")) ++ leaves.map(l => col(quoted(l.name))): _*)
       .repartition(encodeParts, col("block_id"))
       .sortWithinPartitions(col("block_id"), col("k"), col("rh"))
       .mapPartitions(it => GenericAssembler.assemble(it, ver, kinds))(
         Encoders.row(blockSchema(leaves.length)))
-    val dataDir = s"data/v$ver"
-    blocks.write.mode("overwrite").parquet(s"$tableDir/$dataDir")
-    dataDir
-  }
-
-  /** Write `keyed` (an append batch or rewritten rows) as `data/v<ver>`,
-    * range-blocked by its own bounds. The bounds are broadcast only: no
-    * file is kept, because bounds files are read back only to resume an
-    * encode, and these versions never resume. Returns (bounds, data dir).
-    */
-  private def writeBatchBlocks(
-      keyed: DataFrame,
-      tableDir: String,
-      ver: Int,
-      leaves: Seq[Leaf],
-      rows: Long,
-      opts: Options): (Array[Long], String) = {
-    val bounds = GraftTable.computeBounds(
-      keyed, rows, opts.targetRowsPerBlock, opts.sampleRows)
-    val bcBounds = keyed.sparkSession.sparkContext.broadcast(bounds)
-    val withBlocks = keyed.withColumn(
-      "block_id", graft_range_bucket(col("_graft_key"), bcBounds))
-    (bounds, writeBlocksVersion(withBlocks, tableDir, ver, leaves, bounds.length + 1, rows))
   }
 
   /** The schema blocks of `nLeaves` leaf payloads are written with. */
@@ -861,22 +772,6 @@ object GenericTable {
 
   private def liveSchemaOf(spark: SparkSession, tableDir: String, snap: Snapshot): StructType =
     liveSchemaOf(snap, writeSchemasOf(spark, tableDir, snap))
-
-  /** Rows of `snap` through the connector's generic scan, the lane's one
-    * decoder: each version decodes under its own write schema, projected
-    * onto `snap`'s live schema (fields a version predates read null, as in
-    * Parquet/Iceberg schema evolution). `snap` is a committed snapshot or
-    * a copy of one limited to some of its data dirs; `range` pins a key
-    * interval on the scan, which prunes versions by their recorded key
-    * spans and blocks by their key_min/key_max zone maps.
-    */
-  private def scanOf(
-      spark: SparkSession,
-      tableDir: String,
-      snap: Snapshot,
-      range: Option[(Long, Long)] = None): DataFrame =
-    GraftSql.tableFrame(spark,
-      new graft.sources.GraftSparkTable(tableDir, null, Some(snap), range))
 
   /** Decode the current snapshot back to the original schema, bit-identical
     * per row (order not guaranteed, as with any distributed scan).

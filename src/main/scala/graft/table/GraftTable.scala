@@ -9,7 +9,6 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField,
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.GateProps
 import graft.codec.Hashing
 import graft.functions._
 import graft.table.Commit.{carriedMeta, timed}
@@ -45,11 +44,15 @@ import graft.table.Commit.{carriedMeta, timed}
   *   - manifests are derived by re-reading the *written* data files
   *     (column-pruned scan of payload metadata), never by re-running the
   *     encode lineage;
-  *   - snapshot totals/content-signature aggregate the manifest with
-  *     commutative `bit_xor(xxhash64(...))`, so the driver handles O(1)
-  *     state regardless of block count;
+  *   - snapshot totals/content-signature are the fold of per-version
+  *     summaries, each observed on its version's manifest write
+  *     ([[Commit]]; the signature is a commutative `bit_xor` of block
+  *     hashes), so the driver holds one summary per live version whatever
+  *     the block count;
   *   - resume = anti-join of planned blocks against the parent manifest:
-  *     only missing blocks shuffle and encode (E5).
+  *     only missing blocks shuffle and encode (E5). Bounds, resume, block
+  *     filter and batch blocks are [[BlockWrite]]'s, shared with
+  *     [[GenericTable]].
   */
 object GraftTable {
 
@@ -169,134 +172,39 @@ object GraftTable {
 
     val stats = timed("stats")(Stats.collect(keyed, opts.sampleRows))
     val cur = currentSnapshot(spark, tableDir)
+    val parent = cur
+      .filter(_.inputFingerprint == stats.fingerprint) // fp change => fresh encode
+      .filter(p => timed("resume-confirm")(resumeValuesMatch(spark, tableDir, p, keyed)))
+    val fp = stats.fingerprint
+    // the id preimage names the resume parent; `parent_id` records `cur`
+    val resumedFrom = parent.map(_.snapshotId).getOrElse("none")
     // stream_* metadata (e.g. the exactly-once batchId watermark) carries
     // forward into child snapshots unless the caller overrides it —
     // otherwise an interleaved compact()/manual encode would drop the key
     // and a replayed streaming batch would re-append (ADVICE r2)
-    val meta = carriedMeta(cur) ++ extraMeta
-    val parent = cur
-      .filter(_.inputFingerprint == stats.fingerprint) // fp change => fresh encode
-      .filter(p => timed("resume-confirm")(resumeValuesMatch(spark, tableDir, p, keyed)))
-
-    // complete-table no-op: the (confirmed) current snapshot IS the encode
-    // of this input — return without loading bounds, broadcasting, or
-    // running an empty encode job (at 15M blocks those cost real seconds)
-    parent.filter(p => p.complete && opts.blockFilter.isEmpty).foreach { p =>
-      return EncodeResult.of(p, 0L)
-    }
-    val ver = cur.map(_.version).getOrElse(0) + 1
-
-    // sample-budget-bounded inputs (≲ sampleRows tokens, a few MB): keep
-    // the keyed frame cached across the bounds sample scan and the encode
-    // exchange instead of re-running the tokenize/key projection per
-    // pass. The gate is data-determined and scale-safe — big inputs skip
-    // it and behave exactly as before.
-    val keyedCached = stats.tokensTotal <= opts.sampleRows &&
-      stats.rows <= opts.sampleRows
-    if (keyedCached) keyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-
-    // bounds: reuse the parent's bounds file on resume, else compute
-    // distributed (Ranks — no single-partition sort) and persist to a
-    // file the snapshot references. Small tables ship the flat array as
-    // ONE broadcast; past Options.chunkedBoundsMinBounds the table goes
-    // TWO-LEVEL (coarse cuts broadcast, fine chunks streamed from
-    // bounds.bin per executor) so the driver never materializes the full
-    // array (the round-2 120 MB floor).
-    val (boundsRef, boundsDir): (BoundsRef, Option[String]) = timed("bounds")(parent match {
-      case Some(p) => (loadBoundsRef(spark, tableDir, p), p.boundsDir)
-      case None =>
-        val estBounds =
-          math.max(1L, (stats.rows + opts.targetRowsPerBlock - 1) /
-            opts.targetRowsPerBlock) - 1L
-        if (estBounds >= opts.chunkedBoundsMinBounds) {
-          val dir = s"metadata/bounds/v$ver"
-          computeBoundsToFile(
-            keyed, stats.rows, opts.targetRowsPerBlock, opts.sampleRows,
-            s"$tableDir/$dir/bounds.bin") match {
-            case Some(r) => (r, Some(dir))
-            case None => (SmallBounds(Array.empty), None)
-          }
-        } else {
-          val b = computeBounds(keyed, stats.rows, opts.targetRowsPerBlock, opts.sampleRows)
-          if (b.isEmpty) (SmallBounds(b), None)
-          else {
-            val dir = s"metadata/bounds/v$ver"
-            writeBounds(spark, s"$tableDir/$dir", b)
-            (SmallBounds(b), Some(dir))
-          }
-        }
-    })
-    val numBlocks = boundsRef.numBounds.toInt + 1
-
-    val withBlocks = keyed.withColumn(
-      "block_id", boundsRef.bucket(spark, col("_graft_key")))
-
-    // resume (E5): encode only blocks absent from the parent manifest
-    val notDone = parent match {
-      case Some(p) if p.manifestDirs.nonEmpty =>
-        val done = manifestRows(spark, tableDir, p.manifestDirs)
-          .select(col("block_id").cast("int").as("block_id")).distinct()
-        withBlocks.join(done, Seq("block_id"), "left_anti")
-      case _ => withBlocks
-    }
-    val todo = opts.blockFilter match {
-      case Some(f) =>
-        val allowed = (0 until numBlocks).filter(f)
-        notDone.filter(col("block_id").isin(allowed.map(Int.box): _*))
-      case None => notDone
-    }
-
-    // overwrite: a same-version dir can only be an orphan from a crashed
-    // run (versions enter data_dirs only after the snapshot commit below)
-    val dataDir = timed("encode+write")(
-      writeBlocksVersion(todo, tableDir, ver, numBlocks, stats))
-
-    // manifest from the WRITTEN files (column-pruned scan, no re-encode)
-    val fresh = timed("manifest-write")(
-      Commit.writeManifest(spark, tableDir, ver, manifestOf(spark, s"$tableDir/$dataDir")))
-    val newBlocks = fresh.sums.blocks
-    // nothing written: drop the empty version dir
-    if (newBlocks == 0) delete(spark, s"$tableDir/$dataDir")
-    if (newBlocks == 0 && parent.nonEmpty) EncodeResult.of(parent.get, 0L)
-    else if (newBlocks == 0 && stats.rows == 0) {
-      // empty input, no parent: commit an empty (complete) snapshot
-      val snap = Commit(spark, tableDir, ver, Commit.Totals.Empty) { tot =>
-        tot.snapshot(ver,
-          Hashing.sha256Hex(s"v$ver;parent=none;fp=${stats.fingerprint};empty"),
-          None, stats.fingerprint, KeyStrategy, boundsDir, numBlocks = 0,
-          complete = true, Nil, stats.asJsonFields ++ meta.toSeq)
-      }
-      EncodeResult.of(snap, 0L)
-    } else {
-      // a blockFilter that selected no block, with no parent, commits the
-      // bounds and no block: incomplete, so a later encode does the work
-      val freshDir = if (newBlocks == 0) None else Some(dataDir)
-      val kept = parent.fold(Commit.Totals.Empty)(Commit.Totals.of(spark, tableDir, _))
-      val snap = Commit(spark, tableDir, ver,
-        if (newBlocks == 0) kept else kept.add(fresh)) { tot =>
-        val snapshotId = Hashing.sha256Hex(
-          s"v$ver;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
-            s"fp=${stats.fingerprint};bounds=${boundsRef.sigHex()};" +
-            s"blocks=${tot.blocks}/$numBlocks;rows=${tot.rows};" +
-            s"tokens=${tot.tokens};bytes=${tot.bytes};sig=${tot.contentSig}")
-        tot.snapshot(ver, snapshotId, parent.map(_.snapshotId), stats.fingerprint,
-          KeyStrategy, boundsDir, numBlocks, complete = tot.blocks == numBlocks,
-          parent.map(_.dataDirs).getOrElse(Nil) ++ freshDir,
-          stats.asJsonFields ++ meta.toSeq)
-      }
-      EncodeResult.of(snap, newBlocks)
-    }
-    } finally if (keyedCached) { keyed.unpersist(false); () }
+    val fields = stats.asJsonFields ++ (carriedMeta(cur) ++ extraMeta).toSeq
+    BlockWrite.encode(keyed, tableDir, opts, stats.rows,
+      math.max(stats.tokensTotal, stats.rows), cur, parent, formatOf(spark, stats),
+      BlockWrite.Identity(fp, KeyStrategy, fields,
+        emptyId = ver => Hashing.sha256Hex(s"v$ver;parent=none;fp=$fp;empty"),
+        writtenId = (ver, bounds, tot) => Hashing.sha256Hex(
+          s"v$ver;parent=$resumedFrom;fp=$fp;bounds=${bounds.sigHex()};" +
+            s"blocks=${tot.blocks}/${bounds.numBlocks};rows=${tot.rows};" +
+            s"tokens=${tot.tokens};bytes=${tot.bytes};sig=${tot.contentSig}")))
   }
+
+  /** The token lane's block format: [[blocksOf]] assembly and the
+    * [[manifestOf]] manifest.
+    */
+  private def formatOf(spark: SparkSession, stats: ColumnStats): BlockWrite.Format =
+    BlockWrite.Format(blocksOf(_, _, _, stats), manifestOf(spark, _))
 
   /** Block assembly for `withBlocks` (keyed rows plus `block_id`): ONE
     * shuffle (explicit repartition on block_id — the fixed partition count
     * is immune to AQE's bytes-based coalescing, which would serialize this
     * CPU-bound stage) + sortWithinPartitions (Tungsten external sort,
     * spill-safe) + a streaming per-partition grouper that holds exactly ONE
-    * block in memory while encoding. Writes `data/v<ver>` and returns its
-    * relative dir.
+    * block in memory while encoding: the block rows of version `ver`.
     *
     * A declarative groupBy + array_sort(collect_list(...)) is the obvious
     * alternative, but collect_list's map-side partial aggregation buffers
@@ -305,16 +213,15 @@ object GraftTable {
     * MB). mapPartitions over the sorted stream is the memory-bounded
     * typed-Dataset form of the same plan.
     */
-  private def writeBlocksVersion(
+  private def blocksOf(
       withBlocks: DataFrame,
-      tableDir: String,
       ver: Int,
       numBlocks: Int,
-      stats: ColumnStats): String = {
+      stats: ColumnStats): DataFrame = {
     val spark = withBlocks.sparkSession
     import spark.implicits._
     val parallelism = spark.sparkContext.defaultParallelism
-    val encodeParts = encodePartitions(numBlocks, parallelism, stats.tokensTotal)
+    val encodeParts = BlockWrite.encodePartitions(numBlocks, parallelism, stats.tokensTotal)
     // tokens are FOR-packed on the MAP side: they dominate the one data
     // shuffle, and ~5-bit ids packed cut MEASURED shuffle-write bytes
     // 3.8× even after lz4 (828 MB → 217 MB for 270M tokens; perfbench
@@ -322,7 +229,7 @@ object GraftTable {
     // (shuffle+sort 3.7 s → 3.2 s at local[8]). On a real cluster those
     // bytes cross the network. BlockAssembler unpacks after the exchange;
     // table bytes are unchanged (packing is per-row and lossless).
-    val blocks = withBlocks
+    withBlocks
       .select(col("block_id"), col("_graft_key").as("k"), col("doc_id"),
         graft_encode(col("tokens"), "for").as("tokens"),
         col("n_tok"), col("source"))
@@ -331,162 +238,7 @@ object GraftTable {
       .as[BlockInput]
       .mapPartitions(it =>
         BlockAssembler.assemble(it, ver, stats.allowDict, stats.allowFsst))
-    val dataDir = s"data/v$ver"
-    blocks.write.mode("overwrite").parquet(s"$tableDir/$dataDir")
-    dataDir
-  }
-
-  /** Write `keyed` (an append batch or compacted rows) as `data/v<ver>`,
-    * range-blocked by its own bounds into block ids from `blockOffset`.
-    * The bounds are ephemeral (blocks are assigned and written within this
-    * call; append and compact have no mid-batch resume) — broadcast only,
-    * no file. Returns (blocks written, data dir).
-    */
-  private def writeBatchBlocks(
-      keyed: DataFrame,
-      stats: ColumnStats,
-      opts: Options,
-      tableDir: String,
-      ver: Int,
-      blockOffset: Int): (Int, String) = {
-    val bounds = computeBounds(keyed, stats.rows, opts.targetRowsPerBlock, opts.sampleRows)
-    val bcBounds = keyed.sparkSession.sparkContext.broadcast(bounds)
-    val withBlocks = keyed.withColumn("block_id",
-      graft_range_bucket(col("_graft_key"), bcBounds) + blockOffset)
-    val numNew = bounds.length + 1
-    (numNew, writeBlocksVersion(withBlocks, tableDir, ver, numNew, stats))
-  }
-
-  /** Range-block bounds from a hash-strided key sample. Properties a plain
-    * `df.sample(seed)` + approxQuantile would NOT give:
-    *   - layout independence: `sample()` seeds per partition, so the chosen
-    *     rows (hence bounds, hence every block payload) would change with
-    *     input split sizes / cluster parallelism. Selecting rows by
-    *     `xxhash64(key) % stride == 0` depends only on the VALUES —
-    *     identical bounds at local[2] and on 1000 executors;
-    *   - exact cut points: boundary keys are picked by exact global rank
-    *     over the sample — no sketch-merge nondeterminism;
-    *   - distributed rank: [[Ranks.withRank]] range-shuffles the sample and
-    *     derives ranks from partition offsets. At 10^12 rows the sample is
-    *     ~8·numBlocks ≈ 10^8 rows — round 1's single-partition
-    *     `Window.orderBy` put all of them in ONE task; this sorts them
-    *     p-way parallel with ordinary spill-safe Tungsten sorts.
-    *
-    * Driver state is O(numBlocks) longs (the cut array itself, needed to
-    * build the broadcast) — ~120 MB at 15M blocks, the floor for a
-    * broadcast-probe design; a two-level bounds tree would shrink it but
-    * costs an extra probe per row.
-    */
-  private[table] def computeBounds(
-      keyed: DataFrame, rows: Long, targetRows: Int, sampleRows: Long): Array[Long] = {
-    val sample = boundsSample(keyed, rows, targetRows, sampleRows).getOrElse(return Array.empty)
-    val BoundsSample(s, numBlocks, expectedSample) = sample
-
-    // small-sample fast path: the boundary keys land on the driver either
-    // way (the bounds array IS driver state), so when the sample itself is
-    // driver-sized, collect it once and pick the SAME cut points locally —
-    // identical bounds (same sample set, same rank rule, multiset order),
-    // one job instead of the 3-4 the distributed rank machinery costs.
-    // The gate is the expected sample count, bounded by the sample budget;
-    // big tables (or numBlocks-dominated budgets) take the distributed
-    // path below exactly as before.
-    // the stride filter selects by VALUE, so duplicate-heavy keys can
-    // make the ACTUAL sample far exceed rows/stride (every duplicate of
-    // a selected value passes) — gate on an exact count of the sample
-    // before collecting it, so the driver never materializes an
-    // unboundedly-skewed sample (the count is one cheap column-pruned
-    // job; the fast path still replaces the 3-4 jobs of the distributed
-    // rank machinery with 2). The sample is a subset of the `rows` input
-    // rows, so at most `rows` keys can pass: up to the gate the count
-    // cannot exceed it and is skipped.
-    val gate = SmallBoundsSampleMax
-    if (expectedSample <= gate && (rows <= gate || s.count() <= gate)) {
-      val ks = s.collect().map(_.getLong(0)).sorted
-      val cnt = ks.length.toLong
-      if (cnt < numBlocks) return Array.empty
-      val out = Array.newBuilder[Long]
-      var rn = 2L // interior cuts only: rn != 1 && rn != cnt
-      while (rn < cnt) {
-        // same edge rule as the distributed path: floor over DOUBLE
-        // division (Spark's Divide casts both sides to double)
-        if (((rn * numBlocks).toDouble / cnt).toLong !=
-            (((rn - 1) * numBlocks).toDouble / cnt).toLong)
-          out += ks((rn - 1).toInt)
-        rn += 1
-      }
-      return out.result().distinct.sorted
-    }
-
-    rankedCuts(sample)(_.collect().map(_.getLong(0)).distinct.sorted)
-      .getOrElse(Array.empty)
-  }
-
-  /** The key sample both bounds builders cut: keys whose
-    * `pmod(xxhash64(key), stride) = 0`, the stride sized so that about
-    * max(sampleRows, 8·numBlocks) of `rows` pass (`expected`). None for a
-    * table of one block.
-    */
-  private final case class BoundsSample(keys: DataFrame, numBlocks: Long, expected: Long)
-
-  private def boundsSample(
-      keyed: DataFrame, rows: Long, targetRows: Int, sampleRows: Long): Option[BoundsSample] = {
-    val numBlocks = math.max(1L, (rows + targetRows - 1) / targetRows.toLong)
-    if (numBlocks <= 1) return None
-    val budget = math.max(sampleRows, numBlocks * 8L)
-    val stride = math.max(1L, rows / budget)
-    val keys = keyed
-      .where(col("_graft_key").isNotNull &&
-        pmod(xxhash64(col("_graft_key")), lit(stride)) === 0)
-      .select(col("_graft_key").as("k"))
-    Some(BoundsSample(keys, numBlocks, rows / stride))
-  }
-
-  /** Ranks the sample over the cluster ([[Ranks.withRank]]) and hands `use`
-    * the cut keys `k`: the interior rows where floor(rn·numBlocks/cnt)
-    * crosses a bucket edge. None when fewer distinct keys than blocks were
-    * sampled (a degenerate key space: one block).
-    */
-  private def rankedCuts[T](sample: BoundsSample)(use: DataFrame => T): Option[T] = {
-    val BoundsSample(s, numBlocks, _) = sample
-    val parallelism = s.sparkSession.sparkContext.defaultParallelism
-    val (ranked, cnt, release) = Ranks.withRank(s, col("k"), "rn", parallelism * 2)
-    try {
-      if (cnt < numBlocks) None
-      else Some(use(ranked
-        .where((col("rn") * numBlocks).divide(cnt).cast("long") =!=
-          ((col("rn") - 1) * numBlocks).divide(cnt).cast("long"))
-        .where(col("rn") =!= 1 && col("rn") =!= cnt)
-        .select("k")))
-    } finally release()
-  }
-
-  /** Max expected sample count for [[computeBounds]]'s driver-side sort
-    * path (~8 MB of longs — the bounds ARRAY itself can be 120 MB at 15M
-    * blocks, so this adds no new driver-memory class). Overridable for
-    * tests via the graft.bounds.smallSampleMax system property.
-    */
-  private[table] def SmallBoundsSampleMax: Long =
-    GateProps.long("graft.bounds.smallSampleMax", 1L << 20)
-
-  /** Spill-aware partition count for the encode exchange. Three regimes:
-    *   - small tables: one partition per block is enough (never exceed
-    *     numBlocks — empty reducers are pure overhead);
-    *   - CPU-bound middle: 2× parallelism keeps every core fed through
-    *     stragglers (the sandbox regime);
-    *   - data-bound top end: cap each sort task at ~512 MB of plain token
-    *     bytes. Without this, 10^12 rows over 2×parallelism tasks puts
-    *     multi-GB in every Tungsten sort — correct (external sort spills)
-    *     but thrashing; ~512 MB tasks sort mostly in memory.
-    * The count is explicit (AQE coalescing would serialize this CPU-bound
-    * stage) and deterministic given (blocks, cluster, stats).
-    */
-  private[table] def encodePartitions(
-      numBlocks: Int, parallelism: Int, tokensTotal: Long): Int = {
-    val targetTaskBytes = 512L << 20
-    val approxPlainBytes = tokensTotal * 5L // 4 B/token + id/len/source overhead
-    val byData = (approxPlainBytes + targetTaskBytes - 1) / targetTaskBytes
-    val byCpu = parallelism * 2L
-    math.max(1L, math.min(numBlocks.toLong, math.max(byCpu, byData))).toInt
+      .toDF()
   }
 
   /** Full-row value hash, type-pinned so the input and decoded sides hash
@@ -542,168 +294,12 @@ object GraftTable {
       if (p.complete) sig(keyed)
       else {
         // partial parent: compare only input rows that land in done blocks
-        val done = man.select(col("block_id").cast("int").as("block_id")).distinct()
-        val ref = loadBoundsRef(spark, tableDir, p)
+        val ref = BlockWrite.loadBoundsRef(spark, tableDir, p)
         sig(keyed
           .withColumn("block_id", ref.bucket(spark, col("_graft_key")))
-          .join(done, Seq("block_id"), "left_semi"))
+          .join(BlockWrite.doneBlocks(spark, tableDir, p), Seq("block_id"), "left_semi"))
       }
     stored._1 == input._1 && stored._2 == input._2
-  }
-
-  // --------------------------------------------------- bounds references
-
-  /** A handle on a snapshot's range bounds that can build the block-id
-    * probe column without committing to HOW the bounds reach executors.
-    */
-  private[table] sealed trait BoundsRef {
-    def numBounds: Long
-    def bucket(spark: SparkSession, key: org.apache.spark.sql.Column): org.apache.spark.sql.Column
-    def sigHex(): String
-  }
-
-  /** Flat path: full array on the driver, one broadcast per encode. */
-  private[table] final case class SmallBounds(bounds: Array[Long]) extends BoundsRef {
-    @transient private var bc: org.apache.spark.broadcast.Broadcast[Array[Long]] = _
-    override def numBounds: Long = bounds.length.toLong
-    override def bucket(spark: SparkSession, key: org.apache.spark.sql.Column) = {
-      if (bc == null) bc = spark.sparkContext.broadcast(bounds)
-      graft_range_bucket(key, bc)
-    }
-    override def sigHex(): String = boundsSig(bounds)
-  }
-
-  /** Two-level path: the driver holds one coarse cut per
-    * [[graft.expr.BoundsChunks.ChunkSize]] fine bounds; executors stream
-    * the fine chunks they touch from `bounds.bin` (VERDICT r2 #8 — breaks
-    * the O(numBlocks) driver heap + broadcast floor).
-    */
-  private[table] final case class ChunkedBoundsRef(
-      binPath: String, override val numBounds: Long, coarse: Array[Long],
-      sigThunk: () => String) extends BoundsRef {
-    override def bucket(spark: SparkSession, key: org.apache.spark.sql.Column) = {
-      val coarseBc = spark.sparkContext.broadcast(coarse)
-      val confBc = spark.sparkContext.broadcast(
-        new graft.expr.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-      // file identity (length:mtime) distinguishes a re-created table at
-      // the same path in the executor-side chunk cache
-      val p = new Path(binPath)
-      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-      org.apache.spark.sql.GraftSql.column(graft.expr.RangeBucketChunked(
-        org.apache.spark.sql.GraftSql.expression(key),
-        coarseBc, binPath, s"${st.getLen}:${st.getModificationTime}", numBounds, confBc))
-    }
-    override def sigHex(): String = sigThunk()
-  }
-
-  /** Distributed bound planning WITHOUT driver materialization: the ranked
-    * boundary keys are globally sorted by Spark, then STREAMED through the
-    * driver (`toLocalIterator` — O(one partition) heap) into `bounds.bin`
-    * while the coarse cuts and content digest accumulate on the fly.
-    * Returns None when the sampled key space degenerates to one block.
-    */
-  private[table] def computeBoundsToFile(
-      keyed: DataFrame, rows: Long, targetRows: Int, sampleRows: Long,
-      binPath: String): Option[ChunkedBoundsRef] = {
-    val spark = keyed.sparkSession
-    val sample = boundsSample(keyed, rows, targetRows, sampleRows).getOrElse(return None)
-    rankedCuts(sample) { cuts =>
-      val boundary = cuts.distinct().orderBy("k")
-      val chunkSize = graft.expr.BoundsChunks.ChunkSize
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      val digestBuf = java.nio.ByteBuffer.allocate(8)
-      val coarse = Array.newBuilder[Long]
-      var n = 0L
-      var last = 0L
-      val out = hfs(spark, binPath).create(new Path(binPath), true)
-      try {
-        val dout = new java.io.DataOutputStream(new java.io.BufferedOutputStream(out, 1 << 20))
-        val it = boundary.toLocalIterator()
-        while (it.hasNext) {
-          val v = it.next().getLong(0)
-          // bounds.bin is little-endian (BoundsChunks reads LE)
-          dout.writeLong(java.lang.Long.reverseBytes(v))
-          digestBuf.clear(); digestBuf.putLong(v); md.update(digestBuf.array())
-          n += 1
-          last = v
-          if (n % chunkSize == 0) coarse += v
-        }
-        if (n % chunkSize != 0) coarse += last
-        dout.flush()
-      } finally out.close()
-      if (n == 0) { delete(spark, binPath); None }
-      else {
-        val sig = md.digest().map("%02x".format(_)).mkString
-        Some(ChunkedBoundsRef(binPath, n, coarse.result(), () => sig))
-      }
-    }.flatten
-  }
-
-  /** Resolve a snapshot's bounds to a probe handle: `bounds.bin` present →
-    * two-level (driver reads only the coarse cuts — O(numBounds/4096));
-    * else the flat parquet array.
-    */
-  private[table] def loadBoundsRef(
-      spark: SparkSession, tableDir: String, snap: Snapshot): BoundsRef =
-    snap.boundsDir match {
-      case None => SmallBounds(Array.empty)
-      case Some(d) =>
-        val bin = s"$tableDir/$d/bounds.bin"
-        val fs = hfs(spark, bin)
-        if (!fs.exists(new Path(bin)))
-          SmallBounds(loadBounds(spark, tableDir, snap))
-        else {
-          val chunkSize = graft.expr.BoundsChunks.ChunkSize
-          val n = fs.getFileStatus(new Path(bin)).getLen / 8L
-          // stream once, keep every chunkSize-th value — O(coarse) heap
-          def scan(withSig: Boolean): (Array[Long], String) = {
-            val md = if (withSig) java.security.MessageDigest.getInstance("SHA-256") else null
-            val buf = java.nio.ByteBuffer.allocate(8)
-            val coarse = Array.newBuilder[Long]
-            var i = 0L
-            var last = 0L
-            val in = new java.io.DataInputStream(
-              new java.io.BufferedInputStream(fs.open(new Path(bin)), 1 << 20))
-            try {
-              while (i < n) {
-                val v = java.lang.Long.reverseBytes(in.readLong())
-                if (withSig) { buf.clear(); buf.putLong(v); md.update(buf.array()) }
-                i += 1
-                last = v
-                if (i % chunkSize == 0) coarse += v
-              }
-            } finally in.close()
-            if (n % chunkSize != 0) coarse += last
-            (coarse.result(), if (withSig) md.digest().map("%02x".format(_)).mkString else null)
-          }
-          val (coarse, _) = scan(withSig = false)
-          ChunkedBoundsRef(bin, n, coarse, () => scan(withSig = true)._2)
-        }
-    }
-
-  /** Bounds file IO: one bigint column `k`, sorted on load. */
-  private[table] def writeBounds(spark: SparkSession, path: String, bounds: Array[Long]): Unit = {
-    import spark.implicits._
-    spark.createDataset(bounds.toIndexedSeq).toDF("k")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  private[table] def loadBounds(spark: SparkSession, tableDir: String, snap: Snapshot): Array[Long] =
-    snap.boundsDir match {
-      case None => Array.empty
-      case Some(d) =>
-        spark.read.parquet(s"$tableDir/$d").collect().map(_.getLong(0)).sorted
-    }
-
-  /** Content signature of a bounds array for snapshot-id derivation —
-    * streaming digest, never a materialized mkString (15M bounds would be a
-    * ~150 MB string).
-    */
-  private[table] def boundsSig(bounds: Array[Long]): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val bb = java.nio.ByteBuffer.allocate(8)
-    bounds.foreach { b => bb.clear(); bb.putLong(b); md.update(bb.array()) }
-    md.digest().map("%02x".format(_)).mkString
   }
 
   // -------------------------------------------------------------- decode
@@ -747,15 +343,19 @@ object GraftTable {
     s
   }
 
-  /** Token rows of `snap` through the connector's token scan, the lane's
-    * one decoder. `snap` is a committed snapshot or a copy of one limited
-    * to some of its data dirs; `range` pins a numeric doc_id interval on
-    * the scan, which prunes blocks by their doc_id zone maps. Filters and
-    * projections on the frame reach the scan: `source` equality/IN prunes
-    * blocks by their src_list, and a projection reads only the payload
-    * columns it needs.
+  /** Rows of `snap` through its lane's connector scan, the lane's one
+    * decoder. Token rows come from the token scan; in the generic scan each
+    * version decodes under its own write schema, projected onto `snap`'s
+    * live schema (fields a version predates read null, as in
+    * Parquet/Iceberg schema evolution). `snap` is a committed snapshot or a
+    * copy of one limited to some of its data dirs; `range` pins a key
+    * interval on the scan (a numeric doc_id interval on a token table),
+    * which prunes blocks by their zone maps and generic versions by their
+    * recorded key spans. Filters and projections on the frame reach the
+    * scan: token `source` equality/IN prunes blocks by their src_list, and
+    * a projection reads only the payload columns it needs.
     */
-  private def scanOf(
+  private[table] def scanOf(
       spark: SparkSession,
       tableDir: String,
       snap: Snapshot,
@@ -847,11 +447,10 @@ object GraftTable {
     if (stats.rows == 0L) return EncodeResult.of(p, 0L)
 
     val live = Commit.Totals.of(spark, tableDir, p)
-    val (numNew, dataDir) =
-      writeBatchBlocks(keyed, stats, opts, tableDir, ver, live.nextBlockId)
+    val (bounds, dataDir, fresh) = BlockWrite.writeBatch(keyed, stats.rows, tableDir, ver,
+      live.nextBlockId, opts, formatOf(spark, stats))
+    val numNew = bounds.numBlocks
     val combinedFp = Hashing.sha256Hex(s"${p.inputFingerprint}+${stats.fingerprint}")
-    val fresh =
-      Commit.writeManifest(spark, tableDir, ver, manifestOf(spark, s"$tableDir/$dataDir"))
     val snap = Commit(spark, tableDir, ver, live.add(fresh)) { tot =>
       val snapshotId = Hashing.sha256Hex(
         s"v$ver;parent=${p.snapshotId};fp=$combinedFp;append=$numNew;" +
@@ -885,30 +484,23 @@ object GraftTable {
     def noop = EncodeResult.of(p, 0L)
     if (p.dataDirs.isEmpty) return noop
 
-    // the fragmented versions, from the snapshot's per-version summaries
     val live = Commit.Totals.of(spark, tableDir, p)
-    val fragVers = live.versions.filter(_.fill < fillFactor * opts.targetRowsPerBlock)
-    val frag = fragVers.map(_.ver).toSet
-    // nothing to merge: no fragment, or one fragment that is one block
-    if (frag.isEmpty || (frag.size == 1 && fragVers.head.sums.blocks <= 1)) return noop
-
-    def verOf(dir: String): Int = versionOfDir(dir)
-    val keepData = p.dataDirs.filterNot(d => frag(verOf(d)))
+    val frag = live.fragments(fillFactor * opts.targetRowsPerBlock)
+    if (frag.isEmpty) return noop
+    val (fragData, keepData) = p.dataDirs.partition(d => frag(versionOfDir(d)))
 
     // decode ONLY the fragmented versions: data dir vN holds exactly the
     // blocks with ver = N
-    val rows = scanOf(spark, tableDir, p.copy(dataDirs = p.dataDirs.filter(d => frag(verOf(d)))))
+    val rows = scanOf(spark, tableDir, p.copy(dataDirs = fragData))
 
     val ver = p.version + 1
     val keyed = keyedOf(rows)
     val stats = Stats.collect(keyed, opts.sampleRows)
     // merged blocks get ids after every existing one (incl. the dropped
     // fragments' — uniqueness matters, compactness doesn't)
-    val (numNew, dataDir) =
-      writeBatchBlocks(keyed, stats, opts, tableDir, ver, live.nextBlockId)
+    val (bounds, dataDir, fresh) = BlockWrite.writeBatch(keyed, stats.rows, tableDir, ver,
+      live.nextBlockId, opts, formatOf(spark, stats))
     val combinedFp = Hashing.sha256Hex(s"${p.inputFingerprint};compact=v$ver")
-    val fresh =
-      Commit.writeManifest(spark, tableDir, ver, manifestOf(spark, s"$tableDir/$dataDir"))
     val snap = Commit(spark, tableDir, ver,
         live.drop(frag).add(fresh)) { tot =>
       val snapshotId = Hashing.sha256Hex(
@@ -920,7 +512,7 @@ object GraftTable {
         None, tot.blocks.toInt, complete = true, keepData :+ dataDir,
         stats.asJsonFields ++ carriedMeta(Some(p)).toSeq)
     }
-    EncodeResult.of(snap, numNew.toLong)
+    EncodeResult.of(snap, bounds.numBlocks.toLong)
   }
 
   /** Delete data/manifest/bounds dirs not referenced by the CURRENT
@@ -1185,7 +777,7 @@ object GraftTable {
 
   // ------------------------------------------------ Hadoop FS metadata IO
 
-  private def hfs(spark: SparkSession, path: String) =
+  private[table] def hfs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Atomic snapshot-pointer commit: write `metadata/current.tmp`, then

@@ -335,6 +335,39 @@ class StreamingSpec extends AnyFunSuite {
     assert(graft.table.GenericTable.decode(spark, dir).count() == 150)
   }
 
+  test("startGeneric: micro-batches commit under their batchIds, schema evolution included") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-gsink").toString
+    val opts = GraftTable.Options(targetRowsPerBlock = 64)
+    def trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)
+    def watermark = GraftTable.currentSnapshot(spark, dir).get.stats.toMap.get(StreamingEncode.BatchKey)
+
+    val first = MemoryStream[(Long, String)]
+    first.addData((0L until 100L).map(i => (i, s"a$i")))
+    val q1 = StreamingEncode.startGeneric(first.toDF().toDF("id", "a"), dir,
+      Files.createTempDirectory("graft-gsink-ckpt").toString, "id", opts, trigger)
+    try q1.processAllAvailable() finally q1.stop()
+    assert(watermark == Some("0"))
+
+    // the stream restarts with one column more: its batch 0 replays the
+    // committed batch and is skipped, its batch 1 adds the column
+    val second = MemoryStream[(Long, String, Long)]
+    second.addData((0L until 100L).map(i => (i, s"a$i", -1L)))
+    val q2 = StreamingEncode.startGeneric(second.toDF().toDF("id", "a", "extra"), dir,
+      Files.createTempDirectory("graft-gsink-ckpt").toString, "id", opts, trigger)
+    try {
+      q2.processAllAvailable()
+      second.addData((100L until 150L).map(i => (i, s"a$i", i * 2)))
+      q2.processAllAvailable()
+    } finally q2.stop()
+    assert(watermark == Some("1"))
+    val d = graft.table.GenericTable.decode(spark, dir)
+    assert(d.columns.toSeq == Seq("id", "a", "extra"))
+    assert(d.count() == 150 && d.where(col("extra").isNull).count() == 100)
+    assert(d.where(col("extra") === col("id") * 2 && col("a") === concat(lit("a"), col("id")))
+      .count() == 50)
+  }
+
   test("streaming upsert ingest (CDC apply): replace-by-key, exactly-once") {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("graft-ustream").toString

@@ -77,10 +77,10 @@ class BoundsSpec extends AnyFunSuite {
       val dup = 1 + rnd.nextInt(4)
       val keyed = Array.fill(n)(rnd.nextLong() % (n / dup + 1))
         .toIndexedSeq.toDF("_graft_key")
-      val fast = GraftTable.computeBounds(keyed, n, 64, 1L << 20)
+      val fast = BlockWrite.computeBounds(keyed, n, 64, 1L << 20)
       System.setProperty("graft.bounds.smallSampleMax", "0")
       try {
-        val dist = GraftTable.computeBounds(keyed, n, 64, 1L << 20)
+        val dist = BlockWrite.computeBounds(keyed, n, 64, 1L << 20)
         assert(fast.sameElements(dist),
           s"trial $trial: fast=${fast.take(5).mkString(",")}… " +
             s"dist=${dist.take(5).mkString(",")}…")
@@ -92,19 +92,19 @@ class BoundsSpec extends AnyFunSuite {
     // must keep both paths equal (and the driver safe) here too
     val dupHeavy = Array.tabulate(6000)(i => (i % 5).toLong)
       .toIndexedSeq.toDF("_graft_key")
-    val fastDup = GraftTable.computeBounds(dupHeavy, 6000, 64, 1L << 20)
+    val fastDup = BlockWrite.computeBounds(dupHeavy, 6000, 64, 1L << 20)
     System.setProperty("graft.bounds.smallSampleMax", "0")
     try {
-      val distDup = GraftTable.computeBounds(dupHeavy, 6000, 64, 1L << 20)
+      val distDup = BlockWrite.computeBounds(dupHeavy, 6000, 64, 1L << 20)
       assert(fastDup.sameElements(distDup))
     } finally System.clearProperty("graft.bounds.smallSampleMax")
   }
 
   test("bounds gate: a malformed property falls back to the default") {
-    val default = GraftTable.SmallBoundsSampleMax
+    val default = BlockWrite.SmallBoundsSampleMax
     try {
       System.setProperty("graft.bounds.smallSampleMax", "lots")
-      assert(GraftTable.SmallBoundsSampleMax == default)
+      assert(BlockWrite.SmallBoundsSampleMax == default)
     } finally System.clearProperty("graft.bounds.smallSampleMax")
   }
 
@@ -159,13 +159,13 @@ class BoundsSpec extends AnyFunSuite {
 
   test("encode partition count: per-block floor, CPU middle, 512MB-task ceiling") {
     // small table: never more partitions than blocks
-    assert(GraftTable.encodePartitions(3, 32, 1000L) == 3)
+    assert(BlockWrite.encodePartitions(3, 32, 1000L) == 3)
     // CPU-bound middle: 2x parallelism (the sandbox regime)
-    assert(GraftTable.encodePartitions(611, 8, 270704000L) == 16)
+    assert(BlockWrite.encodePartitions(611, 8, 270704000L) == 16)
     // data-bound top end: 10^12 tokens on a 1000-core cluster — 2x
     // parallelism would put ~2.5 GB in each sort task; the byte ceiling
     // must win (≈9313 tasks at ~512 MB each)
-    val big = GraftTable.encodePartitions(15000000, 1000, 1000000000000L)
+    val big = BlockWrite.encodePartitions(15000000, 1000, 1000000000000L)
     assert(big > 1000 * 2, s"data-bound regime ignored: $big")
     assert(big <= 15000000)
     val perTaskBytes = 1000000000000L * 5L / big
@@ -271,9 +271,9 @@ class BoundsSpec extends AnyFunSuite {
     val snap = GraftTable.currentSnapshot(spark, chunkDir).get
     val binPath = s"$chunkDir/${snap.boundsDir.get}/bounds.bin"
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(binPath)))
-    val ref = GraftTable.loadBoundsRef(spark, chunkDir, snap)
+    val ref = BlockWrite.loadBoundsRef(spark, chunkDir, snap)
     ref match {
-      case c: GraftTable.ChunkedBoundsRef =>
+      case c: BlockWrite.ChunkedBoundsRef =>
         val expectCoarse = (c.numBounds + BoundsChunks.ChunkSize - 1) / BoundsChunks.ChunkSize
         assert(c.coarse.length.toLong == expectCoarse,
           s"coarse ${c.coarse.length} != ceil(${c.numBounds}/${BoundsChunks.ChunkSize})")
@@ -288,6 +288,23 @@ class BoundsSpec extends AnyFunSuite {
     // complete-table resume stays a no-op on the chunked table
     val r3 = GraftTable.encode(rows, chunkDir, chunkOpts)
     assert(r3.blocksEncodedThisRun == 0 && r3.snapshotId == r2.snapshotId)
+
+    // the generic lane takes the same two-level bounds: one-shot encodes,
+    // so the snapshot ids match too
+    val gFlatDir = tmpDir("gflat")
+    val gChunkDir = tmpDir("gchunked")
+    val gFlat = GenericTable.encode(rows, gFlatDir, opts = flatOpts)
+    val gChunk = GenericTable.encode(rows, gChunkDir, opts = chunkOpts)
+    assert(gChunk.complete && gChunk.rowCount == n.toLong)
+    assert(gChunk.snapshotId == gFlat.snapshotId)
+    assert(gChunk.contentSig == gFlat.contentSig)
+    assert(gChunk.numBlocks == gFlat.numBlocks && gChunk.bytesTotal == gFlat.bytesTotal &&
+      gFlat.rowCount == n.toLong)
+    assert(Files.exists(java.nio.file.Paths.get(gChunkDir, "metadata/bounds/v1/bounds.bin")))
+    assert(!Files.exists(java.nio.file.Paths.get(gFlatDir, "metadata/bounds/v1/bounds.bin")))
+    val gDecoded = GenericTable.decode(spark, gChunkDir)
+    assert(gDecoded.count() == n.toLong)
+    assert(gDecoded.exceptAll(GenericTable.decode(spark, gFlatDir)).isEmpty)
   }
 
   test("single-block table has no bounds file and resumes as a no-op") {

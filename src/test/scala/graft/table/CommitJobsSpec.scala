@@ -35,6 +35,28 @@ class CommitJobsSpec extends AnyFunSuite {
     */
   private val GenericAppendJobs = 5
 
+  /** Jobs of a fresh one-block token encode: the stats pass and its sample
+    * (two each), the block write (two plus one for the cached keyed frame,
+    * which adaptive execution materializes as a stage of its own) and the
+    * manifest write (one). A one-block table takes no bounds job.
+    */
+  private val TokenEncodeJobs = 8
+
+  /** Jobs of a fresh one-block generic encode: the fingerprint (two), the
+    * block write (three, with the cached keyed frame) and the manifest
+    * write (one).
+    */
+  private val GenericEncodeJobs = 6
+
+  /** Jobs of a token encode of no row: the stats pass and its sample alone.
+    * An empty input commits the empty snapshot before any bounds, block
+    * write or manifest write.
+    */
+  private val TokenEmptyEncodeJobs = 4
+
+  /** Jobs of a generic encode of no row: the fingerprint alone. */
+  private val GenericEmptyEncodeJobs = 2
+
   /** (jobs of an append onto 2 live manifest dirs, onto 20); `append(i)`
     * appends batch `i`, batch 0 creates the table.
     */
@@ -113,6 +135,24 @@ class CommitJobsSpec extends AnyFunSuite {
         assert(again.version == merged.version && again.blocksEncodedThisRun == 0)
         assert(n == 0, s"a no-op compact ran $n jobs")
     }
+  }
+
+  test("encode: pinned job counts of a fresh one-block and an empty-input encode, in both lanes") {
+    def jobs(encode: String => EncodeResult): (EncodeResult, Int) =
+      JobCounter(spark.sparkContext)(encode(Files.createTempDirectory("graft-jobs-enc").toString))
+    // the empty inputs are empty by a row filter, so no optimizer rule
+    // plans them away before the stats or fingerprint pass
+    val counts = Seq(
+      jobs(GraftTable.encode(tokenBatch(0), _, Opts)),
+      jobs(GraftTable.encode(tokenBatch(0).where(col("doc_id") === "none"), _, Opts)),
+      jobs(GenericTable.encode(genericBatch(0), _, keyCol = "id", opts = Opts)),
+      jobs(GenericTable.encode(genericBatch(0).where(col("id") < 0), _, keyCol = "id",
+        opts = Opts)))
+    val Seq(token, tokenEmpty, generic, genericEmpty) = counts.map(_._2)
+    assert(counts.map(_._1.blocksEncodedThisRun) == Seq(1L, 0L, 1L, 0L))
+    assert(counts.forall(_._1.complete))
+    assert((token, tokenEmpty, generic, genericEmpty) ==
+      (TokenEncodeJobs, TokenEmptyEncodeJobs, GenericEncodeJobs, GenericEmptyEncodeJobs))
   }
 
   test("deleteRange: the same pinned job count on 2 and on 20 live versions") {

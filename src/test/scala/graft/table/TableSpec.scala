@@ -525,4 +525,17 @@ class TableSpec extends AnyFunSuite {
     assert(dec.count() == 500)
     assert(dec.where(element_at(col("tokens"), -1) =!= 1).count() == 0)
   }
+
+  test("a re-encode of changed or empty input records the current snapshot as its parent") {
+    val dir = tmpDir("relineage")
+    val opts = GraftTable.Options(targetRowsPerBlock = 128)
+    val r1 = GraftTable.encode(source.toDF(), dir, opts)
+    val changed = source.toDF().where(col("doc_id") =!= source.head().doc_id)
+    val r2 = GraftTable.encode(changed, dir, opts)
+    assert(r2.version == 2 && r2.snapshotId != r1.snapshotId)
+    assert(GraftTable.lineage(spark, dir).head.parentId == Some(r1.snapshotId))
+    val r3 = GraftTable.encode(source.toDF().where(col("doc_id") === "none"), dir, opts)
+    assert(r3.version == 3 && r3.rowCount == 0 && r3.complete)
+    assert(GraftTable.lineage(spark, dir).head.parentId == Some(r2.snapshotId))
+  }
 }
