@@ -402,6 +402,17 @@ class TableSpec extends AnyFunSuite {
     val res = GraftTable.encode(empty, dir)
     assert(res.complete && res.rowCount == 0)
     assert(GraftTable.decode(spark, dir).count() == 0)
+    // an empty re-encode, even with a block filter, returns the empty
+    // snapshot it matches and commits no version, in both lanes
+    val filtered = GraftTable.Options(blockFilter = Some(_ => true))
+    val again = GraftTable.encode(empty, dir, filtered)
+    assert(again.version == 1 && again.snapshotId == res.snapshotId)
+    val genDir = tmpDir("empty-generic")
+    val genEmpty = spark.read.parquet(s"$SfDir/documents.parquet").limit(0)
+    val g1 = GenericTable.encode(genEmpty, genDir)
+    val g2 = GenericTable.encode(genEmpty, genDir, opts = filtered)
+    assert(g1.version == 1 && g2.version == 1 && g2.snapshotId == g1.snapshotId)
+    assert(GraftTable.lineage(spark, genDir).map(_.version) == Seq(1))
   }
 
   test("non-numeric doc_ids fall back to the hash key strategy and round-trip") {
