@@ -58,6 +58,10 @@ object GraftTable {
 
   final case class Options(
       targetRowsPerBlock: Int = 1 << 16,
+      /** Key budget of the range-bounds sample, and the cell count up to
+        * which the block write caches its keyed input. The column stats
+        * read every token whatever its value.
+        */
       sampleRows: Long = 1L << 20,
       /** Test/backfill hook: restrict this run to a subset of block ids. */
       blockFilter: Option[Int => Boolean] = None,
@@ -141,7 +145,7 @@ object GraftTable {
   private val KeyStrategy = "numeric_or_xxhash64"
 
   /** Input-shaped token rows plus the blocking key `_graft_key`. */
-  private def keyedOf(tokens: DataFrame): DataFrame = tokens.select(
+  private[graft] def keyedOf(tokens: DataFrame): DataFrame = tokens.select(
     col("doc_id"), col("tokens"), col("n_tok"), col("source"),
     expr(KeyExpr).as("_graft_key"))
 
@@ -170,7 +174,7 @@ object GraftTable {
     val spark = tokens.sparkSession
     val keyed = keyedOf(tokens)
 
-    val stats = timed("stats")(Stats.collect(keyed, opts.sampleRows))
+    val stats = timed("stats")(Stats.collect(keyed))
     val cur = currentSnapshot(spark, tableDir)
     val parent = cur
       .filter(_.inputFingerprint == stats.fingerprint) // fp change => fresh encode
@@ -443,7 +447,7 @@ object GraftTable {
     val ver = p.version + 1
 
     val keyed = keyedOf(batch)
-    val stats = Stats.collect(keyed, opts.sampleRows)
+    val stats = Stats.collect(keyed)
     if (stats.rows == 0L) return EncodeResult.of(p, 0L)
 
     val live = Commit.Totals.of(spark, tableDir, p)
@@ -495,7 +499,7 @@ object GraftTable {
 
     val ver = p.version + 1
     val keyed = keyedOf(rows)
-    val stats = Stats.collect(keyed, opts.sampleRows)
+    val stats = Stats.collect(keyed)
     // merged blocks get ids after every existing one (incl. the dropped
     // fragments' — uniqueness matters, compactness doesn't)
     val (bounds, dataDir, fresh) = BlockWrite.writeBatch(keyed, stats.rows, tableDir, ver,

@@ -1,5 +1,7 @@
 package graft.tools
 
+import java.util.Locale
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -101,17 +103,20 @@ object EncodeBench {
       s"decode token count $decTokens != encoded ${res.tokenCount}")
 
     val tps = res.tokenCount / sec
+    // Locale.ROOT: a host locale with a decimal comma would break the JSON
+    def num(x: Double, digits: Int) = s"%.${digits}f".formatLocal(Locale.ROOT, x)
     println(
       s"""GRAFT_BENCH_JSON {"bench":"encode","parallelism":$parallelism,""" +
         s""""sf":"$sfDir","repl":$repl,"rows":${res.rowCount},""" +
         s""""tokens":${res.tokenCount},"blocks":${res.numBlocks},""" +
-        f""""encode_sec":$sec%.3f,"tokens_per_sec":$tps%.0f,""" +
-        s""""all_runs_sec":[${times.map(t => f"$t%.3f").mkString(",")}],""" +
-        f""""decode_sec":$decSec%.3f,"decode_tokens_per_sec":${res.tokenCount / decSec}%.0f,""" +
+        s""""encode_sec":${num(sec, 3)},"tokens_per_sec":${num(tps, 0)},""" +
+        s""""all_runs_sec":[${times.map(num(_, 3)).mkString(",")}],""" +
+        s""""decode_sec":${num(decSec, 3)},""" +
+        s""""decode_tokens_per_sec":${num(res.tokenCount / decSec, 0)},""" +
         s""""bytes_total":${res.bytesTotal},"plain_bytes":${res.plainBytes},""" +
         s""""ref_parquet_bytes":$refParquetBytes,""" +
-        f""""ratio_vs_parquet":${res.bytesTotal.toDouble / refParquetBytes}%.4f,""" +
-        f""""ratio_vs_plain":${res.bytesTotal.toDouble / res.plainBytes}%.4f}""")
+        s""""ratio_vs_parquet":${num(res.bytesTotal.toDouble / refParquetBytes, 4)},""" +
+        s""""ratio_vs_plain":${num(res.bytesTotal.toDouble / res.plainBytes, 4)}}""")
     spark.stop()
   }
 }

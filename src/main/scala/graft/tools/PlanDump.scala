@@ -1,9 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
-import graft.table.{GraftTable, Tokenize}
+import graft.table.{GraftTable, Stats, Tokenize}
 
 /** Dumps formatted physical plans of the engine's key paths (the
   * ".explain and iterate" evidence). Output is markdown on stdout.
@@ -11,6 +12,12 @@ import graft.table.{GraftTable, Tokenize}
   * Usage: runMain graft.tools.PlanDump [sfDir]
   */
 object PlanDump {
+
+  /** One PLANS.md section: a title, a note on what the plan shows, and the
+    * formatted physical plan.
+    */
+  final case class Section(title: String, note: String, plan: String)
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = SparkSession.builder().master("local[4]")
@@ -19,24 +26,39 @@ object PlanDump {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
+    println("# Physical plans of the key engine paths")
+    println(s"\nGenerated by `graft.tools.PlanDump` on $sfDir. Regenerate after plan-affecting changes.")
+    sections(spark, sfDir).foreach { s =>
+      println(s"\n## ${s.title}\n\n${s.note}\n\n```")
+      println(s.plan)
+      println("```")
+    }
+    spark.stop()
+  }
+
+  /** The sections of PLANS.md, in order. Encodes the tables they read
+    * into temp dirs. Each plan is formatted as its section is made, before
+    * the later sections run jobs that fill the caches it reads.
+    */
+  def sections(spark: SparkSession, sfDir: String): Seq[Section] = {
     val dir = java.nio.file.Files.createTempDirectory("graft-plandump").toString
     GraftTable.encode(Tokenize.tokenTable(spark, sfDir).toDF(), dir,
       GraftTable.Options(targetRowsPerBlock = 64))
-
-    def dump(title: String, note: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      println(s"\n## $title\n\n$note\n\n```")
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).trim)
-      println("```")
-    }
-
-    println("# Physical plans of the key engine paths")
-    println(s"\nGenerated by `graft.tools.PlanDump` on $sfDir. Regenerate after plan-affecting changes.")
+    val out = Seq.newBuilder[Section]
+    def dump(title: String, note: String, df: DataFrame): Unit =
+      out += Section(title, note, df.queryExecution.explainString(FormattedMode).trim)
 
     dump("Tokenize (broadcast vocab probe)",
       "No join, no shuffle, no vocab literal: one WholeStageCodegen span over the scan; " +
         "the vocab travels as a broadcast referenced by the generated code.",
       Tokenize.tokenTable(spark, sfDir).toDF())
+
+    dump("Token stats pass",
+      "ONE aggregate over the keyed input, two jobs under adaptive execution: the scalar " +
+        "aggregates and graft_token_stats, which loops over each row's token array once for " +
+        "the token min/max, the HLL++ distinct count and the adjacent-repeat pairs. No " +
+        "Generate, no higher-order function, no second pass.",
+      Stats.aggregate(GraftTable.keyedOf(Tokenize.tokenTable(spark, sfDir).toDF())))
 
     dump("Column-pruned decode (tokens only)",
       "The connector scan reads columns=[tokens]: its reader opens only the pl_tokens/pl_n_tok " +
@@ -129,6 +151,6 @@ object PlanDump {
         .where(col("doc_id") >= 100L && col("doc_id") <= 150L)
         .select("doc_id", "source"))
 
-    spark.stop()
+    out.result()
   }
 }

@@ -24,23 +24,23 @@ class CommitJobsSpec extends AnyFunSuite {
 
   /** Jobs of a one-block token append. Adaptive execution runs each
     * shuffle's map stage as a job of its own, so an aggregate or an
-    * exchange costs two: the stats pass and its sample (two each), the
-    * block write (two) and the manifest write (one). The block-id offset
-    * comes from the snapshot's version summaries.
+    * exchange costs two: the one stats aggregate (two), the block write
+    * (two) and the manifest write (one). The block-id offset comes from
+    * the snapshot's version summaries.
     */
-  private val TokenAppendJobs = 7
+  private val TokenAppendJobs = 5
 
   /** Jobs of a one-block generic append: the fingerprint and the block
     * write (two each) and the manifest write (one).
     */
   private val GenericAppendJobs = 5
 
-  /** Jobs of a fresh one-block token encode: the stats pass and its sample
-    * (two each), the block write (two plus one for the cached keyed frame,
-    * which adaptive execution materializes as a stage of its own) and the
+  /** Jobs of a fresh one-block token encode: the stats aggregate (two),
+    * the block write (two plus one for the cached keyed frame, which
+    * adaptive execution materializes as a stage of its own) and the
     * manifest write (one). A one-block table takes no bounds job.
     */
-  private val TokenEncodeJobs = 8
+  private val TokenEncodeJobs = 6
 
   /** Jobs of a fresh one-block generic encode: the fingerprint (two), the
     * block write (three, with the cached keyed frame) and the manifest
@@ -48,11 +48,11 @@ class CommitJobsSpec extends AnyFunSuite {
     */
   private val GenericEncodeJobs = 6
 
-  /** Jobs of a token encode of no row: the stats pass and its sample alone.
+  /** Jobs of a token encode of no row: the stats aggregate alone (two).
     * An empty input commits the empty snapshot before any bounds, block
     * write or manifest write.
     */
-  private val TokenEmptyEncodeJobs = 4
+  private val TokenEmptyEncodeJobs = 2
 
   /** Jobs of a generic encode of no row: the fingerprint alone. */
   private val GenericEmptyEncodeJobs = 2
@@ -71,6 +71,13 @@ class CommitJobsSpec extends AnyFunSuite {
     val at20 = JobCounter(spark.sparkContext)(append(20))._2
     (at2, at20)
   }
+
+  /** Jobs of a token compact that merges 3 one-block versions into one
+    * block: the stats aggregate over the connector scan of the fragments
+    * (two), the block write (two) and the manifest write (one). The fill
+    * that picks the fragments comes from the snapshot's version summaries.
+    */
+  private val TokenCompactJobs = 5
 
   /** Jobs of a `deleteRange` that rewrites one one-block version: the
     * count of the rows it keeps (two), the bounds sample (one), the block
@@ -135,6 +142,14 @@ class CommitJobsSpec extends AnyFunSuite {
         assert(again.version == merged.version && again.blocksEncodedThisRun == 0)
         assert(n == 0, s"a no-op compact ran $n jobs")
     }
+  }
+
+  test("token compact: a pinned job count to merge 3 one-block versions") {
+    val n = jobsOn(3, createToken) { dir =>
+      val merged = GraftTable.compact(spark, dir, Opts)
+      assert(merged.blocksEncodedThisRun == 1 && merged.rowCount == 150)
+    }
+    assert(n == TokenCompactJobs)
   }
 
   test("encode: pinned job counts of a fresh one-block and an empty-input encode, in both lanes") {

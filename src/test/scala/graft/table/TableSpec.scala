@@ -160,8 +160,8 @@ class TableSpec extends AnyFunSuite {
   test("layout independence: input partitioning does not change the table") {
     // the same rows arriving as 1 partition vs 13 partitions (as happens
     // across cluster sizes / file split settings) must produce identical
-    // bounds, block payloads, and snapshot ids — sampling is hash-strided
-    // on values, never partition-seeded
+    // bounds, block payloads, and snapshot ids — the bounds sample is
+    // hash-strided on values, never partition-seeded
     val dirA = tmpDir("layA")
     val dirB = tmpDir("layB")
     val opts = GraftTable.Options(targetRowsPerBlock = 64)
@@ -203,8 +203,10 @@ class TableSpec extends AnyFunSuite {
     assert(st.fingerprint.matches("[0-9a-f]{64}"))
   }
 
-  test("stats pass: sampled stats equal a plain-Scala reference (ANSI on)") {
-    assert(spark.sessionState.conf.ansiEnabled, "expected the default ANSI mode")
+  /** The sf0.001 token rows plus edge rows: empty, NULL and null-element
+    * arrays, runs, and runs longer than any block.
+    */
+  private lazy val edgeFixture: Seq[(String, Seq[Any], Int)] = {
     val rnd = new scala.util.Random(7)
     val edges: Seq[(String, Seq[Any], Int)] = Seq(
       ("edge-empty", Seq.empty, 0),
@@ -215,9 +217,12 @@ class TableSpec extends AnyFunSuite {
       ("edge-long-run", Seq.fill(4096)(11), 4096),
       ("edge-long-mixed", Seq.tabulate(6000)(i =>
         if (i % 997 == 0) null else 40 + rnd.nextInt(6)), 6000))
-    val fixture = source.collect().toSeq
-      .map(r => (r.doc_id, r.tokens.toSeq: Seq[Any], r.n_tok))
-    val df = tokenFrame(fixture ++ edges)
+    source.collect().toSeq.map(r => (r.doc_id, r.tokens.toSeq: Seq[Any], r.n_tok)) ++ edges
+  }
+
+  test("stats pass: sampled stats equal a plain-Scala reference (ANSI on)") {
+    assert(spark.sessionState.conf.ansiEnabled, "expected the default ANSI mode")
+    val df = tokenFrame(edgeFixture)
     val st = Stats.collect(keyedOf(df))
 
     // reference over the arrays as collected back from the frame
@@ -226,22 +231,44 @@ class TableSpec extends AnyFunSuite {
     val adj = arrays.map(a =>
       (1 until a.size).count(i => a(i) != null && a(i) == a(i - 1)).toLong).sum
     val pairs = arrays.map(a => math.max(a.size - 1, 0).toLong).sum
-    val distinct = arrays.flatten.filter(_ != null).distinct.size
-    assert(st.rows == fixture.size + edges.size)
+    val tokens = arrays.flatten.filter(_ != null).map(_.asInstanceOf[Int])
+    assert(st.rows == edgeFixture.size)
     assert(st.adjRepeatFrac == adj.toDouble / pairs, s"adj=$adj pairs=$pairs")
+    assert((st.tokMin, st.tokMax) == ((tokens.min, tokens.max)))
+    // every token counts, equal to Spark's own HLL++ over the exploded
+    // tokens at the same relative SD
+    val hll = df.select(explode(col("tokens")).as("t"))
+      .agg(approx_count_distinct(col("t"), 0.05)).head().getLong(0)
+    assert(st.tokDistinct == hll)
+    val distinct = tokens.distinct.size
     assert(math.abs(st.tokDistinct - distinct) <= math.max(2, distinct * 15 / 100),
       s"HLL ${st.tokDistinct} vs exact $distinct")
   }
 
-  test("stats pass: the sampled-stats plan has no higher-order function") {
+  test("stats pass: the same rows in 1, 3 and 8 partitions give the same stats") {
+    val df = tokenFrame(edgeFixture)
+    val Seq(one, three, eight) = Seq(1, 3, 8).map(n => Stats.collect(keyedOf(df.repartition(n))))
+    assert(one == three && one == eight, s"1: $one\n3: $three\n8: $eight")
+  }
+
+  test("stats pass: the stats plan is one aggregate, no Generate or HOF") {
     import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
-    val keyed = keyedOf(source.toDF())
-    Seq(1L, 3L).foreach { stride =>
-      val plan = Stats.sampledStats(keyed, stride).queryExecution.optimizedPlan
-      val hofs = plan.flatMap(_.expressions.flatMap(
-        _.collect { case h: HigherOrderFunction => h }))
-      assert(hofs.isEmpty, s"stride $stride:\n${plan.treeString}")
-    }
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate}
+    val plan = Stats.aggregate(keyedOf(source.toDF())).queryExecution.optimizedPlan
+    assert(plan.collect { case a: Aggregate => a }.size == 1, plan.treeString)
+    assert(plan.collect { case g: Generate => g }.isEmpty, plan.treeString)
+    val hofs = plan.flatMap(_.expressions.flatMap(
+      _.collect { case h: HigherOrderFunction => h }))
+    assert(hofs.isEmpty, plan.treeString)
+  }
+
+  test("stats pass: adj_repeat_frac is written with a '.' under any locale") {
+    val st = Stats.collect(keyedOf(source.toDF()))
+    val saved = java.util.Locale.getDefault(java.util.Locale.Category.FORMAT)
+    java.util.Locale.setDefault(java.util.Locale.Category.FORMAT, java.util.Locale.GERMANY)
+    val frac = try st.asJsonFields.toMap.apply("adj_repeat_frac")
+    finally java.util.Locale.setDefault(java.util.Locale.Category.FORMAT, saved)
+    assert(frac.matches("\\d+\\.\\d{6}"), frac)
   }
 
   test("stats pass: adjacent-repeat pairs follow the tokens array, not n_tok") {
